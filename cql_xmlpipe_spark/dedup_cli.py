@@ -312,17 +312,19 @@ def main(argv: list[str] | None = None) -> int:
         if incremental:
             inc = load_table(spark, table, args.increment_dir)
             if roster_update:
-                if args.rosters_dir:
-                    rosters = spark.read.parquet(args.rosters_dir)
-                elif text_contract:
-                    rosters = DD.minhash_groups_collapsed(
-                        df, args.text_col, id_col, threshold, args.k
-                    ).persist()
-                else:
-                    rosters = DD.embedding_near_dup_groups(
-                        df, id_col, args.emb_col, threshold
-                    ).persist()
-                try:
+                # recomputed standing rosters (and their pipeline pins)
+                # ride the result; a refusal releases them
+                with DD.Staging() as st:
+                    if args.rosters_dir:
+                        rosters = spark.read.parquet(args.rosters_dir)
+                    elif text_contract:
+                        rosters = st.pin(st.adopt(DD.minhash_groups_collapsed(
+                            df, args.text_col, id_col, threshold, args.k
+                        )))
+                    else:
+                        rosters = st.pin(st.adopt(DD.embedding_near_dup_groups(
+                            df, id_col, args.emb_col, threshold
+                        )))
                     if text_contract:
                         result = DD.incremental_roster_update(
                             df, inc, rosters, args.text_col, id_col, threshold,
@@ -333,24 +335,7 @@ def main(argv: list[str] | None = None) -> int:
                             df, inc, rosters, id_col, args.emb_col, threshold,
                             emit=args.emit, max_pairs=max_pairs,
                         )
-                except DD.PairOutputBudgetExceeded:
-                    # a refusal must not leak the recomputed standing
-                    # rosters' persists (same discipline as the operators)
-                    if not args.rosters_dir:
-                        DD.unpersist_intermediates(rosters)
-                        try:
-                            rosters.unpersist()
-                        except Exception:  # pragma: no cover - teardown race
-                            pass
-                    raise
-                if not args.rosters_dir:
-                    # the recomputed standing rosters (and their pipeline
-                    # caches) ride the result's cleanup hook
-                    result._xmlpipe_cached = [
-                        *getattr(result, "_xmlpipe_cached", []),
-                        rosters,
-                        *getattr(rosters, "_xmlpipe_cached", []),
-                    ]
+                    result = st.own(st.adopt(result))
             elif args.contract == "incremental":
                 result = DD.incremental_probe_pairs(
                     df, inc, args.text_col, id_col, threshold, args.k,

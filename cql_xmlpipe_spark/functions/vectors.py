@@ -34,20 +34,17 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def cosine_safe(a: Column, b: Column) -> Column:
-    """``cosine`` with the zero-norm case pinned to NULL instead of left
-    to engine semantics: a zero vector has no direction, and the raw
-    division is 0/0 — which RAISES under Spark's ANSI session
+    """Cosine similarity with the zero-norm case pinned to NULL instead
+    of left to engine semantics: a zero vector has no direction, and the
+    raw division is 0/0 — which RAISES under Spark's ANSI session
     (DIVIDE_BY_ZERO) and yields NaN with ANSI off, a value both Spark
     and DuckDB order ABOVE every number (``NaN >= t`` is true in both —
     measured), i.e. a crash or a garbage "pair" depending on a config
     flag. NULL never qualifies a threshold filter in either engine.
-    Identical to :func:`cosine` whenever both norms are nonzero (same
-    division, same operand order — oracle bit-match preserved)."""
+    Whenever both norms are nonzero this is the plain
+    ``dot / (norm · norm)`` division, same operand order — oracle
+    bit-match preserved."""
     denom = norm(a) * norm(b)
     return F.when(denom != 0.0, dot(a, b) / denom)
 

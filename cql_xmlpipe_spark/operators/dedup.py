@@ -31,29 +31,74 @@ N_MINHASH = 64
 N_BANDS = 16  # 16 bands x 4 rows; s-curve threshold ~ (1/16)^(1/4) ~ 0.5
 
 
-def _track_cached(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Attach persisted intermediates to the result for later cleanup.
+class Staging:
+    """The one owner of the frames an operator persists.
 
-    The pairs operators persist() compact intermediates (shingle-hash sets,
-    signatures) that must stay cached until the RETURNED lazy DataFrame is
-    materialized — so they cannot be unpersisted here. Callers that invoke
-    these operators repeatedly in one session should call
-    :func:`unpersist_intermediates` after consuming the result, or executor
-    storage accumulates one cached frame per call.
+    Dedup operators pin compact intermediates (shingle-hash sets,
+    signatures, membership maps) that must stay cached until the LAZY
+    result they feed is consumed, so they cannot be released before the
+    operator returns. A ``Staging`` scopes them::
+
+        with Staging() as st:
+            sets = st.pin(shingle_hash_sets(df))  # persist and own
+            pairs = st.adopt(sub_operator(...))   # take over its pins
+            return st.own(result)                 # hand the pins on
+
+    Leaving the block releases every frame not handed to a result with
+    :meth:`own` — all of them when an exception escapes, so no refusal
+    or failure path leaks a pinned frame. Whoever consumes a returned
+    result releases what it owns with :func:`unpersist_intermediates`.
     """
-    result._xmlpipe_cached = list(cached)  # type: ignore[attr-defined]
-    return result
+
+    def __init__(self) -> None:
+        self._frames: list[DataFrame] = []
+        self._handed = 0
+
+    def __enter__(self) -> Staging:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is None:
+            del self._frames[: self._handed]
+        self.release()
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` and own it. A frame someone else already
+        persisted (e.g. :func:`stage_corpus_lsh`'s) is taken over as is."""
+        if not df.is_cached:
+            df.persist()
+        self._frames.append(df)
+        return df
+
+    def adopt(self, result: DataFrame) -> DataFrame:
+        """Take over the frames ``result`` owns; returns ``result``."""
+        owned = getattr(result, "_xmlpipe_cached", [])
+        self._frames += owned
+        owned.clear()
+        return result
+
+    def own(self, result: DataFrame) -> DataFrame:
+        """Hand every frame owned here to ``result`` and return it."""
+        result._xmlpipe_cached = list(self._frames)  # type: ignore[attr-defined]
+        self._handed = len(self._frames)
+        return result
+
+    def release(self, blocking: bool = False) -> None:
+        for df in self._frames:
+            try:
+                df.unpersist(blocking)
+            except Exception:  # pragma: no cover - session already stopped
+                pass
+        self._frames = []
+        self._handed = 0
 
 
 def unpersist_intermediates(result: DataFrame, blocking: bool = False) -> None:
-    """Release intermediates persisted by a pairs operator (safe to call on
-    any DataFrame; no-op when nothing is tracked)."""
-    for cached in getattr(result, "_xmlpipe_cached", []):
-        try:
-            cached.unpersist(blocking)
-        except Exception:  # pragma: no cover - session already stopped
-            pass
-    result._xmlpipe_cached = []  # type: ignore[attr-defined]
+    """Release the frames a dedup result owns — call it after consuming
+    the result (safe on any DataFrame; a no-op when it owns nothing)."""
+    st = Staging()
+    st.adopt(result)
+    st.release(blocking)
 
 
 class PairOutputBudgetExceeded(ValueError):
@@ -87,17 +132,6 @@ def default_max_pairs() -> int | None:
             f"got {raw!r} (e.g. 1000000000; 0 disables the cap)"
         ) from None
     return None if cap <= 0 else cap
-
-
-def _unpersist_quiet(*caches: DataFrame) -> None:
-    """Best-effort unpersist for guard-abort paths; a session-teardown
-    race must not mask the :class:`PairOutputBudgetExceeded` being
-    raised."""
-    for c in caches:
-        try:
-            c.unpersist()
-        except Exception:  # pragma: no cover - session teardown race
-            pass
 
 
 def _guard_clone_stats(df: DataFrame, key_cols: list):
@@ -141,13 +175,12 @@ def _guard_band_stats(keys: DataFrame, band_col: str, bucket_cols: list):
     )
 
 
-def _enforce_pair_budget(max_pairs: int, bound, message: str, caches=()) -> None:
+def _enforce_pair_budget(max_pairs: int, bound, message: str) -> None:
     """Raise :class:`PairOutputBudgetExceeded` when ``bound`` exceeds
-    ``max_pairs``, unpersisting ``caches`` first. Every pair contract's
-    guard stages funnel through here, so a new pair family cannot ship a
-    stage without the refusal-and-cleanup semantics."""
+    ``max_pairs``. Every pair contract's guard stages funnel through
+    here, and every guard runs inside its operator's :class:`Staging`
+    block, so the refusal releases what the operator pinned."""
     if (bound or 0) > max_pairs:
-        _unpersist_quiet(*caches)
         raise PairOutputBudgetExceeded(message)
 
 
@@ -318,77 +351,70 @@ def minhash_lsh_pairs(
     # the hash-set projection feeds the minhash aggregate AND both verify
     # joins; persist the compact form (id + 8-byte shingle hashes — ~100×
     # smaller than text) instead of recomputing tokenization 3×.
-    caller_sets = sets is not None
-    if sets is None:
-        sets = shingle_hash_sets(df, text_col, id_col, k).persist()
-    if buckets is None:
-        # persist: the banded buckets feed BOTH sides of the candidate
-        # self-join; without this the 64-min aggregation executes twice
-        # (measured 6× wall at sf0.1). One row per doc, 65 longs — tiny.
-        sigs = _minhash_sigs(sets, id_col).persist()
-        buckets = sigs.select(
-            F.col(id_col), F.posexplode(_band_keys()).alias("band", "bucket")
+    with Staging() as st:
+        if sets is None:
+            sets = st.pin(shingle_hash_sets(df, text_col, id_col, k))
+        # a caller-supplied ``buckets`` is an already-staged (id, band,
+        # bucket) index over exactly the docs in ``sets`` (derived from a
+        # persisted superset staging — band keys are per-text
+        # deterministic, so a subset slice of the staged index IS the
+        # subset's index); no signature aggregate to run or persist then
+        if buckets is None:
+            # persist: the banded buckets feed BOTH sides of the candidate
+            # self-join; without this the 64-min aggregation executes twice
+            # (measured 6× wall at sf0.1). One row per doc, 65 longs — tiny.
+            sigs = st.pin(_minhash_sigs(sets, id_col))
+            buckets = sigs.select(
+                F.col(id_col), F.posexplode(_band_keys()).alias("band", "bucket")
+            )
+        if max_pairs is not None:
+            bstats = _guard_band_stats(buckets, "band", ["bucket"])
+            _enforce_pair_budget(
+                max_pairs,
+                bstats["bound"],
+                f"minhash_lsh_pairs: one LSH band alone implies >= "
+                f"{bstats['bound'] or 0:,} distinct candidate pairs to verify "
+                f"(hottest bucket {bstats['n_max'] or 0:,} docs), over "
+                f"max_pairs={max_pairs:,} — a near-identical (jittered) hot "
+                "family that exact-clone collapse cannot fold. "
+                "minhash_groups_collapsed bounds the OUTPUT to one roster "
+                "row per family (the candidate-verify cost remains — the "
+                "family's texts are distinct); raise max_pairs only if "
+                "that verify bill is budgeted.",
+            )
+        cands = (
+            buckets.select(F.col(id_col).alias("id_a"), "band", "bucket")
+            .join(buckets.select(F.col(id_col).alias("id_b"), "band", "bucket"),
+                  ["band", "bucket"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
         )
-    else:
-        # caller supplies an already-staged (id, band, bucket) index over
-        # exactly the docs in ``sets`` (derived from a persisted superset
-        # staging — band keys are per-text deterministic, so a subset
-        # slice of the staged index IS the subset's index); no signature
-        # aggregate to run or persist here
-        sigs = None
-    if max_pairs is not None:
-        bstats = _guard_band_stats(buckets, "band", ["bucket"])
-        _enforce_pair_budget(
-            max_pairs,
-            bstats["bound"],
-            f"minhash_lsh_pairs: one LSH band alone implies >= "
-            f"{bstats['bound'] or 0:,} distinct candidate pairs to verify "
-            f"(hottest bucket {bstats['n_max'] or 0:,} docs), over "
-            f"max_pairs={max_pairs:,} — a near-identical (jittered) hot "
-            "family that exact-clone collapse cannot fold. "
-            "minhash_groups_collapsed bounds the OUTPUT to one roster "
-            "row per family (the candidate-verify cost remains — the "
-            "family's texts are distinct); raise max_pairs only if "
-            "that verify bill is budgeted.",
-            caches=[
-                c
-                for c in ((sigs,) if caller_sets else (sigs, sets))
-                if c is not None
-            ],
+        sh = sets.select(F.col(id_col), F.col("hs").alias("sh_hashes"))
+        verified = (
+            cands.join(sh.select(F.col(id_col).alias("id_a"),
+                                 F.col("sh_hashes").alias("sh_a")), "id_a")
+            .join(sh.select(F.col(id_col).alias("id_b"),
+                            F.col("sh_hashes").alias("sh_b")), "id_b")
+            # length filter before the intersection (exactness-preserving:
+            # J >= t forces the set sizes within a factor t of each other)
+            .filter(
+                (F.size("sh_a") >= threshold * F.size("sh_b"))
+                & (F.size("sh_b") >= threshold * F.size("sh_a"))
+            )
         )
-    cands = (
-        buckets.select(F.col(id_col).alias("id_a"), "band", "bucket")
-        .join(buckets.select(F.col(id_col).alias("id_b"), "band", "bucket"),
-              ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sh = sets.select(F.col(id_col), F.col("hs").alias("sh_hashes"))
-    verified = (
-        cands.join(sh.select(F.col(id_col).alias("id_a"),
-                             F.col("sh_hashes").alias("sh_a")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"),
-                        F.col("sh_hashes").alias("sh_b")), "id_b")
-        # length filter before the intersection (exactness-preserving:
-        # J >= t forces the set sizes within a factor t of each other)
-        .filter(
-            (F.size("sh_a") >= threshold * F.size("sh_b"))
-            & (F.size("sh_b") >= threshold * F.size("sh_a"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size("sh_a") + F.size("sh_b") - inter
+        result = (
+            verified.withColumn("jaccard", inter / union)
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard")
         )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    result = (
-        verified.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    own = (sigs,) if caller_sets else (sets, sigs)
-    return _track_cached(result, *[c for c in own if c is not None])
+        return st.own(result)
 
 
 def _collapse_prelude(
+    st: Staging,
     df: DataFrame,
     text_col: str,
     id_col: str,
@@ -407,21 +433,18 @@ def _collapse_prelude(
     ``sets`` the persisted shingle-hash projection of the
     representatives (feeds the inner LSH AND serves as the eligibility
     filter — ONE tokenization of the reps), and ``rep_pairs`` the
-    verified near-dup pairs between representatives. The caller owns
-    the caches (track them via :func:`_track_cached`). The sha256 hash
-    projection behind ``mem`` is un-persisted and NOT returned (ADVICE
-    r14: a dead 'cache' flowing through the tracking API invites a
-    caller to assume it is pinned).
+    verified near-dup pairs between representatives. Everything it pins
+    (and the LSH's own pins) goes into the caller's staging ``st``. The
+    sha256 hash projection behind ``mem`` is un-persisted (ADVICE r14:
+    a dead 'cache' flowing through the ownership API invites a caller to
+    assume it is pinned).
 
     ``mem`` lets a caller hand in an already-persisted (id, rep)
     membership map over ``df`` (r15: the recall gates' exact-PPJoin and
     LSH sides each collapsed the same corpus — one sha256 window now
     serves both, see :func:`minhash_recall_sampled`). The map must be
-    exactly the (sha256(text), min-id) collapse of ``df``; ownership of
-    its persist stays with the caller, though it is returned (and so
-    tracked/unpersisted) like an own map — unpersisting a shared cache
-    twice is a no-op, but a guard REFUSAL also unpersists it, so don't
-    reuse the map after catching :class:`PairOutputBudgetExceeded`.
+    exactly the (sha256(text), min-id) collapse of ``df``; its pin stays
+    with the caller.
 
     ``max_pairs`` runs the guard's two stages IN COST ORDER before any
     LSH work: stage-1 (here) prices the exact-clone output from the
@@ -437,9 +460,9 @@ def _collapse_prelude(
     # min over the whole frame == the group's min.
     if mem is None:
         th = df.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("_th"))
-        mem = th.select(
+        mem = st.pin(th.select(
             F.col(id_col), F.min(id_col).over(W.partitionBy("_th")).alias("rep")
-        ).persist()
+        ))
     # a representative is the row whose id IS the group min — no distinct
     # pass needed (each rep appears exactly once as its own member)
     rep_ids = mem.filter(F.col(id_col) == F.col("rep")).select(F.col(id_col))
@@ -455,14 +478,14 @@ def _collapse_prelude(
         # tokenized projection but nobody else needs the banded index, so
         # signatures still run over the representative slice only)
         s_sets, s_buckets = staged
-        sets = s_sets.join(rep_ids, id_col, "left_semi").persist()
+        sets = st.pin(s_sets.join(rep_ids, id_col, "left_semi"))
         rep_buckets = (
             s_buckets.join(rep_ids, id_col, "left_semi")
             if s_buckets is not None
             else None
         )
     else:
-        sets = shingle_hash_sets(rep_docs, text_col, id_col, k).persist()
+        sets = st.pin(shingle_hash_sets(rep_docs, text_col, id_col, k))
         rep_buckets = None
     if max_pairs is not None:
         stats = _guard_clone_stats(
@@ -477,16 +500,11 @@ def _collapse_prelude(
             f"max_pairs={max_pairs:,}. The pair contract is irreducibly "
             "quadratic in clone-family size; use minhash_groups_collapsed "
             "(one roster row per family, linear output) or raise max_pairs.",
-            caches=(mem, sets),
         )
-    try:
-        rep_pairs = minhash_lsh_pairs(
-            rep_docs, text_col, id_col, threshold, k,
-            sets=sets, max_pairs=max_pairs, buckets=rep_buckets,
-        )
-    except PairOutputBudgetExceeded:
-        _unpersist_quiet(mem, sets)
-        raise
+    rep_pairs = st.adopt(minhash_lsh_pairs(
+        rep_docs, text_col, id_col, threshold, k,
+        sets=sets, max_pairs=max_pairs, buckets=rep_buckets,
+    ))
     return mem, sets, rep_pairs
 
 
@@ -546,40 +564,36 @@ def minhash_lsh_pairs_collapsed(
     embedding operator's bucket guard, run strictly AFTER the cheap
     arithmetic stage (see :func:`_collapse_prelude`). None (default)
     skips both stages."""
-    mem, sets, rep_pairs = _collapse_prelude(
-        df, text_col, id_col, threshold, k, max_pairs, staged=staged, mem=mem
-    )
-    eligible = sets.select(F.col(id_col).alias("rep"))
-    em = mem.join(eligible, "rep")
-    within = (
-        em.select("rep", F.col(id_col).alias("ma"))
-        .join(em.select("rep", F.col(id_col).alias("mb")), "rep")
-        .filter(F.col("ma") < F.col("mb"))
-        .select(
-            F.col("ma").alias("id_a"),
-            F.col("mb").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
+    with Staging() as st:
+        mem, sets, rep_pairs = _collapse_prelude(
+            st, df, text_col, id_col, threshold, k, max_pairs, staged=staged, mem=mem
         )
-    )
-    cross = (
-        rep_pairs.join(
-            mem.select(F.col("rep").alias("id_a"), F.col(id_col).alias("ma")), "id_a"
+        eligible = sets.select(F.col(id_col).alias("rep"))
+        em = mem.join(eligible, "rep")
+        within = (
+            em.select("rep", F.col(id_col).alias("ma"))
+            .join(em.select("rep", F.col(id_col).alias("mb")), "rep")
+            .filter(F.col("ma") < F.col("mb"))
+            .select(
+                F.col("ma").alias("id_a"),
+                F.col("mb").alias("id_b"),
+                F.lit(1.0).alias("jaccard"),
+            )
         )
-        .join(
-            mem.select(F.col("rep").alias("id_b"), F.col(id_col).alias("mb")), "id_b"
+        cross = (
+            rep_pairs.join(
+                mem.select(F.col("rep").alias("id_a"), F.col(id_col).alias("ma")), "id_a"
+            )
+            .join(
+                mem.select(F.col("rep").alias("id_b"), F.col(id_col).alias("mb")), "id_b"
+            )
+            .select(
+                F.least("ma", "mb").alias("id_a"),
+                F.greatest("ma", "mb").alias("id_b"),
+                "jaccard",
+            )
         )
-        .select(
-            F.least("ma", "mb").alias("id_a"),
-            F.greatest("ma", "mb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    return _track_cached(
-        within.unionByName(cross),
-        mem,
-        sets,
-        *getattr(rep_pairs, "_xmlpipe_cached", []),
-    )
+        return st.own(within.unionByName(cross))
 
 
 def cluster_assign_collapsed(
@@ -602,41 +616,43 @@ def cluster_assign_collapsed(
     key-only join, sizes come from one count, and docs outside eligible
     groups (zero shingles) fall through to the singleton path exactly as
     in the uncollapsed formulation."""
-    labeled, caches = _labeled_collapsed(df, text_col, id_col, threshold, k)
-    clustered = labeled.select(
-        F.col(id_col),
-        "cluster_id",
-        F.count(F.lit(1)).over(W.partitionBy("cluster_id")).alias("cluster_size"),
-    )
-    singletons = (
-        df.select(id_col)
-        .join(labeled.select(id_col), id_col, "left_anti")
-        .select(
+    with Staging() as st:
+        labeled = _labeled_collapsed(st, df, text_col, id_col, threshold, k)
+        clustered = labeled.select(
             F.col(id_col),
-            F.col(id_col).alias("cluster_id"),
-            F.lit(1).cast("long").alias("cluster_size"),
+            "cluster_id",
+            F.count(F.lit(1)).over(W.partitionBy("cluster_id")).alias("cluster_size"),
         )
-    )
-    return _track_cached(clustered.unionByName(singletons), *caches)
+        singletons = (
+            df.select(id_col)
+            .join(labeled.select(id_col), id_col, "left_anti")
+            .select(
+                F.col(id_col),
+                F.col(id_col).alias("cluster_id"),
+                F.lit(1).cast("long").alias("cluster_size"),
+            )
+        )
+        return st.own(clustered.unionByName(singletons))
 
 
 def _labeled_collapsed(
+    st: Staging,
     df: DataFrame,
     text_col: str,
     id_col: str,
     threshold: float,
     k: int,
     staged: tuple[DataFrame, DataFrame] | None = None,
-) -> tuple[DataFrame, list[DataFrame]]:
+) -> DataFrame:
     """Shared collapse→LSH→verify→CC→member-fan-back stage: returns
-    ``(labeled, caches)`` where ``labeled`` is (id, cluster_id) for every
-    doc in an ELIGIBLE (shingle-bearing) text group, labels are min-id
-    CC components over the representative pair graph, and ``caches`` are
-    the persisted intermediates the caller must track. Docs outside
-    eligible groups are absent — :func:`cluster_assign_collapsed` adds
-    them back as singletons; the roster contract never needs them."""
+    ``labeled``, (id, cluster_id) for every doc in an ELIGIBLE
+    (shingle-bearing) text group, labels being min-id CC components over
+    the representative pair graph; its pins go into the caller's
+    staging ``st``. Docs outside eligible groups are absent —
+    :func:`cluster_assign_collapsed` adds them back as singletons; the
+    roster contract never needs them."""
     mem, sets, rep_pairs = _collapse_prelude(
-        df, text_col, id_col, threshold, k, staged=staged
+        st, df, text_col, id_col, threshold, k, staged=staged
     )
     # the rep set without a distinct pass: a representative is the member
     # whose id equals the group min (same device as _collapse_prelude)
@@ -644,12 +660,11 @@ def _labeled_collapsed(
         mem.filter(F.col(id_col) == F.col("rep")).select(F.col(id_col)), rep_pairs
     )
     eligible = sets.select(F.col(id_col).alias("rep"))
-    labeled = (
+    return (
         mem.join(eligible, "rep")
         .join(cc.select(F.col(id_col).alias("rep"), "cluster_id"), "rep")
         .select(F.col(id_col), "cluster_id")
     )
-    return labeled, [mem, sets, *getattr(rep_pairs, "_xmlpipe_cached", [])]
 
 
 def minhash_groups_collapsed(
@@ -686,18 +701,19 @@ def minhash_groups_collapsed(
     membership rows avoided at target scale. Output identical, pinned
     by the recursive-CTE oracle. Singleton docs are omitted: "no
     duplicates" is the complement, not a row per doc at 100 TB."""
-    labeled, caches = _labeled_collapsed(
-        df, text_col, id_col, threshold, k, staged=staged
-    )
-    groups = (
-        labeled.groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cluster_size"),
-            F.sort_array(F.collect_list(F.col(id_col))).alias("members"),
+    with Staging() as st:
+        labeled = _labeled_collapsed(
+            st, df, text_col, id_col, threshold, k, staged=staged
         )
-        .filter(F.col("cluster_size") >= 2)
-    )
-    return _track_cached(groups, *caches)
+        groups = (
+            labeled.groupBy("cluster_id")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("cluster_size"),
+                F.sort_array(F.collect_list(F.col(id_col))).alias("members"),
+            )
+            .filter(F.col("cluster_size") >= 2)
+        )
+        return st.own(groups)
 
 
 def ngram_containment_pairs(
@@ -771,85 +787,83 @@ def ngram_containment_pairs(
             "quadratic in clone-family size; dedup first (groups "
             "contract) or raise max_pairs.",
         )
-    base = (
-        df.select(
-            F.col(id_col),
-            block.alias("block"),
-            F.sort_array(F.transform(sh, lambda s: F.xxhash64(s))).alias("sh"),
-        )
-        .filter(F.size("sh") > 0)
-        .persist()
-    )
-    n = F.size("sh")
-    prefix_len = (n - F.ceil(n * threshold) + 1).cast("int")
-    if max_pairs is not None:
-        pref_keys = (
-            base.filter(n >= min_shingles)
-            .select("block", F.explode(F.slice("sh", 1, prefix_len)).alias("s"))
-            .groupBy("block", "s")
-            .agg(F.count(F.lit(1)).alias("_ns"))
-        )
-        post_keys = (
-            base.select("block", F.explode("sh").alias("s"))
-            .groupBy("block", "s")
-            .agg(F.count(F.lit(1)).alias("_nt"))
-        )
-        cstats = (
-            pref_keys.join(post_keys, ["block", "s"])
-            .agg(
-                F.max(F.col("_ns") * (F.col("_nt") - 1)).alias("bound"),
-                F.max("_nt").alias("n_max"),
+    with Staging() as st:
+        base = st.pin(
+            df.select(
+                F.col(id_col),
+                block.alias("block"),
+                F.sort_array(F.transform(sh, lambda s: F.xxhash64(s))).alias("sh"),
             )
-            .collect()[0]
+            .filter(F.size("sh") > 0)
         )
-        _enforce_pair_budget(
-            max_pairs,
-            cstats["bound"],
-            f"ngram_containment_pairs: one prefix-posting key alone implies "
-            f">= {cstats['bound'] or 0:,} distinct ORDERED candidate pairs to "
-            f"verify (hottest shingle posted by {cstats['n_max'] or 0:,} docs), "
-            f"over max_pairs={max_pairs:,} — a near-identical (jittered) hot "
-            "family the exact-clone arithmetic cannot see; its replica pairs "
-            "still verify at containment >= threshold, so the output bill is "
-            "as quadratic as the candidate bill. Dedup first (groups "
-            "contract) or raise max_pairs only if that bill is budgeted.",
-            caches=(base,),
+        n = F.size("sh")
+        prefix_len = (n - F.ceil(n * threshold) + 1).cast("int")
+        if max_pairs is not None:
+            pref_keys = (
+                base.filter(n >= min_shingles)
+                .select("block", F.explode(F.slice("sh", 1, prefix_len)).alias("s"))
+                .groupBy("block", "s")
+                .agg(F.count(F.lit(1)).alias("_ns"))
+            )
+            post_keys = (
+                base.select("block", F.explode("sh").alias("s"))
+                .groupBy("block", "s")
+                .agg(F.count(F.lit(1)).alias("_nt"))
+            )
+            cstats = (
+                pref_keys.join(post_keys, ["block", "s"])
+                .agg(
+                    F.max(F.col("_ns") * (F.col("_nt") - 1)).alias("bound"),
+                    F.max("_nt").alias("n_max"),
+                )
+                .collect()[0]
+            )
+            _enforce_pair_budget(
+                max_pairs,
+                cstats["bound"],
+                f"ngram_containment_pairs: one prefix-posting key alone implies "
+                f">= {cstats['bound'] or 0:,} distinct ORDERED candidate pairs to "
+                f"verify (hottest shingle posted by {cstats['n_max'] or 0:,} docs), "
+                f"over max_pairs={max_pairs:,} — a near-identical (jittered) hot "
+                "family the exact-clone arithmetic cannot see; its replica pairs "
+                "still verify at containment >= threshold, so the output bill is "
+                "as quadratic as the candidate bill. Dedup first (groups "
+                "contract) or raise max_pairs only if that bill is budgeted.",
+            )
+        src_pref = base.filter(n >= min_shingles).select(
+            F.col(id_col).alias("src_id"),
+            "block",
+            F.explode(F.slice("sh", 1, prefix_len)).alias("s"),
         )
-    src_pref = base.filter(n >= min_shingles).select(
-        F.col(id_col).alias("src_id"),
-        "block",
-        F.explode(F.slice("sh", 1, prefix_len)).alias("s"),
-    )
-    tgt_post = base.select(
-        F.col(id_col).alias("tgt_id"), "block", F.explode("sh").alias("s")
-    )
-    cands = (
-        src_pref.join(tgt_post, ["block", "s"])
-        .filter(F.col("src_id") != F.col("tgt_id"))
-        .select("src_id", "tgt_id")
-        .distinct()
-    )
-    sets = base.select(F.col(id_col), "sh")
-    verified = (
-        cands.join(
-            sets.select(F.col(id_col).alias("src_id"), F.col("sh").alias("sh_a")),
-            "src_id",
+        tgt_post = base.select(
+            F.col(id_col).alias("tgt_id"), "block", F.explode("sh").alias("s")
         )
-        .join(
-            sets.select(F.col(id_col).alias("tgt_id"), F.col("sh").alias("sh_b")),
-            "tgt_id",
+        cands = (
+            src_pref.join(tgt_post, ["block", "s"])
+            .filter(F.col("src_id") != F.col("tgt_id"))
+            .select("src_id", "tgt_id")
+            .distinct()
         )
-        .filter(F.size("sh_b") >= threshold * F.size("sh_a"))
-    )
-    containment = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        "sh_a"
-    )
-    return _track_cached(
-        verified.withColumn("containment", containment)
-        .filter(F.col("containment") >= threshold)
-        .select("src_id", "tgt_id", "containment"),
-        base,
-    )
+        sets = base.select(F.col(id_col), "sh")
+        verified = (
+            cands.join(
+                sets.select(F.col(id_col).alias("src_id"), F.col("sh").alias("sh_a")),
+                "src_id",
+            )
+            .join(
+                sets.select(F.col(id_col).alias("tgt_id"), F.col("sh").alias("sh_b")),
+                "tgt_id",
+            )
+            .filter(F.size("sh_b") >= threshold * F.size("sh_a"))
+        )
+        containment = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
+            "sh_a"
+        )
+        return st.own(
+            verified.withColumn("containment", containment)
+            .filter(F.col("containment") >= threshold)
+            .select("src_id", "tgt_id", "containment")
+        )
 
 
 def ngram_jaccard_pairs(
@@ -859,7 +873,6 @@ def ngram_jaccard_pairs(
     block_col: str = "lang",
     threshold: float = 0.5,
     k: int = 3,
-    verify: str = "arrays",
     hash_sets: DataFrame | None = None,
 ) -> DataFrame:
     """Exact pairwise shingle Jaccard within blocking groups, via inverted
@@ -881,21 +894,10 @@ def ngram_jaccard_pairs(
     shares ≥1 shingle) at a fraction of the cost; the LSH path above is
     still the first choice at 100 TB (this one degrades on stop-shingles).
 
-    ``verify`` picks how candidate intersections are computed — the
-    verify step is the output bill at near-dup-heavy decades (24.7M
-    pairs × shingle sets = 1594.7 s at jitter-100×, SCALE.md):
-
-    * ``"arrays"`` (default): join each candidate to both docs' sorted
-      shingle-hash arrays and take ``array_intersect`` — two id-keyed
-      joins, arrays duplicated per candidate pair.
-    * ``"explode"``: fan each candidate out over the A-side doc's
-      elements as fixed-width (id_a, id_b, s) rows, match them against
-      the B-side postings on (id_b, s), and COUNT matches per pair — no
-      array value ever crosses a shuffle; the same length filter runs
-      first on a bare (id, |sh|) table. Exactly the same pair set and
-      bit-identical jaccard (both compute inter/(|A|+|B|-inter) on the
-      same ints; pytest pins variant equality). Measured A/B at the
-      jittered decade in SCALE.md decides the default.
+    Verification joins each candidate to both docs' sorted shingle-hash
+    arrays and takes ``array_intersect`` — 3.4× faster, in both run
+    orders at the jittered decade, than counting matched (pair, element)
+    rows without arrays (SCALE.md "Round-8 A/B").
     """
     # sorted distinct shingle hashes = canonical global order for the
     # PREFIX FILTER (PPJoin principle): if J(A,B) >= t, the two sets must
@@ -904,116 +906,64 @@ def ngram_jaccard_pairs(
     # preserved (verification below recomputes true Jaccard); candidate
     # volume drops ~(1-t) and frequency-skewed shingles mostly fall out
     # of prefixes, which is what keeps this viable at corpus scale.
-    if hash_sets is not None:
-        # the caller's persisted hash-set projection: an inner id-join
-        # keeps exactly the ≥1-shingle docs (shingle_hash_sets filters
-        # them), same as the size filter below
-        base = (
-            df.select(F.col(id_col), F.col(block_col).alias("block"))
-            .join(
-                hash_sets.select(
-                    F.col(id_col), F.sort_array("hs").alias("sh")
-                ),
-                id_col,
+    with Staging() as st:
+        if hash_sets is not None:
+            # the caller's persisted hash-set projection: an inner id-join
+            # keeps exactly the ≥1-shingle docs (shingle_hash_sets filters
+            # them), same as the size filter below
+            base = (
+                df.select(F.col(id_col), F.col(block_col).alias("block"))
+                .join(
+                    hash_sets.select(
+                        F.col(id_col), F.sort_array("hs").alias("sh")
+                    ),
+                    id_col,
+                )
             )
-            .persist()
-        )
-    else:
-        sh = shingles(words(F.col(text_col)), k)
-        base = (
-            df.select(
-                F.col(id_col),
-                F.col(block_col).alias("block"),
-                F.sort_array(
-                    F.transform(sh, lambda s: F.xxhash64(s))
-                ).alias("sh"),
+        else:
+            sh = shingles(words(F.col(text_col)), k)
+            base = (
+                df.select(
+                    F.col(id_col),
+                    F.col(block_col).alias("block"),
+                    F.sort_array(
+                        F.transform(sh, lambda s: F.xxhash64(s))
+                    ).alias("sh"),
+                )
+                .filter(F.size("sh") > 0)
             )
-            .filter(F.size("sh") > 0)
-            .persist()
+        base = st.pin(base)
+        n = F.size("sh")
+        prefix_len = (n - F.ceil(n * threshold) + 1).cast("int")
+        prefixes = base.select(
+            F.col(id_col), "block", F.explode(F.slice("sh", 1, prefix_len)).alias("s")
         )
-    n = F.size("sh")
-    prefix_len = (n - F.ceil(n * threshold) + 1).cast("int")
-    prefixes = base.select(
-        F.col(id_col), "block", F.explode(F.slice("sh", 1, prefix_len)).alias("s")
-    )
-    cands = (
-        prefixes.select(F.col(id_col).alias("id_a"), "block", "s")
-        .join(prefixes.select(F.col(id_col).alias("id_b"), "block", "s"), ["block", "s"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    if verify == "explode":
-        return _track_cached(
-            _verify_pairs_exploded(cands, base, id_col, threshold), base
+        cands = (
+            prefixes.select(F.col(id_col).alias("id_a"), "block", "s")
+            .join(prefixes.select(F.col(id_col).alias("id_b"), "block", "s"), ["block", "s"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
         )
-    sets = base.select(F.col(id_col), "sh")
-    verified = (
-        cands.join(sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        # PPJoin length filter (exactness-preserving): J(A,B) >= t requires
-        # |A| >= t|B| and |B| >= t|A| — prune before the O(|A|+|B|)
-        # intersection, which dominates verification cost
-        .filter(
-            (F.size("sh_a") >= threshold * F.size("sh_b"))
-            & (F.size("sh_b") >= threshold * F.size("sh_a"))
+        sets = base.select(F.col(id_col), "sh")
+        verified = (
+            cands.join(sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+            .join(sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+            # PPJoin length filter (exactness-preserving): J(A,B) >= t requires
+            # |A| >= t|B| and |B| >= t|A| — prune before the O(|A|+|B|)
+            # intersection, which dominates verification cost
+            .filter(
+                (F.size("sh_a") >= threshold * F.size("sh_b"))
+                & (F.size("sh_b") >= threshold * F.size("sh_a"))
+            )
         )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return _track_cached(
-        verified.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard"),
-        base,
-    )
-
-
-def _verify_pairs_exploded(
-    cands: DataFrame, base: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Array-free candidate verification: intersection sizes by counting
-    matched (pair, element) rows instead of shipping shingle-set arrays.
-
-    Length-filter on a bare (id, |sh|) table first (same PPJoin pruning
-    as the arrays path), fan surviving candidates over the A-side doc's
-    elements (fixed-width (id_a, id_b, s) longs), inner-join against the
-    B-side postings on (id_b, s) — each match is one shared element —
-    and count per pair. Every shuffled row is three longs; no per-pair
-    array duplication, no array_intersect. Bit-identical output to the
-    arrays path: the same integer (inter, |A|, |B|) feed the same
-    inter/(|A|+|B|-inter) double division. Candidates from the prefix
-    filter always share ≥ 1 element, so no pair is lost to the inner
-    join (and a lost pair would have jaccard 0 < threshold anyway)."""
-    sizes = base.select(F.col(id_col), F.size("sh").alias("n"))
-    c2 = (
-        cands.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a")), "id_a"
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size("sh_a") + F.size("sh_b") - inter
+        return st.own(
+            verified.withColumn("jaccard", inter / union)
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard")
         )
-        .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b")), "id_b"
-        )
-        .filter(
-            (F.col("n_a") >= threshold * F.col("n_b"))
-            & (F.col("n_b") >= threshold * F.col("n_a"))
-        )
-    )
-    elems = base.select(F.col(id_col), F.explode("sh").alias("s"))
-    fanned = c2.join(
-        elems.select(F.col(id_col).alias("id_a"), "s"), "id_a"
-    )
-    matched = fanned.join(
-        elems.select(F.col(id_col).alias("id_b"), "s"), ["id_b", "s"]
-    )
-    inter = F.col("inter")
-    union = F.col("n_a") + F.col("n_b") - inter
-    return (
-        matched.groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).cast("int").alias("inter"))
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
 def simhash_signatures(
@@ -1075,30 +1025,30 @@ def simhash_near_pairs(
     """
     # persist: the banded rows feed BOTH sides of the candidate self-join;
     # without it the 64-vote aggregate (and tokenization) runs twice.
-    sigs = simhash_signatures(df, text_col, id_col).persist()
-    keys = _simhash_combo_keys(F.col("simhash"), max_hamming)
-    exploded = sigs.select(
-        F.col(id_col), F.col("simhash"), F.posexplode(keys).alias("combo", "ckey")
-    )
-    a = exploded.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("sig_a"), "combo", "ckey"
-    )
-    b = exploded.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("sig_b"), "combo", "ckey"
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return _track_cached(
-        a.join(b, ["combo", "ckey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # Hamming BEFORE the pair-dedup: bit_count is a per-row codegen'd
-        # instruction, while dropDuplicates is a shuffled aggregate — its
-        # state must be the true-pair set, not the candidate multiset
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b", "hamming"),
-        sigs,
-    )
+    with Staging() as st:
+        sigs = st.pin(simhash_signatures(df, text_col, id_col))
+        keys = _simhash_combo_keys(F.col("simhash"), max_hamming)
+        exploded = sigs.select(
+            F.col(id_col), F.col("simhash"), F.posexplode(keys).alias("combo", "ckey")
+        )
+        a = exploded.select(
+            F.col(id_col).alias("id_a"), F.col("simhash").alias("sig_a"), "combo", "ckey"
+        )
+        b = exploded.select(
+            F.col(id_col).alias("id_b"), F.col("simhash").alias("sig_b"), "combo", "ckey"
+        )
+        hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+        return st.own(
+            a.join(b, ["combo", "ckey"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            # Hamming BEFORE the pair-dedup: bit_count is a per-row codegen'd
+            # instruction, while dropDuplicates is a shuffled aggregate — its
+            # state must be the true-pair set, not the candidate multiset
+            .withColumn("hamming", hamming)
+            .filter(F.col("hamming") <= max_hamming)
+            .dropDuplicates(["id_a", "id_b"])
+            .select("id_a", "id_b", "hamming")
+        )
 
 
 def _combinations3(n: int) -> list:
@@ -1185,8 +1135,8 @@ def connected_components(
     lineage each round so plan depth stays O(1) instead of O(rounds),
     and the convergence test rides the same pass (an iterative algorithm
     needs a per-round action by construction; this is the documented
-    exception to the lazy-plan rule). Edges are persisted once up front —
-    they feed every round — and unpersisted before return.
+    exception to the lazy-plan rule). Edges are pinned once up front —
+    they feed every round — and released before return.
 
     **Seed convergence check (r15):** quasi-clique components converge
     in the seed itself, yet the loop paid a full round — build successor
@@ -1198,29 +1148,28 @@ def connected_components(
     non-converged corpus pays one extra aggregation pass (the same
     join+agg a round runs) before the rounds proceed unchanged.
     """
-    sym = (
-        pairs.select(F.col("id_a").alias("v"), F.col("id_b").alias("w"))
-        .union(pairs.select(F.col("id_b").alias("v"), F.col("id_a").alias("w")))
-        .persist()
-    )
-    # seed with the 1-hop minimum (same shuffle the vertex-distinct would
-    # cost anyway) — cliques converge in the seed itself, so the loop only
-    # pays rounds for diameter beyond 1
-    labels = (
-        sym.groupBy("v")
-        .agg(F.min("w").alias("mw"))
-        .select(F.col("v"), F.least("v", "mw").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-
-    def _nbr_min(lbl: DataFrame) -> DataFrame:
-        return (
-            sym.join(lbl.select(F.col("v").alias("w"), F.col("label")), "w")
-            .groupBy("v")
-            .agg(F.min("label").alias("nbr_label"))
+    with Staging() as st:
+        sym = st.pin(
+            pairs.select(F.col("id_a").alias("v"), F.col("id_b").alias("w"))
+            .union(pairs.select(F.col("id_b").alias("v"), F.col("id_a").alias("w")))
+        )
+        # seed with the 1-hop minimum (same shuffle the vertex-distinct would
+        # cost anyway) — cliques converge in the seed itself, so the loop only
+        # pays rounds for diameter beyond 1
+        labels = (
+            sym.groupBy("v")
+            .agg(F.min("w").alias("mw"))
+            .select(F.col("v"), F.least("v", "mw").alias("label"))
+            .localCheckpoint(eager=True)
         )
 
-    try:
+        def _nbr_min(lbl: DataFrame) -> DataFrame:
+            return (
+                sym.join(lbl.select(F.col("v").alias("w"), F.col("label")), "w")
+                .groupBy("v")
+                .agg(F.min("label").alias("nbr_label"))
+            )
+
         # convergence CHECK before any propagation round (r15): near-dup
         # graphs are unions of quasi-cliques whose components converge in
         # the seed itself "regardless of corpus size" — yet the loop paid
@@ -1276,8 +1225,6 @@ def connected_components(
                 break
         if not converged:  # pragma: no cover - 2^(max_iter - jump_after) exceeds any real diameter
             raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
-    finally:
-        sym.unpersist()
     w_cluster = W.partitionBy("label")
     clustered = labels.select(
         F.col("v").alias(id_col),
@@ -1386,7 +1333,7 @@ def embedding_near_dup_pairs(
     directionless family costs nothing instead of C(g,2) NULL
     verifications; the verify step additionally scores with
     :func:`~cql_xmlpipe_spark.functions.vectors.cosine_safe` (NULL on
-    a zero denominator, bit-identical to ``cosine`` otherwise) as
+    a zero denominator, the plain cosine otherwise) as
     defense in depth.
 
     ``max_pairs`` is the same pre-flight output guard-rail as
@@ -1448,43 +1395,42 @@ def embedding_near_dup_pairs(
         eligible, threshold, n_bands, band_bits, n_hint, auto_geometry
     )
 
-    keys = banded_sign_keys(eligible, emb_col, id_col, n_bands, band_bits).persist()
-    if max_pairs is not None:
-        bstats = _guard_band_stats(keys, "band", ["bkey"])
-        _enforce_pair_budget(
-            max_pairs,
-            bstats["bound"],
-            f"embedding_near_dup_pairs: one LSH band alone implies >= "
-            f"{bstats['bound'] or 0:,} distinct candidate pairs to verify "
-            f"(hottest bucket {bstats['n_max'] or 0:,} vectors), over "
-            f"max_pairs={max_pairs:,} — a near-identical (jittered) hot "
-            "family the identical-vector pricing cannot see. "
-            "embedding_near_dup_groups bounds the OUTPUT to one roster "
-            "row per family (the candidate-verify cost remains — its "
-            "reps are distinct vectors); raise max_pairs only if that "
-            "verify bill is budgeted.",
-            caches=(keys,),
+    with Staging() as st:
+        keys = st.pin(banded_sign_keys(eligible, emb_col, id_col, n_bands, band_bits))
+        if max_pairs is not None:
+            bstats = _guard_band_stats(keys, "band", ["bkey"])
+            _enforce_pair_budget(
+                max_pairs,
+                bstats["bound"],
+                f"embedding_near_dup_pairs: one LSH band alone implies >= "
+                f"{bstats['bound'] or 0:,} distinct candidate pairs to verify "
+                f"(hottest bucket {bstats['n_max'] or 0:,} vectors), over "
+                f"max_pairs={max_pairs:,} — a near-identical (jittered) hot "
+                "family the identical-vector pricing cannot see. "
+                "embedding_near_dup_groups bounds the OUTPUT to one roster "
+                "row per family (the candidate-verify cost remains — its "
+                "reps are distinct vectors); raise max_pairs only if that "
+                "verify bill is budgeted.",
+            )
+        cands = (
+            keys.select(F.col(id_col).alias("id_a"), "band", "bkey")
+            .join(keys.select(F.col(id_col).alias("id_b"), "band", "bkey"), ["band", "bkey"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
         )
-    cands = (
-        keys.select(F.col(id_col).alias("id_a"), "band", "bkey")
-        .join(keys.select(F.col(id_col).alias("id_b"), "band", "bkey"), ["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    vecs = eligible.select(F.col(id_col), F.col(emb_col))
-    return _track_cached(
-        cands.join(
-            vecs.select(F.col(id_col).alias("id_a"), F.col(emb_col).alias("e_a")), "id_a"
+        vecs = eligible.select(F.col(id_col), F.col(emb_col))
+        return st.own(
+            cands.join(
+                vecs.select(F.col(id_col).alias("id_a"), F.col(emb_col).alias("e_a")), "id_a"
+            )
+            .join(
+                vecs.select(F.col(id_col).alias("id_b"), F.col(emb_col).alias("e_b")), "id_b"
+            )
+            .withColumn("cos", cosine_safe(F.col("e_a"), F.col("e_b")))
+            .filter(F.col("cos") >= threshold)
+            .select("id_a", "id_b", "cos")
         )
-        .join(
-            vecs.select(F.col(id_col).alias("id_b"), F.col(emb_col).alias("e_b")), "id_b"
-        )
-        .withColumn("cos", cosine_safe(F.col("e_a"), F.col("e_b")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos"),
-        keys,
-    )
 
 
 def embedding_near_dup_groups(
@@ -1537,61 +1483,41 @@ def embedding_near_dup_groups(
     """
     from cql_xmlpipe_spark.functions.vectors import norm
 
-    vh = (
-        emb.filter(F.col(emb_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.xxhash64(F.col(emb_col)).alias("_h1"),
-            F.xxhash64(F.col(emb_col), F.lit(1)).alias("_h2"),
-            (norm(F.col(emb_col)) > 0).alias("_elig"),
+    with Staging() as st:
+        vh = st.pin(
+            emb.filter(F.col(emb_col).isNotNull())
+            .select(
+                F.col(id_col),
+                F.xxhash64(F.col(emb_col)).alias("_h1"),
+                F.xxhash64(F.col(emb_col), F.lit(1)).alias("_h2"),
+                (norm(F.col(emb_col)) > 0).alias("_elig"),
+            )
         )
-        .persist()
-    )
-    reps = vh.groupBy("_h1", "_h2").agg(F.min(id_col).alias("rep"))
-    mem = (
-        vh.join(reps, ["_h1", "_h2"])
-        .select(F.col(id_col), "rep", "_elig")
-        .persist()
-    )
-    rep_ids = mem.select(F.col("rep").alias(id_col)).distinct()
-    rep_vecs = emb.join(rep_ids, id_col, "left_semi")
-    # mirror _collapse_prelude: a failure downstream of the persists (the
-    # LSH guard, the CC no-fixpoint RuntimeError) must not leak vh/mem
-    # (or any rep_pairs intermediates) for the session's lifetime
-    rep_pairs = None
-    try:
-        rep_pairs = embedding_near_dup_pairs(
+        reps = vh.groupBy("_h1", "_h2").agg(F.min(id_col).alias("rep"))
+        mem = st.pin(
+            vh.join(reps, ["_h1", "_h2"]).select(F.col(id_col), "rep", "_elig")
+        )
+        rep_ids = mem.select(F.col("rep").alias(id_col)).distinct()
+        rep_vecs = emb.join(rep_ids, id_col, "left_semi")
+        rep_pairs = st.adopt(embedding_near_dup_pairs(
             rep_vecs, id_col, emb_col, threshold, n_bands, band_bits,
             n_hint, auto_geometry,
-        )
+        ))
         cc = connected_components(rep_ids, rep_pairs, id_col=id_col)
-    except Exception:
-        for c in (
-            vh,
-            mem,
-            *(getattr(rep_pairs, "_xmlpipe_cached", []) if rep_pairs is not None else []),
-        ):
-            try:
-                c.unpersist()
-            except Exception:  # pragma: no cover - session teardown race
-                pass
-        raise
-    labeled = (
-        mem.filter(F.col("_elig"))
-        .join(cc.select(F.col(id_col).alias("rep"), "cluster_id"), "rep")
-        .select(F.col(id_col), "cluster_id")
-    )
-    groups = (
-        labeled.groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cluster_size"),
-            F.sort_array(F.collect_list(F.col(id_col))).alias("members"),
+        labeled = (
+            mem.filter(F.col("_elig"))
+            .join(cc.select(F.col(id_col).alias("rep"), "cluster_id"), "rep")
+            .select(F.col(id_col), "cluster_id")
         )
-        .filter(F.col("cluster_size") >= 2)
-    )
-    return _track_cached(
-        groups, vh, mem, *getattr(rep_pairs, "_xmlpipe_cached", [])
-    )
+        groups = (
+            labeled.groupBy("cluster_id")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("cluster_size"),
+                F.sort_array(F.collect_list(F.col(id_col))).alias("members"),
+            )
+            .filter(F.col("cluster_size") >= 2)
+        )
+        return st.own(groups)
 
 
 def stratum_hex_hi(sample_frac: float) -> str:
@@ -1659,44 +1585,36 @@ def minhash_recall_sampled(
     # collapse derives its representative slices from it (sets-only
     # staging; signatures still run over reps only) and the PPJoin builds
     # its sorted base from it, instead of each re-tokenizing the stratum
-    s_sets = shingle_hash_sets(stratum, text_col, id_col, k).persist()
-    # ... and collapse it ONCE (r15): both sides' membership maps are the
-    # same sha256 min-id window — the PPJoin side's block key is the
-    # constant _blk, so its (block, text) groups ARE the text groups and
-    # one map serves both (one window exchange + one hash scan removed)
-    s_mem = (
-        stratum.select(
-            F.col(id_col), F.sha2(F.col(text_col), 256).alias("_th")
+    with Staging() as st:
+        s_sets = st.pin(shingle_hash_sets(stratum, text_col, id_col, k))
+        # ... and collapse it ONCE (r15): both sides' membership maps are the
+        # same sha256 min-id window — the PPJoin side's block key is the
+        # constant _blk, so its (block, text) groups ARE the text groups and
+        # one map serves both (one window exchange + one hash scan removed)
+        s_mem = st.pin(
+            stratum.select(
+                F.col(id_col), F.sha2(F.col(text_col), 256).alias("_th")
+            )
+            .select(
+                F.col(id_col),
+                F.min(id_col).over(W.partitionBy("_th")).alias("rep"),
+            )
         )
-        .select(
-            F.col(id_col),
-            F.min(id_col).over(W.partitionBy("_th")).alias("rep"),
-        )
-        .persist()
-    )
-    lsh_full = minhash_lsh_pairs_collapsed(
-        stratum, text_col, id_col, threshold, k, staged=(s_sets, None),
-        mem=s_mem,
-    )
-    exact_full = ngram_jaccard_pairs_collapsed(
-        stratum.withColumn("_blk", F.lit(1)),
-        text_col, id_col, block_col="_blk", threshold=threshold, k=k,
-        hash_sets=s_sets, mem=s_mem,
-    )
-    lsh = lsh_full.select("id_a", "id_b")
-    exact = exact_full.select("id_a", "id_b")
-    result = _recall_wilson_row(lsh, exact)
-    return _track_cached(
-        result,
-        *getattr(result, "_xmlpipe_cached", []),
-        s_sets,
-        s_mem,
-        *getattr(lsh_full, "_xmlpipe_cached", []),
-        *getattr(exact_full, "_xmlpipe_cached", []),
-    )
+        lsh_full = st.adopt(minhash_lsh_pairs_collapsed(
+            stratum, text_col, id_col, threshold, k, staged=(s_sets, None),
+            mem=s_mem,
+        ))
+        exact_full = st.adopt(ngram_jaccard_pairs_collapsed(
+            stratum.withColumn("_blk", F.lit(1)),
+            text_col, id_col, block_col="_blk", threshold=threshold, k=k,
+            hash_sets=s_sets, mem=s_mem,
+        ))
+        lsh = lsh_full.select("id_a", "id_b")
+        exact = exact_full.select("id_a", "id_b")
+        return st.own(_recall_wilson_row(st, lsh, exact))
 
 
-def _recall_wilson_row(lsh: DataFrame, exact: DataFrame) -> DataFrame:
+def _recall_wilson_row(st: Staging, lsh: DataFrame, exact: DataFrame) -> DataFrame:
     """Assemble the one-row sampled-recall frame — (n_exact, n_lsh,
     n_found, recall_est, ci95_lo, ci95_hi) — from the two (id_a, id_b)
     pair sets. Shared by the text and embedding sampled-recall health
@@ -1711,9 +1629,9 @@ def _recall_wilson_row(lsh: DataFrame, exact: DataFrame) -> DataFrame:
     the one-row plan (its own count AND the intersection count), and
     un-pinned the candidate+verify subtree behind each executed twice
     per action — the cache is two id columns per pair, the recompute is
-    the pair pipeline. The pins ride the returned row's cleanup hook."""
-    lsh = lsh.persist()
-    exact = exact.persist()
+    the pair pipeline. The pins go into the caller's staging ``st``."""
+    lsh = st.pin(lsh)
+    exact = st.pin(exact)
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     n_lsh = lsh.agg(F.count(F.lit(1)).alias("n_lsh"))
     n_found = lsh.join(exact, ["id_a", "id_b"]).agg(
@@ -1729,7 +1647,7 @@ def _recall_wilson_row(lsh: DataFrame, exact: DataFrame) -> DataFrame:
         * F.sqrt(r * (F.lit(1.0) - r) / n + z2 / (F.lit(4.0) * n * n))
         / denom
     )
-    return _track_cached(
+    return (
         n_exact.crossJoin(F.broadcast(n_lsh))
         .crossJoin(F.broadcast(n_found))
         .withColumn(
@@ -1740,9 +1658,7 @@ def _recall_wilson_row(lsh: DataFrame, exact: DataFrame) -> DataFrame:
         )
         .withColumn(
             "ci95_hi", F.when(F.col("n_exact") > 0, center + half)
-        ),
-        lsh,
-        exact,
+        )
     )
 
 
@@ -1796,22 +1712,17 @@ def embedding_recall_sampled(
     # boundary pair exactly as the oracle's per-pair formula does; the
     # eligibility filter (norm > 0) already guarantees a nonzero
     # denominator, so no cosine_safe guard is needed.
-    eligible = (
-        emb.filter(stratum_filter(id_col, sample_frac))
-        .filter(F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0))
-        .select(F.col(id_col), F.col(emb_col), norm(F.col(emb_col)).alias("_nrm"))
-        .persist()
-    )
-    # mirror embedding_near_dup_groups: the LSH stage runs eager actions
-    # (the geometry COUNT, the pair guard) — a failure there must not
-    # leak the stratum persist for the session's lifetime
-    lsh_full = None
-    try:
-        lsh_full = embedding_near_dup_pairs(
+    with Staging() as st:
+        eligible = st.pin(
+            emb.filter(stratum_filter(id_col, sample_frac))
+            .filter(F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0))
+            .select(F.col(id_col), F.col(emb_col), norm(F.col(emb_col)).alias("_nrm"))
+        )
+        lsh_full = st.adopt(embedding_near_dup_pairs(
             eligible.select(F.col(id_col), F.col(emb_col)),
             id_col, emb_col, threshold, n_bands, band_bits,
             n_hint, auto_geometry,
-        )
+        ))
         lsh = lsh_full.select("id_a", "id_b")
         a = eligible.select(
             F.col(id_col).alias("id_a"), F.col(emb_col).alias("e_a"),
@@ -1830,39 +1741,22 @@ def embedding_recall_sampled(
             .filter(F.col("cos") >= threshold)
             .select("id_a", "id_b")
         )
-        result = _recall_wilson_row(lsh, exact)
-    except Exception:
-        for c in (
-            eligible,
-            *(getattr(lsh_full, "_xmlpipe_cached", []) if lsh_full is not None else []),
-        ):
-            try:
-                c.unpersist()
-            except Exception:  # pragma: no cover - session teardown race
-                pass
-        raise
-    return _track_cached(
-        result,
-        *getattr(result, "_xmlpipe_cached", []),
-        eligible,
-        *getattr(lsh_full, "_xmlpipe_cached", []),
-    )
+        return st.own(_recall_wilson_row(st, lsh, exact))
 
 
 def _lsh_prep(
-    df: DataFrame, text_col: str, id_col: str, k: int
+    st: Staging, df: DataFrame, text_col: str, id_col: str, k: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared LSH staging for one side of a probe join: persisted
-    shingle-hash sets plus banded (id, band, bucket) keys — the same
+    """Shared LSH staging for one side of a probe join: shingle-hash
+    sets plus banded (id, band, bucket) keys, both pinned in ``st`` — the same
     signature math as :func:`minhash_lsh_pairs`, factored so asymmetric
     (probe × index) joins can stage each side independently. Signature
     and banding math are :func:`_minhash_sigs` + :func:`_band_keys` —
     shared with :func:`minhash_lsh_pairs`, one definition for both."""
-    sets = shingle_hash_sets(df, text_col, id_col, k).persist()
-    buckets = (
+    sets = st.pin(shingle_hash_sets(df, text_col, id_col, k))
+    buckets = st.pin(
         _minhash_sigs(sets, id_col)
         .select(F.col(id_col), F.posexplode(_band_keys()).alias("band", "bucket"))
-        .persist()
     )
     return sets, buckets
 
@@ -1875,7 +1769,6 @@ def _cross_budget_check(
     op: str,
     stage: str,
     remedy: str,
-    caches: list[DataFrame],
 ) -> None:
     """Shared cross-set pre-flight for the incremental probe guards:
     count key multiplicities on each side, join on the key, and price
@@ -1885,8 +1778,7 @@ def _cross_budget_check(
     (band, bucket) keys the per-band maximum lower-bounds distinct
     cross candidates (the candidate union contains every band's
     collision set). One aggregation-shaped action either way; raises
-    :class:`PairOutputBudgetExceeded` past ``max_pairs`` after
-    unpersisting ``caches``."""
+    :class:`PairOutputBudgetExceeded` past ``max_pairs``."""
     banded = join_cols[0] in ("band",)
     a = a_keys.groupBy(*join_cols).agg(F.count(F.lit(1)).alias("_na"))
     b = b_keys.groupBy(*join_cols).agg(F.count(F.lit(1)).alias("_nb"))
@@ -1909,7 +1801,6 @@ def _cross_budget_check(
         f"{op}: {stage} implies >= {stats['bound'] or 0:,} cross-set "
         f"{'candidate pairs to verify' if banded else 'pair rows'}, "
         f"over max_pairs={max_pairs:,}. {remedy}",
-        caches=caches,
     )
 
 
@@ -1922,10 +1813,11 @@ def stage_corpus_lsh(
     so a stream of ingest batches (e.g. the ``foreachBatch`` composition
     in streaming/dedup.py) signs only each batch, never the corpus
     again — the in-session analogue of the precomputed bucketed corpus
-    index the operator docstring describes at warehouse scale. Ownership
-    of the two caches stays with the caller (unpersist when the ingest
-    session ends)."""
-    return _lsh_prep(corpus, text_col, id_col, k)
+    index the operator docstring describes at warehouse scale. The two
+    frames come back pinned and owned by the caller, who takes them into
+    a :class:`Staging` (``st.pin``) to release them when the ingest
+    session ends."""
+    return _lsh_prep(Staging(), corpus, text_col, id_col, k)
 
 
 def incremental_probe_pairs(
@@ -1978,82 +1870,79 @@ def incremental_probe_pairs(
     batch against the corpus first — one linear hash join — so only
     novel texts probe).
     """
-    if increment_staged is not None:
-        # caller-owned increment staging (stage_corpus_lsh over the
-        # batch): shared with the batch-internal LSH so one ingest signs
-        # the batch once, not twice
-        i_sets, i_buckets = increment_staged
-        caches = []
-    else:
-        i_sets, i_buckets = _lsh_prep(increment, text_col, id_col, k)
-        caches = [i_sets, i_buckets]
-    if corpus_staged is not None:
-        # caller-owned corpus staging (stage_corpus_lsh): reused across
-        # ingests, so refusal/cleanup must never unpersist it here
-        c_sets, c_buckets = corpus_staged
-    else:
-        c_sets, c_buckets = _lsh_prep(corpus, text_col, id_col, k)
-        caches += [c_sets, c_buckets]
-    if max_pairs is not None:
-        remedy = (
-            "Identical-text cross pairs are irreducible output; run the "
-            "standard ingest staging instead — exact-dedup the batch "
-            "against the corpus by content hash first (one linear "
-            "equi-join), probe only novel texts — or raise max_pairs."
+    with Staging() as st:
+        if increment_staged is not None:
+            # caller-owned increment staging (stage_corpus_lsh over the
+            # batch): shared with the batch-internal LSH so one ingest signs
+            # the batch once, not twice
+            i_sets, i_buckets = increment_staged
+        else:
+            i_sets, i_buckets = _lsh_prep(st, increment, text_col, id_col, k)
+        if corpus_staged is not None:
+            # caller-owned corpus staging (stage_corpus_lsh): reused across
+            # ingests, so refusal/cleanup must never unpersist it here
+            c_sets, c_buckets = corpus_staged
+        else:
+            c_sets, c_buckets = _lsh_prep(st, corpus, text_col, id_col, k)
+        if max_pairs is not None:
+            remedy = (
+                "Identical-text cross pairs are irreducible output; run the "
+                "standard ingest staging instead — exact-dedup the batch "
+                "against the corpus by content hash first (one linear "
+                "equi-join), probe only novel texts — or raise max_pairs."
+            )
+            th_i = increment.join(
+                i_sets.select(id_col), id_col, "left_semi"
+            ).select(F.sha2(F.col(text_col), 256).alias("_th"))
+            th_c = corpus.join(
+                c_sets.select(id_col), id_col, "left_semi"
+            ).select(F.sha2(F.col(text_col), 256).alias("_th"))
+            _cross_budget_check(
+                th_i, th_c, ["_th"], max_pairs, "incremental_probe_pairs",
+                "identical texts shared by batch and corpus alone", remedy,
+            )
+            _cross_budget_check(
+                i_buckets.select("band", "bucket"),
+                c_buckets.select("band", "bucket"),
+                ["band", "bucket"], max_pairs, "incremental_probe_pairs",
+                "one LSH band alone (a near-identical hot family the "
+                "identical-text pricing cannot see)", remedy,
+            )
+        cands = (
+            i_buckets.select(F.col(id_col).alias("inc_id"), "band", "bucket")
+            .join(
+                c_buckets.select(F.col(id_col).alias("corpus_id"), "band", "bucket"),
+                ["band", "bucket"],
+            )
+            # defensive: never emit (x, x) even if a caller violates the
+            # disjointness precondition documented above
+            .filter(F.col("inc_id") != F.col("corpus_id"))
+            .select("inc_id", "corpus_id")
+            .distinct()
         )
-        th_i = increment.join(
-            i_sets.select(id_col), id_col, "left_semi"
-        ).select(F.sha2(F.col(text_col), 256).alias("_th"))
-        th_c = corpus.join(
-            c_sets.select(id_col), id_col, "left_semi"
-        ).select(F.sha2(F.col(text_col), 256).alias("_th"))
-        _cross_budget_check(
-            th_i, th_c, ["_th"], max_pairs, "incremental_probe_pairs",
-            "identical texts shared by batch and corpus alone", remedy, caches,
+        verified = (
+            cands.join(
+                i_sets.select(F.col(id_col).alias("inc_id"), F.col("hs").alias("sh_a")),
+                "inc_id",
+            )
+            .join(
+                c_sets.select(
+                    F.col(id_col).alias("corpus_id"), F.col("hs").alias("sh_b")
+                ),
+                "corpus_id",
+            )
+            .filter(
+                (F.size("sh_a") >= threshold * F.size("sh_b"))
+                & (F.size("sh_b") >= threshold * F.size("sh_a"))
+            )
         )
-        _cross_budget_check(
-            i_buckets.select("band", "bucket"),
-            c_buckets.select("band", "bucket"),
-            ["band", "bucket"], max_pairs, "incremental_probe_pairs",
-            "one LSH band alone (a near-identical hot family the "
-            "identical-text pricing cannot see)", remedy, caches,
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size("sh_a") + F.size("sh_b") - inter
+        return st.own(
+            verified.withColumn("jaccard", inter / union)
+            .filter(F.col("jaccard") >= threshold)
+            .select("inc_id", "corpus_id", "jaccard")
         )
-    cands = (
-        i_buckets.select(F.col(id_col).alias("inc_id"), "band", "bucket")
-        .join(
-            c_buckets.select(F.col(id_col).alias("corpus_id"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        # defensive: never emit (x, x) even if a caller violates the
-        # disjointness precondition documented above
-        .filter(F.col("inc_id") != F.col("corpus_id"))
-        .select("inc_id", "corpus_id")
-        .distinct()
-    )
-    verified = (
-        cands.join(
-            i_sets.select(F.col(id_col).alias("inc_id"), F.col("hs").alias("sh_a")),
-            "inc_id",
-        )
-        .join(
-            c_sets.select(
-                F.col(id_col).alias("corpus_id"), F.col("hs").alias("sh_b")
-            ),
-            "corpus_id",
-        )
-        .filter(
-            (F.size("sh_a") >= threshold * F.size("sh_b"))
-            & (F.size("sh_b") >= threshold * F.size("sh_a"))
-        )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return _track_cached(
-        verified.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("inc_id", "corpus_id", "jaccard"),
-        *caches,
-    )
 
 
 def stage_corpus_sign_keys(
@@ -2073,14 +1962,15 @@ def stage_corpus_sign_keys(
     ``auto_band_config``) and thread the same pair everywhere, exactly
     as :func:`embedding_roster_update` documents. Eligibility (non-null,
     norm > 0) is pushed down before signing, matching every embedding
-    operator. Ownership of the cache stays with the caller."""
+    operator. The frame comes back pinned and owned by the caller, as
+    with :func:`stage_corpus_lsh`."""
     from cql_xmlpipe_spark.functions.vectors import norm
     from cql_xmlpipe_spark.operators.similarity import banded_sign_keys
 
     eligible = corpus.filter(
         F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0)
     )
-    return banded_sign_keys(eligible, emb_col, id_col, n_bands, band_bits).persist()
+    return Staging().pin(banded_sign_keys(eligible, emb_col, id_col, n_bands, band_bits))
 
 
 def embedding_incremental_probe_pairs(
@@ -2145,65 +2035,63 @@ def embedding_incremental_probe_pairs(
             "staged keys are only meaningful at the geometry they were "
             "built with (resolve once, thread the same pair everywhere)"
         )
-    ec = corpus.filter(F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0))
-    ei = increment.filter(F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0))
-    if max_pairs is not None:
-        vh = lambda df: df.select(
-            F.xxhash64(F.col(emb_col)).alias("_h1"),
-            F.xxhash64(F.col(emb_col), F.lit(1)).alias("_h2"),
+    with Staging() as st:
+        ec = corpus.filter(F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0))
+        ei = increment.filter(F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0))
+        if max_pairs is not None:
+            vh = lambda df: df.select(
+                F.xxhash64(F.col(emb_col)).alias("_h1"),
+                F.xxhash64(F.col(emb_col), F.lit(1)).alias("_h2"),
+            )
+            _cross_budget_check(
+                vh(ei), vh(ec), ["_h1", "_h2"], max_pairs,
+                "embedding_incremental_probe_pairs",
+                "identical vectors shared by batch and corpus alone",
+                "Exact-dedup the batch against the corpus by vector hash "
+                "first (one linear equi-join), probe only novel vectors, "
+                "or raise max_pairs.",
+            )
+        n_bands, band_bits = _resolve_band_geometry(
+            ec, threshold, n_bands, band_bits, n_hint, auto_geometry
         )
-        _cross_budget_check(
-            vh(ei), vh(ec), ["_h1", "_h2"], max_pairs,
-            "embedding_incremental_probe_pairs",
-            "identical vectors shared by batch and corpus alone",
-            "Exact-dedup the batch against the corpus by vector hash "
-            "first (one linear equi-join), probe only novel vectors, "
-            "or raise max_pairs.", [],
+        if corpus_staged is not None:
+            # caller-owned corpus index (stage_corpus_sign_keys): reused
+            # across ingests, so refusal/cleanup must never unpersist it
+            ck = corpus_staged
+            ik = st.pin(banded_sign_keys(ei, emb_col, id_col, n_bands, band_bits))
+        else:
+            ck = st.pin(banded_sign_keys(ec, emb_col, id_col, n_bands, band_bits))
+            ik = st.pin(banded_sign_keys(ei, emb_col, id_col, n_bands, band_bits))
+        if max_pairs is not None:
+            _cross_budget_check(
+                ik.select("band", "bkey"), ck.select("band", "bkey"),
+                ["band", "bkey"], max_pairs,
+                "embedding_incremental_probe_pairs",
+                "one LSH band alone (a near-identical hot family the "
+                "identical-vector pricing cannot see)",
+                "embedding_near_dup_groups over the union bounds OUTPUT per "
+                "family; the cross verify bill itself remains — raise "
+                "max_pairs only if it is budgeted.",
+            )
+        cands = (
+            ik.select(F.col(id_col).alias("inc_id"), "band", "bkey")
+            .join(
+                ck.select(F.col(id_col).alias("corpus_id"), "band", "bkey"),
+                ["band", "bkey"],
+            )
+            .filter(F.col("inc_id") != F.col("corpus_id"))
+            .select("inc_id", "corpus_id")
+            .distinct()
         )
-    n_bands, band_bits = _resolve_band_geometry(
-        ec, threshold, n_bands, band_bits, n_hint, auto_geometry
-    )
-    if corpus_staged is not None:
-        # caller-owned corpus index (stage_corpus_sign_keys): reused
-        # across ingests, so refusal/cleanup must never unpersist it
-        ck = corpus_staged
-        ik = banded_sign_keys(ei, emb_col, id_col, n_bands, band_bits).persist()
-        caches = [ik]
-    else:
-        ck = banded_sign_keys(ec, emb_col, id_col, n_bands, band_bits).persist()
-        ik = banded_sign_keys(ei, emb_col, id_col, n_bands, band_bits).persist()
-        caches = [ck, ik]
-    if max_pairs is not None:
-        _cross_budget_check(
-            ik.select("band", "bkey"), ck.select("band", "bkey"),
-            ["band", "bkey"], max_pairs,
-            "embedding_incremental_probe_pairs",
-            "one LSH band alone (a near-identical hot family the "
-            "identical-vector pricing cannot see)",
-            "embedding_near_dup_groups over the union bounds OUTPUT per "
-            "family; the cross verify bill itself remains — raise "
-            "max_pairs only if it is budgeted.", caches,
+        vi = ei.select(F.col(id_col).alias("inc_id"), F.col(emb_col).alias("e_a"))
+        vc = ec.select(F.col(id_col).alias("corpus_id"), F.col(emb_col).alias("e_b"))
+        return st.own(
+            cands.join(vi, "inc_id")
+            .join(vc, "corpus_id")
+            .withColumn("cos", cosine_safe(F.col("e_a"), F.col("e_b")))
+            .filter(F.col("cos") >= threshold)
+            .select("inc_id", "corpus_id", "cos")
         )
-    cands = (
-        ik.select(F.col(id_col).alias("inc_id"), "band", "bkey")
-        .join(
-            ck.select(F.col(id_col).alias("corpus_id"), "band", "bkey"),
-            ["band", "bkey"],
-        )
-        .filter(F.col("inc_id") != F.col("corpus_id"))
-        .select("inc_id", "corpus_id")
-        .distinct()
-    )
-    vi = ei.select(F.col(id_col).alias("inc_id"), F.col(emb_col).alias("e_a"))
-    vc = ec.select(F.col(id_col).alias("corpus_id"), F.col(emb_col).alias("e_b"))
-    return _track_cached(
-        cands.join(vi, "inc_id")
-        .join(vc, "corpus_id")
-        .withColumn("cos", cosine_safe(F.col("e_a"), F.col("e_b")))
-        .filter(F.col("cos") >= threshold)
-        .select("inc_id", "corpus_id", "cos"),
-        *caches,
-    )
 
 
 def incremental_roster_update(
@@ -2278,38 +2166,18 @@ def incremental_roster_update(
     # batch-internal LSH consume the same per-text-deterministic staging
     # (r14 — previously each pipeline tokenized and signed the increment
     # independently)
-    i_staged = _lsh_prep(increment, text_col, id_col, k)
-    try:
-        cross = incremental_probe_pairs(
+    with Staging() as st:
+        i_staged = _lsh_prep(st, increment, text_col, id_col, k)
+        cross = st.adopt(incremental_probe_pairs(
             corpus, increment, text_col, id_col, threshold, k,
             max_pairs=max_pairs, corpus_staged=corpus_staged,
             increment_staged=i_staged,
-        )
-    except PairOutputBudgetExceeded:
-        _unpersist_quiet(*i_staged)
-        raise
-    try:
-        batch = minhash_lsh_pairs_collapsed(
+        ))
+        batch = st.adopt(minhash_lsh_pairs_collapsed(
             increment, text_col, id_col, threshold, k,
             max_pairs=max_pairs, staged=i_staged,
-        )
-    except PairOutputBudgetExceeded:
-        # the probe side already staged its persists; don't leak them
-        # when the batch-side guard refuses
-        unpersist_intermediates(cross)
-        _unpersist_quiet(*i_staged)
-        raise
-    try:
-        out = _roster_update_assemble(cross, batch, rosters, id_col, emit)
-    except Exception:
-        # assemble's internal CC-failure handler unpersists the edge list
-        # and the pair frames' tracked caches, but the increment staging
-        # only joins the result's cleanup hook after assemble returns —
-        # don't leak it for the session lifetime on that path (ADVICE r14)
-        _unpersist_quiet(*i_staged)
-        raise
-    out._xmlpipe_cached = [*getattr(out, "_xmlpipe_cached", []), *i_staged]
-    return out
+        ))
+        return st.own(_roster_update_assemble(st, cross, batch, rosters, id_col, emit))
 
 
 def incremental_roster_refresh(
@@ -2329,111 +2197,37 @@ def incremental_roster_refresh(
     per-ingest caller with a standing table uses
     :func:`incremental_roster_update` directly).
 
-    Output ≡ ``incremental_roster_update(corpus, increment,
-    minhash_groups_collapsed(corpus), ...)`` by construction — the same
-    operators compose, in the same places. What changes is the SCHEDULE
-    (r15, guide §2.6 "overlap independent jobs"): the standing
-    pipeline's eager CC fixpoint and the probe/batch pair production
-    are independent until the quotient assembly joins them, yet the
-    serial composition ran them back to back — and the quotient CC's
-    seed action then executed the entire un-materialized probe+batch
-    pipeline inline. Now the shared corpus staging materializes once up
-    front, and two driver threads overlap (FIFO scheduler back-fills
-    stage tails): one runs the standing rosters (CC fixpoint + roster
-    aggregation), the other signs the increment and materializes the
-    cross-probe and batch-internal pair lists. By assembly time both
-    inputs are cached, so the quotient seed pays only the union+agg.
+    Exactly ``incremental_roster_update(corpus, increment,
+    minhash_groups_collapsed(corpus), ...)``, run serially, with the
+    corpus tokenized and signed ONCE: the standing build and the probe
+    share one :func:`stage_corpus_lsh`-shaped staging. Serial on
+    purpose: overlapping the standing build with the pair stages on two
+    driver threads, each stage forced by an eager write, measured
+    9.2 → 17 s for ``dedup_incremental_rosters`` at 32 cores.
 
     Returns the same (cluster_id, cluster_size, members) contract as
-    :func:`incremental_roster_update` under both ``emit`` modes; all
-    persisted intermediates (both stagings, both pair lists, the
-    standing rosters and their caches) ride the result's cleanup hook.
+    :func:`incremental_roster_update` under both ``emit`` modes; every
+    pinned intermediate rides the result.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     if emit not in ("full", "delta"):
         raise ValueError(f"emit must be 'full' or 'delta', got {emit!r}")
-    c_staged = stage_corpus_lsh(corpus, text_col, id_col, k)
-    # materialize the shared corpus staging BEFORE forking: both threads
-    # consume it, and two jobs racing to fill the same cache would each
-    # recompute the tokenize+sign pass they are meant to share
-    c_staged[1].write.format("noop").mode("overwrite").save()
-    i_staged = _lsh_prep(increment, text_col, id_col, k)
-
-    def _standing() -> DataFrame:
-        s = minhash_groups_collapsed(
+    with Staging() as st:
+        c_staged = _lsh_prep(st, corpus, text_col, id_col, k)
+        # pinned: the quotient assembly reads the standing rosters three
+        # times (membership, touched fan-out, untouched pass-through);
+        # unpinned, dedup_incremental_rosters at sf0.1 ran 94 Spark jobs
+        # instead of 84
+        standing = st.pin(st.adopt(minhash_groups_collapsed(
             corpus, text_col, id_col, threshold, k, staged=c_staged
-        ).persist()
-        s.write.format("noop").mode("overwrite").save()
-        return s
-
-    def _pairs() -> tuple[DataFrame, DataFrame]:
-        # one materialization signs the batch for both consumers
-        i_staged[1].write.format("noop").mode("overwrite").save()
-        cross = incremental_probe_pairs(
-            corpus, increment, text_col, id_col, threshold, k,
-            max_pairs=max_pairs, corpus_staged=c_staged,
-            increment_staged=i_staged,
-        ).persist()
-        cross.write.format("noop").mode("overwrite").save()
-        try:
-            batch = minhash_lsh_pairs_collapsed(
-                increment, text_col, id_col, threshold, k,
-                max_pairs=max_pairs, staged=i_staged,
-            ).persist()
-            batch.write.format("noop").mode("overwrite").save()
-        except Exception:
-            unpersist_intermediates(cross)
-            _unpersist_quiet(cross)
-            raise
-        return cross, batch
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_standing = pool.submit(_standing)
-        f_pairs = pool.submit(_pairs)
-        try:
-            cross, batch = f_pairs.result()
-        except Exception:
-            # the guard (or any pair-side failure) must not leak the
-            # stagings or whatever the standing thread pinned
-            _unpersist_quiet(*i_staged, *c_staged)
-            try:
-                s = f_standing.result()
-                _unpersist_quiet(s, *getattr(s, "_xmlpipe_cached", []))
-            except Exception:  # pragma: no cover - double failure
-                pass
-            raise
-        try:
-            standing = f_standing.result()
-        except Exception:
-            for fr in (cross, batch):
-                unpersist_intermediates(fr)
-                _unpersist_quiet(fr)
-            _unpersist_quiet(*i_staged, *c_staged)
-            raise
-    try:
-        out = _roster_update_assemble(cross, batch, standing, id_col, emit)
-    except Exception:
-        for fr in (cross, batch):
-            _unpersist_quiet(fr)
-        _unpersist_quiet(
-            *i_staged, *c_staged, standing,
-            *getattr(standing, "_xmlpipe_cached", []),
-        )
-        raise
-    out._xmlpipe_cached = [
-        *getattr(out, "_xmlpipe_cached", []),
-        cross,
-        batch,
-        standing,
-        *getattr(standing, "_xmlpipe_cached", []),
-        *i_staged,
-        *c_staged,
-    ]
-    return out
+        )))
+        return st.own(st.adopt(incremental_roster_update(
+            corpus, increment, standing, text_col, id_col, threshold, k,
+            emit=emit, max_pairs=max_pairs, corpus_staged=c_staged,
+        )))
 
 
 def _roster_update_assemble(
+    st: Staging,
     cross: DataFrame,
     batch: DataFrame,
     rosters: DataFrame,
@@ -2450,8 +2244,8 @@ def _roster_update_assemble(
     labels back out to rosters. Family-agnostic: nothing here knows
     about texts or vectors — the pair inputs carry the family's
     semantics, the quotient/min-label argument is shared (see the text
-    operator's docstring). Ownership of the two pair frames' tracked
-    caches transfers to the returned result."""
+    operator's docstring). Its pins go into the caller's staging
+    ``st``."""
     mem = rosters.select(
         F.col("cluster_id").alias("_lab"), F.explode("members").alias(id_col)
     )
@@ -2468,31 +2262,16 @@ def _roster_update_assemble(
     # persist: the edge list feeds the CC loop (via sym), the CC
     # singleton anti-join (via nodes) and the node-distinct — without
     # the pin the probe+LSH pipelines would re-execute per reference
-    edges = cross_q.unionByName(batch.select("id_a", "id_b")).persist()
+    edges = st.pin(cross_q.unionByName(batch.select("id_a", "id_b")))
     nodes = (
         edges.select(F.col("id_a").alias(id_col))
         .union(edges.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    # CC runs eager actions; a failure there must not leak the persisted
-    # staging for the session's lifetime (same discipline as the guarded
-    # operators' refusal paths)
-    try:
-        cc = connected_components(nodes, edges, id_col=id_col)
-    except Exception:
-        for c in (
-            edges,
-            *getattr(cross, "_xmlpipe_cached", []),
-            *getattr(batch, "_xmlpipe_cached", []),
-        ):
-            try:
-                c.unpersist()
-            except Exception:  # pragma: no cover - session teardown race
-                pass
-        raise
-    qlab = cc.select(
+    cc = connected_components(nodes, edges, id_col=id_col)
+    qlab = st.pin(cc.select(
         F.col(id_col).alias("_q"), F.col("cluster_id").alias("_new")
-    ).persist()
+    ))
     # touched standing families fan their full membership to the merged
     # label; every other quotient vertex (batch docs, corpus singletons)
     # is its own single member
@@ -2540,13 +2319,7 @@ def _roster_update_assemble(
             qlab.select(F.col("_q").alias("cluster_id")), "cluster_id", "left_anti"
         ).select("cluster_id", "cluster_size", "members")
         result = merged.unionByName(untouched)
-    return _track_cached(
-        result,
-        edges,
-        qlab,
-        *getattr(cross, "_xmlpipe_cached", []),
-        *getattr(batch, "_xmlpipe_cached", []),
-    )
+    return result
 
 
 def embedding_roster_update(
@@ -2618,20 +2391,17 @@ def embedding_roster_update(
     n_bands, band_bits = _resolve_band_geometry(
         eligible, threshold, n_bands, band_bits, n_hint, auto_geometry
     )
-    cross = embedding_incremental_probe_pairs(
-        corpus, increment, id_col, emb_col, threshold,
-        n_bands, band_bits, max_pairs=max_pairs,
-        corpus_staged=corpus_staged,
-    )
-    try:
-        batch = embedding_near_dup_pairs(
+    with Staging() as st:
+        cross = st.adopt(embedding_incremental_probe_pairs(
+            corpus, increment, id_col, emb_col, threshold,
+            n_bands, band_bits, max_pairs=max_pairs,
+            corpus_staged=corpus_staged,
+        ))
+        batch = st.adopt(embedding_near_dup_pairs(
             increment, id_col, emb_col, threshold,
             n_bands, band_bits, max_pairs=max_pairs,
-        )
-    except PairOutputBudgetExceeded:
-        unpersist_intermediates(cross)
-        raise
-    return _roster_update_assemble(cross, batch, rosters, id_col, emit)
+        ))
+        return st.own(_roster_update_assemble(st, cross, batch, rosters, id_col, emit))
 
 
 def ngram_jaccard_pairs_collapsed(
@@ -2641,7 +2411,6 @@ def ngram_jaccard_pairs_collapsed(
     block_col: str = "lang",
     threshold: float = 0.5,
     k: int = 3,
-    verify: str = "arrays",
     hash_sets: DataFrame | None = None,
     mem: DataFrame | None = None,
 ) -> DataFrame:
@@ -2674,76 +2443,69 @@ def ngram_jaccard_pairs_collapsed(
     # collapse — e.g. when block_col is a constant literal, where the
     # (block, text) groups ARE the text groups (the recall gates' case:
     # their LSH side builds the same text-keyed map, so one sha256 window
-    # serves both sides). Ownership of the persist stays with the caller;
-    # it is tracked on the result like an own map (double-unpersist is a
-    # no-op).
-    if mem is None:
-        th = df.select(
-            F.col(id_col),
-            F.col(block_col).alias("block"),
-            F.sha2(F.col(text_col), 256).alias("_th"),
+    # serves both sides). Its pin stays with the caller.
+    with Staging() as st:
+        if mem is None:
+            th = df.select(
+                F.col(id_col),
+                F.col(block_col).alias("block"),
+                F.sha2(F.col(text_col), 256).alias("_th"),
+            )
+            mem = st.pin(th.select(
+                F.col(id_col),
+                "block",
+                F.min(id_col).over(W.partitionBy("block", "_th")).alias("rep"),
+            ))
+        rep_ids = mem.filter(F.col(id_col) == F.col("rep")).select(F.col(id_col))
+        # persist: rep_docs feeds the PPJoin AND the eligibility filter; the
+        # within/cross/union branches of ONE action would otherwise recompute
+        # the corpus semi-join per uncached reference (measured 52 s vs 19 s
+        # at the 10x smoke before these pins)
+        rep_docs = st.pin(df.join(rep_ids, id_col, "left_semi"))
+        if hash_sets is not None:
+            # caller-staged shingle-hash projection of df (r14): the rep
+            # slice is a semi-join, the PPJoin base an id-join inside
+            # ngram_jaccard_pairs, and eligibility falls out of the same
+            # projection (it keeps exactly the ≥1-shingle docs) — the rep
+            # texts are never tokenized a second time
+            rep_sets = hash_sets.join(rep_ids, id_col, "left_semi")
+            rep_pairs = st.adopt(ngram_jaccard_pairs(
+                rep_docs, text_col, id_col, block_col, threshold, k,
+                hash_sets=rep_sets,
+            ))
+            eligible = st.pin(rep_sets.select(F.col(id_col).alias("rep")))
+        else:
+            rep_pairs = st.adopt(ngram_jaccard_pairs(
+                rep_docs, text_col, id_col, block_col, threshold, k
+            ))
+            # eligibility: groups whose text yields >= 1 shingle (cheap
+            # expression filter on the rep docs — no pairing work); persisted
+            # because em is referenced by both sides of the within self-join
+            eligible = st.pin(rep_docs.filter(
+                F.size(shingles(words(F.col(text_col)), k)) > 0
+            ).select(F.col(id_col).alias("rep")))
+        em = mem.join(eligible, "rep")
+        within = (
+            em.select("rep", F.col(id_col).alias("ma"))
+            .join(em.select("rep", F.col(id_col).alias("mb")), "rep")
+            .filter(F.col("ma") < F.col("mb"))
+            .select(
+                F.col("ma").alias("id_a"),
+                F.col("mb").alias("id_b"),
+                F.lit(1.0).alias("jaccard"),
+            )
         )
-        mem = th.select(
-            F.col(id_col),
-            "block",
-            F.min(id_col).over(W.partitionBy("block", "_th")).alias("rep"),
-        ).persist()
-    rep_ids = mem.filter(F.col(id_col) == F.col("rep")).select(F.col(id_col))
-    # persist: rep_docs feeds the PPJoin AND the eligibility filter; the
-    # within/cross/union branches of ONE action would otherwise recompute
-    # the corpus semi-join per uncached reference (measured 52 s vs 19 s
-    # at the 10x smoke before these pins)
-    rep_docs = df.join(rep_ids, id_col, "left_semi").persist()
-    if hash_sets is not None:
-        # caller-staged shingle-hash projection of df (r14): the rep
-        # slice is a semi-join, the PPJoin base an id-join inside
-        # ngram_jaccard_pairs, and eligibility falls out of the same
-        # projection (it keeps exactly the ≥1-shingle docs) — the rep
-        # texts are never tokenized a second time
-        rep_sets = hash_sets.join(rep_ids, id_col, "left_semi")
-        rep_pairs = ngram_jaccard_pairs(
-            rep_docs, text_col, id_col, block_col, threshold, k, verify,
-            hash_sets=rep_sets,
+        cross = (
+            rep_pairs.join(
+                mem.select(F.col("rep").alias("id_a"), F.col(id_col).alias("ma")), "id_a"
+            )
+            .join(
+                mem.select(F.col("rep").alias("id_b"), F.col(id_col).alias("mb")), "id_b"
+            )
+            .select(
+                F.least("ma", "mb").alias("id_a"),
+                F.greatest("ma", "mb").alias("id_b"),
+                "jaccard",
+            )
         )
-        eligible = rep_sets.select(F.col(id_col).alias("rep")).persist()
-    else:
-        rep_pairs = ngram_jaccard_pairs(
-            rep_docs, text_col, id_col, block_col, threshold, k, verify
-        )
-        # eligibility: groups whose text yields >= 1 shingle (cheap
-        # expression filter on the rep docs — no pairing work); persisted
-        # because em is referenced by both sides of the within self-join
-        eligible = rep_docs.filter(
-            F.size(shingles(words(F.col(text_col)), k)) > 0
-        ).select(F.col(id_col).alias("rep")).persist()
-    em = mem.join(eligible, "rep")
-    within = (
-        em.select("rep", F.col(id_col).alias("ma"))
-        .join(em.select("rep", F.col(id_col).alias("mb")), "rep")
-        .filter(F.col("ma") < F.col("mb"))
-        .select(
-            F.col("ma").alias("id_a"),
-            F.col("mb").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    cross = (
-        rep_pairs.join(
-            mem.select(F.col("rep").alias("id_a"), F.col(id_col).alias("ma")), "id_a"
-        )
-        .join(
-            mem.select(F.col("rep").alias("id_b"), F.col(id_col).alias("mb")), "id_b"
-        )
-        .select(
-            F.least("ma", "mb").alias("id_a"),
-            F.greatest("ma", "mb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    return _track_cached(
-        within.unionByName(cross),
-        mem,
-        rep_docs,
-        eligible,
-        *getattr(rep_pairs, "_xmlpipe_cached", []),
-    )
+        return st.own(within.unionByName(cross))

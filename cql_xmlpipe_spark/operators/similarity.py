@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from cql_xmlpipe_spark.functions.vectors import cosine
+from cql_xmlpipe_spark.functions.vectors import cosine_safe
 
 
 def with_sign_bucket(df: DataFrame, emb_col: str, n_planes: int = 8) -> DataFrame:
@@ -288,7 +288,8 @@ def brute_force_topk(
     scored = (
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col(id_col) != F.col(q_id_col))
-        .withColumn("cos", cosine(F.col(emb_col), F.col(q_emb_col)))
+        .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
+        .filter(F.col("cos").isNotNull())
     )
     w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
     return (
@@ -603,18 +604,12 @@ def topk_matmul(
             )
         cands = reduce(DataFrame.union, parts)
     cands = cands.dropDuplicates([q_id_col, id_col])
-    # the guarded denominator mirrors cosine()'s operand order for every
-    # surviving (non-zero-norm) row — bit-identical cos — while keeping
-    # ANSI mode from crashing on degenerate rows the shortlist already
-    # excluded (brute_force_topk would crash on such a corpus)
-    from cql_xmlpipe_spark.functions.vectors import dot, norm
-
-    denom = norm(F.col(emb_col)) * norm(F.col(q_emb_col))
-    cos = F.when(denom != 0.0, dot(F.col(emb_col), F.col(q_emb_col)) / denom)
+    # the same cosine_safe re-score as brute_force_topk — bit-identical
+    # cos for every surviving (non-zero-norm) row
     rescored = (
         cands.join(corpus.select(id_col, emb_col), id_col)
         .join(F.broadcast(queries.select(q_id_col, q_emb_col)), q_id_col)
-        .withColumn("cos", cos)
+        .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
         .filter(F.col("cos").isNotNull())
     )
     w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
@@ -924,7 +919,8 @@ def ivf_query(
     scored = (
         cands.join(corpus.select(id_col, emb_col), id_col)
         .join(F.broadcast(queries.select(q_id_col, q_emb_col)), q_id_col)
-        .withColumn("cos", cosine(F.col(emb_col), F.col(q_emb_col)))
+        .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
+        .filter(F.col("cos").isNotNull())
         .select(q_id_col, id_col, "cos")
     )
     w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
@@ -997,7 +993,8 @@ def lsh_topk(
     scored = (
         cands.join(corpus.select(id_col, emb_col), id_col)
         .join(F.broadcast(queries.select(q_id_col, q_emb_col)), q_id_col)
-        .withColumn("cos", cosine(F.col(emb_col), F.col(q_emb_col)))
+        .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
+        .filter(F.col("cos").isNotNull())
         .select(q_id_col, id_col, "cos")
     )
     w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
@@ -1104,7 +1101,8 @@ def _cosine_rerank(
         pairs.select(q_id_col, id_col)
         .join(corpus.select(id_col, emb_col), id_col)
         .join(F.broadcast(queries.select(q_id_col, q_emb_col)), q_id_col)
-        .withColumn("cos", cosine(F.col(emb_col), F.col(q_emb_col)))
+        .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
+        .filter(F.col("cos").isNotNull())
     )
     w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
     return (

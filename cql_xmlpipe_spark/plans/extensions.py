@@ -274,58 +274,49 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r15) — same sharing devices as minhash_recall_sampled: the PPJoin
     # side's block is the constant _blk, so one sha256 min-id window
     # serves both sides' membership maps
-    s_sets = DD.shingle_hash_sets(d).persist()
-    s_mem = (
-        d.select(F.col("doc_id"), F.sha2(F.col("text"), 256).alias("_th"))
-        .select(
-            F.col("doc_id"),
-            F.min("doc_id").over(Window.partitionBy("_th")).alias("rep"),
+    with DD.Staging() as st:
+        s_sets = st.pin(DD.shingle_hash_sets(d))
+        s_mem = st.pin(
+            d.select(F.col("doc_id"), F.sha2(F.col("text"), 256).alias("_th"))
+            .select(
+                F.col("doc_id"),
+                F.min("doc_id").over(Window.partitionBy("_th")).alias("rep"),
+            )
         )
-        .persist()
-    )
-    lsh_full = DD.minhash_lsh_pairs_collapsed(
-        d, threshold=0.35, staged=(s_sets, None), mem=s_mem
-    )
-    exact_full = DD.ngram_jaccard_pairs_collapsed(
-        d.withColumn("_blk", F.lit(1)), block_col="_blk", threshold=0.35, k=3,
-        hash_sets=s_sets, mem=s_mem,
-    )
-    # pin the pair sets: each is referenced twice below (own count AND
-    # the intersection), and un-pinned the candidate+verify subtree
-    # behind each would execute twice per action (r15 — same device as
-    # _recall_wilson_row)
-    lsh = lsh_full.select("id_a", "id_b").persist()
-    exact = exact_full.select("id_a", "id_b").persist()
-    n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    n_lsh = lsh.agg(F.count(F.lit(1)).alias("n_lsh"))
-    n_found = (
-        lsh.join(exact, ["id_a", "id_b"])
-        .agg(F.count(F.lit(1)).alias("n_found"))
-    )
-    result = (
-        n_exact.crossJoin(F.broadcast(n_lsh))
-        .crossJoin(F.broadcast(n_found))
-        # NULL (not 0/0's engine-dependent NULL/NaN/inf) on a pair-free
-        # corpus: pinned on BOTH sides so the gate reports "trivially no
-        # pairs" instead of a cross-engine division-semantics mismatch
-        .withColumn(
-            "recall",
-            F.when(F.col("n_exact") > 0, F.col("n_found") / F.col("n_exact")),
+        lsh_full = st.adopt(DD.minhash_lsh_pairs_collapsed(
+            d, threshold=0.35, staged=(s_sets, None), mem=s_mem
+        ))
+        exact_full = st.adopt(DD.ngram_jaccard_pairs_collapsed(
+            d.withColumn("_blk", F.lit(1)), block_col="_blk", threshold=0.35, k=3,
+            hash_sets=s_sets, mem=s_mem,
+        ))
+        # pin the pair sets: each is referenced twice below (own count AND
+        # the intersection), and un-pinned the candidate+verify subtree
+        # behind each would execute twice per action (r15 — same device as
+        # _recall_wilson_row)
+        lsh = st.pin(lsh_full.select("id_a", "id_b"))
+        exact = st.pin(exact_full.select("id_a", "id_b"))
+        n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
+        n_lsh = lsh.agg(F.count(F.lit(1)).alias("n_lsh"))
+        n_found = (
+            lsh.join(exact, ["id_a", "id_b"])
+            .agg(F.count(F.lit(1)).alias("n_found"))
         )
-    )
-    # r15 (VERDICT r14 item 8 / ADVICE): the shared staging and both
-    # collapsed pipelines' persists ride the result's cleanup hook — a
-    # long-lived session (CLI/library use) must not depend on the bench
-    # harness's clearCache to release the full-corpus projections
-    return DD._track_cached(
-        result,
-        s_sets,
-        s_mem,
-        lsh,
-        exact,
-        *getattr(lsh_full, "_xmlpipe_cached", []),
-        *getattr(exact_full, "_xmlpipe_cached", []),
-    )
+        result = (
+            n_exact.crossJoin(F.broadcast(n_lsh))
+            .crossJoin(F.broadcast(n_found))
+            # NULL (not 0/0's engine-dependent NULL/NaN/inf) on a pair-free
+            # corpus: pinned on BOTH sides so the gate reports "trivially no
+            # pairs" instead of a cross-engine division-semantics mismatch
+            .withColumn(
+                "recall",
+                F.when(F.col("n_exact") > 0, F.col("n_found") / F.col("n_exact")),
+            )
+        )
+        # the shared staging and both collapsed pipelines' pins ride the
+        # result — a long-lived session (CLI/library use) must not depend on
+        # the bench harness's clearCache to release the full-corpus projections
+        return st.own(result)
 
 
 #: the Wilson-interval SELECT body shared by the text and embedding
@@ -933,16 +924,11 @@ def dedup_embedding_incremental_rosters(spark: SparkSession, sf_dir: str) -> Dat
 
     corpus = e.unionByName(scaled(2.0, _PLANT_OFFSET))
     increment = scaled(4.0, 2 * _PLANT_OFFSET)
-    standing = DD.embedding_near_dup_groups(corpus, threshold=0.95).persist()
-    out = DD.embedding_roster_update(
-        corpus, increment, standing, threshold=0.95, emit="full"
-    )
-    out._xmlpipe_cached = [
-        *getattr(out, "_xmlpipe_cached", []),
-        standing,
-        *getattr(standing, "_xmlpipe_cached", []),
-    ]
-    return out
+    with DD.Staging() as st:
+        standing = st.pin(st.adopt(DD.embedding_near_dup_groups(corpus, threshold=0.95)))
+        return st.own(st.adopt(DD.embedding_roster_update(
+            corpus, increment, standing, threshold=0.95, emit="full"
+        )))
 
 
 def _emb_recall_oracle(threshold: float, hex_hi: str) -> str:
@@ -1104,11 +1090,9 @@ def dedup_incremental_rosters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     increment = d.filter(F.col("doc_id") % 5 == 0)
-    # one composition: shared corpus staging (r14), standing pipeline and
-    # probe/batch pair production OVERLAPPED on driver threads (r15 —
-    # they are independent until the quotient assembly; see
-    # operators/dedup.py::incremental_roster_refresh). Same operators,
-    # same output; all persists ride the result's cleanup hook.
+    # one composition: standing rosters then the incremental update over
+    # one shared corpus staging (operators/dedup.py::
+    # incremental_roster_refresh); every pin rides the result.
     return DD.incremental_roster_refresh(
         corpus, increment, threshold=0.5, k=3, emit="full"
     )
@@ -1189,7 +1173,7 @@ def dedup_incremental_rosters_delta(spark: SparkSession, sf_dir: str) -> DataFra
     d = load_table(spark, "documents", sf_dir)
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     increment = d.filter(F.col("doc_id") % 5 == 0)
-    # overlapped refresh composition — see dedup_incremental_rosters
+    # the same refresh composition as dedup_incremental_rosters
     return DD.incremental_roster_refresh(
         corpus, increment, threshold=0.5, k=3, emit="delta"
     )
@@ -2636,29 +2620,30 @@ def text_crossdoc_ngram_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # common subtrees across join sides). 16 bytes/position cached vs a
     # second full tokenization of the corpus — the same trade the dedup
     # staging makes; spills to disk past memory at scale.
-    grams = base.select(
-        "doc_id",
-        F.explode(TX.ngrams(F.col("toks"), 8)).alias("gram"),
-    ).select("doc_id", F.xxhash64("gram").alias("h")).persist()
-    dup_h = (
-        grams.select("doc_id", "h")
-        .distinct()
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") >= 2)
-        .select("h")
-    )
-    flagged = grams.join(dup_h.withColumn("is_dup", F.lit(1)), "h", "left")
-    out = flagged.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_grams"),
-        F.sum(F.coalesce(F.col("is_dup"), F.lit(0)).cast("long")).alias("cross_dup_grams"),
-    ).select(
-        "doc_id",
-        "n_grams",
-        "cross_dup_grams",
-        (F.col("cross_dup_grams").cast("double") / F.col("n_grams")).alias("cross_dup_frac"),
-    )
-    return DD._track_cached(out, grams)
+    with DD.Staging() as st:
+        grams = st.pin(base.select(
+            "doc_id",
+            F.explode(TX.ngrams(F.col("toks"), 8)).alias("gram"),
+        ).select("doc_id", F.xxhash64("gram").alias("h")))
+        dup_h = (
+            grams.select("doc_id", "h")
+            .distinct()
+            .groupBy("h")
+            .agg(F.count(F.lit(1)).alias("n_docs"))
+            .filter(F.col("n_docs") >= 2)
+            .select("h")
+        )
+        flagged = grams.join(dup_h.withColumn("is_dup", F.lit(1)), "h", "left")
+        out = flagged.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("n_grams"),
+            F.sum(F.coalesce(F.col("is_dup"), F.lit(0)).cast("long")).alias("cross_dup_grams"),
+        ).select(
+            "doc_id",
+            "n_grams",
+            "cross_dup_grams",
+            (F.col("cross_dup_grams").cast("double") / F.col("n_grams")).alias("cross_dup_frac"),
+        )
+        return st.own(out)
 
 
 _DUP_SPANS_ORACLE = """
@@ -2722,35 +2707,36 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the (doc_id, pos, hash) position stream — it feeds the
     # duplicated-hash aggregate AND the semi-join back; same one-tokenize
     # device as text_crossdoc_ngram_dup (r15, guide §1.2)
-    grams = base.select(
-        "doc_id", F.posexplode(TX.ngrams(F.col("toks"), 8)).alias("pos", "gram")
-    ).select("doc_id", "pos", F.xxhash64("gram").alias("h")).persist()
-    dup_h = (
-        grams.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("h")
-    )
-    p = grams.join(dup_h, "h", "left_semi").select("doc_id", "pos")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    brk = F.when(F.col("pos") - F.lag("pos").over(w) > 8, 1).otherwise(0)
-    isl = p.withColumn("brk", brk).withColumn(
-        "island",
-        F.sum("brk").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    out = (
-        isl.groupBy("doc_id", "island")
-        .agg(F.min("pos").alias("_s"), F.max("pos").alias("_e"))
-        .select(
-            "doc_id",
-            F.col("_s").cast("int").alias("span_start"),
-            (F.col("_e") + 7).cast("int").alias("span_end"),
-            (F.col("_e") + 8 - F.col("_s")).cast("int").alias("span_tokens"),
+    with DD.Staging() as st:
+        grams = st.pin(base.select(
+            "doc_id", F.posexplode(TX.ngrams(F.col("toks"), 8)).alias("pos", "gram")
+        ).select("doc_id", "pos", F.xxhash64("gram").alias("h")))
+        dup_h = (
+            grams.groupBy("h")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") >= 2)
+            .select("h")
         )
-    )
-    return DD._track_cached(out, grams)
+        p = grams.join(dup_h, "h", "left_semi").select("doc_id", "pos")
+        w = Window.partitionBy("doc_id").orderBy("pos")
+        brk = F.when(F.col("pos") - F.lag("pos").over(w) > 8, 1).otherwise(0)
+        isl = p.withColumn("brk", brk).withColumn(
+            "island",
+            F.sum("brk").over(
+                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            ),
+        )
+        out = (
+            isl.groupBy("doc_id", "island")
+            .agg(F.min("pos").alias("_s"), F.max("pos").alias("_e"))
+            .select(
+                "doc_id",
+                F.col("_s").cast("int").alias("span_start"),
+                (F.col("_e") + 7).cast("int").alias("span_end"),
+                (F.col("_e") + 8 - F.col("_s")).cast("int").alias("span_tokens"),
+            )
+        )
+        return st.own(out)
 
 
 _DUP_REMOVAL_ORACLE = """
@@ -3223,21 +3209,21 @@ def multimodal_frame_sample_codec(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     d = load_table(spark, "documents", sf_dir)
-    # persist: the sampler and the payload-md5 audit both consume the
-    # synthesized payloads; without it frame synthesis + AVI encode (the
-    # dominant cost) executes twice. Tracked for caller unpersist.
-    media = synthesize_avi_media(d).persist()
-    frames = sample_video_frames(media, every_ms=300, use_codec=True)
-    sigs = media.select("doc_id", F.md5("payload").alias("payload_md5"))
-    out = frames.join(sigs, "doc_id").select(
-        "doc_id",
-        "payload_md5",
-        "frame_idx",
-        "ts_ms",
-        F.lower(F.hex("frame")).alias("frame_hex"),
-    )
-    out._xmlpipe_cached = [media]
-    return out
+    with DD.Staging() as st:
+        # pin: the sampler and the payload-md5 audit both consume the
+        # synthesized payloads; without it frame synthesis + AVI encode (the
+        # dominant cost) executes twice
+        media = st.pin(synthesize_avi_media(d))
+        frames = sample_video_frames(media, every_ms=300, use_codec=True)
+        sigs = media.select("doc_id", F.md5("payload").alias("payload_md5"))
+        out = frames.join(sigs, "doc_id").select(
+            "doc_id",
+            "payload_md5",
+            "frame_idx",
+            "ts_ms",
+            F.lower(F.hex("frame")).alias("frame_hex"),
+        )
+        return st.own(out)
 
 
 _AVI_FEAT_FIXTURE = _os.path.join(
@@ -3282,15 +3268,15 @@ def multimodal_video_features_codec(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     d = load_table(spark, "documents", sf_dir)
-    media = synthesize_avi_media(d).persist()
-    feats = decode_video_features(media, use_codec=True)
-    sigs = media.select("doc_id", F.md5("payload").alias("payload_md5"))
-    out = feats.join(sigs, "doc_id").select(
-        "doc_id", "payload_md5", "n_frames", "fps", "duration_ms",
-        "width", "height", "mean_luma", "motion",
-    )
-    out._xmlpipe_cached = [media]
-    return out
+    with DD.Staging() as st:
+        media = st.pin(synthesize_avi_media(d))
+        feats = decode_video_features(media, use_codec=True)
+        sigs = media.select("doc_id", F.md5("payload").alias("payload_md5"))
+        out = feats.join(sigs, "doc_id").select(
+            "doc_id", "payload_md5", "n_frames", "fps", "duration_ms",
+            "width", "height", "mean_luma", "motion",
+        )
+        return st.own(out)
 
 
 _BMP_FIXTURE = _os.path.join(
@@ -3340,17 +3326,17 @@ def multimodal_image_features_codec(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     d = load_table(spark, "documents", sf_dir)
-    # persist: feats and sigs are two independent consumers of the
-    # synthesized payloads; without this the pixel synthesis + BMP
-    # encode (the dominant cost) executes twice. Dropped by the
-    # caller's clearCache once the result is consumed.
-    media = synthesize_bmp_media(d).persist()
-    feats = decode_image_features(media, use_codec=True)
-    sigs = media.select("doc_id", F.md5("payload").alias("payload_md5"))
-    return feats.join(sigs, "doc_id").select(
-        "doc_id", "payload_md5", "width", "height",
-        "mean_r", "mean_g", "mean_b", "sharpness",
-    )
+    with DD.Staging() as st:
+        # pin: feats and sigs are two independent consumers of the
+        # synthesized payloads; without this the pixel synthesis + BMP
+        # encode (the dominant cost) executes twice
+        media = st.pin(synthesize_bmp_media(d))
+        feats = decode_image_features(media, use_codec=True)
+        sigs = media.select("doc_id", F.md5("payload").alias("payload_md5"))
+        return st.own(feats.join(sigs, "doc_id").select(
+            "doc_id", "payload_md5", "width", "height",
+            "mean_r", "mean_g", "mean_b", "sharpness",
+        ))
 
 
 _FAKE_AUDIO_FIXTURE = _os.path.join(
@@ -3451,17 +3437,17 @@ def multimodal_audio_features_codec(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     d = load_table(spark, "documents", sf_dir)
-    # persist: feats and sigs are two independent consumers of the
-    # synthesized payloads; without this the sample synthesis + WAV
-    # encode (the dominant cost) executes twice. Dropped by the
-    # caller's clearCache once the result is consumed.
-    media = synthesize_wav_media(d).persist()
-    feats = decode_audio_features(media, use_codec=True)
-    sigs = media.select("doc_id", F.md5("payload").alias("payload_md5"))
-    return feats.join(sigs, "doc_id").select(
-        "doc_id", "payload_md5", "sample_rate", "n_samples",
-        "duration_ms", "rms", "peak", "zero_cross_rate",
-    )
+    with DD.Staging() as st:
+        # pin: feats and sigs are two independent consumers of the
+        # synthesized payloads; without this the sample synthesis + WAV
+        # encode (the dominant cost) executes twice
+        media = st.pin(synthesize_wav_media(d))
+        feats = decode_audio_features(media, use_codec=True)
+        sigs = media.select("doc_id", F.md5("payload").alias("payload_md5"))
+        return st.own(feats.join(sigs, "doc_id").select(
+            "doc_id", "payload_md5", "sample_rate", "n_samples",
+            "duration_ms", "rms", "peak", "zero_cross_rate",
+        ))
 
 
 _WAV_RS_FIXTURE = _os.path.join(
@@ -4506,20 +4492,20 @@ def text_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "source", F.explode(TX.ngrams(TX.words(F.col("text")), 2)).alias("term")
     )
-    st = tok.groupBy("source", "term").agg(F.count(F.lit(1)).alias("cnt"))
-    st = st.persist()
-    tf = st.groupBy("term").agg(F.sum("cnt").alias("c"))
-    vocab = tf.orderBy(F.col("c").desc(), "term").limit(256).select("term")
-    oov = F.when(F.col("in_vocab").isNull(), F.col("cnt")).otherwise(F.lit(0))
-    return (
-        st.join(F.broadcast(vocab.withColumn("in_vocab", F.lit(1))), "term", "left")
-        .groupBy("source")
-        .agg(
-            F.sum("cnt").alias("n_tokens"),
-            F.sum(oov).alias("n_oov"),
-            (F.sum(oov).cast("double") / F.sum("cnt")).alias("oov_rate"),
+    with DD.Staging() as st:
+        terms = st.pin(tok.groupBy("source", "term").agg(F.count(F.lit(1)).alias("cnt")))
+        tf = terms.groupBy("term").agg(F.sum("cnt").alias("c"))
+        vocab = tf.orderBy(F.col("c").desc(), "term").limit(256).select("term")
+        oov = F.when(F.col("in_vocab").isNull(), F.col("cnt")).otherwise(F.lit(0))
+        return st.own(
+            terms.join(F.broadcast(vocab.withColumn("in_vocab", F.lit(1))), "term", "left")
+            .groupBy("source")
+            .agg(
+                F.sum("cnt").alias("n_tokens"),
+                F.sum(oov).alias("n_oov"),
+                (F.sum(oov).cast("double") / F.sum("cnt")).alias("oov_rate"),
+            )
         )
-    )
 
 
 _SOURCE_OVERLAP_ORACLE = f"""
@@ -4562,32 +4548,32 @@ def source_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = d.select(
         "source", F.explode(TX.ngrams(TX.words(F.col("text")), 3)).alias("g")
     )
-    sh = grams.select(
-        "source", F.substring(F.md5("g"), 1, 16).alias("k")
-    ).distinct()
-    sh = sh.persist()
-    sizes = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    b = sh.select(F.col("source").alias("source_b"), F.col("k").alias("kb"))
-    inter = (
-        sh.join(b, (F.col("k") == F.col("kb")) & (F.col("source") < F.col("source_b")))
-        .groupBy(F.col("source").alias("source_a"), "source_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("source").alias("source_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("source").alias("source_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(F.broadcast(sa), "source_a")
-        .join(F.broadcast(sb), "source_b")
-        .select(
-            "source_a",
-            "source_b",
-            "n_common",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("n_common"))
-            ).alias("jaccard"),
+    with DD.Staging() as st:
+        sh = st.pin(grams.select(
+            "source", F.substring(F.md5("g"), 1, 16).alias("k")
+        ).distinct())
+        sizes = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+        b = sh.select(F.col("source").alias("source_b"), F.col("k").alias("kb"))
+        inter = (
+            sh.join(b, (F.col("k") == F.col("kb")) & (F.col("source") < F.col("source_b")))
+            .groupBy(F.col("source").alias("source_a"), "source_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
         )
-    )
+        sa = sizes.select(F.col("source").alias("source_a"), F.col("n").alias("na"))
+        sb = sizes.select(F.col("source").alias("source_b"), F.col("n").alias("nb"))
+        return st.own(
+            inter.join(F.broadcast(sa), "source_a")
+            .join(F.broadcast(sb), "source_b")
+            .select(
+                "source_a",
+                "source_b",
+                "n_common",
+                (
+                    F.col("n_common").cast("double")
+                    / (F.col("na") + F.col("nb") - F.col("n_common"))
+                ).alias("jaccard"),
+            )
+        )
 
 
 @_q(
@@ -5300,32 +5286,33 @@ def text_term_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cnt = dt.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     vocab = cnt.orderBy(F.col("c").desc(), "term").limit(64)
-    dtv = dt.join(F.broadcast(vocab.select("term")), "term").persist()
-    nd = d.agg(F.count(F.lit(1)).alias("n"))
-    b = dtv.select(F.col("doc_id").alias("d2"), F.col("term").alias("term_b"))
-    pairs = (
-        dtv.join(b, (F.col("doc_id") == F.col("d2")) & (F.col("term") < F.col("term_b")))
-        .groupBy(F.col("term").alias("term_a"), "term_b")
-        .agg(F.count(F.lit(1)).alias("n_docs_both"))
-    )
-    ca = vocab.select(F.col("term").alias("term_a"), F.col("c").alias("ca"))
-    cb = vocab.select(F.col("term").alias("term_b"), F.col("c").alias("cb"))
-    return (
-        pairs.join(F.broadcast(ca), "term_a")
-        .join(F.broadcast(cb), "term_b")
-        .crossJoin(F.broadcast(nd))
-        .select(
-            "term_a",
-            "term_b",
-            "n_docs_both",
-            (
-                (F.col("n") * F.col("n_docs_both")).cast("double")
-                / (F.col("ca") * F.col("cb"))
-            ).alias("lift"),
+    with DD.Staging() as st:
+        dtv = st.pin(dt.join(F.broadcast(vocab.select("term")), "term"))
+        nd = d.agg(F.count(F.lit(1)).alias("n"))
+        b = dtv.select(F.col("doc_id").alias("d2"), F.col("term").alias("term_b"))
+        pairs = (
+            dtv.join(b, (F.col("doc_id") == F.col("d2")) & (F.col("term") < F.col("term_b")))
+            .groupBy(F.col("term").alias("term_a"), "term_b")
+            .agg(F.count(F.lit(1)).alias("n_docs_both"))
         )
-        .orderBy(F.col("n_docs_both").desc(), "term_a", "term_b")
-        .limit(50)
-    )
+        ca = vocab.select(F.col("term").alias("term_a"), F.col("c").alias("ca"))
+        cb = vocab.select(F.col("term").alias("term_b"), F.col("c").alias("cb"))
+        return st.own(
+            pairs.join(F.broadcast(ca), "term_a")
+            .join(F.broadcast(cb), "term_b")
+            .crossJoin(F.broadcast(nd))
+            .select(
+                "term_a",
+                "term_b",
+                "n_docs_both",
+                (
+                    (F.col("n") * F.col("n_docs_both")).cast("double")
+                    / (F.col("ca") * F.col("cb"))
+                ).alias("lift"),
+            )
+            .orderBy(F.col("n_docs_both").desc(), "term_a", "term_b")
+            .limit(50)
+        )
 
 
 _SURVIVOR_ORACLE = f"""
@@ -5835,51 +5822,50 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks") >= 2
     )
     bg = toks.select("doc_id", F.explode(TX.ngrams(F.col("toks"), 2)).alias("bigram"))
-    docbg = bg.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("dcnt"))
-    docbg = docbg.persist()
-    c12 = docbg.groupBy("bigram").agg(F.sum("dcnt").alias("c12"))
-    c1 = c12.groupBy(
-        F.split(F.col("bigram"), " ").getItem(0).alias("w1")
-    ).agg(F.sum("c12").alias("c1"))
-    # V = distinct tokens over the >=2-token docs — derived from the
-    # COMPACT bigram-type table, not a second corpus tokenize pass: in a
-    # >=2-token doc every token position lands in a bigram half (first
-    # word or second word), so the union of the halves IS the token set.
-    # The oracle spells the same value from the tokens directly.
-    v = (
-        c12.select(F.explode(F.split(F.col("bigram"), " ")).alias("w"))
-        .agg(F.countDistinct("w").alias("v"))
-    )
-    p = (F.col("c12") + 1).cast("double") / (F.col("c1") + F.col("v")).cast("double")
-    typ = (
-        c12.withColumn("w1", F.split(F.col("bigram"), " ").getItem(0))
-        .join(c1, "w1")
-        .crossJoin(F.broadcast(v))
-        .select(
-            "bigram",
-            F.floor((-F.log(p)) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("long")
-            .alias("nllq"),
+    with DD.Staging() as st:
+        docbg = st.pin(bg.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("dcnt")))
+        c12 = docbg.groupBy("bigram").agg(F.sum("dcnt").alias("c12"))
+        c1 = c12.groupBy(
+            F.split(F.col("bigram"), " ").getItem(0).alias("w1")
+        ).agg(F.sum("c12").alias("c1"))
+        # V = distinct tokens over the >=2-token docs — derived from the
+        # COMPACT bigram-type table, not a second corpus tokenize pass: in a
+        # >=2-token doc every token position lands in a bigram half (first
+        # word or second word), so the union of the halves IS the token set.
+        # The oracle spells the same value from the tokens directly.
+        v = (
+            c12.select(F.explode(F.split(F.col("bigram"), " ")).alias("w"))
+            .agg(F.countDistinct("w").alias("v"))
         )
-    )
-    out = (
-        docbg.join(typ, "bigram")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("dcnt").alias("n_bigrams"),
-            F.sum(F.col("dcnt") * F.col("nllq")).alias("tot"),
+        p = (F.col("c12") + 1).cast("double") / (F.col("c1") + F.col("v")).cast("double")
+        typ = (
+            c12.withColumn("w1", F.split(F.col("bigram"), " ").getItem(0))
+            .join(c1, "w1")
+            .crossJoin(F.broadcast(v))
+            .select(
+                "bigram",
+                F.floor((-F.log(p)) * F.lit(1000000.0) + F.lit(0.5))
+                .cast("long")
+                .alias("nllq"),
+            )
         )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            (
-                F.col("tot").cast("double")
-                / (F.col("n_bigrams") * F.lit(1000000.0))
-            ).alias("ce_nats"),
+        out = (
+            docbg.join(typ, "bigram")
+            .groupBy("doc_id")
+            .agg(
+                F.sum("dcnt").alias("n_bigrams"),
+                F.sum(F.col("dcnt") * F.col("nllq")).alias("tot"),
+            )
+            .select(
+                "doc_id",
+                "n_bigrams",
+                (
+                    F.col("tot").cast("double")
+                    / (F.col("n_bigrams") * F.lit(1000000.0))
+                ).alias("ce_nats"),
+            )
         )
-    )
-    out._xmlpipe_cached = [docbg]
-    return out
+        return st.own(out)
 
 
 #: DSIR hashed-feature space: 256 buckets keyed by the first two hex
@@ -5952,45 +5938,45 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id", "lang", F.substring(F.md5(F.col("w")), 1, 2).alias("bucket")
     )
-    occ = occ.persist()
-    raw = occ.groupBy("bucket").agg(F.count(F.lit(1)).alias("cr"))
-    tgt = occ.filter(F.col("lang") == _DSIR_TARGET_LANG).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("ct")
-    )
-    tot = occ.agg(
-        F.count(F.lit(1)).alias("nr"),
-        F.count(F.when(F.col("lang") == _DSIR_TARGET_LANG, 1)).alias("nt"),
-    )
-    num = (F.coalesce(F.col("ct"), F.lit(0)) + 1).cast("double") * (
-        F.col("nr") + 256
-    ).cast("double")
-    den = (F.col("cr") + 1).cast("double") * (F.col("nt") + 256).cast("double")
-    bw = (
-        raw.join(tgt, "bucket", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "bucket",
-            F.floor(F.log(num / den) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("long")
-            .alias("lwq"),
+    with DD.Staging() as st:
+        occ = st.pin(occ)
+        raw = occ.groupBy("bucket").agg(F.count(F.lit(1)).alias("cr"))
+        tgt = occ.filter(F.col("lang") == _DSIR_TARGET_LANG).groupBy("bucket").agg(
+            F.count(F.lit(1)).alias("ct")
         )
-    )
-    docb = occ.groupBy("doc_id", "bucket").agg(F.count(F.lit(1)).alias("dcnt"))
-    out = (
-        docb.join(F.broadcast(bw), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("dcnt").alias("n_tokens"),
-            F.sum(F.col("dcnt") * F.col("lwq")).alias("tot"),
+        tot = occ.agg(
+            F.count(F.lit(1)).alias("nr"),
+            F.count(F.when(F.col("lang") == _DSIR_TARGET_LANG, 1)).alias("nt"),
         )
-        .select(
-            "doc_id",
-            "n_tokens",
-            (F.col("tot").cast("double") / F.lit(1000000.0)).alias("dsir_logweight"),
+        num = (F.coalesce(F.col("ct"), F.lit(0)) + 1).cast("double") * (
+            F.col("nr") + 256
+        ).cast("double")
+        den = (F.col("cr") + 1).cast("double") * (F.col("nt") + 256).cast("double")
+        bw = (
+            raw.join(tgt, "bucket", "left")
+            .crossJoin(F.broadcast(tot))
+            .select(
+                "bucket",
+                F.floor(F.log(num / den) * F.lit(1000000.0) + F.lit(0.5))
+                .cast("long")
+                .alias("lwq"),
+            )
         )
-    )
-    out._xmlpipe_cached = [occ]
-    return out
+        docb = occ.groupBy("doc_id", "bucket").agg(F.count(F.lit(1)).alias("dcnt"))
+        out = (
+            docb.join(F.broadcast(bw), "bucket")
+            .groupBy("doc_id")
+            .agg(
+                F.sum("dcnt").alias("n_tokens"),
+                F.sum(F.col("dcnt") * F.col("lwq")).alias("tot"),
+            )
+            .select(
+                "doc_id",
+                "n_tokens",
+                (F.col("tot").cast("double") / F.lit(1000000.0)).alias("dsir_logweight"),
+            )
+        )
+        return st.own(out)
 
 
 #: SemDeDup cosine threshold — high enough that only true semantic
@@ -6108,115 +6094,115 @@ def _semdedup_core(e: DataFrame, n_clusters: int, tau: float) -> DataFrame:
     from cql_xmlpipe_spark.functions.vectors import norm, sqdist
 
     # the input frame is scanned once per Lloyd round plus once for the
-    # final assignment — persist it so a derived input (the planted
+    # final assignment — pin it so a derived input (the planted
     # union, a filtered corpus) is computed once, not per scan
-    e = e.persist()
-    cent = e.filter(F.col("vec_id") < n_clusters).select(
-        F.col("vec_id").alias("cid"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("cemb"),
-    )
-    for _ in range(2):
-        cent = _update_to_centroids(_lloyd_update(e, cent)).localCheckpoint()
-    cents = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "cemb"))).alias("cents")
-    )
-    scored = e.crossJoin(F.broadcast(cents)).withColumn(
-        "cands",
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                sqdist(F.col("embedding"), c["cemb"]).alias("dist"),
-                c["cid"].alias("cid"),
+    with DD.Staging() as st:
+        e = st.pin(e)
+        cent = e.filter(F.col("vec_id") < n_clusters).select(
+            F.col("vec_id").alias("cid"),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("cemb"),
+        )
+        for _ in range(2):
+            cent = _update_to_centroids(_lloyd_update(e, cent)).localCheckpoint()
+        cents = cent.agg(
+            F.array_sort(F.collect_list(F.struct("cid", "cemb"))).alias("cents")
+        )
+        scored = e.crossJoin(F.broadcast(cents)).withColumn(
+            "cands",
+            F.transform(
+                F.col("cents"),
+                lambda c: F.struct(
+                    sqdist(F.col("embedding"), c["cemb"]).alias("dist"),
+                    c["cid"].alias("cid"),
+                ),
             ),
-        ),
-    )
-    init = F.struct(
-        F.lit(float("inf")).alias("dist"), F.lit(-1).cast("long").alias("cid")
-    )
-    asg = scored.select(
-        "vec_id",
-        F.aggregate(
-            F.col("cands"),
-            init,
-            lambda acc, d: F.when(d["dist"] < acc["dist"], d).otherwise(acc),
-        )["cid"].alias("cluster_id"),
-        "embedding",
-    ).persist()
-    # per-vector norms are computed ONCE here, not per pair — and in
-    # Spark (the left-to-right fold that bit-matches the oracle), so the
-    # numpy stage below divides the exact same per-vector doubles
-    el = asg.withColumn("nrm", norm(F.col("embedding"))).filter(F.col("nrm") > 0)
-    # Within-cluster pair stage as ONE Arrow-batched numpy block per
-    # cluster (r15, guide §4.2 — the pq_topk ADC lesson applied here):
-    # the r14 salted self-join shipped every member 9× (8 salt copies +
-    # probe side) through an exchange and evaluated an INTERPRETED
-    # 64-term Column fold per candidate pair (the unrolled-expression
-    # experiment proved the fold was already the best *Column* form —
-    # the win is leaving Column expressions entirely). Now each cluster
-    # crosses the Arrow boundary once as (id, emb, nrm) and a single
-    # float64 matmul scores all pairs. Decision-exact, measured: numpy's
-    # pairwise dot summation and the fold differ only in addition order
-    # (~1e-16 relative); the smallest |cos − τ| margin over ALL
-    # within-cluster pairs is 0.05 at every SF (planted twins sit at
-    # ≈1.0, unrelated pairs ≤0.9), and the output matched the fold
-    # row-for-row at sf0.001/0.01/0.1 (scripts/measure_r15_semdedup.py).
-    # kept_by = min qualifying lower id: ids are sorted ascending, so
-    # the FIRST qualifying row per column is the minimum — argmax on the
-    # boolean mask, no per-pair rows ever materialize.
-    # Scale shape: one shuffle of (cluster, id, emb, nrm) — 1× the rows
-    # the salted join shuffled 9× — and per-task memory is the cluster's
-    # member block plus a column-blocked g×blk cosine tile (blk sized to
-    # ~8M doubles), bounded at the paper's K ∝ N operating point where
-    # cluster size stays ~constant.
-    import numpy as np
-    import pandas as pd
-
-    def _prune_cluster(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        g = len(ids)
-        if g < 2:
-            return pd.DataFrame(
-                {"vec_id": pd.Series(dtype="int64"),
-                 "kept_by": pd.Series(dtype="int64")}
-            )
-        V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        nr = pdf["nrm"].to_numpy(dtype=np.float64)
-        row_idx = np.arange(g)
-        blk = max(128, min(4096, (8 << 20) // g))
-        out_v, out_k = [], []
-        for j0 in range(0, g, blk):
-            j1 = min(j0 + blk, g)
-            cos = (V @ V[j0:j1].T) / np.outer(nr, nr[j0:j1])
-            mask = cos >= tau
-            # a pair is (lower id, higher id): keep rows strictly above
-            # the column's global position only
-            mask &= row_idx[:, None] < np.arange(j0, j1)[None, :]
-            sel = np.flatnonzero(mask.any(axis=0))
-            first = mask.argmax(axis=0)
-            out_v.append(ids[j0 + sel])
-            out_k.append(ids[first[sel]])
-        return pd.DataFrame(
-            {"vec_id": np.concatenate(out_v), "kept_by": np.concatenate(out_k)}
         )
-
-    pruned = (
-        el.select("cluster_id", "vec_id", "embedding", "nrm")
-        .groupBy("cluster_id")
-        .applyInPandas(_prune_cluster, "vec_id long, kept_by long")
-    )
-    out = (
-        asg.select("vec_id", "cluster_id")
-        .join(pruned, "vec_id", "left")
-        .select(
+        init = F.struct(
+            F.lit(float("inf")).alias("dist"), F.lit(-1).cast("long").alias("cid")
+        )
+        asg = st.pin(scored.select(
             "vec_id",
-            "cluster_id",
-            F.col("kept_by").isNotNull().alias("is_pruned"),
-            "kept_by",
+            F.aggregate(
+                F.col("cands"),
+                init,
+                lambda acc, d: F.when(d["dist"] < acc["dist"], d).otherwise(acc),
+            )["cid"].alias("cluster_id"),
+            "embedding",
+        ))
+        # per-vector norms are computed ONCE here, not per pair — and in
+        # Spark (the left-to-right fold that bit-matches the oracle), so the
+        # numpy stage below divides the exact same per-vector doubles
+        el = asg.withColumn("nrm", norm(F.col("embedding"))).filter(F.col("nrm") > 0)
+        # Within-cluster pair stage as ONE Arrow-batched numpy block per
+        # cluster (r15, guide §4.2 — the pq_topk ADC lesson applied here):
+        # the r14 salted self-join shipped every member 9× (8 salt copies +
+        # probe side) through an exchange and evaluated an INTERPRETED
+        # 64-term Column fold per candidate pair (the unrolled-expression
+        # experiment proved the fold was already the best *Column* form —
+        # the win is leaving Column expressions entirely). Now each cluster
+        # crosses the Arrow boundary once as (id, emb, nrm) and a single
+        # float64 matmul scores all pairs. Decision-exact, measured: numpy's
+        # pairwise dot summation and the fold differ only in addition order
+        # (~1e-16 relative); the smallest |cos − τ| margin over ALL
+        # within-cluster pairs is 0.05 at every SF (planted twins sit at
+        # ≈1.0, unrelated pairs ≤0.9), and the output matched the fold
+        # row-for-row at sf0.001/0.01/0.1 (scripts/measure_r15_semdedup.py).
+        # kept_by = min qualifying lower id: ids are sorted ascending, so
+        # the FIRST qualifying row per column is the minimum — argmax on the
+        # boolean mask, no per-pair rows ever materialize.
+        # Scale shape: one shuffle of (cluster, id, emb, nrm) — 1× the rows
+        # the salted join shuffled 9× — and per-task memory is the cluster's
+        # member block plus a column-blocked g×blk cosine tile (blk sized to
+        # ~8M doubles), bounded at the paper's K ∝ N operating point where
+        # cluster size stays ~constant.
+        import numpy as np
+        import pandas as pd
+
+        def _prune_cluster(pdf: "pd.DataFrame") -> "pd.DataFrame":
+            pdf = pdf.sort_values("vec_id")
+            ids = pdf["vec_id"].to_numpy()
+            g = len(ids)
+            if g < 2:
+                return pd.DataFrame(
+                    {"vec_id": pd.Series(dtype="int64"),
+                     "kept_by": pd.Series(dtype="int64")}
+                )
+            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            nr = pdf["nrm"].to_numpy(dtype=np.float64)
+            row_idx = np.arange(g)
+            blk = max(128, min(4096, (8 << 20) // g))
+            out_v, out_k = [], []
+            for j0 in range(0, g, blk):
+                j1 = min(j0 + blk, g)
+                cos = (V @ V[j0:j1].T) / np.outer(nr, nr[j0:j1])
+                mask = cos >= tau
+                # a pair is (lower id, higher id): keep rows strictly above
+                # the column's global position only
+                mask &= row_idx[:, None] < np.arange(j0, j1)[None, :]
+                sel = np.flatnonzero(mask.any(axis=0))
+                first = mask.argmax(axis=0)
+                out_v.append(ids[j0 + sel])
+                out_k.append(ids[first[sel]])
+            return pd.DataFrame(
+                {"vec_id": np.concatenate(out_v), "kept_by": np.concatenate(out_k)}
+            )
+
+        pruned = (
+            el.select("cluster_id", "vec_id", "embedding", "nrm")
+            .groupBy("cluster_id")
+            .applyInPandas(_prune_cluster, "vec_id long, kept_by long")
         )
-    )
-    out._xmlpipe_cached = [asg, e]
-    return out
+        out = (
+            asg.select("vec_id", "cluster_id")
+            .join(pruned, "vec_id", "left")
+            .select(
+                "vec_id",
+                "cluster_id",
+                F.col("kept_by").isNotNull().alias("is_pruned"),
+                "kept_by",
+            )
+        )
+        return st.own(out)
 
 
 @_q("similarity_pq_topk", _ann_topk_oracle("pq"))
@@ -6890,23 +6876,23 @@ def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     both. Scale shape: the LM scoring plan plus ONE lang-keyed window
     (languages are few and large — a per-language sort, the same
     shape as `quality_percentile_filter`)."""
-    scored = text_bigram_lm_score(spark, sf_dir)
-    lg = load_table(spark, "documents", sf_dir).select("doc_id", "lang")
-    w = Window.partitionBy("lang").orderBy("ce_nats", "doc_id")
-    pr = scored.join(lg, "doc_id").withColumn("p", F.percent_rank().over(w))
-    out = pr.select(
-        "doc_id",
-        "lang",
-        "ce_nats",
-        F.when(F.col("p") < 1.0 / 3.0, "head")
-        .when(F.col("p") < 2.0 / 3.0, "middle")
-        .otherwise("tail")
-        .alias("bucket"),
-    )
-    # the scoring stage's persisted doc-bigram table rides this query's
-    # cleanup hook (aggregating on top of scored would otherwise drop it)
-    out._xmlpipe_cached = getattr(scored, "_xmlpipe_cached", [])
-    return out
+    with DD.Staging() as st:
+        scored = st.adopt(text_bigram_lm_score(spark, sf_dir))
+        lg = load_table(spark, "documents", sf_dir).select("doc_id", "lang")
+        w = Window.partitionBy("lang").orderBy("ce_nats", "doc_id")
+        pr = scored.join(lg, "doc_id").withColumn("p", F.percent_rank().over(w))
+        out = pr.select(
+            "doc_id",
+            "lang",
+            "ce_nats",
+            F.when(F.col("p") < 1.0 / 3.0, "head")
+            .when(F.col("p") < 2.0 / 3.0, "middle")
+            .otherwise("tail")
+            .alias("bucket"),
+        )
+        # the scoring stage's pinned doc-bigram table rides this query's
+        # result (aggregating on top of scored would otherwise drop it)
+        return st.own(out)
 
 
 #: WordPiece-style vocabulary: every single character present in the
@@ -7014,76 +7000,75 @@ def text_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks") > 0
     )
     tok = toks.select("doc_id", F.posexplode("toks").alias("wpos0", "w"))
-    wt = tok.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    wt = wt.persist()
-    chars = (
-        wt.select(
-            F.explode(F.sequence(F.lit(1), F.length("w"))).alias("i"), "w"
+    with DD.Staging() as st:
+        wt = st.pin(tok.groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
+        chars = (
+            wt.select(
+                F.explode(F.sequence(F.lit(1), F.length("w"))).alias("i"), "w"
+            )
+            .select(F.col("w").substr(F.col("i"), F.lit(1)).alias("piece"))
+            .distinct()
         )
-        .select(F.col("w").substr(F.col("i"), F.lit(1)).alias("piece"))
-        .distinct()
-    )
-    sub_rows = wt.select(
-        "w",
-        "cnt",
-        F.explode(F.sequence(F.lit(2), F.lit(_WP_MAX_LEN))).alias("l"),
-    ).select(
-        "w",
-        "cnt",
-        "l",
-        F.explode(
-            F.when(
-                F.length("w") - F.col("l") + 1 >= 1,
-                F.sequence(F.lit(1), F.length("w") - F.col("l") + 1),
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("i"),
-    )
-    subs = sub_rows.select(
-        F.col("w").substr(F.col("i"), F.col("l")).alias("piece"), "cnt"
-    ).groupBy("piece").agg(F.sum("cnt").alias("c"))
-    top_subs = subs.orderBy(F.col("c").desc(), "piece").limit(_WP_TOP_SUBS)
-    vocab = chars.union(top_subs.select("piece")).distinct()
-    pieces = {r["piece"] for r in vocab.collect()}  # ≤ alphabet + 64 rows
-    max_len = _WP_MAX_LEN
+        sub_rows = wt.select(
+            "w",
+            "cnt",
+            F.explode(F.sequence(F.lit(2), F.lit(_WP_MAX_LEN))).alias("l"),
+        ).select(
+            "w",
+            "cnt",
+            "l",
+            F.explode(
+                F.when(
+                    F.length("w") - F.col("l") + 1 >= 1,
+                    F.sequence(F.lit(1), F.length("w") - F.col("l") + 1),
+                ).otherwise(F.array().cast("array<int>"))
+            ).alias("i"),
+        )
+        subs = sub_rows.select(
+            F.col("w").substr(F.col("i"), F.col("l")).alias("piece"), "cnt"
+        ).groupBy("piece").agg(F.sum("cnt").alias("c"))
+        top_subs = subs.orderBy(F.col("c").desc(), "piece").limit(_WP_TOP_SUBS)
+        vocab = chars.union(top_subs.select("piece")).distinct()
+        pieces = {r["piece"] for r in vocab.collect()}  # ≤ alphabet + 64 rows
+        max_len = _WP_MAX_LEN
 
-    @F.pandas_udf(T.StringType())
-    def segment(s: pd.Series) -> pd.Series:
-        def seg(w: str) -> str:
-            out, pos, n = [], 0, len(w)
-            while pos < n:
-                for l in range(min(max_len, n - pos), 0, -1):
-                    p = w[pos : pos + l]
-                    if p in pieces:
-                        out.append(p)
-                        pos += l
-                        break
-            return " ".join(out)
+        @F.pandas_udf(T.StringType())
+        def segment(s: pd.Series) -> pd.Series:
+            def seg(w: str) -> str:
+                out, pos, n = [], 0, len(w)
+                while pos < n:
+                    for l in range(min(max_len, n - pos), 0, -1):
+                        p = w[pos : pos + l]
+                        if p in pieces:
+                            out.append(p)
+                            pos += l
+                            break
+                return " ".join(out)
 
-        return s.map(seg)
+            return s.map(seg)
 
-    ws = wt.select(
-        "w", segment(F.col("w")).alias("pieces_str")
-    ).withColumn("n_pieces", F.size(F.split("pieces_str", " ")))
-    out = (
-        tok.join(ws, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_pieces").cast("long").alias("n_wordpieces"),
-            F.md5(
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("wpos0", "pieces_str"))
+        ws = wt.select(
+            "w", segment(F.col("w")).alias("pieces_str")
+        ).withColumn("n_pieces", F.size(F.split("pieces_str", " ")))
+        out = (
+            tok.join(ws, "w")
+            .groupBy("doc_id")
+            .agg(
+                F.sum("n_pieces").cast("long").alias("n_wordpieces"),
+                F.md5(
+                    F.concat_ws(
+                        " ",
+                        F.transform(
+                            F.array_sort(
+                                F.collect_list(F.struct("wpos0", "pieces_str"))
+                            ),
+                            lambda s: s["pieces_str"],
                         ),
-                        lambda s: s["pieces_str"],
-                    ),
-                )
-            ).alias("pieces_md5"),
+                    )
+                ).alias("pieces_md5"),
+            )
         )
-    )
-    out._xmlpipe_cached = [wt]
-    return out
+        return st.own(out)
 
 
 _LM_HOLDOUT_ORACLE = """
@@ -7152,10 +7137,11 @@ def text_bigram_lm_score_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     holdout = d.filter(F.col("doc_id") % 5 == 0)
     from cql_xmlpipe_spark.streaming.lm import score_docs_with_lm, stage_bigram_lm
 
-    lm = stage_bigram_lm(train)
-    out = score_docs_with_lm(lm, holdout)
-    out._xmlpipe_cached = [*getattr(out, "_xmlpipe_cached", []), *lm[:2]]
-    return out
+    with DD.Staging() as st:
+        lm = stage_bigram_lm(train)
+        st.pin(lm[0])
+        st.pin(lm[1])
+        return st.own(score_docs_with_lm(lm, holdout))
 
 
 _DECONTAM_FUZZY_ORACLE = f"""
@@ -7206,15 +7192,15 @@ def text_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     eval_slice = d.filter(F.col("doc_id") % 4 == 0)
     train = d.filter(F.col("doc_id") % 4 != 0)
-    pairs = DD.incremental_probe_pairs(eval_slice, train, threshold=0.5)
-    out = pairs.groupBy(F.col("inc_id").alias("train_id")).agg(
-        F.count(F.lit(1)).alias("n_eval_matches"),
-        F.max("jaccard").alias("max_jaccard"),
-        F.min("corpus_id").alias("first_eval_id"),
-    )
-    # keep the probe's staged-index persists on this query's cleanup hook
-    out._xmlpipe_cached = getattr(pairs, "_xmlpipe_cached", [])
-    return out
+    with DD.Staging() as st:
+        pairs = st.adopt(DD.incremental_probe_pairs(eval_slice, train, threshold=0.5))
+        out = pairs.groupBy(F.col("inc_id").alias("train_id")).agg(
+            F.count(F.lit(1)).alias("n_eval_matches"),
+            F.max("jaccard").alias("max_jaccard"),
+            F.min("corpus_id").alias("first_eval_id"),
+        )
+        # keep the probe's staged-index pins on this query's result
+        return st.own(out)
 
 
 _CLUSTER_SAFE_SPLIT_ORACLE = f"""
@@ -7258,21 +7244,21 @@ def dataset_split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Lee et al. 2022 §5): dedup-aware eval requires the split to
     respect the duplicate graph."""
     d = load_table(spark, "documents", sf_dir)
-    ca = DD.cluster_assign_collapsed(d, threshold=0.5, k=3)
-    out = ca.select(
-        "doc_id",
-        "cluster_id",
-        F.when(
-            F.substring(F.md5(F.col("cluster_id").cast("string")), 1, 1).between(
-                "0", "7"
-            ),
-            "train",
+    with DD.Staging() as st:
+        ca = st.adopt(DD.cluster_assign_collapsed(d, threshold=0.5, k=3))
+        out = ca.select(
+            "doc_id",
+            "cluster_id",
+            F.when(
+                F.substring(F.md5(F.col("cluster_id").cast("string")), 1, 1).between(
+                    "0", "7"
+                ),
+                "train",
+            )
+            .otherwise("dev")
+            .alias("split"),
         )
-        .otherwise("dev")
-        .alias("split"),
-    )
-    out._xmlpipe_cached = getattr(ca, "_xmlpipe_cached", [])
-    return out
+        return st.own(out)
 
 
 _SURVIVOR_QUALITY_ORACLE = f"""
@@ -7319,29 +7305,26 @@ def dedup_survivor_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     → exact verify → CC over bare longs) and the self-trained LM
     scores, joined on doc_id and ranked inside each family — the join
     and window touch only family members, never the full corpus."""
-    ca = DD.cluster_assign_collapsed(
-        load_table(spark, "documents", sf_dir), threshold=0.5, k=3
-    ).filter(F.col("cluster_size") >= 2)
-    scored = text_bigram_lm_score(spark, sf_dir)
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("ce_nats").asc_nulls_last(), F.col("doc_id")
-    )
-    out = (
-        ca.join(scored.select("doc_id", "ce_nats"), "doc_id", "left")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "cluster_id",
-            F.col("doc_id").alias("survivor_id"),
-            F.col("ce_nats").alias("survivor_ce"),
-            F.col("cluster_size").cast("long").alias("n_members"),
+    with DD.Staging() as st:
+        ca = st.adopt(DD.cluster_assign_collapsed(
+            load_table(spark, "documents", sf_dir), threshold=0.5, k=3
+        )).filter(F.col("cluster_size") >= 2)
+        scored = st.adopt(text_bigram_lm_score(spark, sf_dir))
+        w = Window.partitionBy("cluster_id").orderBy(
+            F.col("ce_nats").asc_nulls_last(), F.col("doc_id")
         )
-    )
-    out._xmlpipe_cached = [
-        *getattr(ca, "_xmlpipe_cached", []),
-        *getattr(scored, "_xmlpipe_cached", []),
-    ]
-    return out
+        out = (
+            ca.join(scored.select("doc_id", "ce_nats"), "doc_id", "left")
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(
+                "cluster_id",
+                F.col("doc_id").alias("survivor_id"),
+                F.col("ce_nats").alias("survivor_ce"),
+                F.col("cluster_size").cast("long").alias("n_members"),
+            )
+        )
+        return st.own(out)
 
 
 #: per-(lang, bucket) quota for the deterministic eval-suite sampler
@@ -7378,17 +7361,17 @@ def eval_suite_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     language-partitioned rows — at 100 TB the strata are few and the
     per-stratum sort is the same exchange the tercile split already
     paid."""
-    bucketed = text_ccnet_buckets(spark, sf_dir)
-    w = Window.partitionBy("lang", "bucket").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    out = (
-        bucketed.withColumn("pick_rank", F.row_number().over(w))
-        .filter(F.col("pick_rank") <= _EVAL_SUITE_QUOTA)
-        .select("doc_id", "lang", "bucket", "ce_nats", "pick_rank")
-    )
-    out._xmlpipe_cached = getattr(bucketed, "_xmlpipe_cached", [])
-    return out
+    with DD.Staging() as st:
+        bucketed = st.adopt(text_ccnet_buckets(spark, sf_dir))
+        w = Window.partitionBy("lang", "bucket").orderBy(
+            F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
+        )
+        out = (
+            bucketed.withColumn("pick_rank", F.row_number().over(w))
+            .filter(F.col("pick_rank") <= _EVAL_SUITE_QUOTA)
+            .select("doc_id", "lang", "bucket", "ce_nats", "pick_rank")
+        )
+        return st.own(out)
 
 
 # ---------------------------------------------------------------------------

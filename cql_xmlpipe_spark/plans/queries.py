@@ -30,7 +30,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from cql_xmlpipe_spark.functions import text as TX
-from cql_xmlpipe_spark.functions.vectors import cosine
 from cql_xmlpipe_spark.sources.registry import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]

@@ -15,6 +15,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the
+    host's physical RAM, capped at 48g. A fixed 48g default exceeded
+    smaller hosts' RAM, and the JVM died mid-run there."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, ram // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "cql-xmlpipe-spark",
     cpus: str | int | None = None,
@@ -42,7 +50,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # events.parquet stores TIMESTAMP(NANOS); Spark has no ns timestamp

@@ -112,14 +112,6 @@ def _list_child_ids(
     return sorted(out)
 
 
-def _quiet_unpersist(frames) -> None:
-    for c in frames:
-        try:
-            c.unpersist()
-        except Exception:  # pragma: no cover - session teardown race
-            pass
-
-
 def read_rosters(
     spark: SparkSession, state_path: str, as_of: int | None = None
 ) -> DataFrame:
@@ -236,12 +228,14 @@ def incremental_probe_sink(
     persisted frames live until the session ends).
     """
     from cql_xmlpipe_spark.operators.dedup import (
+        Staging,
         incremental_probe_pairs,
         stage_corpus_lsh,
         unpersist_intermediates,
     )
 
-    staged = stage_corpus_lsh(corpus, text_col, id_col, k)
+    pins = Staging()
+    staged = tuple(map(pins.pin, stage_corpus_lsh(corpus, text_col, id_col, k)))
 
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
         pairs = incremental_probe_pairs(
@@ -257,10 +251,7 @@ def incremental_probe_sink(
         pairs.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
         unpersist_intermediates(pairs)
 
-    def close() -> None:
-        _quiet_unpersist(staged)
-
-    probe_batch.close = close
+    probe_batch.close = pins.release
     probe_batch.staged = staged
     return probe_batch
 
@@ -298,6 +289,7 @@ def embedding_incremental_probe_sink(
     the stream loudly, ``close()`` releases the staged index."""
     from cql_xmlpipe_spark.functions.vectors import norm
     from cql_xmlpipe_spark.operators.dedup import (
+        Staging,
         _resolve_band_geometry,
         embedding_incremental_probe_pairs,
         stage_corpus_sign_keys,
@@ -310,7 +302,8 @@ def embedding_incremental_probe_sink(
     nb, bb = _resolve_band_geometry(
         eligible, threshold, n_bands, band_bits, n_hint, auto_geometry
     )
-    staged = stage_corpus_sign_keys(corpus, id_col, emb_col, nb, bb)
+    pins = Staging()
+    staged = pins.pin(stage_corpus_sign_keys(corpus, id_col, emb_col, nb, bb))
 
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
         pairs = embedding_incremental_probe_pairs(
@@ -327,10 +320,7 @@ def embedding_incremental_probe_sink(
         pairs.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
         unpersist_intermediates(pairs)
 
-    def close() -> None:
-        _quiet_unpersist([staged])
-
-    probe_batch.close = close
+    probe_batch.close = pins.release
     probe_batch.staged = staged
     probe_batch.geometry = (nb, bb)
     return probe_batch
@@ -455,12 +445,15 @@ def _make_roster_sink(
     it as ONE frame, unpersists the retired frames, and prunes the
     superseded ``index/upto`` snapshot — so driver plan width, executor
     cache entries and restart re-signing cost are all O(compact_every),
-    not O(stream lifetime)."""
+    not O(stream lifetime). Two :class:`~cql_xmlpipe_spark.operators.
+    dedup.Staging` owners hold the pins: one for the corpus staging, one
+    for the current ingest generation (compacted base + pending batch
+    frames), which a compaction retires wholesale."""
     if snapshot not in ("full", "delta"):
         raise ValueError(f"snapshot must be 'full' or 'delta', got {snapshot!r}")
     if compact_every < 1:
         raise ValueError(f"compact_every must be >= 1, got {compact_every}")
-    from cql_xmlpipe_spark.operators.dedup import unpersist_intermediates
+    from cql_xmlpipe_spark.operators.dedup import Staging, unpersist_intermediates
 
     spark = corpus.sparkSession
     id_col = adapter.cols[0]
@@ -498,8 +491,10 @@ def _make_roster_sink(
 
     # ---- standing LSH index: corpus staged once; ingest side resumes
     # from the newest compacted snapshot instead of re-signing history
+    corpus_pins = Staging()
     state = {
-        "corpus_staged": adapter.stage(corpus),
+        "corpus_staged": tuple(map(corpus_pins.pin, adapter.stage(corpus))),
+        "ingest_pins": Staging(),  # base + pending: one generation
         "base": None,
         "base_upto": -1,
         "pending": {},  # batch_id -> staged frames since last compaction
@@ -509,7 +504,7 @@ def _make_roster_sink(
     if uptos:
         n = max(uptos)
         state["base"] = tuple(
-            spark.read.parquet(f"{index_dir}/upto={n}/f{i}").persist()
+            state["ingest_pins"].pin(spark.read.parquet(f"{index_dir}/upto={n}/f{i}"))
             for i in range(adapter.n_frames)
         )
         state["base_upto"] = n
@@ -520,7 +515,9 @@ def _make_roster_sink(
             if b in state["covered"]:
                 continue
             docs = spark.read.parquet(f"{batches_dir}/batch={b}")
-            state["pending"][b] = adapter.stage(docs)
+            state["pending"][b] = tuple(
+                map(state["ingest_pins"].pin, adapter.stage(docs))
+            )
             state["covered"].add(b)
 
     def _staged_union():
@@ -546,16 +543,16 @@ def _make_roster_sink(
                 pf = state["pending"][b][i]
                 f = pf if f is None else f.unionByName(pf)
             f.write.mode("overwrite").parquet(f"{index_dir}/upto={batch_id}/f{i}")
+        fresh_pins = Staging()
         fresh = tuple(
-            spark.read.parquet(f"{index_dir}/upto={batch_id}/f{i}").persist()
+            fresh_pins.pin(spark.read.parquet(f"{index_dir}/upto={batch_id}/f{i}"))
             for i in range(adapter.n_frames)
         )
-        retired = list(state["base"] or ()) + [
-            fr for frames in state["pending"].values() for fr in frames
-        ]
+        retired = state["ingest_pins"]
         old_upto = state["base_upto"]
         state["base"], state["base_upto"], state["pending"] = fresh, batch_id, {}
-        _quiet_unpersist(retired)
+        state["ingest_pins"] = fresh_pins
+        retired.release()
         if snapshot == "delta":
             # periodic full roster base: reconstruction (and restart)
             # reads this + at most ~compact_every deltas, never the
@@ -659,11 +656,9 @@ def _make_roster_sink(
         _maybe_compact(batch_id)
 
     def close() -> None:
-        retired = list(state["corpus_staged"]) + list(state["base"] or ()) + [
-            fr for frames in state["pending"].values() for fr in frames
-        ]
         state["pending"], state["base"] = {}, None
-        _quiet_unpersist(retired)
+        corpus_pins.release()
+        state["ingest_pins"].release()
 
     update_batch.close = close
     update_batch.state = state

@@ -76,14 +76,22 @@ def _stage_dir(sf_dir: str) -> str:
     return d
 
 
-#: staged-dir -> probed parquet schema. The stage dir is content-addressed
-#: (its tag hashes the resolved source file LIST, see _stage_dir), so a
-#: rewritten source table mints a new key and can never serve a stale
-#: schema. Schema METADATA only — never data or results; it removes the
-#: per-stream-start footer probe that every streaming gate paid (r15,
-#: guide §1.2 "don't recompute": five gates × three bench passes probed
-#: the same immutable file list fifteen times).
-_SCHEMA_CACHE: dict[str, "T.StructType"] = {}
+#: (staged dir, per-file (size, mtime)) -> probed parquet schema. The
+#: stage dir's tag hashes the resolved source file LIST (see _stage_dir),
+#: which a single-file source rewritten IN PLACE keeps — so the key also
+#: carries each linked file's size and mtime, and a rewrite mints a new
+#: key instead of serving a stale schema. Schema METADATA only — never
+#: data or results; it removes the per-stream-start footer probe that
+#: every streaming gate paid (five gates × three bench passes probed the
+#: same unchanged file list fifteen times).
+_SCHEMA_CACHE: dict[tuple, "T.StructType"] = {}
+
+
+def _schema_key(d: str) -> tuple:
+    import os
+
+    stats = [os.stat(os.path.join(d, f)) for f in sorted(os.listdir(d))]
+    return (d, tuple((s.st_size, s.st_mtime_ns) for s in stats))
 
 
 def stream_events(
@@ -97,8 +105,8 @@ def stream_events(
     batch reader's schema for the same file — a footer-only read — and
     normalize ``ts`` to a µs TimestampType either way, identical to
     ``sources/registry.load_table``. The probe is memoized per staged
-    dir (content-addressed over the file list), so a session running
-    many streams over one source reads the footer once.
+    dir and its files' sizes and mtimes, so a session running many
+    streams over one unchanged source reads the footer once.
     """
     # vanilla-session safety: without this runtime conf a NANOS file is
     # unreadable at all — don't depend on the session factory having set it
@@ -107,10 +115,11 @@ def stream_events(
     except Exception:  # pragma: no cover - conf locked on exotic sessions
         pass
     d = _stage_dir(sf_dir)
-    probed = _SCHEMA_CACHE.get(d)
+    key = _schema_key(d)
+    probed = _SCHEMA_CACHE.get(key)
     if probed is None:
         probed = spark.read.parquet(d).schema
-        _SCHEMA_CACHE[d] = probed
+        _SCHEMA_CACHE[key] = probed
     reader = spark.readStream.schema(probed)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

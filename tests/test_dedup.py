@@ -150,23 +150,15 @@ def test_embedding_near_dup_identical_across_band_widths(spark):
 
 
 def test_ngram_jaccard_verify_variants_identical(spark):
-    """The arrays- and explode-verify paths must emit the SAME pair set
-    with bit-identical jaccard values on real documents (both divide the
-    same integer (inter, |A|, |B|) triple) — the A/B in SCALE.md only
-    trades shuffle shape, never the exact contract."""
+    """The exact-duplicate collapse must emit the SAME pair set with
+    bit-identical jaccard values as the plain PPJoin verifier on real
+    documents — collapse only changes which pairs are verified, never
+    the exact contract."""
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    a = sorted(
-        map(tuple, DD.ngram_jaccard_pairs(docs, threshold=0.35, verify="arrays").collect())
-    )
-    b = sorted(
-        map(tuple, DD.ngram_jaccard_pairs(docs, threshold=0.35, verify="explode").collect())
-    )
-    assert a == b and len(a) > 0
+    a = sorted(map(tuple, DD.ngram_jaccard_pairs(docs, threshold=0.35).collect()))
+    assert len(a) > 0
     ac = sorted(
-        map(
-            tuple,
-            DD.ngram_jaccard_pairs_collapsed(docs, threshold=0.35, verify="explode").collect(),
-        )
+        map(tuple, DD.ngram_jaccard_pairs_collapsed(docs, threshold=0.35).collect())
     )
     assert ac == a
 
@@ -504,22 +496,134 @@ def test_connected_components_chain_plus_cliques_min_labels(spark):
     assert out[5000] == (5000, 1)
 
 
-def test_embedding_groups_unpersists_on_downstream_failure(spark, monkeypatch):
-    """A failure downstream of the vh/mem persists (e.g. a CC
-    no-fixpoint RuntimeError) must not leak cached frames for the
-    session's lifetime (ADVICE r10): embedding_near_dup_groups
-    unpersists before re-raising, mirroring the refusal paths of the
-    guarded pair operators."""
+_FAM = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+
+
+def _fi_docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _fi_emb(spark):
     rows = [(i, [1.0, 2.0, 3.0, float(i + 1)]) for i in range(20)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _fi_corpus(spark):
+    rows = [(i, _FAM) for i in range(4)]
+    rows += [(10 + i, f"unique corpus document number {i} about topic {i * 7}")
+             for i in range(6)]
+    return _fi_docs(spark, rows)
+
+
+def _fi_increment(spark):
+    return _fi_docs(spark, [(100, _FAM), (101, "a novel batch doc with fresh words")])
+
+
+def _fi_rosters(spark):
+    return spark.createDataFrame(
+        [(0, 4, [0, 1, 2, 3])],
+        "cluster_id long, cluster_size long, members array<long>",
+    )
+
+
+def _fi_roster_update(spark):
+    return DD.incremental_roster_update(
+        _fi_corpus(spark), _fi_increment(spark), _fi_rosters(spark), threshold=0.35
+    )
+
+
+def _fi_refresh(spark, corpus_rows=None, inc_rows=None, max_pairs=None):
+    corpus = _fi_docs(spark, corpus_rows) if corpus_rows else _fi_corpus(spark)
+    inc = _fi_docs(spark, inc_rows) if inc_rows else _fi_increment(spark)
+    return DD.incremental_roster_refresh(corpus, inc, threshold=0.35, max_pairs=max_pairs)
+
+
+def _fi_semdedup(spark):
+    from cql_xmlpipe_spark.plans.extensions import _semdedup_core
+
+    return _semdedup_core(_fi_emb(spark), 2, 0.95)
+
+
+def _fi_recall_gate(spark):
+    from cql_xmlpipe_spark.plans.extensions import dedup_minhash_recall
+
+    return dedup_minhash_recall(spark, SF)
+
+
+# stage -> (operator run, monkeypatch target replaced by a planted raise
+# — or None for a real guard refusal — and the error the run surfaces)
+_FAILURE_STAGES = {
+    "embedding_groups-cc": (
+        lambda s: DD.embedding_near_dup_groups(_fi_emb(s), threshold=0.95),
+        (DD, "connected_components"), "planted",
+    ),
+    "minhash_groups-lsh": (
+        lambda s: DD.minhash_groups_collapsed(_fi_corpus(s), threshold=0.35),
+        (DD, "minhash_lsh_pairs"), "planted",
+    ),
+    "minhash_groups-cc": (
+        lambda s: DD.minhash_groups_collapsed(_fi_corpus(s), threshold=0.35),
+        (DD, "connected_components"), "planted",
+    ),
+    "roster_update-probe": (
+        _fi_roster_update, (DD, "incremental_probe_pairs"), "planted",
+    ),
+    "roster_update-batch": (
+        _fi_roster_update, (DD, "minhash_lsh_pairs_collapsed"), "planted",
+    ),
+    "roster_update-assemble_cc": (
+        _fi_roster_update, (DD, "connected_components"), "planted",
+    ),
+    "roster_refresh-standing": (
+        _fi_refresh, (DD, "minhash_groups_collapsed"), "planted",
+    ),
+    # 40 corpus copies x 40 batch copies of one text = 1600 cross pairs
+    "roster_refresh-probe_refusal": (
+        lambda s: _fi_refresh(
+            s,
+            corpus_rows=[(i, _FAM) for i in range(40)],
+            inc_rows=[(100 + i, _FAM) for i in range(40)],
+            max_pairs=1000,
+        ),
+        None, "incremental_probe_pairs",
+    ),
+    # a 60-copy family inside the batch only = C(60, 2) = 1770 pairs
+    "roster_refresh-batch_refusal": (
+        lambda s: _fi_refresh(
+            s,
+            inc_rows=[(100 + i, "the same hot batch clone text everywhere")
+                      for i in range(60)],
+            max_pairs=1000,
+        ),
+        None, "minhash_lsh_pairs_collapsed",
+    ),
+    "recall_gate-lsh": (
+        _fi_recall_gate, (DD, "minhash_lsh_pairs"), "planted",
+    ),
+    "recall_gate-exact": (
+        _fi_recall_gate, (DD, "ngram_jaccard_pairs_collapsed"), "planted",
+    ),
+    "semdedup-lloyd": (
+        _fi_semdedup, ("cql_xmlpipe_spark.plans.extensions._lloyd_update",), "planted",
+    ),
+}
+
+
+@pytest.mark.parametrize("stage", sorted(_FAILURE_STAGES))
+def test_failure_releases_pins(spark, monkeypatch, stage):
+    """A failure at any stage of a staging operator — a planted raise
+    after its first pins, or a real pair-budget refusal — must leave
+    nothing persisted: every pin lives in a Staging block that releases
+    it when the exception escapes."""
+    run, target, match = _FAILURE_STAGES[stage]
     spark.catalog.clearCache()
+    if target is not None:
+        def planted(*a, **k):
+            raise RuntimeError("planted failure")
 
-    def boom(*a, **k):
-        raise RuntimeError("planted CC failure")
-
-    monkeypatch.setattr(DD, "connected_components", boom)
-    with pytest.raises(RuntimeError, match="planted CC failure"):
-        DD.embedding_near_dup_groups(emb, threshold=0.95)
+        monkeypatch.setattr(*target, planted)
+    with pytest.raises((RuntimeError, DD.PairOutputBudgetExceeded), match=match):
+        run(spark)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -1192,11 +1296,10 @@ def test_incremental_roster_update_matches_full_recompute(spark):
 
 
 def test_incremental_roster_refresh_equals_serial_composition(spark):
-    """r15: the overlapped refresh composition (standing pipeline and
-    probe/batch pair production on concurrent driver threads) must equal
-    the serial standing-then-update composition row-for-row under both
-    emit modes — same operators, different schedule — and the pair
-    budget must refuse identically."""
+    """The refresh composition (one shared corpus staging feeding both
+    the standing build and the probe) must equal the plain
+    standing-then-update composition row-for-row under both emit modes,
+    and the pair budget must refuse identically."""
     fam = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [(i, fam) for i in range(4)]
     rows += [(10, "unique corpus text one about rivers and deltas flowing"),

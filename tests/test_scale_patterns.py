@@ -227,7 +227,7 @@ def test_jitter_embedding_makes_true_near_dups(spark):
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
     from make_scale_data import _jitter_embedding
 
-    from cql_xmlpipe_spark.functions.vectors import cosine
+    from cql_xmlpipe_spark.functions.vectors import cosine_safe
 
     base = load_table(spark, "embeddings", SF).limit(50)
     j1 = _jitter_embedding(base, 1)
@@ -247,7 +247,7 @@ def test_jitter_embedding_makes_true_near_dups(spark):
         joined = (
             x.select("vec_id", F.col("embedding").alias("ea"))
             .join(y.select("vec_id", F.col("embedding").alias("eb")), "vec_id")
-            .select(cosine(F.col("ea"), F.col("eb")).alias("cos"))
+            .select(cosine_safe(F.col("ea"), F.col("eb")).alias("cos"))
         )
         return [r["cos"] for r in joined.collect()]
 

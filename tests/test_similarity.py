@@ -38,6 +38,21 @@ def test_brute_force_exact_k(corpus_and_queries):
     assert all(r["n"] == 10 for r in per_q) and len(per_q) == 5
 
 
+def test_brute_force_zero_vector_never_ranks(spark):
+    """A zero corpus vector has no direction: the exact re-rank must
+    skip it (cosine_safe's NULL), not raise ANSI DIVIDE_BY_ZERO — even
+    with k large enough to rank every other vector."""
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.5, 0.5])],
+        "vec_id long, embedding array<float>",
+    )
+    q = spark.createDataFrame([(0, [1.0, 0.0])], "q_id long, q_emb array<float>")
+    got = sorted(
+        (r["rank"], r["vec_id"]) for r in brute_force_topk(corpus, q, k=3).collect()
+    )
+    assert got == [(1, 1), (2, 3)]
+
+
 @pytest.fixture(scope="module")
 def clustered(spark):
     """ANN recall is only meaningful when neighbors are actually close:

@@ -158,6 +158,27 @@ def test_xmlpipe_stream_sink_equals_batch(spark, tmp_path):
     assert glob.glob(f"{out}/_PROLOG") and glob.glob(f"{out}/_CLOSE")
 
 
+def test_stream_schema_follows_in_place_rewrite(spark, tmp_path):
+    """A single-file events.parquet rewritten IN PLACE keeps its staged
+    link (same path, same tag) — the memoized schema probe must still
+    see the new file, not serve the schema of the old one."""
+    import os
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = os.path.join(str(tmp_path), "events.parquet")
+    cols = {
+        "event_id": [0], "ts": [datetime(2024, 1, 1)], "user_id": [1],
+        "event_type": ["click"], "value": [2.5], "props": ["{}"],
+    }
+    pq.write_table(pa.table(cols), path)
+    assert "extra" not in stream_events(spark, str(tmp_path)).columns
+    pq.write_table(pa.table({**cols, "extra": ["x"]}), path)
+    assert "extra" in stream_events(spark, str(tmp_path)).columns
+
+
 def test_stateful_all_null_values_user_matches_sql_sum(spark, tmp_path):
     """SQL SUM over only NULLs is NULL, not 0 — a user whose every event
     has value=NULL must surface sum_value_cents as NULL so the stateful
