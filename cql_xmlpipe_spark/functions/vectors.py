@@ -62,3 +62,22 @@ def sqdist(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def eligible_vector(emb_col: str) -> Column:
+    """The embedding dedup family's one eligibility rule: non-NULL with
+    norm > 0. A zero vector has no direction — it shares every sign
+    bucket (0 ≥ 0 on every plane) and its cosine is 0/0 — so it never
+    pairs, and every index, guard and verifier filters on this first."""
+    return F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0)
+
+
+def vector_family_key(emb_col: str) -> list[Column]:
+    """128-bit identical-vector family key ``(_h1, _h2)``: two
+    independently seeded ``xxhash64`` over the raw float array. One
+    64-bit key carries ~N²/2⁶⁵ birthday risk of merging two distinct
+    families at 10⁹ vectors; only the two longs ever cross a shuffle."""
+    return [
+        F.xxhash64(F.col(emb_col)).alias("_h1"),
+        F.xxhash64(F.col(emb_col), F.lit(1)).alias("_h2"),
+    ]

@@ -19,6 +19,7 @@ Five strategies, each designed for the shuffle profile it implies at
 
 from __future__ import annotations
 
+import operator
 import os
 
 from pyspark.sql import Column, DataFrame
@@ -26,6 +27,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from cql_xmlpipe_spark.functions.text import shingles, words
+from cql_xmlpipe_spark.functions.vectors import (
+    cosine_safe,
+    eligible_vector,
+    norm,
+    vector_family_key,
+)
 
 N_MINHASH = 64
 N_BANDS = 16  # 16 bands x 4 rows; s-curve threshold ~ (1/16)^(1/4) ~ 0.5
@@ -311,6 +318,125 @@ def _band_keys():
     )
 
 
+def _candidate_pairs(
+    left: DataFrame, right: DataFrame, id_col: str, keys: list, names: tuple, keep
+) -> DataFrame:
+    """Candidate generation for every pair operator: ``left ⋈ right`` on
+    the ``keys`` columns carrying only the id (renamed to ``names``),
+    ``keep`` applied to the two ids — ``operator.lt`` for a self-join's
+    a < b, ``operator.ne`` for a probe's cross pairs — then deduplicated
+    to bare id pairs. Only fixed-width keys and ids cross the shuffle;
+    payloads are fetched afterwards by :func:`_fetch`."""
+    a, b = names
+    return (
+        left.select(F.col(id_col).alias(a), *keys)
+        .join(right.select(F.col(id_col).alias(b), *keys), keys)
+        .filter(keep(F.col(a), F.col(b)))
+        .select(a, b)
+        .distinct()
+    )
+
+
+def _fetch(
+    cands: DataFrame, left: DataFrame, right: DataFrame, id_col: str, col: str,
+    prefix: str,
+) -> DataFrame:
+    """Join each candidate pair to its two payloads by id: ``left``'s
+    ``col`` as ``<prefix>_a`` on the first id, ``right``'s as
+    ``<prefix>_b`` on the second."""
+    a, b = cands.columns
+    return cands.join(
+        left.select(F.col(id_col).alias(a), F.col(col).alias(f"{prefix}_a")), a
+    ).join(right.select(F.col(id_col).alias(b), F.col(col).alias(f"{prefix}_b")), b)
+
+
+def _jaccard_verify(
+    cands: DataFrame, left: DataFrame, right: DataFrame, id_col: str,
+    threshold: float, col: str = "hs",
+) -> DataFrame:
+    """Exact shingle-Jaccard verification of candidate pairs against the
+    two sides' hash sets (``col``): (a, b, jaccard >= threshold)."""
+    a, b = cands.columns
+    pairs = _fetch(cands, left, right, id_col, col, "sh").filter(
+        # PPJoin length filter (exactness-preserving): J(A,B) >= t requires
+        # |A| >= t|B| and |B| >= t|A| — prune before the O(|A|+|B|)
+        # intersection, which dominates verification cost
+        (F.size("sh_a") >= threshold * F.size("sh_b"))
+        & (F.size("sh_b") >= threshold * F.size("sh_a"))
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return (
+        pairs.withColumn("jaccard", inter / union)
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
+def _cosine_verify(
+    cands: DataFrame, left: DataFrame, right: DataFrame, id_col: str,
+    emb_col: str, threshold: float,
+) -> DataFrame:
+    """Exact cosine verification of candidate pairs: (a, b, cos >=
+    threshold), scored with ``cosine_safe`` (NULL on a zero denominator)
+    as defense in depth behind the eligibility push-down."""
+    a, b = cands.columns
+    return (
+        _fetch(cands, left, right, id_col, emb_col, "e")
+        .withColumn("cos", cosine_safe(F.col("e_a"), F.col("e_b")))
+        .filter(F.col("cos") >= threshold)
+        .select(a, b, "cos")
+    )
+
+
+def _membership_map(df: DataFrame, text_col: str, id_col: str, *block) -> DataFrame:
+    """(id, [block,] rep) over identical texts: ``rep`` is the group's min
+    id. sha256 keys cross the wire, never text; the min is a window over
+    the hash partitioning — one exchange and one scan of the hash
+    projection, where a groupBy plus join-back costs two (min over the
+    window == the group's min). ``block`` (aliased columns) widens the
+    key: identical texts under different blocks stay apart."""
+    th = df.select(F.col(id_col), *block, F.sha2(F.col(text_col), 256).alias("_th"))
+    keys = th.columns[1:-1]
+    return th.select(
+        F.col(id_col), *keys, F.min(id_col).over(W.partitionBy(*keys, "_th")).alias("rep")
+    )
+
+
+def _expand_rep_pairs(
+    mem: DataFrame, eligible: DataFrame, rep_pairs: DataFrame, id_col: str
+) -> DataFrame:
+    """Expand representative pairs to member pairs through the
+    membership map: every pair within an ``eligible`` group (identical
+    texts, Jaccard exactly 1.0) plus every member pair of a rep pair
+    (same sets, hence the same Jaccard)."""
+    em = mem.join(eligible, "rep")
+    within = (
+        em.select("rep", F.col(id_col).alias("ma"))
+        .join(em.select("rep", F.col(id_col).alias("mb")), "rep")
+        .filter(F.col("ma") < F.col("mb"))
+        .select(
+            F.col("ma").alias("id_a"),
+            F.col("mb").alias("id_b"),
+            F.lit(1.0).alias("jaccard"),
+        )
+    )
+    cross = (
+        rep_pairs.join(
+            mem.select(F.col("rep").alias("id_a"), F.col(id_col).alias("ma")), "id_a"
+        )
+        .join(
+            mem.select(F.col("rep").alias("id_b"), F.col(id_col).alias("mb")), "id_b"
+        )
+        .select(
+            F.least("ma", "mb").alias("id_a"),
+            F.greatest("ma", "mb").alias("id_b"),
+            "jaccard",
+        )
+    )
+    return within.unionByName(cross)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -337,7 +463,7 @@ def minhash_lsh_pairs(
     stays with the caller.
 
     ``max_pairs`` here is the CANDIDATE-volume stage of the guard (the
-    text twin of the embedding operator's second stage, round 10): a
+    text twin of the embedding operator's second stage): a
     NEAR-identical hot family — every clone rewritten in a few tokens —
     defeats the collapsed wrapper's exact-clone arithmetic (reps all
     distinct) yet still collides in the banded index, implying ~J⁴-scaled
@@ -382,35 +508,10 @@ def minhash_lsh_pairs(
                 "family's texts are distinct); raise max_pairs only if "
                 "that verify bill is budgeted.",
             )
-        cands = (
-            buckets.select(F.col(id_col).alias("id_a"), "band", "bucket")
-            .join(buckets.select(F.col(id_col).alias("id_b"), "band", "bucket"),
-                  ["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
+        cands = _candidate_pairs(
+            buckets, buckets, id_col, ["band", "bucket"], ("id_a", "id_b"), operator.lt
         )
-        sh = sets.select(F.col(id_col), F.col("hs").alias("sh_hashes"))
-        verified = (
-            cands.join(sh.select(F.col(id_col).alias("id_a"),
-                                 F.col("sh_hashes").alias("sh_a")), "id_a")
-            .join(sh.select(F.col(id_col).alias("id_b"),
-                            F.col("sh_hashes").alias("sh_b")), "id_b")
-            # length filter before the intersection (exactness-preserving:
-            # J >= t forces the set sizes within a factor t of each other)
-            .filter(
-                (F.size("sh_a") >= threshold * F.size("sh_b"))
-                & (F.size("sh_b") >= threshold * F.size("sh_a"))
-            )
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        result = (
-            verified.withColumn("jaccard", inter / union)
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-        return st.own(result)
+        return st.own(_jaccard_verify(cands, sets, sets, id_col, threshold))
 
 
 def _collapse_prelude(
@@ -425,26 +526,22 @@ def _collapse_prelude(
     mem: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared exact-duplicate collapse staging for the two collapsed
-    operators: returns ``(mem, sets, rep_pairs)`` where ``mem`` is
-    the (id, rep) membership map over identical texts (rep = min id of
-    the group; sha256 keys cross the wire, never text — computed as a
-    min-window over the hash partitioning, ONE exchange and ONE scan of
-    the hash projection instead of the old groupBy+join-back's two),
-    ``sets`` the persisted shingle-hash projection of the
-    representatives (feeds the inner LSH AND serves as the eligibility
-    filter — ONE tokenization of the reps), and ``rep_pairs`` the
-    verified near-dup pairs between representatives. Everything it pins
-    (and the LSH's own pins) goes into the caller's staging ``st``. The
-    sha256 hash projection behind ``mem`` is un-persisted (ADVICE r14:
-    a dead 'cache' flowing through the ownership API invites a caller to
-    assume it is pinned).
+    operators: returns ``(mem, eligible, rep_pairs)`` where ``mem`` is
+    the (id, rep) :func:`_membership_map` over identical texts,
+    ``eligible`` the (rep) ids of the shingle-bearing groups — read off
+    the persisted shingle-hash projection of the representatives, which
+    also feeds the inner LSH (ONE tokenization of the reps) — and
+    ``rep_pairs`` the verified near-dup pairs between representatives.
+    Everything it pins (and the LSH's own pins) goes into the caller's
+    staging ``st``. The sha256 hash projection behind ``mem`` is not
+    persisted: it is scanned once, and a dead cache flowing through the
+    ownership API would invite a caller to assume it is pinned.
 
     ``mem`` lets a caller hand in an already-persisted (id, rep)
-    membership map over ``df`` (r15: the recall gates' exact-PPJoin and
-    LSH sides each collapsed the same corpus — one sha256 window now
-    serves both, see :func:`minhash_recall_sampled`). The map must be
-    exactly the (sha256(text), min-id) collapse of ``df``; its pin stays
-    with the caller.
+    membership map over ``df``, so one sha256 window serves several
+    collapses of the same corpus (see :func:`minhash_recall_sampled`).
+    The map must be exactly the (sha256(text), min-id) collapse of
+    ``df``; its pin stays with the caller.
 
     ``max_pairs`` runs the guard's two stages IN COST ORDER before any
     LSH work: stage-1 (here) prices the exact-clone output from the
@@ -452,17 +549,8 @@ def _collapse_prelude(
     signatures; stage-2 (inside :func:`minhash_lsh_pairs`) bounds
     candidate volume from the banded index — which only jittered
     families reach, after stage-1 has already passed."""
-    # membership map in ONE shuffle: min-id-per-group as a window over the
-    # sha256 partitioning instead of groupBy+join-back (r14 optimization,
-    # guide §2.4 — the aggregate and the join shared the _th partitioning,
-    # so they collapse into one exchange; the hash projection is also
-    # scanned once, not twice, dropping its persist). Output identical:
-    # min over the whole frame == the group's min.
     if mem is None:
-        th = df.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("_th"))
-        mem = st.pin(th.select(
-            F.col(id_col), F.min(id_col).over(W.partitionBy("_th")).alias("rep")
-        ))
+        mem = st.pin(_membership_map(df, text_col, id_col))
     # a representative is the row whose id IS the group min — no distinct
     # pass needed (each rep appears exactly once as its own member)
     rep_ids = mem.filter(F.col(id_col) == F.col("rep")).select(F.col(id_col))
@@ -471,9 +559,7 @@ def _collapse_prelude(
         # caller-owned full-corpus staging (stage_corpus_lsh over df):
         # shingle sets and band keys are per-text deterministic, so the
         # representative slices are plain semi-joins of the persisted
-        # staging — no second tokenize/shingle/sign pass over df (r14;
-        # the incremental-roster composition previously signed the
-        # corpus once for the standing pipeline and once for the probe)
+        # staging — no second tokenize/shingle/sign pass over df.
         # buckets may be None (sets-only staging: the caller shares the
         # tokenized projection but nobody else needs the banded index, so
         # signatures still run over the representative slice only)
@@ -487,10 +573,9 @@ def _collapse_prelude(
     else:
         sets = st.pin(shingle_hash_sets(rep_docs, text_col, id_col, k))
         rep_buckets = None
+    eligible = sets.select(F.col(id_col).alias("rep"))
     if max_pairs is not None:
-        stats = _guard_clone_stats(
-            mem.join(sets.select(F.col(id_col).alias("rep")), "rep"), ["rep"]
-        )
+        stats = _guard_clone_stats(mem.join(eligible, "rep"), ["rep"])
         _enforce_pair_budget(
             max_pairs,
             stats["bound"],
@@ -505,7 +590,7 @@ def _collapse_prelude(
         rep_docs, text_col, id_col, threshold, k,
         sets=sets, max_pairs=max_pairs, buckets=rep_buckets,
     ))
-    return mem, sets, rep_pairs
+    return mem, eligible, rep_pairs
 
 
 def minhash_lsh_pairs_collapsed(
@@ -555,7 +640,7 @@ def minhash_lsh_pairs_collapsed(
     at :func:`minhash_groups_collapsed` instead of launching a job whose
     OUTPUT is intractable by arithmetic — at the skew-100× smoke one
     50,000-clone family means 1.25B rows before the first near-dup is
-    even found (SCALE.md). Round 10 adds the SECOND stage under the same
+    even found (SCALE.md). A SECOND stage runs under the same
     parameter: a near-identical (jittered) hot family defeats the clone
     arithmetic (reps all distinct) but still collides in the banded
     index, so :func:`minhash_lsh_pairs` additionally lower-bounds
@@ -565,35 +650,10 @@ def minhash_lsh_pairs_collapsed(
     arithmetic stage (see :func:`_collapse_prelude`). None (default)
     skips both stages."""
     with Staging() as st:
-        mem, sets, rep_pairs = _collapse_prelude(
+        mem, eligible, rep_pairs = _collapse_prelude(
             st, df, text_col, id_col, threshold, k, max_pairs, staged=staged, mem=mem
         )
-        eligible = sets.select(F.col(id_col).alias("rep"))
-        em = mem.join(eligible, "rep")
-        within = (
-            em.select("rep", F.col(id_col).alias("ma"))
-            .join(em.select("rep", F.col(id_col).alias("mb")), "rep")
-            .filter(F.col("ma") < F.col("mb"))
-            .select(
-                F.col("ma").alias("id_a"),
-                F.col("mb").alias("id_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-        cross = (
-            rep_pairs.join(
-                mem.select(F.col("rep").alias("id_a"), F.col(id_col).alias("ma")), "id_a"
-            )
-            .join(
-                mem.select(F.col("rep").alias("id_b"), F.col(id_col).alias("mb")), "id_b"
-            )
-            .select(
-                F.least("ma", "mb").alias("id_a"),
-                F.greatest("ma", "mb").alias("id_b"),
-                "jaccard",
-            )
-        )
-        return st.own(within.unionByName(cross))
+        return st.own(_expand_rep_pairs(mem, eligible, rep_pairs, id_col))
 
 
 def cluster_assign_collapsed(
@@ -651,7 +711,7 @@ def _labeled_collapsed(
     staging ``st``. Docs outside eligible groups are absent —
     :func:`cluster_assign_collapsed` adds them back as singletons; the
     roster contract never needs them."""
-    mem, sets, rep_pairs = _collapse_prelude(
+    mem, eligible, rep_pairs = _collapse_prelude(
         st, df, text_col, id_col, threshold, k, staged=staged
     )
     # the rep set without a distinct pass: a representative is the member
@@ -659,7 +719,6 @@ def _labeled_collapsed(
     cc = connected_components(
         mem.filter(F.col(id_col) == F.col("rep")).select(F.col(id_col)), rep_pairs
     )
-    eligible = sets.select(F.col(id_col).alias("rep"))
     return (
         mem.join(eligible, "rep")
         .join(cc.select(F.col(id_col).alias("rep"), "cluster_id"), "rep")
@@ -831,30 +890,14 @@ def ngram_containment_pairs(
                 "contract) or raise max_pairs only if that bill is budgeted.",
             )
         src_pref = base.filter(n >= min_shingles).select(
-            F.col(id_col).alias("src_id"),
-            "block",
-            F.explode(F.slice("sh", 1, prefix_len)).alias("s"),
+            F.col(id_col), "block", F.explode(F.slice("sh", 1, prefix_len)).alias("s")
         )
-        tgt_post = base.select(
-            F.col(id_col).alias("tgt_id"), "block", F.explode("sh").alias("s")
+        tgt_post = base.select(F.col(id_col), "block", F.explode("sh").alias("s"))
+        cands = _candidate_pairs(
+            src_pref, tgt_post, id_col, ["block", "s"], ("src_id", "tgt_id"), operator.ne
         )
-        cands = (
-            src_pref.join(tgt_post, ["block", "s"])
-            .filter(F.col("src_id") != F.col("tgt_id"))
-            .select("src_id", "tgt_id")
-            .distinct()
-        )
-        sets = base.select(F.col(id_col), "sh")
-        verified = (
-            cands.join(
-                sets.select(F.col(id_col).alias("src_id"), F.col("sh").alias("sh_a")),
-                "src_id",
-            )
-            .join(
-                sets.select(F.col(id_col).alias("tgt_id"), F.col("sh").alias("sh_b")),
-                "tgt_id",
-            )
-            .filter(F.size("sh_b") >= threshold * F.size("sh_a"))
+        verified = _fetch(cands, base, base, id_col, "sh", "sh").filter(
+            F.size("sh_b") >= threshold * F.size("sh_a")
         )
         containment = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
             "sh_a"
@@ -878,7 +921,7 @@ def ngram_jaccard_pairs(
     """Exact pairwise shingle Jaccard within blocking groups, via inverted
     index — NOT a block² cross join.
 
-    ``hash_sets`` (r14): an already-persisted :func:`shingle_hash_sets`
+    ``hash_sets``: an already-persisted :func:`shingle_hash_sets`
     projection of ``df`` (same ``k``) — the sorted-hash base is then a
     plain id-join of (id, block) against ``sort_array(hs)`` instead of a
     second tokenize/shingle/hash pass over the text (the hash multiset
@@ -938,32 +981,10 @@ def ngram_jaccard_pairs(
         prefixes = base.select(
             F.col(id_col), "block", F.explode(F.slice("sh", 1, prefix_len)).alias("s")
         )
-        cands = (
-            prefixes.select(F.col(id_col).alias("id_a"), "block", "s")
-            .join(prefixes.select(F.col(id_col).alias("id_b"), "block", "s"), ["block", "s"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
+        cands = _candidate_pairs(
+            prefixes, prefixes, id_col, ["block", "s"], ("id_a", "id_b"), operator.lt
         )
-        sets = base.select(F.col(id_col), "sh")
-        verified = (
-            cands.join(sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-            .join(sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-            # PPJoin length filter (exactness-preserving): J(A,B) >= t requires
-            # |A| >= t|B| and |B| >= t|A| — prune before the O(|A|+|B|)
-            # intersection, which dominates verification cost
-            .filter(
-                (F.size("sh_a") >= threshold * F.size("sh_b"))
-                & (F.size("sh_b") >= threshold * F.size("sh_a"))
-            )
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        return st.own(
-            verified.withColumn("jaccard", inter / union)
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
+        return st.own(_jaccard_verify(cands, base, base, id_col, threshold, "sh"))
 
 
 def simhash_signatures(
@@ -1247,25 +1268,19 @@ def _resolve_band_geometry(
     n_bands: int | None,
     band_bits: int | None,
     n_hint: int | None,
-    auto_geometry: bool,
 ) -> tuple[int, int]:
     """Resolve the sign-LSH band geometry for
     :func:`embedding_near_dup_pairs`. Precedence: explicit parameters
     (each independently overridable against the 24/16 defaults) >
     auto-derivation from ``n_hint`` > auto-derivation from a one-action
-    ``COUNT(*)`` > the fixed (24, 16) defaults when ``auto_geometry``
-    is off. Factored out so tests can pin the resolution table without
-    running the LSH pipeline."""
+    ``COUNT(*)``. Factored out so tests can pin the resolution table
+    without running the LSH pipeline."""
     from cql_xmlpipe_spark.operators.similarity import auto_band_config
 
     if n_bands is not None or band_bits is not None:
         return (24 if n_bands is None else n_bands,
                 16 if band_bits is None else band_bits)
-    if n_hint is None and auto_geometry:
-        n_hint = emb.count()
-    if n_hint is not None:
-        return auto_band_config(n_hint, threshold)
-    return (24, 16)
+    return auto_band_config(emb.count() if n_hint is None else n_hint, threshold)
 
 
 def embedding_near_dup_pairs(
@@ -1276,7 +1291,6 @@ def embedding_near_dup_pairs(
     n_bands: int | None = None,
     band_bits: int | None = None,
     n_hint: int | None = None,
-    auto_geometry: bool = True,
     max_pairs: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup via BANDED sign-LSH.
@@ -1289,20 +1303,19 @@ def embedding_near_dup_pairs(
     bare (id, band, bkey) ints; embeddings are fetched by id only for
     the verify step (same shuffle discipline as minhash_lsh_pairs).
 
-    Why 16-bit band keys, not the 4-bit ones this used before round 7:
-    key space bounds the junk-candidate volume at n_bands·C(N,2)/2^bits —
-    4-bit keys (16 buckets/band) make candidate generation N²/8 on ANY
-    corpus, a quadratic wall at ~10⁵ vectors; 16-bit keys push the floor
-    to 10⁶⁺ (see
+    Why 16-bit band keys, not 4-bit ones: key space bounds the
+    junk-candidate volume at n_bands·C(N,2)/2^bits — 4-bit keys (16
+    buckets/band) make candidate generation N²/8 on ANY corpus, a
+    quadratic wall at ~10⁵ vectors; 16-bit keys push the floor to 10⁶⁺
+    (see
     :func:`~cql_xmlpipe_spark.operators.similarity.banded_sign_keys`,
     which also explains why 384 planes need the Arrow path, not inline
     Column folds). Exact verification is unchanged, so false positives
     remain impossible at every setting.
 
-    The geometry auto-derives from corpus size BY DEFAULT (round 9; the
-    r8 opt-in knee is gone): with no explicit ``n_bands``/``band_bits``,
-    ``n_hint`` (an order-of-magnitude corpus size — a catalog estimate
-    or prior count) feeds
+    The geometry auto-derives from corpus size: with no explicit
+    ``n_bands``/``band_bits``, ``n_hint`` (an order-of-magnitude corpus
+    size — a catalog estimate or prior count) feeds
     :func:`~cql_xmlpipe_spark.operators.similarity.auto_band_config`,
     and with no hint either the operator spends one ``COUNT(*)`` action
     to derive it — trivially amortized against the LSH job it sizes.
@@ -1314,12 +1327,7 @@ def embedding_near_dup_pairs(
     miss budget between widths (measured 9,894,817 vs 9,895,168 of
     9,899,941 true pairs at the jitter-100× decade; the pytest pins
     exact output equality at scales where recall saturates). Explicit
-    ``n_bands``/``band_bits`` always win; ``auto_geometry=False``
-    forbids only the eager ``COUNT(*)`` (e.g. for streaming plans where
-    an eager action is illegal) — a caller-supplied ``n_hint`` still
-    drives :func:`~cql_xmlpipe_spark.operators.similarity.
-    auto_band_config` (a hint costs no action); only with no hint at
-    all does the flag fall back to the fixed (24, 16) defaults.
+    ``n_bands``/``band_bits`` always win; an ``n_hint`` costs no action.
 
     Zero-norm vectors never pair, and never even enter the LSH index:
     an unguarded path would be actively dangerous — zero vectors all
@@ -1368,18 +1376,11 @@ def embedding_near_dup_pairs(
     refusal message says which stage fired so the operator knows
     whether the roster alone fixes the job.)
     """
-    from cql_xmlpipe_spark.functions.vectors import cosine_safe, norm
     from cql_xmlpipe_spark.operators.similarity import banded_sign_keys
 
-    eligible = emb.filter(F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0))
+    eligible = emb.filter(eligible_vector(emb_col))
     if max_pairs is not None:
-        stats = _guard_clone_stats(
-            eligible,
-            [
-                F.xxhash64(F.col(emb_col)).alias("_h1"),
-                F.xxhash64(F.col(emb_col), F.lit(1)).alias("_h2"),
-            ],
-        )
+        stats = _guard_clone_stats(eligible, vector_family_key(emb_col))
         _enforce_pair_budget(
             max_pairs,
             stats["bound"],
@@ -1392,7 +1393,7 @@ def embedding_near_dup_pairs(
             "output) or raise max_pairs.",
         )
     n_bands, band_bits = _resolve_band_geometry(
-        eligible, threshold, n_bands, band_bits, n_hint, auto_geometry
+        eligible, threshold, n_bands, band_bits, n_hint
     )
 
     with Staging() as st:
@@ -1412,24 +1413,11 @@ def embedding_near_dup_pairs(
                 "reps are distinct vectors); raise max_pairs only if that "
                 "verify bill is budgeted.",
             )
-        cands = (
-            keys.select(F.col(id_col).alias("id_a"), "band", "bkey")
-            .join(keys.select(F.col(id_col).alias("id_b"), "band", "bkey"), ["band", "bkey"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
+        cands = _candidate_pairs(
+            keys, keys, id_col, ["band", "bkey"], ("id_a", "id_b"), operator.lt
         )
-        vecs = eligible.select(F.col(id_col), F.col(emb_col))
         return st.own(
-            cands.join(
-                vecs.select(F.col(id_col).alias("id_a"), F.col(emb_col).alias("e_a")), "id_a"
-            )
-            .join(
-                vecs.select(F.col(id_col).alias("id_b"), F.col(emb_col).alias("e_b")), "id_b"
-            )
-            .withColumn("cos", cosine_safe(F.col("e_a"), F.col("e_b")))
-            .filter(F.col("cos") >= threshold)
-            .select("id_a", "id_b", "cos")
+            _cosine_verify(cands, eligible, eligible, id_col, emb_col, threshold)
         )
 
 
@@ -1441,23 +1429,19 @@ def embedding_near_dup_groups(
     n_bands: int | None = None,
     band_bits: int | None = None,
     n_hint: int | None = None,
-    auto_geometry: bool = True,
 ) -> DataFrame:
     """Embedding near-dup CLUSTER ROSTERS — (cluster_id, cluster_size,
     sorted members) per multi-vector family — the LINEAR-output contract
-    for the embedding family, twin of :func:`minhash_groups_collapsed`
-    (round 10; until then the pair guard's refusal prescribed a manual
-    recipe where the text family had a registered operator).
+    for the embedding family, twin of :func:`minhash_groups_collapsed`.
 
     Stages, mirroring the text roster:
 
-    * **identical-vector collapse** — membership map over a 128-bit
-      family key (two independently-seeded ``xxhash64`` over the raw
-      float array; a single 64-bit key carries ~N²/2⁶⁵ birthday risk of
-      silently merging two distinct families at 10⁹ vectors, the scale
-      this contract exists for). No vector crosses a shuffle — only
-      (id, two longs). NULL embeddings never enter (a null vector never
-      pairs); zero-norm families are collapsed but marked INELIGIBLE —
+    * **identical-vector collapse** — membership map over the 128-bit
+      :func:`~cql_xmlpipe_spark.functions.vectors.vector_family_key`
+      (one 64-bit key risks merging two families at 10⁹ vectors, the
+      scale this contract exists for). No vector crosses a shuffle —
+      only (id, two longs). NULL embeddings never enter (a null vector
+      never pairs); zero-norm families are collapsed but marked INELIGIBLE —
       cosine(0, ·) is NaN, which :func:`embedding_near_dup_pairs` pins
       as never-qualifying, so a family of identical zero vectors has no
       pairs and must not surface as a roster.
@@ -1471,7 +1455,7 @@ def embedding_near_dup_groups(
     * **connected components over rep pairs** — CC state is |distinct
       vectors|, edges are rep pairs; members inherit their rep's label
       through one key-only join and aggregate DIRECTLY into rosters
-      (no corpus-sized sort or singleton union — the round-9 roster
+      (no corpus-sized sort or singleton union, as in the text roster
       plan), one row per family with a sorted member array.
 
     Skew shape (the reason this exists): the skew-100× hot family —
@@ -1481,15 +1465,12 @@ def embedding_near_dup_groups(
     (SCALE.md). Singleton vectors are omitted: "no duplicates" is the
     complement, not a row per vector at 100 TB.
     """
-    from cql_xmlpipe_spark.functions.vectors import norm
-
     with Staging() as st:
         vh = st.pin(
             emb.filter(F.col(emb_col).isNotNull())
             .select(
                 F.col(id_col),
-                F.xxhash64(F.col(emb_col)).alias("_h1"),
-                F.xxhash64(F.col(emb_col), F.lit(1)).alias("_h2"),
+                *vector_family_key(emb_col),
                 (norm(F.col(emb_col)) > 0).alias("_elig"),
             )
         )
@@ -1500,8 +1481,7 @@ def embedding_near_dup_groups(
         rep_ids = mem.select(F.col("rep").alias(id_col)).distinct()
         rep_vecs = emb.join(rep_ids, id_col, "left_semi")
         rep_pairs = st.adopt(embedding_near_dup_pairs(
-            rep_vecs, id_col, emb_col, threshold, n_bands, band_bits,
-            n_hint, auto_geometry,
+            rep_vecs, id_col, emb_col, threshold, n_bands, band_bits, n_hint
         ))
         cc = connected_components(rep_ids, rep_pairs, id_col=id_col)
         labeled = (
@@ -1580,26 +1560,17 @@ def minhash_recall_sampled(
     ci95_hi), counts over stratum-internal pairs.
     """
     stratum = df.filter(stratum_filter(id_col, sample_frac))
-    # tokenize the stratum ONCE (r14): both sides' pipelines consume the
-    # same per-text-deterministic shingle-hash projection — the LSH
-    # collapse derives its representative slices from it (sets-only
-    # staging; signatures still run over reps only) and the PPJoin builds
-    # its sorted base from it, instead of each re-tokenizing the stratum
+    # tokenize the stratum ONCE: both sides' pipelines consume the same
+    # per-text-deterministic shingle-hash projection — the LSH collapse
+    # derives its representative slices from it (sets-only staging;
+    # signatures still run over reps only) and the PPJoin builds its
+    # sorted base from it, instead of each re-tokenizing the stratum
     with Staging() as st:
         s_sets = st.pin(shingle_hash_sets(stratum, text_col, id_col, k))
-        # ... and collapse it ONCE (r15): both sides' membership maps are the
-        # same sha256 min-id window — the PPJoin side's block key is the
+        # ... and collapse it ONCE: the PPJoin side's block key is the
         # constant _blk, so its (block, text) groups ARE the text groups and
-        # one map serves both (one window exchange + one hash scan removed)
-        s_mem = st.pin(
-            stratum.select(
-                F.col(id_col), F.sha2(F.col(text_col), 256).alias("_th")
-            )
-            .select(
-                F.col(id_col),
-                F.min(id_col).over(W.partitionBy("_th")).alias("rep"),
-            )
-        )
+        # one membership map serves both sides
+        s_mem = st.pin(_membership_map(stratum, text_col, id_col))
         lsh_full = st.adopt(minhash_lsh_pairs_collapsed(
             stratum, text_col, id_col, threshold, k, staged=(s_sets, None),
             mem=s_mem,
@@ -1671,15 +1642,13 @@ def embedding_recall_sampled(
     n_bands: int | None = None,
     band_bits: int | None = None,
     n_hint: int | None = None,
-    auto_geometry: bool = True,
 ) -> DataFrame:
     """SAMPLED sign-LSH recall estimate for the EMBEDDING family — the
-    twin of :func:`minhash_recall_sampled` (round 11; until then the
-    embedding family's recall was only pytest/SCALE-measured, with no
-    registered health check a production pipeline could run per-ingest).
-    The exact side is an all-pairs cosine join — O(N²·dim), the bill no
-    one pays corpus-wide — restricted to a deterministic ~``sample_frac``
-    md5 stratum of VECTOR IDS, so it scales by frac² (~10⁻⁴ at the 1%
+    twin of :func:`minhash_recall_sampled`: a registered health check a
+    production pipeline can run per-ingest. The exact side is an
+    all-pairs cosine join — O(N²·dim), the bill no one pays
+    corpus-wide — restricted to a deterministic ~``sample_frac`` md5
+    stratum of VECTOR IDS, so it scales by frac² (~10⁻⁴ at the 1%
     default):
 
     * the restriction is EXACT, not approximate: a pair's banding fate
@@ -1702,7 +1671,7 @@ def embedding_recall_sampled(
     n_found, recall_est, ci95_lo, ci95_hi) with the shared Wilson 95%
     interval (see :func:`_recall_wilson_row`).
     """
-    from cql_xmlpipe_spark.functions.vectors import dot, norm
+    from cql_xmlpipe_spark.functions.vectors import dot
 
     # norms are computed ONCE per vector here and carried as a column:
     # the all-pairs side would otherwise fold two 64-element norms per
@@ -1715,13 +1684,12 @@ def embedding_recall_sampled(
     with Staging() as st:
         eligible = st.pin(
             emb.filter(stratum_filter(id_col, sample_frac))
-            .filter(F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0))
+            .filter(eligible_vector(emb_col))
             .select(F.col(id_col), F.col(emb_col), norm(F.col(emb_col)).alias("_nrm"))
         )
         lsh_full = st.adopt(embedding_near_dup_pairs(
             eligible.select(F.col(id_col), F.col(emb_col)),
-            id_col, emb_col, threshold, n_bands, band_bits,
-            n_hint, auto_geometry,
+            id_col, emb_col, threshold, n_bands, band_bits, n_hint,
         ))
         lsh = lsh_full.select("id_a", "id_b")
         a = eligible.select(
@@ -1858,17 +1826,15 @@ def incremental_probe_pairs(
 
     Returns (inc_id, corpus_id, jaccard) with jaccard >= threshold.
 
-    ``max_pairs`` is the cross-set form of the two-stage guard (round
-    10; the per-ingest path was the last CLI-reachable pair contract
-    without one): a hot text present a× in the batch and b× in the
-    corpus emits EXACTLY a·b pair rows by contract — stage-1 prices
-    Σ a·b over shared sha256 keys (eligible ids only); a jittered hot
-    family defeats that, so stage-2 lower-bounds distinct cross
-    candidates by the per-band Σ a·b over shared (band, bucket) keys
-    of the already-staged indexes. Both are one aggregation-shaped
-    action; refusal names the standard ingest staging (exact-dedup the
-    batch against the corpus first — one linear hash join — so only
-    novel texts probe).
+    ``max_pairs`` is the cross-set form of the two-stage guard: a hot
+    text present a× in the batch and b× in the corpus emits EXACTLY a·b
+    pair rows by contract — stage-1 prices Σ a·b over shared sha256
+    keys (eligible ids only); a jittered hot family defeats that, so
+    stage-2 lower-bounds distinct cross candidates by the per-band Σ a·b
+    over shared (band, bucket) keys of the already-staged indexes. Both
+    are one aggregation-shaped action; refusal names the standard ingest
+    staging (exact-dedup the batch against the corpus first — one linear
+    hash join — so only novel texts probe).
     """
     with Staging() as st:
         if increment_staged is not None:
@@ -1908,41 +1874,13 @@ def incremental_probe_pairs(
                 "one LSH band alone (a near-identical hot family the "
                 "identical-text pricing cannot see)", remedy,
             )
-        cands = (
-            i_buckets.select(F.col(id_col).alias("inc_id"), "band", "bucket")
-            .join(
-                c_buckets.select(F.col(id_col).alias("corpus_id"), "band", "bucket"),
-                ["band", "bucket"],
-            )
-            # defensive: never emit (x, x) even if a caller violates the
-            # disjointness precondition documented above
-            .filter(F.col("inc_id") != F.col("corpus_id"))
-            .select("inc_id", "corpus_id")
-            .distinct()
+        # operator.ne is defensive: never emit (x, x) even if a caller
+        # violates the disjointness precondition documented above
+        cands = _candidate_pairs(
+            i_buckets, c_buckets, id_col, ["band", "bucket"],
+            ("inc_id", "corpus_id"), operator.ne,
         )
-        verified = (
-            cands.join(
-                i_sets.select(F.col(id_col).alias("inc_id"), F.col("hs").alias("sh_a")),
-                "inc_id",
-            )
-            .join(
-                c_sets.select(
-                    F.col(id_col).alias("corpus_id"), F.col("hs").alias("sh_b")
-                ),
-                "corpus_id",
-            )
-            .filter(
-                (F.size("sh_a") >= threshold * F.size("sh_b"))
-                & (F.size("sh_b") >= threshold * F.size("sh_a"))
-            )
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        return st.own(
-            verified.withColumn("jaccard", inter / union)
-            .filter(F.col("jaccard") >= threshold)
-            .select("inc_id", "corpus_id", "jaccard")
-        )
+        return st.own(_jaccard_verify(cands, i_sets, c_sets, id_col, threshold))
 
 
 def stage_corpus_sign_keys(
@@ -1954,9 +1892,9 @@ def stage_corpus_sign_keys(
 ) -> DataFrame:
     """Persist the CORPUS side of the EMBEDDING incremental probe ONCE —
     the (id, band, bkey) sign-LSH index every ingest reuses, the twin of
-    :func:`stage_corpus_lsh` (round 12; until now each embedding probe
-    re-signed the corpus per call, which a ``foreachBatch`` stream pays
-    per trigger). Geometry is EXPLICIT here by design: the staged keys
+    :func:`stage_corpus_lsh` (un-staged, each embedding probe re-signs
+    the corpus per call, which a ``foreachBatch`` stream pays per
+    trigger). Geometry is EXPLICIT here by design: the staged keys
     are only meaningful to a probe run at the same (n_bands, band_bits)
     — resolve it once with :func:`_resolve_band_geometry` (or
     ``auto_band_config``) and thread the same pair everywhere, exactly
@@ -1964,12 +1902,9 @@ def stage_corpus_sign_keys(
     norm > 0) is pushed down before signing, matching every embedding
     operator. The frame comes back pinned and owned by the caller, as
     with :func:`stage_corpus_lsh`."""
-    from cql_xmlpipe_spark.functions.vectors import norm
     from cql_xmlpipe_spark.operators.similarity import banded_sign_keys
 
-    eligible = corpus.filter(
-        F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0)
-    )
+    eligible = corpus.filter(eligible_vector(emb_col))
     return Staging().pin(banded_sign_keys(eligible, emb_col, id_col, n_bands, band_bits))
 
 
@@ -1982,16 +1917,15 @@ def embedding_incremental_probe_pairs(
     n_bands: int | None = None,
     band_bits: int | None = None,
     n_hint: int | None = None,
-    auto_geometry: bool = True,
     max_pairs: int | None = None,
     corpus_staged: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental-ingest dedup for the EMBEDDING family: cosine near-dup
     pairs between a NEW batch of vectors and an EXISTING corpus, without
     ever forming corpus×corpus (or batch×batch) candidates — the twin of
-    :func:`incremental_probe_pairs` (round 10; per-ingest crawl
-    pipelines carry embeddings alongside text, and the corpus side's
-    self-pairs were resolved in prior ingests).
+    :func:`incremental_probe_pairs` (per-ingest crawl pipelines carry
+    embeddings alongside text, and the corpus side's self-pairs were
+    resolved in prior ingests).
 
     Both sides index through :func:`~cql_xmlpipe_spark.operators.
     similarity.banded_sign_keys` with ONE shared geometry — the planes
@@ -2016,7 +1950,7 @@ def embedding_incremental_probe_pairs(
     lower-bounds cross candidates by the per-band Σ a·b over shared
     (band, bkey) keys.
 
-    ``corpus_staged`` (round 12) is the in-session form of that
+    ``corpus_staged`` is the in-session form of that
     precomputed corpus index — :func:`stage_corpus_sign_keys`'s
     persisted keys frame, reused across ingests so only the batch is
     signed per call (the embedding streaming sinks ride this).
@@ -2026,7 +1960,6 @@ def embedding_incremental_probe_pairs(
     cache stays with the caller — refusal/cleanup paths here never
     unpersist it.
     """
-    from cql_xmlpipe_spark.functions.vectors import cosine_safe, norm
     from cql_xmlpipe_spark.operators.similarity import banded_sign_keys
 
     if corpus_staged is not None and (n_bands is None or band_bits is None):
@@ -2036,15 +1969,12 @@ def embedding_incremental_probe_pairs(
             "built with (resolve once, thread the same pair everywhere)"
         )
     with Staging() as st:
-        ec = corpus.filter(F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0))
-        ei = increment.filter(F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0))
+        ec = corpus.filter(eligible_vector(emb_col))
+        ei = increment.filter(eligible_vector(emb_col))
         if max_pairs is not None:
-            vh = lambda df: df.select(
-                F.xxhash64(F.col(emb_col)).alias("_h1"),
-                F.xxhash64(F.col(emb_col), F.lit(1)).alias("_h2"),
-            )
+            key = vector_family_key(emb_col)
             _cross_budget_check(
-                vh(ei), vh(ec), ["_h1", "_h2"], max_pairs,
+                ei.select(*key), ec.select(*key), ["_h1", "_h2"], max_pairs,
                 "embedding_incremental_probe_pairs",
                 "identical vectors shared by batch and corpus alone",
                 "Exact-dedup the batch against the corpus by vector hash "
@@ -2052,7 +1982,7 @@ def embedding_incremental_probe_pairs(
                 "or raise max_pairs.",
             )
         n_bands, band_bits = _resolve_band_geometry(
-            ec, threshold, n_bands, band_bits, n_hint, auto_geometry
+            ec, threshold, n_bands, band_bits, n_hint
         )
         if corpus_staged is not None:
             # caller-owned corpus index (stage_corpus_sign_keys): reused
@@ -2073,25 +2003,10 @@ def embedding_incremental_probe_pairs(
                 "family; the cross verify bill itself remains — raise "
                 "max_pairs only if it is budgeted.",
             )
-        cands = (
-            ik.select(F.col(id_col).alias("inc_id"), "band", "bkey")
-            .join(
-                ck.select(F.col(id_col).alias("corpus_id"), "band", "bkey"),
-                ["band", "bkey"],
-            )
-            .filter(F.col("inc_id") != F.col("corpus_id"))
-            .select("inc_id", "corpus_id")
-            .distinct()
+        cands = _candidate_pairs(
+            ik, ck, id_col, ["band", "bkey"], ("inc_id", "corpus_id"), operator.ne
         )
-        vi = ei.select(F.col(id_col).alias("inc_id"), F.col(emb_col).alias("e_a"))
-        vc = ec.select(F.col(id_col).alias("corpus_id"), F.col(emb_col).alias("e_b"))
-        return st.own(
-            cands.join(vi, "inc_id")
-            .join(vc, "corpus_id")
-            .withColumn("cos", cosine_safe(F.col("e_a"), F.col("e_b")))
-            .filter(F.col("cos") >= threshold)
-            .select("inc_id", "corpus_id", "cos")
-        )
+        return st.own(_cosine_verify(cands, ei, ec, id_col, emb_col, threshold))
 
 
 def incremental_roster_update(
@@ -2332,15 +2247,12 @@ def embedding_roster_update(
     n_bands: int | None = None,
     band_bits: int | None = None,
     n_hint: int | None = None,
-    auto_geometry: bool = True,
     emit: str = "full",
     max_pairs: int | None = None,
     corpus_staged: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental ROSTER maintenance for the EMBEDDING family — the
-    twin of :func:`incremental_roster_update` (round 11; closes the
-    symmetry where the text family had per-ingest roster upserts and
-    the embedding family only pair lists). Standing rosters
+    twin of :func:`incremental_roster_update`. Standing rosters
     (:func:`embedding_near_dup_groups` over ``corpus``) plus one ingest
     batch compose to the updated rosters over ``corpus ∪ increment``
     through the SAME quotient-graph assembly
@@ -2364,7 +2276,7 @@ def embedding_roster_update(
     the exact case. Zero-norm/NULL vectors never enter rosters or
     pairs on either path, so eligibility composes unchanged.
 
-    ``corpus_staged`` (round 12) forwards
+    ``corpus_staged`` forwards
     :func:`stage_corpus_sign_keys`'s persisted corpus index to the
     probe stage so a stream of ingests signs only each batch — it must
     have been built at THIS call's resolved geometry (pass the same
@@ -2372,8 +2284,6 @@ def embedding_roster_update(
     streaming sink does exactly that). Ownership stays with the
     caller.
     """
-    from cql_xmlpipe_spark.functions.vectors import norm
-
     if emit not in ("full", "delta"):
         raise ValueError(f"emit must be 'full' or 'delta', got {emit!r}")
     if corpus_staged is not None and (n_bands is None or band_bits is None):
@@ -2385,11 +2295,9 @@ def embedding_roster_update(
             "staged keys are only meaningful at the geometry they were "
             "built with (resolve once, thread the same pair everywhere)"
         )
-    eligible = corpus.filter(
-        F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0)
-    )
     n_bands, band_bits = _resolve_band_geometry(
-        eligible, threshold, n_bands, band_bits, n_hint, auto_geometry
+        corpus.filter(eligible_vector(emb_col)),
+        threshold, n_bands, band_bits, n_hint,
     )
     with Staging() as st:
         cross = st.adopt(embedding_incremental_probe_pairs(
@@ -2430,15 +2338,11 @@ def ngram_jaccard_pairs_collapsed(
     count (every clone re-enters every posting); over representatives it
     is super-linear only in *distinct-text* near-dup density — measured
     14.1 s → 6.4 s at the 10× decade smoke and 6.3 s at the 100× century
-    smoke (volume-FLAT on clone replication; previously the century smoke
-    excluded this operator), for ~2 s extra staging at sf0.1 — the same
+    smoke (volume-FLAT on clone replication), for ~2 s extra staging at sf0.1 — the same
     trade the minhash family made."""
-    # same one-exchange membership-map device as _collapse_prelude (r14,
-    # guide §2.4): min-id window over the (block, sha256) partitioning
-    # replaces groupBy+join-back — identical output, one scan of the hash
-    # projection, no distinct pass for the rep set (a rep is the row whose
-    # id equals the group min).
-    # ``mem`` (r15): caller-staged persisted (id, rep) map over df. Valid
+    # the (block, sha256) membership map; no distinct pass for the rep
+    # set (a rep is the row whose id equals the group min).
+    # ``mem``: caller-staged persisted (id, rep) map over df. Valid
     # ONLY when the caller can vouch it equals the (block, sha256(text))
     # collapse — e.g. when block_col is a constant literal, where the
     # (block, text) groups ARE the text groups (the recall gates' case:
@@ -2446,15 +2350,8 @@ def ngram_jaccard_pairs_collapsed(
     # serves both sides). Its pin stays with the caller.
     with Staging() as st:
         if mem is None:
-            th = df.select(
-                F.col(id_col),
-                F.col(block_col).alias("block"),
-                F.sha2(F.col(text_col), 256).alias("_th"),
-            )
-            mem = st.pin(th.select(
-                F.col(id_col),
-                "block",
-                F.min(id_col).over(W.partitionBy("block", "_th")).alias("rep"),
+            mem = st.pin(_membership_map(
+                df, text_col, id_col, F.col(block_col).alias("block")
             ))
         rep_ids = mem.filter(F.col(id_col) == F.col("rep")).select(F.col(id_col))
         # persist: rep_docs feeds the PPJoin AND the eligibility filter; the
@@ -2463,7 +2360,7 @@ def ngram_jaccard_pairs_collapsed(
         # at the 10x smoke before these pins)
         rep_docs = st.pin(df.join(rep_ids, id_col, "left_semi"))
         if hash_sets is not None:
-            # caller-staged shingle-hash projection of df (r14): the rep
+            # caller-staged shingle-hash projection of df: the rep
             # slice is a semi-join, the PPJoin base an id-join inside
             # ngram_jaccard_pairs, and eligibility falls out of the same
             # projection (it keeps exactly the ≥1-shingle docs) — the rep
@@ -2484,28 +2381,4 @@ def ngram_jaccard_pairs_collapsed(
             eligible = st.pin(rep_docs.filter(
                 F.size(shingles(words(F.col(text_col)), k)) > 0
             ).select(F.col(id_col).alias("rep")))
-        em = mem.join(eligible, "rep")
-        within = (
-            em.select("rep", F.col(id_col).alias("ma"))
-            .join(em.select("rep", F.col(id_col).alias("mb")), "rep")
-            .filter(F.col("ma") < F.col("mb"))
-            .select(
-                F.col("ma").alias("id_a"),
-                F.col("mb").alias("id_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-        cross = (
-            rep_pairs.join(
-                mem.select(F.col("rep").alias("id_a"), F.col(id_col).alias("ma")), "id_a"
-            )
-            .join(
-                mem.select(F.col("rep").alias("id_b"), F.col(id_col).alias("mb")), "id_b"
-            )
-            .select(
-                F.least("ma", "mb").alias("id_a"),
-                F.greatest("ma", "mb").alias("id_b"),
-                "jaccard",
-            )
-        )
-        return st.own(within.unionByName(cross))
+        return st.own(_expand_rep_pairs(mem, eligible, rep_pairs, id_col))

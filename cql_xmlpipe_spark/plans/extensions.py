@@ -270,19 +270,12 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     only possible below J ≈ 0.85, where per-pair recall 1-(1-J⁴)¹⁶
     decays — e.g. ≈ 0.99979 at J = 0.8)."""
     d = load_table(spark, "documents", sf_dir)
-    # tokenize the corpus ONCE for both sides (r14) and collapse it ONCE
-    # (r15) — same sharing devices as minhash_recall_sampled: the PPJoin
-    # side's block is the constant _blk, so one sha256 min-id window
-    # serves both sides' membership maps
+    # tokenize the corpus ONCE for both sides and collapse it ONCE — same
+    # sharing devices as minhash_recall_sampled: the PPJoin side's block
+    # is the constant _blk, so one membership map serves both sides
     with DD.Staging() as st:
         s_sets = st.pin(DD.shingle_hash_sets(d))
-        s_mem = st.pin(
-            d.select(F.col("doc_id"), F.sha2(F.col("text"), 256).alias("_th"))
-            .select(
-                F.col("doc_id"),
-                F.min("doc_id").over(Window.partitionBy("_th")).alias("rep"),
-            )
-        )
+        s_mem = st.pin(DD._membership_map(d, "text", "doc_id"))
         lsh_full = st.adopt(DD.minhash_lsh_pairs_collapsed(
             d, threshold=0.35, staged=(s_sets, None), mem=s_mem
         ))
@@ -292,7 +285,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
         # pin the pair sets: each is referenced twice below (own count AND
         # the intersection), and un-pinned the candidate+verify subtree
-        # behind each would execute twice per action (r15 — same device as
+        # behind each would execute twice per action (same device as
         # _recall_wilson_row)
         lsh = st.pin(lsh_full.select("id_a", "id_b"))
         exact = st.pin(exact_full.select("id_a", "id_b"))

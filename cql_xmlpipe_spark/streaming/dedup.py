@@ -265,14 +265,12 @@ def embedding_incremental_probe_sink(
     n_bands: int | None = None,
     band_bits: int | None = None,
     n_hint: int | None = None,
-    auto_geometry: bool = True,
     max_pairs: int | None = None,
 ):
-    """The EMBEDDING twin of :func:`incremental_probe_sink` (round 12 —
-    closes the family asymmetry where only text had a ``foreachBatch``
-    probe composition): every micro-batch of vectors is cosine-probed
-    against the standing corpus through :func:`~cql_xmlpipe_spark.
-    operators.dedup.embedding_incremental_probe_pairs`.
+    """The EMBEDDING twin of :func:`incremental_probe_sink`: every
+    micro-batch of vectors is cosine-probed against the standing corpus
+    through :func:`~cql_xmlpipe_spark.operators.dedup.
+    embedding_incremental_probe_pairs`.
 
     The one family-specific subtlety is GEOMETRY: sign-LSH banding
     adapts to corpus size and pair candidacy depends on it, so the
@@ -287,7 +285,7 @@ def embedding_incremental_probe_sink(
     text sink: batch-only signing per trigger, idempotent
     ``out_path/batch=<id>`` overwrite partitions, guard refusals fail
     the stream loudly, ``close()`` releases the staged index."""
-    from cql_xmlpipe_spark.functions.vectors import norm
+    from cql_xmlpipe_spark.functions.vectors import eligible_vector
     from cql_xmlpipe_spark.operators.dedup import (
         Staging,
         _resolve_band_geometry,
@@ -296,11 +294,9 @@ def embedding_incremental_probe_sink(
         unpersist_intermediates,
     )
 
-    eligible = corpus.filter(
-        F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0)
-    )
     nb, bb = _resolve_band_geometry(
-        eligible, threshold, n_bands, band_bits, n_hint, auto_geometry
+        corpus.filter(eligible_vector(emb_col)),
+        threshold, n_bands, band_bits, n_hint,
     )
     pins = Staging()
     staged = pins.pin(stage_corpus_sign_keys(corpus, id_col, emb_col, nb, bb))
@@ -373,20 +369,15 @@ class _EmbeddingRosterFamily:
 
     n_frames = 1  # (banded sign keys,)
 
-    def __init__(
-        self, corpus, emb_col, id_col, threshold,
-        n_bands, band_bits, n_hint, auto_geometry,
-    ):
-        from cql_xmlpipe_spark.functions.vectors import norm
+    def __init__(self, corpus, emb_col, id_col, threshold, n_bands, band_bits, n_hint):
+        from cql_xmlpipe_spark.functions.vectors import eligible_vector
         from cql_xmlpipe_spark.operators.dedup import _resolve_band_geometry
 
         self.emb_col, self.id_col, self.threshold = emb_col, id_col, threshold
         self.cols = [id_col, emb_col]
-        eligible = corpus.filter(
-            F.col(emb_col).isNotNull() & (norm(F.col(emb_col)) > 0)
-        )
         self.n_bands, self.band_bits = _resolve_band_geometry(
-            eligible, threshold, n_bands, band_bits, n_hint, auto_geometry
+            corpus.filter(eligible_vector(emb_col)),
+            threshold, n_bands, band_bits, n_hint,
         )
 
     def stage(self, df: DataFrame):
@@ -744,15 +735,13 @@ def embedding_roster_maintenance_sink(
     n_bands: int | None = None,
     band_bits: int | None = None,
     n_hint: int | None = None,
-    auto_geometry: bool = True,
     max_pairs: int | None = None,
     snapshot: str = "full",
     compact_every: int = 8,
 ):
-    """The EMBEDDING twin of :func:`roster_maintenance_sink` (round 12
-    — the same composition closure the batch operators got in round
-    11): every micro-batch of vectors folds into standing cosine
-    near-dup rosters via :func:`~cql_xmlpipe_spark.operators.dedup.
+    """The EMBEDDING twin of :func:`roster_maintenance_sink`: every
+    micro-batch of vectors folds into standing cosine near-dup rosters
+    via :func:`~cql_xmlpipe_spark.operators.dedup.
     embedding_roster_update`, with the identical state layout, commit
     markers, replay validation, disjointness guard, index compaction
     and ``snapshot="full"|"delta"`` semantics (see that docstring and
@@ -769,8 +758,7 @@ def embedding_roster_maintenance_sink(
     cosine the planted tests pin the composition end-to-end."""
     return _make_roster_sink(
         _EmbeddingRosterFamily(
-            corpus, emb_col, id_col, threshold,
-            n_bands, band_bits, n_hint, auto_geometry,
+            corpus, emb_col, id_col, threshold, n_bands, band_bits, n_hint
         ),
         corpus, state_path, snapshot, compact_every, max_pairs,
     )

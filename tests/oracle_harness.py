@@ -12,7 +12,7 @@ oracle_rows, err}} — used to commit the full-surface correctness record
 Set SPARK_GRAFT_VANILLA=1 to run on a bare SparkSession (no engine confs),
 mimicking the driver's correctness gate — catches any query that silently
 depends on session.py configuration (the round-1 events.parquet failure
-mode).
+mode). The meta file records which session ran (``"vanilla": true|false``).
 """
 
 from __future__ import annotations
@@ -217,6 +217,7 @@ def main():
             "generated_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "git_head": head,
             "sf_dir": sf_dir,
+            "vanilla": bool(os.environ.get("SPARK_GRAFT_VANILLA")),
             "n_queries": len(results),
             "n_pass": sum(
                 1 for r in results.values()

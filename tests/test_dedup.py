@@ -763,11 +763,8 @@ def test_pair_budget_guard_passes_under_cap(spark):
 
 def test_band_geometry_resolution_precedence(spark):
     """_resolve_band_geometry precedence table: explicit params win (each
-    independently), n_hint drives auto_band_config EVEN under
-    auto_geometry=False (the flag forbids only the eager COUNT(*) — a
-    caller-supplied hint costs no action), no-hint auto spends a
-    COUNT(*), and only no-hint + auto_geometry=False falls back to the
-    fixed (24, 16) defaults."""
+    independently), then n_hint drives auto_band_config (a hint costs no
+    action), and with no hint the geometry derives from a COUNT(*)."""
     from cql_xmlpipe_spark.operators.dedup import _resolve_band_geometry
     from cql_xmlpipe_spark.operators.similarity import auto_band_config
 
@@ -775,14 +772,12 @@ def test_band_geometry_resolution_precedence(spark):
         [(i, [float(i), 1.0]) for i in range(37)], "vec_id long, embedding array<float>"
     )
     t = 0.95
-    assert _resolve_band_geometry(df, t, 30, 20, None, True) == (30, 20)
-    assert _resolve_band_geometry(df, t, 30, None, 10**9, True) == (30, 16)
-    assert _resolve_band_geometry(df, t, None, 20, 10**9, True) == (24, 20)
-    assert _resolve_band_geometry(df, t, None, None, 10**6, True) == auto_band_config(10**6, t)
-    assert _resolve_band_geometry(df, t, None, None, 10**6, False) == auto_band_config(10**6, t)
-    # no hint + auto: derives from the actual count (37 vectors)
-    assert _resolve_band_geometry(df, t, None, None, None, True) == auto_band_config(37, t)
-    assert _resolve_band_geometry(df, t, None, None, None, False) == (24, 16)
+    assert _resolve_band_geometry(df, t, 30, 20, None) == (30, 20)
+    assert _resolve_band_geometry(df, t, 30, None, 10**9) == (30, 16)
+    assert _resolve_band_geometry(df, t, None, 20, 10**9) == (24, 20)
+    assert _resolve_band_geometry(df, t, None, None, 10**6) == auto_band_config(10**6, t)
+    # no hint: derives from the actual count (37 vectors)
+    assert _resolve_band_geometry(df, t, None, None, None) == auto_band_config(37, t)
 
 
 def test_embedding_auto_geometry_output_identical(spark):
@@ -1098,6 +1093,70 @@ def test_embedding_incremental_probe_planted(spark):
     assert set(got) == {(200, 100), (200, 101)}
     assert all(c >= 0.95 for c in got.values())
     DD.unpersist_intermediates(out)
+
+
+def _split_corpus(spark, family):
+    """(corpus, increment) with planted pairs. Across the split: 200 is an
+    exact clone of 100, 201 a near-dup of 101, 205 a clone of the
+    corpus-internal family {102, 103}. Inside each side: 102~103 and
+    203~204 (never probe output). Plus one member that can never pair:
+    a zero-shingle text / a zero vector on each side."""
+    rng = random.Random(23)
+    if family == "text":
+        vocab = [f"w{i}" for i in range(500)]
+        doc = lambda: " ".join(rng.choice(vocab) for _ in range(30))
+        base, base2, base3, base4 = doc(), doc(), doc(), doc()
+        near = base2.split()
+        near[11] = "zz"
+        corpus = [(i, doc()) for i in range(1, 40)]
+        corpus += [(100, base), (101, base2), (102, base3), (103, base3), (104, "hi")]
+        inc = [(200, base), (201, " ".join(near)), (202, "hi there")]
+        inc += [(203, base4), (204, base4), (205, base3), (206, doc())]
+        schema = "doc_id long, text string"
+    else:
+        jit = lambda v: [x + rng.gauss(0, 1e-3) for x in v]
+        base, base2, base3, base4 = (_unit_vec(rng) for _ in range(4))
+        corpus = [(i, _unit_vec(rng)) for i in range(1, 40)]
+        corpus += [(100, base), (101, base2), (102, base3), (103, base3), (104, [0.0] * 32)]
+        inc = [(200, base), (201, jit(base2)), (202, [0.0] * 32)]
+        inc += [(203, base4), (204, base4), (205, base3), (206, _unit_vec(rng))]
+        schema = "vec_id long, embedding array<float>"
+    return spark.createDataFrame(corpus, schema), spark.createDataFrame(inc, schema)
+
+
+@pytest.mark.parametrize("family", ["text", "embedding"])
+def test_probe_equals_union_self_join_restricted(spark, family):
+    """A pair's fate depends only on its two members, so probing batch I
+    against corpus C emits exactly the self-join pairs of C ∪ I that have
+    one endpoint in I, as (inc_id, corpus_id), with bit-equal scores —
+    the claim both probe operators (and the roster updates built on
+    them) rest on."""
+    corpus, inc = _split_corpus(spark, family)
+    if family == "text":
+        probe = DD.incremental_probe_pairs(corpus, inc)
+        union = DD.minhash_lsh_pairs(corpus.unionByName(inc))
+        score = "jaccard"
+    else:
+        probe = DD.embedding_incremental_probe_pairs(corpus, inc, n_bands=24, band_bits=16)
+        union = DD.embedding_near_dup_pairs(
+            corpus.unionByName(inc), n_bands=24, band_bits=16
+        )
+        score = "cos"
+    got = {(r["inc_id"], r["corpus_id"], r[score]) for r in probe.collect()}
+    union_rows = [(r["id_a"], r["id_b"], r[score]) for r in union.collect()]
+    DD.unpersist_intermediates(probe)
+    DD.unpersist_intermediates(union)
+    inc_ids = {r[0] for r in inc.collect()}
+    want = {
+        (b, a, s) if b in inc_ids else (a, b, s)
+        for a, b, s in union_rows
+        if (a in inc_ids) != (b in inc_ids)
+    }
+    assert got == want
+    pairs = {(i, c) for i, c, _ in got}
+    assert {(200, 100), (201, 101), (205, 102), (205, 103)} <= pairs
+    assert {(102, 103), (203, 204)} <= {(a, b) for a, b, _ in union_rows}
+    assert not {x for p in pairs for x in p} & {104, 202}
 
 
 def test_text_bucket_guard_refuses_jittered_hot_family(spark):
