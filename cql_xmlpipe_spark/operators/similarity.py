@@ -18,6 +18,13 @@ int-keyed join so the shuffle moves vectors once instead of crossing.
 ``radius_search`` (the range-query complement) carries its own strategy
 dispatch: exact codegen fold, exact Arrow/BLAS scan, or banded sign-key
 candidates + identical verify — see its docstring for the regime map.
+
+Every operator is candidate generation → shortlist → exact re-rank, and
+composes the shared stages instead of spelling them out: the query-block
+fan-out ``_query_fanout``, the BLAS cosine chunks ``_cosine_chunks``, the
+numpy band-shortlist kernel ``_band_shortlist``, the ADC re-cut
+``_adc_recut`` and the cosine re-rank ``_cosine_rerank`` / rank step
+``_top_by_cos``; ``brute_bill_fits`` is the one exact-dispatch rule.
 """
 
 from __future__ import annotations
@@ -174,18 +181,7 @@ def banded_sign_keys(
             pdf = pdf[pdf[emb_col].notna()]
             if len(pdf) == 0:
                 continue
-            try:
-                mat = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-            except ValueError as exc:
-                seen = pdf[emb_col].map(len)
-                mode = seen.mode().iloc[0]
-                bad = pdf.loc[seen != mode, id_col].tolist()[:5]
-                raise ValueError(
-                    f"banded_sign_keys: ragged '{emb_col}' lengths "
-                    f"{sorted(seen.unique().tolist())} in one batch "
-                    f"(off-dimension {id_col}s: {bad}); embeddings must "
-                    "share one dimension"
-                ) from exc
+            mat = _stack(pdf[emb_col], "banded_sign_keys", pdf[id_col])
             dim = mat.shape[1]
             planes = w_cache.get(dim)
             if planes is None:
@@ -209,29 +205,39 @@ def banded_sign_keys(
     return df.select(id_col, emb_col).mapInPandas(gen, schema=out_schema)
 
 
+def _stack(vals: pd.Series, op_name: str, ids: pd.Series | None = None):
+    """float64 matrix of a pandas Series of arrays — the one ragged check
+    of every per-batch kernel and of the driver-side query collect. On
+    raggedness it names the lengths and, given the rows' ``ids``, up to
+    five ids off the most common dimension."""
+    import numpy as np
+
+    try:
+        return np.stack(vals.to_numpy()).astype(np.float64)
+    except ValueError as exc:
+        lens = vals.map(len)
+        off = ""
+        if ids is not None:
+            bad = ids[(lens != lens.mode().iloc[0]).to_numpy()].tolist()[:5]
+            off = f" (off-dimension {ids.name}s: {bad})"
+        raise ValueError(
+            f"{op_name}: ragged embedding lengths "
+            f"{sorted(lens.unique().tolist())}{off}; embeddings must share "
+            "one dimension"
+        ) from exc
+
+
 def _collect_query_matrix(
     queries: DataFrame, q_id_col: str, q_emb_col: str, op_name: str
 ):
-    """Driver-side (qids, Q, qnorms) of the non-null query vectors as
-    float64 numpy — the one collect the matmul/ADC shortlist paths pay.
-    Returns (None, None, None) when no query has an embedding. Raises
-    with the offending lengths on ragged embeddings."""
-    import numpy as np
-
+    """Driver-side (qids, Q) of the non-null query vectors, Q float64 —
+    the one collect the matmul/ADC shortlist paths pay. Returns
+    (None, None) when no query has an embedding."""
     qp = queries.select(q_id_col, q_emb_col).toPandas()
     qp = qp[qp[q_emb_col].notna()]
     if not len(qp):
-        return None, None, None
-    try:
-        Q = np.stack(qp[q_emb_col].to_numpy()).astype(np.float64)
-    except ValueError:
-        lens = sorted(qp[q_emb_col].map(len).unique().tolist())
-        raise ValueError(
-            f"{op_name}: ragged '{q_emb_col}' lengths {lens}; "
-            "query embeddings must share one dimension"
-        ) from None
-    qn = np.sqrt((Q * Q).sum(axis=1))
-    return qp[q_id_col].to_numpy(), Q, qn
+        return None, None
+    return qp[q_id_col].to_numpy(), _stack(qp[q_emb_col], op_name, qp[q_id_col])
 
 
 #: hard ceiling on query blocks in the block-nested exact paths: each
@@ -269,6 +275,193 @@ def _query_blocks(
     ]
 
 
+def _pair_schema(
+    queries: DataFrame, corpus: DataFrame, q_id_col: str, id_col: str, *extra
+):
+    """(q_id, id, *extra) schema of a candidate kernel's output rows."""
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField(q_id_col, queries.schema[q_id_col].dataType),
+            T.StructField(id_col, corpus.schema[id_col].dataType),
+            *extra,
+        ]
+    )
+
+
+def _query_fanout(
+    scan: DataFrame,
+    queries: DataFrame,
+    q_id_col: str,
+    q_emb_col: str,
+    schema,
+    kernel,
+    closure_bytes,
+    max_query_mb: int,
+    op_name: str,
+    hint: str,
+) -> tuple[DataFrame, int]:
+    """The query-block fan-out of the numpy candidate paths: collect the
+    query matrix once, split it into blocks whose closure payload fits
+    ``max_query_mb`` (:func:`_query_blocks`; ``closure_bytes(Q)`` prices
+    the whole set), run ``scan.mapInPandas(kernel(Q_block, qids_block))``
+    once per block and union the parts once. Per-query rows are
+    independent, so the union is exact. Returns the frame and the number
+    of query vectors; with none, the frame is empty and scans nothing."""
+    from functools import reduce
+
+    qids, Q = _collect_query_matrix(queries, q_id_col, q_emb_col, op_name)
+    if Q is None:
+        return scan.sparkSession.createDataFrame([], schema), 0
+    blocks = _query_blocks(len(qids), closure_bytes(Q), max_query_mb, op_name, hint)
+    parts = [
+        scan.mapInPandas(kernel(Q[lo:hi], qids[lo:hi]), schema=schema)
+        for lo, hi in blocks
+    ]
+    return reduce(DataFrame.union, parts), len(qids)
+
+
+def _cosine_chunks(
+    pdf: pd.DataFrame, Q, qids, id_col: str, emb_col: str, op_name: str
+):
+    """Exact cosines of one Arrow batch against the query block, as
+    (ids, cos, valid) row chunks: ``C @ Q.T / (‖c‖·‖q‖)`` in float64
+    BLAS, with ``valid`` masking zero denominators (a zero-norm vector
+    never qualifies — the NULL-cosine contract) and self-pairs.
+
+    Rows are chunked to bound the per-task pair-matrix working set: a
+    full batch of 10k rows × a 2k-query set is three ~160 MB float64
+    intermediates, and ~30 concurrent first-touch allocations of that
+    size measured ~2.5× the whole warm query in kernel page-zeroing —
+    chunks keep each task's live pair block at ~tens of MB."""
+    import numpy as np
+
+    pdf = pdf[pdf[emb_col].notna()]
+    if not len(pdf):
+        return
+    C_all = _stack(pdf[emb_col], op_name, pdf[id_col])
+    ids_all = pdf[id_col].to_numpy()
+    qn = np.sqrt((Q * Q).sum(axis=1))
+    chunk = max(1, 4_000_000 // max(len(qids), 1))
+    for lo in range(0, len(ids_all), chunk):
+        C = C_all[lo : lo + chunk]
+        ids = ids_all[lo : lo + chunk]
+        cn = np.sqrt((C * C).sum(axis=1))
+        denom = cn[:, None] * qn[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = (C @ Q.T) / denom
+        yield ids, cos, (denom != 0.0) & (ids[:, None] != qids[None, :])
+
+
+def _band_edge(kth):
+    """Upper edge of the keep band above a per-query n-th best score
+    (lower is better): 1e-9 relative, never under 1e-9 absolute. Wide
+    enough to absorb numpy-vs-Column-fold ulp drift, so a boundary tie
+    is never cut by the wrong arithmetic."""
+    import numpy as np
+
+    return kth + 1e-9 * np.maximum(1.0, np.abs(kth))
+
+
+def _make_adc_band_cut(shortlist: int):
+    """Per-query shortlist-th-best band cut over accumulated
+    (query_index, id, score) triples, lower score better — the
+    compaction and final cut of :func:`_band_shortlist` (volume control
+    only; correctness rides the exact re-rank, never this)."""
+    import numpy as np
+
+    def group_band_cut(qi, bid, ba):
+        order = np.lexsort((ba, qi))
+        qi, bid, ba = qi[order], bid[order], ba[order]
+        starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
+        counts = np.diff(np.r_[starts, len(qi)])
+        kth_pos = starts + np.minimum(shortlist, counts) - 1
+        group_of_row = np.repeat(np.arange(len(starts)), counts)
+        keep = ba <= _band_edge(ba[kth_pos][group_of_row])
+        return qi[keep], bid[keep], ba[keep]
+
+    return group_band_cut
+
+
+def _band_shortlist(chunks, n: int, n_queries: int, min_compact: int = 4_000_000):
+    """The per-batch shortlist of the numpy candidate kernels (exact
+    top-k, PQ and IVF-PQ ADC). ``chunks`` yields (query_index, ids,
+    score) with ``score`` a queries × rows matrix, lower better, +inf
+    excluded. Each chunk keeps, per query, every row within the
+    :func:`_band_edge` band of its n-th best score: an O(n)
+    ``np.partition`` finds that score, and the band (not a hard cut to
+    n rows, which would drop boundary ties arbitrarily) lets every tie
+    through. Any global top-n member is in its chunk's band, so the cut
+    is lossless. The kept triples accumulate and are compacted by the
+    same band cut whenever they pass max(``min_compact``, 4·|Q|·n) rows
+    (without that the accumulator grows to n_chunks·|Q|·n triples, GBs
+    at |Q| ~ 10⁵ over a wide partition); one final cut. Returns the
+    surviving (query_index, id) arrays, or None when nothing survives."""
+    import numpy as np
+
+    cut = _make_adc_band_cut(n)
+    compact_at = max(min_compact, 4 * n_queries * n)
+    acc: tuple[list, list, list] = ([], [], [])
+    acc_n = 0
+    for q_index, ids, score in chunks:
+        keep = np.isfinite(score)
+        if score.shape[1] > n:
+            kth = np.partition(score, n - 1, axis=1)[:, n - 1]
+            keep &= score <= _band_edge(kth)[:, None]
+        qi, ci = np.nonzero(keep)
+        if len(qi):
+            for part, new in zip(acc, (q_index[qi], ids[ci], score[qi, ci])):
+                part.append(new)
+            acc_n += len(qi)
+        if acc_n > compact_at:
+            kept = cut(*map(np.concatenate, acc))
+            acc = tuple([a] for a in kept)
+            acc_n = len(kept[0])
+    if not acc_n:
+        return None
+    qi, ids, _ = cut(*map(np.concatenate, acc))
+    return qi, ids
+
+
+def _top_by_cos(scored: DataFrame, k: int, id_col: str, q_id_col: str) -> DataFrame:
+    """The rank step every exact cosine top-k ends in: (cos desc, id)
+    ``row_number`` per query, ``rank <= k``, the output columns."""
+    w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(q_id_col, id_col, "rank", "cos")
+    )
+
+
+def _cosine_rerank(
+    pairs: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    emb_col: str,
+    q_id_col: str,
+    q_emb_col: str,
+) -> DataFrame:
+    """Exact cosine re-rank of candidate (q_id, id) pairs: fetch the
+    full vectors by id-join for the candidates ALONE (never dragging
+    them through candidate generation — the row-width lesson, SCALE.md),
+    score with the same ``cosine_safe`` fold and (cos desc, id)
+    tie-break as :func:`brute_force_topk`, keep top-``k`` per query.
+    Output and cos bits equal the brute plan's on every pair that
+    reaches it."""
+    reranked = (
+        pairs.select(q_id_col, id_col)
+        .join(corpus.select(id_col, emb_col), id_col)
+        .join(F.broadcast(queries.select(q_id_col, q_emb_col)), q_id_col)
+        .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
+        .filter(F.col("cos").isNotNull())
+    )
+    return _top_by_cos(reranked, k, id_col, q_id_col)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -291,12 +484,7 @@ def brute_force_topk(
         .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
         .filter(F.col("cos").isNotNull())
     )
-    w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "rank", "cos")
-    )
+    return _top_by_cos(scored, k, id_col, q_id_col)
 
 
 def _radius_matmul(
@@ -312,114 +500,80 @@ def _radius_matmul(
     """EXACT radius search via Arrow-batched BLAS: the query matrix is
     collected once (guarded by ``max_query_mb``), shipped in the task
     closure, and every corpus batch scores against it in row-chunked
-    float64 matmuls — the same N·|Q| pair bill as the codegen fold but
-    at BLAS throughput (~50× steady-state on the |Q| = N/97 shape at
-    the 100× decade, SCALE.md). The qualifying SET is identical to the broadcast
-    path; only the last-ulp of ``cos`` can differ (BLAS uses blocked
-    summation where the Column fold is left-to-right), which is why the
-    hash-exact oracle gate pins the broadcast path and the matmul gate
-    pins the set. Zero-norm vectors never qualify (the NULL-cosine
-    contract, expressed here as a denominator mask).
+    float64 matmuls (:func:`_cosine_chunks`) — the same N·|Q| pair bill
+    as the codegen fold but at BLAS throughput (~50× steady-state on the
+    |Q| = N/97 shape at the 100× decade, SCALE.md). The qualifying SET
+    is identical to the broadcast path; only the last-ulp of ``cos`` can
+    differ (BLAS uses blocked summation where the Column fold is
+    left-to-right), which is why the hash-exact oracle gate pins the
+    broadcast path and the matmul gate pins the set. Zero-norm vectors
+    never qualify (the NULL-cosine contract, expressed here as a
+    denominator mask).
 
     |Q| beyond ``max_query_mb`` of closure budget splits into query
-    BLOCKS (each <= the cap), one corpus scan per block, results
+    BLOCKS (:func:`_query_fanout`), one corpus scan per block, results
     unioned — exact output at any |Q| up to :data:`MAX_QUERY_BLOCKS`
-    rescans, no refusal (the r13 gap; per-query rows are independent so
-    the union is trivially exact)."""
-    from functools import reduce
-
+    rescans, no refusal."""
     import numpy as np
     from pyspark.sql import types as T
 
-    qids_all, Q_all, _ = _collect_query_matrix(
-        queries, q_id_col, q_emb_col, "radius_search"
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(q_id_col, queries.schema[q_id_col].dataType),
-            T.StructField(id_col, corpus.schema[id_col].dataType),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-
-    def make_gen(Q, qn, qids):
-        # bound the per-task pair-matrix working set: a full Arrow batch
-        # of 10k rows × a 2k-query set is three ~160 MB float64
-        # intermediates, and ~30 concurrent first-touch allocations of
-        # that size measured ~2.5× the whole warm query in kernel
-        # page-zeroing — chunk rows so each task's live pair block stays
-        # ~tens of MB
-        chunk = max(1, 4_000_000 // max(len(qids) if qids is not None else 1, 1))
-
+    def kernel(Q, qids):
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                if Q is None:
-                    continue
-                pdf = pdf[pdf[emb_col].notna()]
-                if not len(pdf):
-                    continue
-                try:
-                    C_all = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-                except ValueError:
-                    lens = sorted(pdf[emb_col].map(len).unique().tolist())
-                    raise ValueError(
-                        f"radius_search: ragged '{emb_col}' lengths {lens} in "
-                        "one batch; embeddings must share one dimension"
-                    ) from None
-                ids_all = pdf[id_col].to_numpy()
-                for lo in range(0, len(ids_all), chunk):
-                    C = C_all[lo : lo + chunk]
-                    ids = ids_all[lo : lo + chunk]
-                    cn = np.sqrt((C * C).sum(axis=1))
-                    denom = cn[:, None] * qn[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = (C @ Q.T) / denom
-                    mask = (denom != 0.0) & (cos >= threshold)
-                    mask &= ids[:, None] != qids[None, :]
-                    ci, qi = np.nonzero(mask)
-                    if not len(ci):
-                        continue
-                    yield pd.DataFrame(
-                        {
-                            q_id_col: qids[qi],
-                            id_col: ids[ci],
-                            "cos": cos[ci, qi],
-                        }
-                    )
+                for ids, cos, valid in _cosine_chunks(
+                    pdf, Q, qids, id_col, emb_col, "radius_search"
+                ):
+                    ci, qi = np.nonzero(valid & (cos >= threshold))
+                    if len(ci):
+                        yield pd.DataFrame(
+                            {q_id_col: qids[qi], id_col: ids[ci], "cos": cos[ci, qi]}
+                        )
 
         return gen
 
-    scan = corpus.select(id_col, emb_col)
-    if Q_all is None:
-        return scan.mapInPandas(make_gen(None, None, None), schema=out_schema)
-    blocks = _query_blocks(
-        len(qids_all),
-        Q_all.nbytes,
+    pairs, _ = _query_fanout(
+        corpus.select(id_col, emb_col),
+        queries,
+        q_id_col,
+        q_emb_col,
+        _pair_schema(
+            queries, corpus, q_id_col, id_col, T.StructField("cos", T.DoubleType())
+        ),
+        kernel,
+        lambda Q: Q.nbytes,
         max_query_mb,
         "radius_search",
         "Use candidates='banded' (high thresholds) or raise max_query_mb — "
         "a low-threshold radius over two large sets is irreducibly N×|Q|.",
     )
-    parts = []
-    for lo, hi in blocks:
-        Q = Q_all[lo:hi]
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        parts.append(
-            scan.mapInPandas(make_gen(Q, qn, qids_all[lo:hi]), schema=out_schema)
-        )
-    return reduce(DataFrame.union, parts)
+    return pairs
 
 
 #: auto-mode decision constants for :func:`radius_search` — static so the
 #: chosen physical strategy is a pure function of (corpus size, |Q|,
 #: threshold) and gate plans never flip between runs.
 RADIUS_BRUTE_BILL_MAX = 100_000_000  #: max N·|Q| pairs the codegen fold scans
-#: guidance (not an auto-dispatch input since r14 — auto is exact-only):
-#: LSH index width past which explicit candidates='banded' stops paying
-#: vs the exact matmul scan at the measured decades; see SCALE.md's
+#: guidance, not an auto-dispatch input (auto is exact-only): LSH index
+#: width past which explicit candidates='banded' stops paying vs the
+#: exact matmul scan at the measured decades; see SCALE.md's
 #: banded-vs-matmul crossover table.
 RADIUS_MAX_PLANES = 4096
+
+
+def brute_bill_fits(
+    corpus: DataFrame, queries: DataFrame, n_hint: int | None = None
+) -> bool:
+    """The one exact-dispatch rule of the similarity family: True while
+    the N·|Q| pair bill is <= :data:`RADIUS_BRUTE_BILL_MAX`, i.e. while
+    the codegen-fold plans (``brute_force_topk``, radius ``broadcast``)
+    are cheap enough; past it the BLAS paths (``topk_matmul``, radius
+    ``matmul``) take over — exact either way. N comes from ``n_hint`` or
+    one COUNT; |Q| from a LIMIT-bounded count that stops one row past
+    the budget."""
+    cap = RADIUS_BRUTE_BILL_MAX
+    n = n_hint if n_hint is not None else corpus.count()
+    nq = queries.limit(max(1, cap // max(n, 1)) + 1).count()
+    return n * nq <= cap
 
 
 def topk_matmul(
@@ -431,7 +585,6 @@ def topk_matmul(
     q_id_col: str = "q_id",
     q_emb_col: str = "q_emb",
     max_query_mb: int = 256,
-    margin: float = 1e-9,
 ) -> DataFrame:
     """EXACT cosine top-k with the N·|Q| fold-and-sort bill removed —
     the top-k sibling of the radius matmul path.
@@ -441,182 +594,74 @@ def topk_matmul(
     already prunes the SHUFFLE to ≤ partitions·|Q|·k rows, but each
     partition still pays the fold cosine for all N_p·|Q| pairs plus a
     full comparison sort of them — the same quadratic compute class the
-    r12 radius measurement exposed, latent here behind the small |Q| of
+    radius measurement exposed, latent here behind the small |Q| of
     the gate shape (measured 594 s at the 100× decade). This variant:
 
-    1. **Shortlist** (Arrow/BLAS): each corpus partition computes its
-       own top-k per query with row-chunked float64 matmuls (dgemm
-       instead of per-pair folds) and O(n) ``argpartition`` (instead of
-       the full sort), emitting only those rows. Any global top-k
-       member is necessarily in its partition's top-k, so pruning is
-       lossless; a ``margin`` band below each partition's k-th BLAS
-       score absorbs the ≤1-ulp BLAS-vs-fold disagreement so a boundary
-       tie can never be pruned by the wrong arithmetic.
-    2. **Exact re-rank** (codegen): the surviving candidates fetch
-       their embeddings by id-join and the final (rank, cos) come from
-       the SAME Column-fold cosine and (cos desc, id) tie-break as
-       :func:`brute_force_topk` — so the output, cos bits included, is
-       identical to the brute plan's and hash-exact against the DuckDB
-       oracle (gate ``similarity_topk_matmul``).
+    1. **Shortlist** (Arrow/BLAS): each corpus batch scores its rows in
+       row-chunked float64 matmuls (:func:`_cosine_chunks`; dgemm
+       instead of per-pair folds) and keeps its own top-k per query by
+       O(n) partition instead of the full sort (:func:`_band_shortlist`
+       over −cos), emitting only those rows. Any global top-k member is
+       necessarily in its batch's top-k, so pruning is lossless; the
+       band below each k-th BLAS score (1e-9 for |cos| ≤ 1) absorbs the
+       ≤1-ulp BLAS-vs-fold disagreement and keeps every exact tie at the
+       boundary, so the re-rank's (cos desc, id) contract picks the same
+       winners as brute.
+    2. **Exact re-rank** (codegen, :func:`_cosine_rerank`): the
+       surviving candidates fetch their embeddings by id-join and the
+       final (rank, cos) come from the SAME Column-fold cosine and
+       (cos desc, id) tie-break as :func:`brute_force_topk` — so the
+       output, cos bits included, is identical to the brute plan's and
+       hash-exact against the DuckDB oracle (gate
+       ``similarity_topk_matmul``).
 
     Zero-norm/NULL vectors never shortlist (masked denominators), the
     same never-qualify semantics as the Column paths.
-
-    Every BLAS-side cut (chunk-level AND batch-level) keeps the full
-    ``margin`` band below the k-th score — exact ties at the boundary
-    all survive into the re-rank, where the (cos desc, id) contract
-    picks the same winners as brute (a hard argpartition cut to k rows
-    would drop boundary ties arbitrarily — the r13 tie-band gap).
 
     |Q| beyond ``max_query_mb`` splits into query blocks (each <= the
     cap), one shortlist scan per block, candidates unioned before the
     single re-rank — exact output at any |Q| up to
     :data:`MAX_QUERY_BLOCKS` corpus rescans, no refusal.
     """
-    from functools import reduce
-
     import numpy as np
-    from pyspark.sql import types as T
 
-    qids_all, Q_all, _ = _collect_query_matrix(
-        queries, q_id_col, q_emb_col, "topk_matmul"
-    )
-
-    cand_schema = T.StructType(
-        [
-            T.StructField(q_id_col, queries.schema[q_id_col].dataType),
-            T.StructField(id_col, corpus.schema[id_col].dataType),
-        ]
-    )
-
-    def make_shortlist(Q, qn, qids):
-        chunk = max(1, 4_000_000 // max(len(qids) if qids is not None else 1, 1))
-        # compaction budget: the accumulator would otherwise grow to
-        # n_chunks·|Q|·k rows before the batch cut (at |Q| ~ 10⁵ over a
-        # wide partition that is GBs of (qi, id, cos) triples) — compact
-        # with the same band cut whenever it passes a few |Q|·k
-        n_q = len(qids) if qids is not None else 1
-        compact_at = max(4_000_000, 4 * n_q * k)
-
-        def group_band_cut(qi, bid, bc):
-            # per-query k-th best over the kept rows, band preserved
-            # (volume control only — correctness never depends on it)
-            order = np.lexsort((-bc, qi))
-            qi, bid, bc = qi[order], bid[order], bc[order]
-            starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-            counts = np.diff(np.r_[starts, len(qi)])
-            kth_pos = starts + np.minimum(k, counts) - 1
-            group_of_row = np.repeat(np.arange(len(starts)), counts)
-            keep = bc >= bc[kth_pos][group_of_row] - margin
-            return qi[keep], bid[keep], bc[keep]
+    def kernel(Q, qids):
+        q_index = np.arange(len(qids))
 
         def shortlist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # per-TASK top-k(+tie band) per query: chunk-level band-keep,
-            # periodic compaction, one final band cut — emitted volume is
-            # <= |Q|·(k + ties) per task
             for pdf in batches:
-                if Q is None:
-                    continue
-                pdf = pdf[pdf[emb_col].notna()]
-                if not len(pdf):
-                    continue
-                try:
-                    C_all = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-                except ValueError:
-                    lens = sorted(pdf[emb_col].map(len).unique().tolist())
-                    raise ValueError(
-                        f"topk_matmul: ragged '{emb_col}' lengths {lens} in "
-                        "one batch; embeddings must share one dimension"
-                    ) from None
-                ids_all = pdf[id_col].to_numpy()
-                acc_q: list = []
-                acc_i: list = []
-                acc_c: list = []
-                acc_n = 0
-                for lo in range(0, len(ids_all), chunk):
-                    C = C_all[lo : lo + chunk]
-                    ids = ids_all[lo : lo + chunk]
-                    cn = np.sqrt((C * C).sum(axis=1))
-                    denom = cn[:, None] * qn[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = (C @ Q.T) / denom
-                    cos = np.where(
-                        (denom != 0.0) & (ids[:, None] != qids[None, :]),
-                        cos,
-                        -np.inf,
-                    )
-                    if cos.shape[0] > k:
-                        # band-keep, not hard-cut: argpartition only finds
-                        # the chunk's k-th score; every row within margin
-                        # of it (ties included) survives
-                        kth = -np.partition(-cos, k - 1, axis=0)[k - 1]
-                        keep = cos >= (kth[None, :] - margin)
-                    else:
-                        keep = np.isfinite(cos)
-                    keep &= np.isfinite(cos)
-                    ci, qi = np.nonzero(keep)
-                    if len(ci):
-                        acc_q.append(qi)
-                        acc_i.append(ids[ci])
-                        acc_c.append(cos[ci, qi])
-                        acc_n += len(ci)
-                    if acc_n > compact_at:
-                        cq, cb, cc = group_band_cut(
-                            np.concatenate(acc_q),
-                            np.concatenate(acc_i),
-                            np.concatenate(acc_c),
+                kept = _band_shortlist(
+                    (
+                        (q_index, ids, np.where(valid, -cos, np.inf).T)
+                        for ids, cos, valid in _cosine_chunks(
+                            pdf, Q, qids, id_col, emb_col, "topk_matmul"
                         )
-                        acc_q, acc_i, acc_c = [cq], [cb], [cc]
-                        acc_n = len(cq)
-                if not acc_q:
-                    continue
-                qi, bid, bc = group_band_cut(
-                    np.concatenate(acc_q),
-                    np.concatenate(acc_i),
-                    np.concatenate(acc_c),
+                    ),
+                    k,
+                    len(qids),
                 )
-                yield pd.DataFrame({q_id_col: qids[qi], id_col: bid})
+                if kept is not None:
+                    qi, bid = kept
+                    yield pd.DataFrame({q_id_col: qids[qi], id_col: bid})
 
         return shortlist
 
-    scan = corpus.select(id_col, emb_col)
-    if Q_all is None:
-        cands = scan.mapInPandas(
-            make_shortlist(None, None, None), schema=cand_schema
-        )
-    else:
-        blocks = _query_blocks(
-            len(qids_all),
-            Q_all.nbytes,
-            max_query_mb,
-            "topk_matmul",
-            "For |Q| this large use lsh_topk/ivf_topk/pq_topk "
-            "(candidate-pruned ANN) or raise max_query_mb.",
-        )
-        parts = []
-        for lo, hi in blocks:
-            Q = Q_all[lo:hi]
-            qn = np.sqrt((Q * Q).sum(axis=1))
-            parts.append(
-                scan.mapInPandas(
-                    make_shortlist(Q, qn, qids_all[lo:hi]), schema=cand_schema
-                )
-            )
-        cands = reduce(DataFrame.union, parts)
-    cands = cands.dropDuplicates([q_id_col, id_col])
-    # the same cosine_safe re-score as brute_force_topk — bit-identical
-    # cos for every surviving (non-zero-norm) row
-    rescored = (
-        cands.join(corpus.select(id_col, emb_col), id_col)
-        .join(F.broadcast(queries.select(q_id_col, q_emb_col)), q_id_col)
-        .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
-        .filter(F.col("cos").isNotNull())
+    cands, _ = _query_fanout(
+        corpus.select(id_col, emb_col),
+        queries,
+        q_id_col,
+        q_emb_col,
+        _pair_schema(queries, corpus, q_id_col, id_col),
+        kernel,
+        lambda Q: Q.nbytes,
+        max_query_mb,
+        "topk_matmul",
+        "For |Q| this large use lsh_topk/ivf_topk/pq_topk "
+        "(candidate-pruned ANN) or raise max_query_mb.",
     )
-    w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "rank", "cos")
+    return _cosine_rerank(
+        cands.dropDuplicates([q_id_col, id_col]),
+        corpus, queries, k, id_col, emb_col, q_id_col, q_emb_col,
     )
 
 
@@ -680,26 +725,20 @@ def radius_search(
       The scale path for the low-threshold regime banding cannot
       serve; |Q| past ``max_query_mb`` of closure budget splits into
       query blocks (still exact — one corpus scan per block).
-    * ``"auto"`` (default) — EXACT-ONLY dispatch: ``broadcast`` while
-      N·|Q| <= :data:`RADIUS_BRUTE_BILL_MAX` (bit-exact, and the bill
-      is small); past that, ``matmul``. Corpus size comes from
-      ``n_hint`` or one COUNT; |Q| from a LIMIT-bounded count. auto
-      NEVER selects ``banded``: the banded set is ~recall_target-
-      complete, not complete, and a dispatcher that silently swaps a
-      complete result for a 99%-complete one once the data grows is a
-      correctness trap (the r13 ADVICE item) — approximate candidates
-      are an explicit opt-in, priced by the measured crossover in
-      SCALE.md.
+    * ``"auto"`` (default) — EXACT-ONLY dispatch by
+      :func:`brute_bill_fits`: ``broadcast`` while N·|Q| <=
+      :data:`RADIUS_BRUTE_BILL_MAX` (bit-exact, and the bill is small);
+      past that, ``matmul``. auto NEVER selects ``banded``: the banded
+      set is ~recall_target-complete, not complete, and a dispatcher
+      that silently swaps a complete result for a 99%-complete one once
+      the data grows is a correctness trap — approximate candidates are
+      an explicit opt-in, priced by the measured crossover in SCALE.md.
     """
     from cql_xmlpipe_spark.functions.vectors import dot, norm
 
     mode = candidates
     if mode == "auto":
-        cap = RADIUS_BRUTE_BILL_MAX
-        n = n_hint if n_hint is not None else corpus.count()
-        nq_probe = max(1, cap // max(n, 1)) + 1
-        nq = queries.limit(nq_probe).count()
-        mode = "broadcast" if n * nq <= cap else "matmul"
+        mode = "broadcast" if brute_bill_fits(corpus, queries, n_hint) else "matmul"
     if mode == "matmul":
         return _radius_matmul(
             corpus,
@@ -760,6 +799,59 @@ def radius_search(
     )
 
 
+def _centers(model):
+    """A fitted KMeans model's centroids as one float64 k×d matrix."""
+    import numpy as np
+
+    return np.stack(
+        [
+            c.toArray() if hasattr(c, "toArray") else np.asarray(c)
+            for c in model.clusterCenters()
+        ]
+    )
+
+
+def _fit_naming_ragged(
+    fit, corpus: DataFrame, id_col: str, emb_col: str, op_name: str
+):
+    """``fit()`` a KMeans stage, naming ragged embeddings if that is why
+    it died. MLlib reports mixed dimensions as a JVM
+    ``IllegalArgumentException`` ("requirement failed: Dimensions
+    mismatch") raised inside a fit task, for the IVF fit and a PQ
+    subspace slice alike; only then is the corpus's array-length profile
+    scanned, and a ragged one raises naming the dimensions and one
+    example id per dimension. Every other failure re-raises unchanged
+    and starts no job — at 100 TB the diagnostic is a full scan, not a
+    cost for an unrelated error path."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return fit()
+    except Py4JJavaError as exc:
+        cause = exc.java_exception
+        while (
+            cause is not None
+            and cause.getClass().getName() != "java.lang.IllegalArgumentException"
+        ):
+            cause = cause.getCause()
+        if cause is not None:
+            dims = (
+                corpus.filter(F.col(emb_col).isNotNull())
+                .groupBy(F.size(F.col(emb_col)).alias("dim"))
+                .agg(F.count(F.lit(1)).alias("n"), F.min(id_col).alias("example"))
+                .orderBy("dim")
+                .collect()
+            )
+            if len(dims) > 1:
+                raise ValueError(
+                    f"{op_name}: ragged '{emb_col}' dimensions "
+                    f"{[(r['dim'], r['n']) for r in dims]} (example {id_col} "
+                    f"per dim: {[r['example'] for r in dims]}); embeddings "
+                    "must share one dimension"
+                ) from None
+        raise
+
+
 def ivf_build(
     corpus: DataFrame,
     n_cells: int = 16,
@@ -776,8 +868,8 @@ def ivf_build(
     to :func:`ivf_query` any number of times; :func:`ivf_topk` is
     exactly ``ivf_query(*ivf_build(...))`` (pinned by pytest), and
     :func:`ann_index_write`/:func:`ann_index_read` persist the pair as
-    parquet + a params row for cross-process reuse (the r13 verdict's
-    staged-index task: production retrains per INGEST, not per QUERY).
+    parquet + a params row for cross-process reuse (production retrains
+    per INGEST, not per QUERY).
 
     Train: Spark ML KMeans (seeded, distributed) learns ``n_cells``
     centroids; the tiny centroid matrix broadcasts to every executor
@@ -785,40 +877,32 @@ def ivf_build(
     pandas UDF computes each vector's nearest centroid as a single
     matmul (argmin of |x-c|² via -2xCᵀ + |c|²).
     """
-    import numpy as np
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import types as T
 
     train = corpus.filter(F.col(emb_col).isNotNull()).select(
         array_to_vector(F.col(emb_col)).alias("features")
     )
-    try:
-        model = KMeans(k=n_cells, seed=42, maxIter=20, featuresCol="features").fit(train)
-    except Exception:
-        # fit dies deep in MLlib on mixed dimensions — diagnose before
-        # re-raising (failure path only; one scan over array lengths)
-        dims = (
-            corpus.filter(F.col(emb_col).isNotNull())
-            .groupBy(F.size(F.col(emb_col)).alias("dim"))
-            .agg(F.count(F.lit(1)).alias("n"), F.min(id_col).alias("example"))
-            .orderBy("dim")
-            .collect()
-        )
-        if len(dims) > 1:
-            raise ValueError(
-                f"ivf_topk: ragged '{emb_col}' dimensions "
-                f"{[(r['dim'], r['n']) for r in dims]} (example {id_col} "
-                f"per dim: {[r['example'] for r in dims]}); embeddings "
-                "must share one dimension"
-            ) from None
-        raise
-    centers = np.stack(
-        [c.toArray() if hasattr(c, "toArray") else np.asarray(c) for c in model.clusterCenters()]
+    centers = _fit_naming_ragged(
+        lambda: _centers(
+            KMeans(k=n_cells, seed=42, maxIter=20, featuresCol="features").fit(train)
+        ),
+        corpus, id_col, emb_col, "ivf_topk",
     )  # k×d
     nearest = _ivf_cell_udfs(centers, top_n=1, as_array=False)
     assignments = corpus.select(id_col, nearest(F.col(emb_col)).alias("cell"))
     return assignments, [[float(x) for x in row] for row in centers]
+
+
+def _ivf_probe(X, centers, n: int):
+    """The ``n`` nearest cells of each row of ``X``, nearest first:
+    argsort descending of x·c − ‖c‖²/2 (≡ ascending ‖x − c‖², the row's
+    own ‖x‖² dropped). The one probe rule of IVF assignment, IVF query
+    fan-out and IVF-PQ gating, so all three agree on every cell."""
+    import numpy as np
+
+    half_norms = (centers * centers).sum(axis=1) / 2.0
+    return np.argsort(-(X @ centers.T - half_norms), axis=1)[:, :n].astype("int32")
 
 
 def _ivf_cell_udfs(centers, top_n: int, as_array: bool):
@@ -829,7 +913,6 @@ def _ivf_cell_udfs(centers, top_n: int, as_array: bool):
     from pyspark.sql import types as T
 
     centers = np.asarray(centers, dtype=np.float64)
-    half_norms = (centers * centers).sum(axis=1) / 2.0
 
     def _top_cells(batch: pd.Series, n: int) -> list:
         # NULL embeddings get a NULL cell — they drop at the equi-join,
@@ -839,18 +922,7 @@ def _ivf_cell_udfs(centers, top_n: int, as_array: bool):
         mask = batch.notna()
         if not mask.any():
             return out
-        vals = batch[mask]
-        try:
-            M = np.stack(vals.to_numpy())  # b×d
-        except ValueError as exc:
-            lens = vals.map(len)
-            raise ValueError(
-                f"ivf_topk: ragged embedding lengths "
-                f"{sorted(lens.unique().tolist())} in one batch; "
-                "embeddings must share one dimension"
-            ) from exc
-        scores = M @ centers.T - half_norms  # maximize x·c - |c|²/2
-        tops = np.argsort(-scores, axis=1)[:, :n].astype("int32")
+        tops = _ivf_probe(_stack(batch[mask], "ivf_topk"), centers, n)
         for i, a in zip(np.flatnonzero(mask.to_numpy()), tops):
             out[i] = a
         return out
@@ -916,18 +988,8 @@ def ivf_query(
         .filter(F.col(id_col) != F.col(q_id_col))
         .select(q_id_col, id_col)
     )
-    scored = (
-        cands.join(corpus.select(id_col, emb_col), id_col)
-        .join(F.broadcast(queries.select(q_id_col, q_emb_col)), q_id_col)
-        .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
-        .filter(F.col("cos").isNotNull())
-        .select(q_id_col, id_col, "cos")
-    )
-    w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "rank", "cos")
+    return _cosine_rerank(
+        cands, corpus, queries, k, id_col, emb_col, q_id_col, q_emb_col
     )
 
 
@@ -990,18 +1052,8 @@ def lsh_topk(
         .select(q_id_col, id_col)
         .distinct()
     )
-    scored = (
-        cands.join(corpus.select(id_col, emb_col), id_col)
-        .join(F.broadcast(queries.select(q_id_col, q_emb_col)), q_id_col)
-        .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
-        .filter(F.col("cos").isNotNull())
-        .select(q_id_col, id_col, "cos")
-    )
-    w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "rank", "cos")
+    return _cosine_rerank(
+        cands, corpus, queries, k, id_col, emb_col, q_id_col, q_emb_col
     )
 
 
@@ -1015,20 +1067,17 @@ def _pq_bounds(dim: int, m: int) -> list[tuple[int, int]]:
     return [(s * d0, (s + 1) * d0 if s < m - 1 else dim) for s in range(m)]
 
 
-def _pq_stack(vals, what: str):
-    """float64 matrix of a pandas Series of arrays; names the offending
-    lengths on raggedness — shared by the PQ encode/LUT batch kernels."""
+def _codebooks(books):
+    """(float64 codebook arrays, subspace [start, end) bounds) of a
+    trained PQ artifact: each book's width, in order — the query side's
+    one reading of what :func:`_pq_bounds` split at build time."""
+    from itertools import accumulate
+
     import numpy as np
 
-    try:
-        return np.stack(vals.to_numpy()).astype(np.float64)
-    except ValueError as exc:
-        lens = vals.map(len)
-        raise ValueError(
-            f"pq_topk: ragged {what} lengths "
-            f"{sorted(lens.unique().tolist())} in one batch; "
-            "embeddings must share one dimension"
-        ) from exc
+    books = [np.asarray(b, dtype=np.float64) for b in books]
+    edges = [0, *accumulate(b.shape[1] for b in books)]
+    return books, list(zip(edges[:-1], edges[1:]))
 
 
 def _pq_lut_matrix(Qb, books, bounds):
@@ -1061,54 +1110,61 @@ def _adc_fold(m: int, ks: int, lut_col: str = "lut", code_col: str = "code"):
     )
 
 
-def _make_adc_band_cut(shortlist: int):
-    """Per-query shortlist-th-best-ADC band cut over accumulated
-    (query_index, id, adc) triples — the compaction/final-cut device of
-    the numpy ADC shortlist kernels (volume control only; correctness
-    rides the exact fold re-cut, never this)."""
+def _adc_chunks(L, q_index, qids, codes: pd.Series, ids_all):
+    """ADC scores of one batch of PQ codes against LUT rows ``L`` (one
+    row per query; ``q_index`` their block positions, ``qids`` their
+    ids), as :func:`_band_shortlist` chunks: Σ_s L[q, s·ks + code_s] by
+    one fancy-index gather + row-sum, self-pairs +inf. Rows are chunked
+    so the (|q|, rows, m) gather block stays ~tens of MB per task (the
+    matmul chunking discipline)."""
     import numpy as np
 
-    def group_band_cut(qi, bid, ba):
-        order = np.lexsort((ba, qi))
-        qi, bid, ba = qi[order], bid[order], ba[order]
-        starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-        counts = np.diff(np.r_[starts, len(qi)])
-        kth_pos = starts + np.minimum(shortlist, counts) - 1
-        group_of_row = np.repeat(np.arange(len(starts)), counts)
-        kth = ba[kth_pos][group_of_row]
-        keep = ba <= kth + 1e-9 * np.maximum(1.0, np.abs(kth))
-        return qi[keep], bid[keep], ba[keep]
-
-    return group_band_cut
+    codes_np = np.stack(codes.to_numpy()).astype(np.int64)
+    m = codes_np.shape[1]
+    offsets = np.arange(m, dtype=np.int64) * (L.shape[1] // m)
+    rows_per = max(1, 4_000_000 // max(len(q_index) * m, 1))
+    for lo in range(0, len(ids_all), rows_per):
+        idx = codes_np[lo : lo + rows_per] + offsets[None, :]
+        ids = ids_all[lo : lo + rows_per]
+        adc = L[:, idx].sum(axis=2)  # (|q|, rows)
+        adc[qids[:, None] == ids[None, :]] = np.inf
+        yield q_index, ids, adc
 
 
-def _cosine_rerank(
-    pairs: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    emb_col: str,
-    q_id_col: str,
-    q_emb_col: str,
+def _cell_luts(Q, centers, n_probe: int, books, bounds):
+    """(cell, query rows, residual LUTs) for every cell the rows of ``Q``
+    probe (:func:`_ivf_probe`): each probing query's LUT over its
+    residual q − centroid(cell) — the IVFADC table, one definition for
+    the IVF-PQ scan kernel and its re-cut table."""
+    import numpy as np
+
+    probe = _ivf_probe(Q, centers, n_probe)
+    for c in np.unique(probe):
+        q_loc = np.flatnonzero((probe == c).any(axis=1))
+        yield int(c), q_loc, _pq_lut_matrix(Q[q_loc] - centers[c], books, bounds)
+
+
+def _adc_recut(
+    cands: DataFrame, codes: DataFrame, luts: DataFrame, on, adc,
+    shortlist: int, id_col: str, q_id_col: str,
 ) -> DataFrame:
-    """Exact cosine re-rank of candidate (q_id, id) pairs: fetch the
-    full vectors by id-join for the candidates ALONE (never dragging
-    them through candidate generation — the r13 row-width lesson),
-    score with the same Column-fold cosine and (cos desc, id) tie-break
-    as :func:`brute_force_topk`, keep top-``k`` per query."""
-    reranked = (
-        pairs.select(q_id_col, id_col)
-        .join(corpus.select(id_col, emb_col), id_col)
-        .join(F.broadcast(queries.select(q_id_col, q_emb_col)), q_id_col)
-        .withColumn("cos", cosine_safe(F.col(emb_col), F.col(q_emb_col)))
-        .filter(F.col("cos").isNotNull())
+    """Exact ADC re-cut of numpy-shortlisted (q_id, id) candidates: each
+    candidate's code joins its LUT row (on ``on``), the Column fold
+    ``adc`` (:func:`_adc_fold`) scores it, and the (adc asc, id asc)
+    ``row_number`` keeps ``shortlist`` per query — the same expression
+    and contract as the fullprobe plan, over the pruned candidates only.
+    This is what makes the shortlist set bit-identical whatever order
+    numpy summed in."""
+    scored = (
+        cands.dropDuplicates([q_id_col, id_col])
+        .join(codes, id_col)
+        .join(luts, on)
+        .filter(F.col(id_col) != F.col(q_id_col))
+        .select(q_id_col, id_col, adc.alias("adc"))
     )
-    w = W.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "rank", "cos")
+    w = W.partitionBy(q_id_col).orderBy(F.col("adc"), F.col(id_col))
+    return scored.withColumn("arank", F.row_number().over(w)).filter(
+        F.col("arank") <= shortlist
     )
 
 
@@ -1133,7 +1189,7 @@ def pq_build(
     :func:`ann_index_write`). Feed both to :func:`pq_query` any number
     of times; :func:`pq_topk` is ``pq_query(*pq_build(...))``
     (pinned by pytest). Production builds once per ingest, not per
-    query — the r13 verdict's staged-index task."""
+    query."""
     import numpy as np
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -1161,61 +1217,29 @@ def pq_build(
                 "features"
             )
         )
-        model = KMeans(
-            k=ks, seed=42 + s, maxIter=20, featuresCol="features"
-        ).fit(train)
-        return np.stack(
-            [
-                c.toArray() if hasattr(c, "toArray") else np.asarray(c)
-                for c in model.clusterCenters()
-            ]
+        return _centers(
+            KMeans(k=ks, seed=42 + s, maxIter=20, featuresCol="features").fit(train)
         )  # ks × (hi-lo)
 
     from concurrent.futures import ThreadPoolExecutor
 
-    try:
+    def _fit_all() -> list[np.ndarray]:
         with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-            books: list[np.ndarray] = list(
+            return list(
                 pool.map(
                     lambda args: _fit_subspace(*args),
                     [(s, lo, hi) for s, (lo, hi) in enumerate(bounds)],
                 )
             )
-    except Exception as exc:
-        # run the ragged-dimension diagnostic scan ONLY when the failure
-        # looks like one (r15, VERDICT r14 item 8): an unrelated fit
-        # failure must not trigger a full corpus aggregation on its way
-        # out — at 100 TB that is a wasted full scan in an error path.
-        # Breeze/MLlib dimension mismatches surface as "requirement
-        # failed", "dimension"/"size (mis)match", or a slice falling
-        # outside a short row ("index out of bounds"/NULL struct field).
-        msg = str(exc).lower()
-        if any(
-            t in msg
-            for t in ("dimension", "size", "length", "requirement failed",
-                      "index", "bounds")
-        ):
-            dims = (
-                corpus.filter(F.col(emb_col).isNotNull())
-                .groupBy(F.size(F.col(emb_col)).alias("dim"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .orderBy("dim")
-                .collect()
-            )
-            if len(dims) > 1:
-                raise ValueError(
-                    f"pq_topk: ragged '{emb_col}' dimensions "
-                    f"{[(r['dim'], r['n']) for r in dims]}; embeddings "
-                    "must share one dimension"
-                ) from None
-        raise
+
+    books = _fit_naming_ragged(_fit_all, corpus, id_col, emb_col, "pq_topk")
 
     def _encode(batch: "pd.Series") -> "pd.Series":
         out: list = [None] * len(batch)
         mask = batch.notna()
         if not mask.any():
             return pd.Series(out)
-        M = _pq_stack(batch[mask], "embedding")
+        M = _stack(batch[mask], "pq_topk")
         codes = np.empty((M.shape[0], m), dtype=np.int32)
         for s, (lo, hi) in enumerate(bounds):
             sub = M[:, lo:hi]
@@ -1262,9 +1286,9 @@ def pq_query(
     (≡ brute force — the fullprobe gate identity).
 
     Scale shape: ADC scoring is a single zero-shuffle numpy pass over
-    the codes (LUT gather + row-sum per partition, ``argpartition``
-    shortlist in a margin band — the ``topk_matmul`` device at code
-    width; no per-pair Column fold, no N·|Q| comparison sort), an exact
+    the codes (LUT gather + row-sum per partition, then the band
+    shortlist :func:`_band_shortlist` that ``topk_matmul`` also runs,
+    at code width; no per-pair Column fold, no N·|Q| comparison sort), an exact
     Column-fold ADC re-cut over the surviving
     <= partitions·|Q|·(shortlist+ties) rows reproduces the global
     (adc asc, id asc) shortlist bit-for-bit, and only shortlist×|Q|
@@ -1280,13 +1304,8 @@ def pq_query(
     import numpy as np
     from pyspark.sql import types as T
 
-    books = [np.asarray(b, dtype=np.float64) for b in books]
+    books, bounds = _codebooks(books)
     m, ks = len(books), len(books[0])
-    dims = [b.shape[1] for b in books]
-    edges = [0]
-    for d in dims:
-        edges.append(edges[-1] + d)
-    bounds = list(zip(edges[:-1], edges[1:]))
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def query_lut(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -1296,7 +1315,7 @@ def pq_query(
             out: list = [None] * len(batch)
             mask = batch.notna()
             if mask.any():
-                Q = _pq_stack(batch[mask], "query embedding")
+                Q = _stack(batch[mask], "pq_topk")
                 luts = _pq_lut_matrix(Q, books, bounds)
                 for i, l in zip(np.flatnonzero(mask.to_numpy()), luts):
                     out[i] = [float(x) for x in l]
@@ -1310,138 +1329,59 @@ def pq_query(
     if shortlist is None:
         # fullprobe: every pair is re-ranked anyway (the brute-identity
         # gate), so the ADC fold is only a pass-through — keep the
-        # 24 B/pair crossJoin (the r13 row-width lesson, SCALE.md)
+        # 24 B/pair crossJoin (the row-width lesson, SCALE.md)
         scored = (
             codes.crossJoin(F.broadcast(q.select(q_id_col, "lut")))
             .filter(F.col(id_col) != F.col(q_id_col))
             .select(q_id_col, id_col, adc.alias("adc"))
         )
     else:
-        # numpy ADC shortlist (r14, closes the r13 `weak`): the r13 plan
-        # pruned the SORT ROWS to 24 B/pair but still paid a per-pair
-        # Column fold (m LUT element_ats) plus a full per-partition
-        # comparison sort over all N_p·|Q| pairs — 83.7 s steady at the
-        # jit-100× decade vs 33.6 s for the EXACT topk_matmul. Here each
+        # numpy ADC shortlist: a per-pair Column fold (m LUT
+        # element_ats) plus a full per-partition comparison sort over
+        # all N_p·|Q| pairs measured 83.7 s steady at the jit-100×
+        # decade vs 33.6 s for the EXACT topk_matmul. Here each
         # partition gathers LUT rows by code (one fancy-index + row-sum,
         # no per-pair expression), band-keeps its `shortlist` best per
-        # query via O(n) argpartition, and emits only (q_id, id)
-        # survivors. Any global shortlist member is in its partition's
-        # shortlist; the margin band absorbs numpy-vs-fold ulp drift and
-        # keeps boundary ties, so the exact fold re-cut below reproduces
-        # the global (adc asc, id asc) shortlist bit-for-bit — output
-        # identical to the r13 window plan (the pinned fixture holds).
-        from functools import reduce
-
-        qids_all, Q_all, _ = _collect_query_matrix(
-            queries, q_id_col, q_emb_col, "pq_topk"
-        )
-        cand_schema = T.StructType(
-            [
-                T.StructField(q_id_col, queries.schema[q_id_col].dataType),
-                T.StructField(id_col, corpus.schema[id_col].dataType),
-            ]
-        )
-        offsets = (np.arange(m) * ks).astype(np.int64)
-
-        def make_adc_shortlist(L, qids):
-            # chunk corpus rows so the (|Q|, rows, m) gather block stays
-            # ~tens of MB per task (the matmul chunking discipline)
-            rows_per = max(1, 4_000_000 // max(len(qids) * m, 1))
-            # compaction budget — same device as topk_matmul's shortlist:
-            # without it the accumulator grows to n_chunks·|Q|·shortlist
-            # triples before the batch cut
-            compact_at = max(4_000_000, 4 * len(qids) * shortlist)
-            group_band_cut = _make_adc_band_cut(shortlist)
+        # query (_band_shortlist), and emits only (q_id, id) survivors.
+        # Any global shortlist member is in its partition's shortlist;
+        # the band absorbs numpy-vs-fold ulp drift and keeps boundary
+        # ties, so the exact fold re-cut below reproduces the global
+        # (adc asc, id asc) shortlist bit-for-bit.
+        def kernel(Q, qids):
+            L = _pq_lut_matrix(Q, books, bounds)
+            q_index = np.arange(len(qids))
 
             def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 for pdf in batches:
                     pdf = pdf[pdf["code"].notna()]
                     if not len(pdf):
                         continue
-                    codes_np = np.stack(pdf["code"].to_numpy()).astype(np.int64)
-                    ids_all = pdf[id_col].to_numpy()
-                    acc_q: list = []
-                    acc_i: list = []
-                    acc_a: list = []
-                    acc_n = 0
-                    for lo in range(0, len(ids_all), rows_per):
-                        idx = codes_np[lo : lo + rows_per] + offsets[None, :]
-                        ids = ids_all[lo : lo + rows_per]
-                        adc_np = L[:, idx].sum(axis=2)  # (|Q|, rows)
-                        adc_np[qids[:, None] == ids[None, :]] = np.inf
-                        if adc_np.shape[1] > shortlist:
-                            kth = np.partition(adc_np, shortlist - 1, axis=1)[
-                                :, shortlist - 1
-                            ]
-                            band = 1e-9 * np.maximum(1.0, np.abs(kth))
-                            keep = adc_np <= (kth + band)[:, None]
-                        else:
-                            keep = np.isfinite(adc_np)
-                        keep &= np.isfinite(adc_np)
-                        qi, ci = np.nonzero(keep)
-                        if len(qi):
-                            acc_q.append(qi)
-                            acc_i.append(ids[ci])
-                            acc_a.append(adc_np[qi, ci])
-                            acc_n += len(qi)
-                        if acc_n > compact_at:
-                            cq, cb, ca = group_band_cut(
-                                np.concatenate(acc_q),
-                                np.concatenate(acc_i),
-                                np.concatenate(acc_a),
-                            )
-                            acc_q, acc_i, acc_a = [cq], [cb], [ca]
-                            acc_n = len(cq)
-                    if not acc_q:
-                        continue
-                    qi, bid, _ = group_band_cut(
-                        np.concatenate(acc_q),
-                        np.concatenate(acc_i),
-                        np.concatenate(acc_a),
+                    chunks = _adc_chunks(
+                        L, q_index, qids, pdf["code"], pdf[id_col].to_numpy()
                     )
-                    yield pd.DataFrame({q_id_col: qids[qi], id_col: bid})
+                    kept = _band_shortlist(chunks, shortlist, len(qids))
+                    if kept is not None:
+                        qi, bid = kept
+                        yield pd.DataFrame({q_id_col: qids[qi], id_col: bid})
 
             return gen
 
-        codes_scan = codes
-        if Q_all is None:
-            cands = corpus.sparkSession.createDataFrame([], cand_schema)
-        else:
-            blocks = _query_blocks(
-                len(qids_all),
-                int(len(qids_all)) * m * ks * 8,
-                max_query_mb,
-                "pq_topk",
-                "Raise max_query_mb — the LUT closure is m·ks·8 bytes per "
-                "query, far below the raw embeddings.",
-            )
-            parts = []
-            for blo, bhi in blocks:
-                parts.append(
-                    codes_scan.mapInPandas(
-                        make_adc_shortlist(
-                            _pq_lut_matrix(Q_all[blo:bhi], books, bounds),
-                            qids_all[blo:bhi],
-                        ),
-                        schema=cand_schema,
-                    )
-                )
-            cands = reduce(DataFrame.union, parts).dropDuplicates(
-                [q_id_col, id_col]
-            )
-        # exact fold re-cut: the SAME adc expression and (adc, id)
-        # row_number contract as the r13 plan, now over the pruned
-        # candidate set only — this is what makes the shortlist set
-        # bit-identical regardless of numpy summation order
-        scored = (
-            cands.join(codes_scan, id_col)
-            .join(F.broadcast(q.select(q_id_col, "lut")), q_id_col)
-            .filter(F.col(id_col) != F.col(q_id_col))
-            .select(q_id_col, id_col, adc.alias("adc"))
+        cands, _ = _query_fanout(
+            codes,
+            queries,
+            q_id_col,
+            q_emb_col,
+            _pair_schema(queries, corpus, q_id_col, id_col),
+            kernel,
+            lambda Q: len(Q) * m * ks * 8,
+            max_query_mb,
+            "pq_topk",
+            "Raise max_query_mb — the LUT closure is m·ks·8 bytes per "
+            "query, far below the raw embeddings.",
         )
-        w_adc = W.partitionBy(q_id_col).orderBy(F.col("adc"), F.col(id_col))
-        scored = scored.withColumn("arank", F.row_number().over(w_adc)).filter(
-            F.col("arank") <= shortlist
+        scored = _adc_recut(
+            cands, codes, F.broadcast(q.select(q_id_col, "lut")), q_id_col,
+            adc, shortlist, id_col, q_id_col,
         )
     return _cosine_rerank(
         scored, corpus, queries, k, id_col, emb_col, q_id_col, q_emb_col
@@ -1496,7 +1436,7 @@ def _residualize(
         out: list = [None] * len(emb)
         mask = emb.notna() & cell.notna()
         if mask.any():
-            M = _pq_stack(emb[mask], "embedding")
+            M = _stack(emb[mask], "ivfpq_topk")
             cells = cell[mask].to_numpy().astype(np.int64)
             R = M - C[cells]
             for i, r in zip(np.flatnonzero(mask.to_numpy()), R):
@@ -1541,9 +1481,9 @@ def ivfpq_build(
     index is LAZY: a downstream action re-derives the residual join +
     encode once per plan REFERENCE — :func:`ivfpq_query` references it
     in every block's scan kernel plus the re-cut join, so a B-block
-    per-call query pays the encode pipeline B+1 times (the gap
-    measure_r14b shows between per-call 186 s and build 85 s + staged
-    query 11 s). Production persists the index per INGEST
+    per-call query pays the encode pipeline B+1 times (measured at the
+    jit-100× decade: per-call 186 s against build 85 s + staged query
+    11 s). Production persists the index per INGEST
     (:func:`ann_index_write`, or ``.persist()`` as the streaming sink
     does) and never pays it again."""
     assignments, centers = ivf_build(corpus, n_cells, id_col, emb_col)
@@ -1584,8 +1524,8 @@ def ivfpq_query(
     Scale shape vs the siblings: :func:`pq_query` gathers LUT rows for
     every (code, query) pair — N·|Q| at code width; here the gather
     bill drops to ~N·|Q|·n_probe/n_cells and the rest of the pipeline
-    is unchanged: per-partition ``argpartition`` shortlist in a margin
-    band, an exact Column-fold ADC re-cut over the
+    is unchanged: the per-batch band shortlist (:func:`_band_shortlist`),
+    an exact Column-fold ADC re-cut over the
     <= partitions·|Q|·(shortlist+ties) survivors (the fold joins each
     candidate's (q_id, cell) LUT row), and the exact cosine re-rank.
     Kernel closures carry the driver-computed probe/LUT blocks (guarded
@@ -1600,14 +1540,13 @@ def ivfpq_query(
     (with ``n_probe == n_cells`` that reproduces brute force exactly —
     the fullprobe gate identity).
 
-    Operating-point law (measured, SCALE.md round-14 knob sweeps): on
+    Operating-point law (measured, SCALE.md knob sweeps): on
     near-dup-heavy corpora the recall limiter is ``shortlist`` vs the
     near-tie band — clones of a true neighbor share its cells, so
     raising ``n_probe`` buys wall, not recall; size ``shortlist``
     above the corpus's near-dup family size (0.596 → 0.998 recall@10
     going 50 → 200 at the jit-100× decade) or dedup first."""
     import numpy as np
-    from functools import reduce
     from pyspark.sql import types as T
 
     if shortlist is None:
@@ -1616,124 +1555,51 @@ def ivfpq_query(
             k, n_probe, id_col, emb_col, q_id_col, q_emb_col,
         )
 
-    books = [np.asarray(b, dtype=np.float64) for b in books]
+    books, bounds = _codebooks(books)
     m, ks = len(books), len(books[0])
-    edges = [0]
-    for b in books:
-        edges.append(edges[-1] + b.shape[1])
-    bounds = list(zip(edges[:-1], edges[1:]))
     C = np.asarray(centers, dtype=np.float64)
-    n_cells = C.shape[0]
-    n_probe = min(n_probe, n_cells)
-    half_norms = (C * C).sum(axis=1) / 2.0
-    offsets = (np.arange(m) * ks).astype(np.int64)
-    spark = corpus.sparkSession
+    n_probe = min(n_probe, C.shape[0])
 
-    cand_schema = T.StructType(
-        [
-            T.StructField(q_id_col, queries.schema[q_id_col].dataType),
-            T.StructField(id_col, corpus.schema[id_col].dataType),
-        ]
-    )
-    qids_all, Q_all, _ = _collect_query_matrix(
-        queries, q_id_col, q_emb_col, "ivfpq_topk"
-    )
-    if Q_all is None:
-        return _cosine_rerank(
-            spark.createDataFrame([], cand_schema), corpus, queries, k,
-            id_col, emb_col, q_id_col, q_emb_col,
-        )
+    def kernel(Qb, qids_b):
+        luts = {
+            c: (q_loc, Lc)
+            for c, q_loc, Lc in _cell_luts(Qb, C, n_probe, books, bounds)
+        }
 
-    def make_cell_adc_shortlist(lut_by_cell):
-        compact_at = max(4_000_000, 4 * len(qids_all) * shortlist)
-        group_band_cut = _make_adc_band_cut(shortlist)
+        def chunks(pdf: pd.DataFrame):
+            # rows grouped by cell, so unprobed cells pay nothing — not
+            # even the gather
+            for cell, grp in pdf.groupby("cell", sort=False):
+                if int(cell) in luts:
+                    q_loc, Lc = luts[int(cell)]
+                    yield from _adc_chunks(
+                        Lc, q_loc, qids_b[q_loc], grp["code"], grp[id_col].to_numpy()
+                    )
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 pdf = pdf[pdf["code"].notna() & pdf["cell"].notna()]
-                if not len(pdf):
-                    continue
-                acc_q: list = []
-                acc_i: list = []
-                acc_a: list = []
-                acc_n = 0
-                for cell, grp in pdf.groupby("cell", sort=False):
-                    entry = lut_by_cell.get(int(cell))
-                    if entry is None:
-                        continue
-                    q_idx, Lc = entry
-                    qids_sub = qids_all[q_idx]
-                    codes_np = np.stack(grp["code"].to_numpy()).astype(np.int64)
-                    ids_all = grp[id_col].to_numpy()
-                    # chunk so the (|Q_cell|, rows, m) gather block stays
-                    # ~tens of MB per task (the matmul chunking discipline)
-                    rows_per = max(1, 4_000_000 // max(len(q_idx) * m, 1))
-                    for lo in range(0, len(ids_all), rows_per):
-                        idx = codes_np[lo : lo + rows_per] + offsets[None, :]
-                        ids = ids_all[lo : lo + rows_per]
-                        adc_np = Lc[:, idx].sum(axis=2)
-                        adc_np[qids_sub[:, None] == ids[None, :]] = np.inf
-                        if adc_np.shape[1] > shortlist:
-                            kth = np.partition(
-                                adc_np, shortlist - 1, axis=1
-                            )[:, shortlist - 1]
-                            band = 1e-9 * np.maximum(1.0, np.abs(kth))
-                            keep = adc_np <= (kth + band)[:, None]
-                        else:
-                            keep = np.isfinite(adc_np)
-                        keep &= np.isfinite(adc_np)
-                        qi, ci = np.nonzero(keep)
-                        if len(qi):
-                            acc_q.append(q_idx[qi])
-                            acc_i.append(ids[ci])
-                            acc_a.append(adc_np[qi, ci])
-                            acc_n += len(qi)
-                        if acc_n > compact_at:
-                            cq, cb, ca = group_band_cut(
-                                np.concatenate(acc_q),
-                                np.concatenate(acc_i),
-                                np.concatenate(acc_a),
-                            )
-                            acc_q, acc_i, acc_a = [cq], [cb], [ca]
-                            acc_n = len(cq)
-                if not acc_q:
-                    continue
-                qi, bid, _ = group_band_cut(
-                    np.concatenate(acc_q),
-                    np.concatenate(acc_i),
-                    np.concatenate(acc_a),
-                )
-                yield pd.DataFrame({q_id_col: qids_all[qi], id_col: bid})
+                kept = _band_shortlist(chunks(pdf), shortlist, len(qids_b))
+                if kept is not None:
+                    qi, bid = kept
+                    yield pd.DataFrame({q_id_col: qids_b[qi], id_col: bid})
 
         return gen
 
-    blocks = _query_blocks(
-        len(qids_all),
-        int(len(qids_all)) * n_probe * m * ks * 8,
+    lut_bytes = n_probe * m * ks * 8  # per query
+    cands, n_queries = _query_fanout(
+        index,
+        queries,
+        q_id_col,
+        q_emb_col,
+        _pair_schema(queries, corpus, q_id_col, id_col),
+        kernel,
+        lambda Q: len(Q) * lut_bytes,
         max_query_mb,
         "ivfpq_topk",
         "Raise max_query_mb — the per-query closure is n_probe·m·ks·8 "
         "bytes of LUT, far below the raw embeddings.",
     )
-    parts = []
-    for blo, bhi in blocks:
-        Qb = Q_all[blo:bhi]
-        # EXACTLY _ivf_cell_udfs' probe math (x·c − |c|²/2, argsort
-        # descending) so gating here, the shortlist=None delegate, and
-        # ivf_query all agree on which cells a query probes
-        scores = Qb @ C.T - half_norms
-        probe = np.argsort(-scores, axis=1)[:, :n_probe].astype("int32")
-        lut_by_cell: dict = {}
-        for c in np.unique(probe):
-            q_loc = np.flatnonzero((probe == c).any(axis=1))
-            Lc = _pq_lut_matrix(Qb[q_loc] - C[c], books, bounds)
-            lut_by_cell[int(c)] = (q_loc + blo, Lc)
-        parts.append(
-            index.mapInPandas(
-                make_cell_adc_shortlist(lut_by_cell), schema=cand_schema
-            )
-        )
-    cands = reduce(DataFrame.union, parts).dropDuplicates([q_id_col, id_col])
 
     # the re-cut's (q_id, cell, lut) table is computed DISTRIBUTIVELY
     # (pq_query's query_lut device, exploded per probed cell): a
@@ -1741,9 +1607,9 @@ def ivfpq_query(
     # 64-block cap ~16 GB of driver heap, exactly the residency the
     # block split exists to avoid. Row-wise dots, the float32→float64
     # widening, and argsort tie order are all bit-reproductions of the
-    # driver probe above (same libraries, batch-independent math), and
-    # any residual drift is caught by the pinned gates, whose stability
-    # is asserted across shuffle settings before pinning.
+    # driver probe (same _cell_luts, batch-independent math), and any
+    # residual drift is caught by the pinned gates, whose stability is
+    # asserted across shuffle settings before pinning.
     lut_schema = T.StructType(
         [
             T.StructField(q_id_col, queries.schema[q_id_col].dataType),
@@ -1757,19 +1623,14 @@ def ivfpq_query(
             pdf = pdf[pdf[q_emb_col].notna()]
             if not len(pdf):
                 continue
-            Qb = _pq_stack(pdf[q_emb_col], "query embedding")
-            probe = np.argsort(-(Qb @ C.T - half_norms), axis=1)[
-                :, :n_probe
-            ].astype("int32")
+            Qb = _stack(pdf[q_emb_col], "ivfpq_topk", pdf[q_id_col])
+            qv = pdf[q_id_col].to_numpy()
             out_q: list = []
             out_c: list = []
             out_l: list = []
-            qv = pdf[q_id_col].to_numpy()
-            for c in np.unique(probe):
-                q_loc = np.flatnonzero((probe == c).any(axis=1))
-                Lc = _pq_lut_matrix(Qb[q_loc] - C[c], books, bounds)
+            for c, q_loc, Lc in _cell_luts(Qb, C, n_probe, books, bounds):
                 out_q.extend(qv[q_loc])
-                out_c.extend([int(c)] * len(q_loc))
+                out_c.extend([c] * len(q_loc))
                 out_l.extend(list(Lc))
             yield pd.DataFrame(
                 {q_id_col: out_q, "cell": out_c, "lut": out_l}
@@ -1778,21 +1639,13 @@ def ivfpq_query(
     q_luts = queries.select(q_id_col, q_emb_col).mapInPandas(
         lut_rows_gen, schema=lut_schema
     )
-    if len(qids_all) * n_probe * m * ks * 8 <= max_query_mb * 1e6:
+    if n_queries * lut_bytes <= max_query_mb * 1e6:
         q_luts = F.broadcast(q_luts)
-    # exact fold re-cut: same ADC expression, same (adc, id) row_number
-    # contract as pq_query — over the gated candidate set only. The
-    # (q_id, cell) join fetches the one LUT row the kernel scored this
-    # candidate's cell with, so re-cut bits can never drift from it.
-    scored = (
-        cands.join(index, id_col)
-        .join(q_luts, [q_id_col, "cell"])
-        .filter(F.col(id_col) != F.col(q_id_col))
-        .select(q_id_col, id_col, _adc_fold(m, ks).alias("adc"))
-    )
-    w_adc = W.partitionBy(q_id_col).orderBy(F.col("adc"), F.col(id_col))
-    scored = scored.withColumn("arank", F.row_number().over(w_adc)).filter(
-        F.col("arank") <= shortlist
+    # the (q_id, cell) join fetches the one LUT row the kernel scored
+    # each candidate's cell with, so re-cut bits can never drift from it
+    scored = _adc_recut(
+        cands, index, q_luts, [q_id_col, "cell"],
+        _adc_fold(m, ks), shortlist, id_col, q_id_col,
     )
     return _cosine_rerank(
         scored, corpus, queries, k, id_col, emb_col, q_id_col, q_emb_col

@@ -136,9 +136,9 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     from cql_xmlpipe_spark.operators.similarity import (
-        RADIUS_BRUTE_BILL_MAX,
         ann_index_read,
         ann_index_write,
+        brute_bill_fits,
         brute_force_topk,
         ivf_build,
         ivf_query,
@@ -168,9 +168,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.contract == "topk":
         strategy = args.strategy
         if strategy == "auto":
-            n = e.count()
-            nq = q.limit(max(1, RADIUS_BRUTE_BILL_MAX // max(n, 1)) + 1).count()
-            strategy = "brute" if n * nq <= RADIUS_BRUTE_BILL_MAX else "matmul"
+            strategy = "brute" if brute_bill_fits(e, q) else "matmul"
         out = (brute_force_topk if strategy == "brute" else topk_matmul)(
             e, q, k=args.k
         )

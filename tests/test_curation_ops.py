@@ -210,9 +210,9 @@ def test_topk_matmul_equals_brute(spark):
     a NULL vector; also at k larger than some partitions' row counts."""
     from cql_xmlpipe_spark.operators.similarity import brute_force_topk, topk_matmul
 
-    # drop the zero-norm vector: ANSI brute_force_topk divides by zero on
-    # it (topk_matmul is additionally zero-norm-safe — separate test)
-    corpus = _radius_corpus(spark).filter("vec_id <> 77777").repartition(8)
+    # the zero-norm vector 77777 stays in: brute_force_topk and the
+    # matmul re-rank both score it with cosine_safe, whose NULL never ranks
+    corpus = _radius_corpus(spark).repartition(8)
     q = corpus.filter("vec_id < 30 AND embedding IS NOT NULL").selectExpr(
         "vec_id AS q_id", "embedding AS q_emb"
     )
@@ -224,8 +224,8 @@ def test_topk_matmul_equals_brute(spark):
 
 def test_topk_matmul_zero_norm_safe(spark):
     """Zero-norm and NULL corpus vectors are excluded, not a crash —
-    stricter than the ANSI brute plan, whose raw cosine divides by
-    zero on such a corpus."""
+    the same never-ranks contract as brute_force_topk's cosine_safe
+    re-rank."""
     from cql_xmlpipe_spark.operators.similarity import topk_matmul
 
     corpus = _radius_corpus(spark)

@@ -85,13 +85,19 @@ def test_wav_roundtrip_any_samples(samples, rate):
 )
 def test_adc_band_cut_never_loses_a_shortlist_member(nq, nr, shortlist, seed):
     """The numpy band cut (_make_adc_band_cut — the volume-control stage
-    of the PQ and IVF-PQ shortlist kernels) must be a SUPERSET filter:
-    for every query, all rows in the true per-query shortlist by
-    (adc asc, id asc) survive the cut — ties at the boundary included
-    (the r13 ADVICE tie-band class). Correctness of the final output
-    rides the exact fold re-cut; this pins the invariant that makes the
-    re-cut sufficient."""
-    from cql_xmlpipe_spark.operators.similarity import _make_adc_band_cut
+    of the exact top-k, PQ and IVF-PQ shortlist kernels) must be a
+    SUPERSET filter: for every query, all rows in the true per-query
+    shortlist by (adc asc, id asc) survive the cut — ties at the
+    boundary included. The same holds for the whole band-shortlist
+    kernel (_band_shortlist) fed the same triples in tiny row chunks
+    with a tiny compaction budget, so its chunk keep, accumulation and
+    compaction are all exercised. Correctness of the final output rides
+    the exact re-cut; this pins the invariant that makes the re-cut
+    sufficient."""
+    from cql_xmlpipe_spark.operators.similarity import (
+        _band_shortlist,
+        _make_adc_band_cut,
+    )
 
     rng = np.random.default_rng(seed)
     qi = rng.integers(0, nq, size=nr)
@@ -99,7 +105,21 @@ def test_adc_band_cut_never_loses_a_shortlist_member(nq, nr, shortlist, seed):
     # quantized scores force plenty of exact ties at the boundary
     ba = rng.integers(0, 6, size=nr).astype(np.float64)
     kq, kb, _ = _make_adc_band_cut(shortlist)(qi.copy(), bid.copy(), ba.copy())
-    kept = set(zip(kq.tolist(), kb.tolist()))
+    kept_by_cut = set(zip(kq.tolist(), kb.tolist()))
+
+    chunk = int(rng.integers(1, nr + 1))
+
+    def chunks():
+        # dense queries × rows score blocks, +inf where a row is not
+        # the query's candidate
+        for lo in range(0, nr, chunk):
+            rows = np.arange(lo, min(lo + chunk, nr))
+            score = np.full((nq, len(rows)), np.inf)
+            score[qi[rows], np.arange(len(rows))] = ba[rows]
+            yield np.arange(nq), bid[rows], score
+
+    got = _band_shortlist(chunks(), shortlist, nq, min_compact=1)
+    kept_by_kernel = set() if got is None else set(zip(got[0].tolist(), got[1].tolist()))
     for q in range(nq):
         rows = sorted(
             ((ba[i], bid[i]) for i in range(nr) if qi[i] == q)
@@ -108,8 +128,11 @@ def test_adc_band_cut_never_loses_a_shortlist_member(nq, nr, shortlist, seed):
             continue
         cutoff = rows[min(shortlist, len(rows)) - 1][0]
         for a, b in rows:
-            if a <= cutoff:  # every true-shortlist row and its ties
+            if a > cutoff:
+                continue
+            # every true-shortlist row and its ties
+            for stage, kept in (("cut", kept_by_cut), ("kernel", kept_by_kernel)):
                 assert (q, b) in kept, (
-                    f"query {q}: row id={b} adc={a} inside the "
+                    f"{stage}: query {q}: row id={b} adc={a} inside the "
                     f"shortlist-{shortlist} band (cutoff {cutoff}) was cut"
                 )

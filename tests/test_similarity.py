@@ -146,6 +146,43 @@ def test_ivf_null_and_ragged_embeddings(spark):
     assert "ragged" in str(ei.value)
 
 
+@pytest.mark.parametrize("build", ["ivf_build", "pq_build"])
+def test_unrelated_fit_failure_reraises_without_a_scan(spark, monkeypatch, build):
+    """The ragged-dimension diagnostic runs only when the fit died of a
+    JVM IllegalArgumentException (MLlib's "Dimensions mismatch"): any
+    other fit failure — here one whose message is full of the words a
+    keyword sniff would match — re-raises unchanged and starts no Spark
+    job after the fit."""
+    import random
+
+    from pyspark.ml.clustering import KMeans
+
+    from cql_xmlpipe_spark.operators import similarity as S
+
+    rng = random.Random(3)
+    e = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(20)],
+        "vec_id long, embedding array<float>",
+    )
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None) or [-1])
+
+    at_fit = []
+    boom = RuntimeError("index size bounds")
+
+    def failing_fit(self, dataset, params=None):
+        at_fit.append(last_job())
+        raise boom
+
+    monkeypatch.setattr(KMeans, "fit", failing_fit)
+    with pytest.raises(RuntimeError) as ei:
+        getattr(S, build)(e)
+    assert ei.value is boom
+    assert at_fit and last_job() == max(at_fit)
+
+
 def test_pq_fullprobe_equals_brute_force(clustered):
     """shortlist=None must reproduce brute force EXACTLY (ranks and
     cosines, not just the id sets) — the machinery-identity the
