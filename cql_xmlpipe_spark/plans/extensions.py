@@ -6081,9 +6081,9 @@ def _semdedup_core(e: DataFrame, n_clusters: int, tau: float) -> DataFrame:
     """The SemDeDup pipeline over an (vec_id, embedding) frame with the
     cluster count as a parameter: the gate runs it at the pinned
     ``n_clusters=8`` (matching the unrolled oracle's ``vec_id < 8``
-    init); the decade measurements (scripts/measure_r12b.py) run it at
-    K ∝ N — the paper's operating point, where cluster size and hence
-    the per-cluster pair bill stay constant as the corpus grows."""
+    init); the decade measurements run it at K ∝ N — the paper's
+    operating point, where cluster size and hence the per-cluster pair
+    bill stay constant as the corpus grows."""
     from cql_xmlpipe_spark.functions.vectors import norm, sqdist
 
     # the input frame is scanned once per Lloyd round plus once for the
@@ -6139,7 +6139,7 @@ def _semdedup_core(e: DataFrame, n_clusters: int, tau: float) -> DataFrame:
         # (~1e-16 relative); the smallest |cos − τ| margin over ALL
         # within-cluster pairs is 0.05 at every SF (planted twins sit at
         # ≈1.0, unrelated pairs ≤0.9), and the output matched the fold
-        # row-for-row at sf0.001/0.01/0.1 (scripts/measure_r15_semdedup.py).
+        # row-for-row at sf0.001/0.01/0.1.
         # kept_by = min qualifying lower id: ids are sorted ascending, so
         # the FIRST qualifying row per column is the minimum — argmax on the
         # boolean mask, no per-pair rows ever materialize.
