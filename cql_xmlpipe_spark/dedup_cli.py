@@ -361,12 +361,11 @@ def main(argv: list[str] | None = None) -> int:
                 threshold=threshold, k=args.k, max_pairs=max_pairs,
             )
         elif args.contract == "semdedup":
-            # the SemDeDup core lives with the other kmeans plumbing in
-            # plans/extensions; the pipeline expects (vec_id, embedding)
-            from cql_xmlpipe_spark.plans.extensions import _semdedup_core
+            # the SemDeDup operator expects (vec_id, embedding)
+            from cql_xmlpipe_spark.operators.kmeans import semdedup
             from pyspark.sql import functions as F
 
-            result = _semdedup_core(
+            result = semdedup(
                 df.select(
                     F.col(id_col).alias("vec_id"),
                     F.col(args.emb_col).alias("embedding"),

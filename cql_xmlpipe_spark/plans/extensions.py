@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from cql_xmlpipe_spark.functions import text as TX
 from cql_xmlpipe_spark.operators import dedup as DD
+from cql_xmlpipe_spark.operators import kmeans as KM
 from cql_xmlpipe_spark.operators.similarity import brute_force_topk, lsh_topk
 from cql_xmlpipe_spark.plans.queries import DEC, _q, dsum
 from cql_xmlpipe_spark.sources.registry import load_table
@@ -4314,134 +4315,76 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
-    "embedding_kmeans_step",
-    """
-    WITH c AS (
-      SELECT vec_id AS cid, embedding AS cemb FROM embeddings WHERE vec_id < 8),
-    scored AS (
-      SELECT e.vec_id, c.cid,
-        list_reduce(list_prepend(0.0::DOUBLE,
-          list_transform(range(1, len(e.embedding) + 1),
-            i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cemb[i] AS DOUBLE))
-               * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cemb[i] AS DOUBLE)))),
-          (a, b) -> a + b) AS dist
-      FROM embeddings e, c),
-    assigned AS (
+#: K of the gated k-means queries: the 8 lowest ids seed the centroids
+_KMEANS_K = 8
+
+
+def _lloyd_oracle(src: str, rounds: int) -> str:
+    """DuckDB CTEs for ``rounds`` exact Lloyd rounds over ``src`` (a
+    relation of vec_id, embedding), the SQL mirror of
+    ``operators/kmeans.py``: c0 holds the K lowest-id vectors; round i
+    scores (s), ranks (a) and gathers (m) every vector against c{i},
+    averages each cluster in 1e-6 fixed point (u{i}) and lists the new
+    centroids (c{i+1}); asg is every vector's nearest c{rounds}
+    centroid. The fixed-point means make each round's centroids
+    bit-identical across engines, so the whole trajectory stays
+    hash-exact."""
+
+    def fold_dist(emb: str, cemb: str) -> str:
+        return f"""list_reduce(list_prepend(0.0::DOUBLE,
+          list_transform(range(1, len({emb}) + 1),
+            i -> (CAST({emb}[i] AS DOUBLE) - CAST({cemb}[i] AS DOUBLE))
+               * (CAST({emb}[i] AS DOUBLE) - CAST({cemb}[i] AS DOUBLE)))),
+          (a, b) -> a + b)"""
+
+    ctes = [
+        "c0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb"
+        f" FROM {src} WHERE vec_id < {_KMEANS_K})"
+    ]
+    for it in range(rounds + 1):
+        ctes.append(f"""s{it} AS (
+      SELECT e.vec_id, c.cid, {fold_dist('e.embedding', 'c.cemb')} AS dist
+      FROM {src} e, c{it} c)""")
+        ctes.append(f"""a{it} AS (
       SELECT vec_id, cid,
              ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-      FROM scored),
-    members AS (
-      SELECT a.cid, e.embedding
-      FROM assigned a JOIN embeddings e USING (vec_id) WHERE a.rn = 1),
-    comp AS (
-      SELECT cid, unnest(range(1, len(embedding) + 1)) AS i, embedding
-      FROM members)
-    SELECT cid AS cluster_id, CAST(i - 1 AS INTEGER) AS dim,
-           CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0 + 0.5)
-                    AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1000000.0)
-             AS new_centroid,
-           COUNT(*) AS n_members
-    FROM comp GROUP BY cid, i
-    """,
-)
+      FROM s{it})""")
+        if it == rounds:
+            break
+        ctes.append(f"""m{it} AS (
+      SELECT a.cid, e.embedding FROM a{it} a JOIN {src} e USING (vec_id)
+      WHERE a.rn = 1)""")
+        ctes.append(f"""u{it} AS (
+      SELECT cid, i - 1 AS dim,
+             CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0 + 0.5)
+                      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1000000.0) AS val,
+             COUNT(*) AS n_members
+      FROM (SELECT cid, unnest(range(1, len(embedding) + 1)) AS i, embedding
+            FROM m{it})
+      GROUP BY cid, i)""")
+        ctes.append(f"""c{it + 1} AS (
+      SELECT cid, list(val ORDER BY dim) AS cemb FROM u{it} GROUP BY cid)""")
+    ctes.append(f"asg AS (SELECT vec_id, cid FROM a{rounds} WHERE rn = 1)")
+    return ",\n    ".join(ctes)
+
+
+def _kmeans_iter_oracle(n_iter: int) -> str:
+    """Oracle for ``n_iter`` Lloyd rounds from the pinned init: the last
+    round's centroid update."""
+    return f"""WITH {_lloyd_oracle("embeddings", n_iter)}
+    SELECT cid AS cluster_id, CAST(dim AS INTEGER) AS dim,
+           val AS new_centroid, n_members
+    FROM u{n_iter - 1}"""
+
+
+@_q("embedding_kmeans_step", _kmeans_iter_oracle(1))
 def embedding_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One exact Lloyd iteration (assign + centroid update) with pinned
-    init centroids (vec_id < 8) — the building block behind IVF coarse
-    quantizers and embedding-space corpus clustering.
-
-    Scale shape: the 8 centroids collapse to ONE broadcast row holding a
-    cid-sorted struct array, so assignment is a zero-shuffle map-side
-    argmin fold (left-to-right over cid order, strict `<` ⇒ lowest cid
-    wins distance ties — same ordering as the oracle's
-    ``ROW_NUMBER() OVER (ORDER BY dist, cid)``). The ONLY shuffle is the
-    final (cluster, dim) aggregate of int64 partials with map-side
-    combine — at 100 TB that is K×D partial rows per task, independent
-    of corpus size.
-
-    Determinism of the mean: a cross-partition float sum is
-    order-dependent, so components are first quantized to 1e-6
-    fixed-point via the floor(x*1e6+0.5) half-up trick (IEEE
-    single-rounded, bit-identical cross-engine — same device as
-    ``embedding_quantize_int8``); the integer sums are exact and
-    order-free, and the final /1e6 division is one IEEE op. Distances
-    need no such treatment: the per-row left-to-right fold bit-matches
-    the oracle's ``list_reduce``.
-    """
+    init centroids (the 8 lowest ids) — the building block behind IVF
+    coarse quantizers and embedding-space corpus clustering. The stages
+    and their determinism argument live in ``operators/kmeans.py``."""
     e = load_table(spark, "embeddings", sf_dir)
-    return _lloyd_update(e, _kmeans_init_centroids(e))
-
-
-def _kmeans_init_centroids(e: DataFrame) -> DataFrame:
-    """Pinned init: the 8 lowest-id vectors, components widened to
-    double (exact) so every later iteration folds over double arrays."""
-    return e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("cemb"),
-    )
-
-
-def _lloyd_assign(e: DataFrame, cent_df: DataFrame) -> DataFrame:
-    """Map-side argmin assignment against broadcast centroids: collapses
-    the centroid table to one cid-sorted struct array, broadcasts it,
-    and folds left-to-right with strict `<` so the lowest cid wins
-    distance ties. Zero shuffle on the corpus side."""
-    from cql_xmlpipe_spark.functions.vectors import sqdist
-
-    cents = cent_df.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "cemb"))).alias("cents")
-    )
-    scored = e.crossJoin(F.broadcast(cents)).withColumn(
-        "cands",
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                sqdist(F.col("embedding"), c["cemb"]).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
-        ),
-    )
-    init = F.struct(
-        F.lit(float("inf")).alias("dist"), F.lit(-1).cast("long").alias("cid")
-    )
-    return scored.select(
-        F.aggregate(
-            F.col("cands"),
-            init,
-            lambda acc, d: F.when(d["dist"] < acc["dist"], d).otherwise(acc),
-        )["cid"].alias("cluster_id"),
-        F.col("embedding"),
-    )
-
-
-def _lloyd_update(e: DataFrame, cent_df: DataFrame) -> DataFrame:
-    """Assign + centroid update: (cluster_id, dim, new_centroid,
-    n_members). The mean is a 1e-6 fixed-point integer sum (exact,
-    order-free) divided once in double — deterministic across engines
-    and partitionings."""
-    assigned = _lloyd_assign(e, cent_df)
-    comp = assigned.select(
-        "cluster_id", F.posexplode("embedding").alias("dim", "x")
-    ).withColumn(
-        "q", F.floor(F.col("x").cast("double") * 1e6 + F.lit(0.5)).cast("long")
-    )
-    return comp.groupBy("cluster_id", "dim").agg(
-        (F.sum("q").cast("double") / (F.count(F.lit(1)) * F.lit(1e6))).alias(
-            "new_centroid"
-        ),
-        F.count(F.lit(1)).alias("n_members"),
-    )
-
-
-def _update_to_centroids(upd: DataFrame) -> DataFrame:
-    """Reshape an update result back into (cid, cemb double-array) rows,
-    components ordered by dim."""
-    return upd.groupBy(F.col("cluster_id").alias("cid")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "new_centroid"))),
-            lambda s: s["new_centroid"],
-        ).alias("cemb")
-    )
+    return KM.update(e, KM.init_centroids(e, _KMEANS_K))
 
 
 _VOCAB_OOV_ORACLE = f"""
@@ -4602,55 +4545,6 @@ def dedup_prefix_hash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_iter_oracle(n_iter: int) -> str:
-    """Unrolled-CTE oracle for ``n_iter`` exact Lloyd iterations: the
-    fixed-point centroid means make every iteration's centroids
-    bit-identical across engines, so the whole loop stays hash-exact —
-    each iteration is the same scored/assigned/members/update block
-    chained on the previous centroid list."""
-
-    def fold_dist(emb: str, cemb: str) -> str:
-        return f"""list_reduce(list_prepend(0.0::DOUBLE,
-          list_transform(range(1, len({emb}) + 1),
-            i -> (CAST({emb}[i] AS DOUBLE) - CAST({cemb}[i] AS DOUBLE))
-               * (CAST({emb}[i] AS DOUBLE) - CAST({cemb}[i] AS DOUBLE)))),
-          (a, b) -> a + b)"""
-
-    ctes = [
-        "c0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb"
-        " FROM embeddings WHERE vec_id < 8)"
-    ]
-    for it in range(n_iter):
-        ctes.append(f"""s{it} AS (
-      SELECT e.vec_id, c.cid, {fold_dist('e.embedding', 'c.cemb')} AS dist
-      FROM embeddings e, c{it} c)""")
-        ctes.append(f"""a{it} AS (
-      SELECT vec_id, cid,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-      FROM s{it})""")
-        ctes.append(f"""m{it} AS (
-      SELECT a.cid, e.embedding FROM a{it} a JOIN embeddings e USING (vec_id)
-      WHERE a.rn = 1)""")
-        ctes.append(f"""u{it} AS (
-      SELECT cid, i - 1 AS dim,
-             CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0 + 0.5)
-                      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1000000.0) AS val,
-             COUNT(*) AS n_members
-      FROM (SELECT cid, unnest(range(1, len(embedding) + 1)) AS i, embedding
-            FROM m{it})
-      GROUP BY cid, i)""")
-        ctes.append(f"""c{it + 1} AS (
-      SELECT cid, list(val ORDER BY dim) AS cemb FROM u{it} GROUP BY cid)""")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT cid AS cluster_id, CAST(dim AS INTEGER) AS dim,
-           val AS new_centroid, n_members
-    FROM u{n_iter - 1}"""
-    )
-
-
 @_q("embedding_kmeans_iter3", _kmeans_iter_oracle(3))
 def embedding_kmeans_iter3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three exact Lloyd iterations — the ITERATIVE algorithm shape
@@ -4660,22 +4554,10 @@ def embedding_kmeans_iter3(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances fold over bit-identical centroids on both engines, so the
     whole trajectory matches, not just one step. Memberships genuinely
     move (e.g. cluster 0: 56 → 53 members at sf0.01), so the loop is
-    exercised, not decorative.
-
-    Scale shape per iteration: one broadcast of K centroid rows out,
-    one (cluster, dim) int64-partial shuffle back — the same pattern
-    MLlib's KMeans uses, expressed declaratively. The tiny centroid
-    table is ``localCheckpoint``ed each round (8 rows) so lineage stays
-    flat instead of exponentiating through nested broadcast subqueries —
-    the same device as the connected-components loop in
-    ``operators/dedup.py``. Cost is linear: one corpus pass per
-    iteration.
-    """
+    exercised, not decorative: ``KM.lloyd``'s two checkpointed rounds,
+    then the third round's update."""
     e = load_table(spark, "embeddings", sf_dir)
-    cent = _kmeans_init_centroids(e)
-    for _ in range(2):
-        cent = _update_to_centroids(_lloyd_update(e, cent)).localCheckpoint()
-    return _lloyd_update(e, cent)
+    return KM.update(e, KM.lloyd(e, _KMEANS_K))
 
 
 @_q(
@@ -4729,7 +4611,7 @@ def embedding_silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame
     classic silhouette's O(N²).
 
     Determinism: centroids are 1e-6 fixed-point integer sums divided
-    once in double (the ``_lloyd_update`` device — exact and
+    once in double (the ``operators/kmeans.py`` device — exact and
     order-free); distances are the shared left-to-right ``sqdist`` fold
     that bit-matches DuckDB ``list_reduce``; a/b/s are then identical
     IEEE expressions in both engines, so the gate hash-compares raw
@@ -4741,7 +4623,7 @@ def embedding_silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame
     with map-side combine (corpus-size-independent state); the L
     centroids collapse to ONE broadcast struct-array row; scoring is a
     zero-shuffle map-side transform per vector — the
-    ``_lloyd_assign`` plan with L distances kept instead of argmin."""
+    ``kmeans.assign`` plan with L distances kept instead of argmin."""
     from cql_xmlpipe_spark.functions.vectors import sqdist
 
     e = load_table(spark, "embeddings", sf_dir).filter(
@@ -4808,17 +4690,10 @@ _PROTO_PRUNE_FRAC = 0.3
 
 
 def _prototypicality_oracle() -> str:
-    """Unrolled oracle for :func:`embedding_prototypicality`: the same 2
-    fixed-point Lloyd iterations as ``_kmeans_iter_oracle`` (c0→c2),
-    the final argmin assignment, then each vector's cosine to its OWN
-    cluster centroid plus the within-cluster rank/prune verdict."""
-
-    def fold_dist(emb: str, cemb: str) -> str:
-        return f"""list_reduce(list_prepend(0.0::DOUBLE,
-          list_transform(range(1, len({emb}) + 1),
-            i -> (CAST({emb}[i] AS DOUBLE) - CAST({cemb}[i] AS DOUBLE))
-               * (CAST({emb}[i] AS DOUBLE) - CAST({cemb}[i] AS DOUBLE)))),
-          (a, b) -> a + b)"""
+    """Oracle for :func:`embedding_prototypicality`: 2 Lloyd rounds and
+    the final assignment (``_lloyd_oracle``), then each vector's cosine
+    to its OWN cluster centroid plus the within-cluster rank/prune
+    verdict."""
 
     def fold_dot(emb: str, cemb: str) -> str:
         return f"""list_reduce(list_prepend(0.0::DOUBLE,
@@ -4826,40 +4701,9 @@ def _prototypicality_oracle() -> str:
             i -> CAST({emb}[i] AS DOUBLE) * CAST({cemb}[i] AS DOUBLE))),
           (a, b) -> a + b)"""
 
-    ctes = [
-        "c0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb"
-        " FROM embeddings WHERE vec_id < 8)"
-    ]
-    for it in range(2):
-        ctes.append(f"""s{it} AS (
-      SELECT e.vec_id, c.cid, {fold_dist('e.embedding', 'c.cemb')} AS dist
-      FROM embeddings e, c{it} c)""")
-        ctes.append(f"""a{it} AS (
-      SELECT vec_id, cid,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-      FROM s{it})""")
-        ctes.append(f"""m{it} AS (
-      SELECT a.cid, e.embedding FROM a{it} a JOIN embeddings e USING (vec_id)
-      WHERE a.rn = 1)""")
-        ctes.append(f"""u{it} AS (
-      SELECT cid, i - 1 AS dim,
-             CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0 + 0.5)
-                      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1000000.0) AS val,
-             COUNT(*) AS n_members
-      FROM (SELECT cid, unnest(range(1, len(embedding) + 1)) AS i, embedding
-            FROM m{it})
-      GROUP BY cid, i)""")
-        ctes.append(f"""c{it + 1} AS (
-      SELECT cid, list(val ORDER BY dim) AS cemb FROM u{it} GROUP BY cid)""")
-    ctes.append(f"""s2 AS (
-      SELECT e.vec_id, c.cid, {fold_dist('e.embedding', 'c.cemb')} AS dist
-      FROM embeddings e, c2 c)""")
-    ctes.append("""a2 AS (
-      SELECT vec_id, cid,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-      FROM s2)""")
-    ctes.append("""asg AS (SELECT vec_id, cid FROM a2 WHERE rn = 1)""")
-    ctes.append(f"""pc AS (
+    return f"""
+    WITH {_lloyd_oracle("embeddings", 2)},
+    pc AS (
       SELECT e.vec_id, asg.cid,
              {fold_dot('e.embedding', 'c.cemb')}
                / (sqrt({fold_dot('e.embedding', 'e.embedding')})
@@ -4868,11 +4712,7 @@ def _prototypicality_oracle() -> str:
       JOIN asg ON e.vec_id = asg.vec_id
       JOIN c2 c ON asg.cid = c.cid
       WHERE sqrt({fold_dot('e.embedding', 'e.embedding')}) > 0
-        AND sqrt({fold_dot('c.cemb', 'c.cemb')}) > 0)""")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
+        AND sqrt({fold_dot('c.cemb', 'c.cemb')}) > 0)
     SELECT vec_id, CAST(cid AS BIGINT) AS cluster_id, proto_cos,
            CAST(ROW_NUMBER() OVER (PARTITION BY cid
                 ORDER BY proto_cos DESC, vec_id) AS INTEGER) AS proto_rank,
@@ -4884,7 +4724,6 @@ def _prototypicality_oracle() -> str:
                      AS BIGINT) AS is_pruned
     FROM pc
 """
-    )
 
 
 @_q("embedding_prototypicality", _prototypicality_oracle())
@@ -4909,37 +4748,11 @@ def embedding_prototypicality(spark: SparkSession, sf_dir: str) -> DataFrame:
     by cluster_id — at K ∝ N the window partitions stay bounded; the
     centroid-norm work is per-cluster, not per-vector."""
     from cql_xmlpipe_spark.functions.vectors import dot as vdot
-    from cql_xmlpipe_spark.functions.vectors import norm, sqdist
+    from cql_xmlpipe_spark.functions.vectors import norm
 
     e = load_table(spark, "embeddings", sf_dir)
-    cent = _kmeans_init_centroids(e)
-    for _ in range(2):
-        cent = _update_to_centroids(_lloyd_update(e, cent)).localCheckpoint()
-    cents = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "cemb"))).alias("cents")
-    )
-    scored = e.crossJoin(F.broadcast(cents)).withColumn(
-        "cands",
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                sqdist(F.col("embedding"), c["cemb"]).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
-        ),
-    )
-    init = F.struct(
-        F.lit(float("inf")).alias("dist"), F.lit(-1).cast("long").alias("cid")
-    )
-    asg = scored.select(
-        "vec_id",
-        F.aggregate(
-            F.col("cands"),
-            init,
-            lambda acc, d: F.when(d["dist"] < acc["dist"], d).otherwise(acc),
-        )["cid"].alias("cluster_id"),
-        "embedding",
-    )
+    cent = KM.lloyd(e, _KMEANS_K)
+    asg = KM.assign(e, cent)
     # centroid norms once per CLUSTER (K rows), not per vector
     cn = cent.select(
         F.col("cid"), F.col("cemb"), norm(F.col("cemb")).alias("nrm_c")
@@ -5978,83 +5791,37 @@ _SEMDEDUP_TAU = 0.95
 
 
 def _semdedup_oracle(tau: float) -> str:
-    """Unrolled oracle for :func:`semdedup_prune`: 3 exact Lloyd
-    iterations over the PLANTED union (same fixed-point centroid means
-    as ``_kmeans_iter_oracle``, retargeted from ``embeddings`` to the
-    ``eu`` CTE), the final assignment, then within-cluster keep-first
-    cosine pruning at ``tau``."""
-
-    def fold_dist(emb: str, cemb: str) -> str:
-        return f"""list_reduce(list_prepend(0.0::DOUBLE,
-          list_transform(range(1, len({emb}) + 1),
-            i -> (CAST({emb}[i] AS DOUBLE) - CAST({cemb}[i] AS DOUBLE))
-               * (CAST({emb}[i] AS DOUBLE) - CAST({cemb}[i] AS DOUBLE)))),
-          (a, b) -> a + b)"""
-
-    ctes = [
-        _EMB_PLANT_CTE.strip().rstrip(),
-        "c0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb"
-        " FROM eu WHERE vec_id < 8)",
-    ]
-    for it in range(2):
-        ctes.append(f"""s{it} AS (
-      SELECT e.vec_id, c.cid, {fold_dist('e.embedding', 'c.cemb')} AS dist
-      FROM eu e, c{it} c)""")
-        ctes.append(f"""a{it} AS (
-      SELECT vec_id, cid,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-      FROM s{it})""")
-        ctes.append(f"""m{it} AS (
-      SELECT a.cid, e.embedding FROM a{it} a JOIN eu e USING (vec_id)
-      WHERE a.rn = 1)""")
-        ctes.append(f"""u{it} AS (
-      SELECT cid, i - 1 AS dim,
-             CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0 + 0.5)
-                      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1000000.0) AS val,
-             COUNT(*) AS n_members
-      FROM (SELECT cid, unnest(range(1, len(embedding) + 1)) AS i, embedding
-            FROM m{it})
-      GROUP BY cid, i)""")
-        ctes.append(f"""c{it + 1} AS (
-      SELECT cid, list(val ORDER BY dim) AS cemb FROM u{it} GROUP BY cid)""")
-    ctes.append(f"""s2 AS (
-      SELECT e.vec_id, c.cid, {fold_dist('e.embedding', 'c.cemb')} AS dist
-      FROM eu e, c2 c)""")
-    ctes.append("""a2 AS (
-      SELECT vec_id, cid,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-      FROM s2)""")
-    ctes.append("""asg AS (SELECT vec_id, cid FROM a2 WHERE rn = 1)""")
-    ctes.append("""e2 AS (
+    """Oracle for :func:`semdedup_prune`: 2 Lloyd rounds and the final
+    assignment (``_lloyd_oracle``) over the PLANTED union ``eu``, then
+    within-cluster keep-first cosine pruning at ``tau``."""
+    return f"""
+    WITH {_EMB_PLANT_CTE.strip()},
+    {_lloyd_oracle("eu", 2)},
+    e2 AS (
       SELECT eu.vec_id, eu.embedding, asg.cid,
              sqrt(list_reduce(list_transform(eu.embedding,
                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
                  (x, y) -> x + y)) AS nrm
-      FROM eu JOIN asg USING (vec_id))""")
-    ctes.append(f"""pr AS (
+      FROM eu JOIN asg USING (vec_id)),
+    pr AS (
       SELECT b.vec_id AS vid, MIN(a.vec_id) AS kept_by
       FROM e2 a JOIN e2 b ON a.cid = b.cid AND a.vec_id < b.vec_id
       WHERE a.nrm > 0 AND b.nrm > 0
         AND list_reduce(list_transform(range(1, len(a.embedding) + 1),
               i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)),
               (x, y) -> x + y) / (a.nrm * b.nrm) >= {tau}
-      GROUP BY b.vec_id)""")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + """
+      GROUP BY b.vec_id)
     SELECT asg.vec_id, CAST(asg.cid AS BIGINT) AS cluster_id,
            pr.kept_by IS NOT NULL AS is_pruned, pr.kept_by
     FROM asg LEFT JOIN pr ON asg.vec_id = pr.vid
 """
-    )
 
 
 @_q("semdedup_prune", _semdedup_oracle(_SEMDEDUP_TAU))
 def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) semantic deduplication: kmeans the
-    embedding space (3 exact Lloyd iterations, pinned init — the same
-    deterministic trajectory as ``embedding_kmeans_iter3``), then within
+    embedding space (``kmeans.semdedup``: 2 exact Lloyd rounds from the
+    pinned init, then the final assignment), then within
     each cluster prune every vector whose cosine to a LOWER-id vector in
     the same cluster is ≥ τ (keep-first — the survivor rule the text
     dedup family uses). Runs on the PLANTED ×2-twin corpus so the gate
@@ -6070,132 +5837,11 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs cosine bill is confined within clusters (K grows with the
     corpus to bound cluster size, the paper's operating point), so pair
     candidates are Σ|cluster|², never N². Assignment is the zero-shuffle
-    broadcast argmin fold; the within-cluster self-join shuffles on the
-    int cluster id; a hot cluster is an AQE skew case, and the τ filter
-    runs inside the join's codegen. At 100 TB with K ≈ N/5000, the
-    per-cluster bill is ~5000² cheap fused dot products."""
-    return _semdedup_core(_planted_embeddings(spark, sf_dir), 8, _SEMDEDUP_TAU)
-
-
-def _semdedup_core(e: DataFrame, n_clusters: int, tau: float) -> DataFrame:
-    """The SemDeDup pipeline over an (vec_id, embedding) frame with the
-    cluster count as a parameter: the gate runs it at the pinned
-    ``n_clusters=8`` (matching the unrolled oracle's ``vec_id < 8``
-    init); the decade measurements run it at K ∝ N — the paper's
-    operating point, where cluster size and hence the per-cluster pair
-    bill stay constant as the corpus grows."""
-    from cql_xmlpipe_spark.functions.vectors import norm, sqdist
-
-    # the input frame is scanned once per Lloyd round plus once for the
-    # final assignment — pin it so a derived input (the planted
-    # union, a filtered corpus) is computed once, not per scan
-    with DD.Staging() as st:
-        e = st.pin(e)
-        cent = e.filter(F.col("vec_id") < n_clusters).select(
-            F.col("vec_id").alias("cid"),
-            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("cemb"),
-        )
-        for _ in range(2):
-            cent = _update_to_centroids(_lloyd_update(e, cent)).localCheckpoint()
-        cents = cent.agg(
-            F.array_sort(F.collect_list(F.struct("cid", "cemb"))).alias("cents")
-        )
-        scored = e.crossJoin(F.broadcast(cents)).withColumn(
-            "cands",
-            F.transform(
-                F.col("cents"),
-                lambda c: F.struct(
-                    sqdist(F.col("embedding"), c["cemb"]).alias("dist"),
-                    c["cid"].alias("cid"),
-                ),
-            ),
-        )
-        init = F.struct(
-            F.lit(float("inf")).alias("dist"), F.lit(-1).cast("long").alias("cid")
-        )
-        asg = st.pin(scored.select(
-            "vec_id",
-            F.aggregate(
-                F.col("cands"),
-                init,
-                lambda acc, d: F.when(d["dist"] < acc["dist"], d).otherwise(acc),
-            )["cid"].alias("cluster_id"),
-            "embedding",
-        ))
-        # per-vector norms are computed ONCE here, not per pair — and in
-        # Spark (the left-to-right fold that bit-matches the oracle), so the
-        # numpy stage below divides the exact same per-vector doubles
-        el = asg.withColumn("nrm", norm(F.col("embedding"))).filter(F.col("nrm") > 0)
-        # Within-cluster pair stage as ONE Arrow-batched numpy block per
-        # cluster (r15, guide §4.2 — the pq_topk ADC lesson applied here):
-        # the r14 salted self-join shipped every member 9× (8 salt copies +
-        # probe side) through an exchange and evaluated an INTERPRETED
-        # 64-term Column fold per candidate pair (the unrolled-expression
-        # experiment proved the fold was already the best *Column* form —
-        # the win is leaving Column expressions entirely). Now each cluster
-        # crosses the Arrow boundary once as (id, emb, nrm) and a single
-        # float64 matmul scores all pairs. Decision-exact, measured: numpy's
-        # pairwise dot summation and the fold differ only in addition order
-        # (~1e-16 relative); the smallest |cos − τ| margin over ALL
-        # within-cluster pairs is 0.05 at every SF (planted twins sit at
-        # ≈1.0, unrelated pairs ≤0.9), and the output matched the fold
-        # row-for-row at sf0.001/0.01/0.1.
-        # kept_by = min qualifying lower id: ids are sorted ascending, so
-        # the FIRST qualifying row per column is the minimum — argmax on the
-        # boolean mask, no per-pair rows ever materialize.
-        # Scale shape: one shuffle of (cluster, id, emb, nrm) — 1× the rows
-        # the salted join shuffled 9× — and per-task memory is the cluster's
-        # member block plus a column-blocked g×blk cosine tile (blk sized to
-        # ~8M doubles), bounded at the paper's K ∝ N operating point where
-        # cluster size stays ~constant.
-        import numpy as np
-        import pandas as pd
-
-        def _prune_cluster(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.sort_values("vec_id")
-            ids = pdf["vec_id"].to_numpy()
-            g = len(ids)
-            if g < 2:
-                return pd.DataFrame(
-                    {"vec_id": pd.Series(dtype="int64"),
-                     "kept_by": pd.Series(dtype="int64")}
-                )
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            nr = pdf["nrm"].to_numpy(dtype=np.float64)
-            row_idx = np.arange(g)
-            blk = max(128, min(4096, (8 << 20) // g))
-            out_v, out_k = [], []
-            for j0 in range(0, g, blk):
-                j1 = min(j0 + blk, g)
-                cos = (V @ V[j0:j1].T) / np.outer(nr, nr[j0:j1])
-                mask = cos >= tau
-                # a pair is (lower id, higher id): keep rows strictly above
-                # the column's global position only
-                mask &= row_idx[:, None] < np.arange(j0, j1)[None, :]
-                sel = np.flatnonzero(mask.any(axis=0))
-                first = mask.argmax(axis=0)
-                out_v.append(ids[j0 + sel])
-                out_k.append(ids[first[sel]])
-            return pd.DataFrame(
-                {"vec_id": np.concatenate(out_v), "kept_by": np.concatenate(out_k)}
-            )
-
-        pruned = (
-            el.select("cluster_id", "vec_id", "embedding", "nrm")
-            .groupBy("cluster_id")
-            .applyInPandas(_prune_cluster, "vec_id long, kept_by long")
-        )
-        out = (
-            asg.select("vec_id", "cluster_id")
-            .join(pruned, "vec_id", "left")
-            .select(
-                "vec_id",
-                "cluster_id",
-                F.col("kept_by").isNotNull().alias("is_pruned"),
-                "kept_by",
-            )
-        )
-        return st.own(out)
+    broadcast argmin fold; the pair stage shuffles each member once on
+    the int cluster id and scores a cluster in one numpy block. At
+    100 TB with K ≈ N/5000, the per-cluster bill is ~5000² dot
+    products."""
+    return KM.semdedup(_planted_embeddings(spark, sf_dir), _KMEANS_K, _SEMDEDUP_TAU)
 
 
 @_q("similarity_pq_topk", _ann_topk_oracle("pq"))

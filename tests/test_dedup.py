@@ -539,9 +539,9 @@ def _fi_refresh(spark, corpus_rows=None, inc_rows=None, max_pairs=None):
 
 
 def _fi_semdedup(spark):
-    from cql_xmlpipe_spark.plans.extensions import _semdedup_core
+    from cql_xmlpipe_spark.operators.kmeans import semdedup
 
-    return _semdedup_core(_fi_emb(spark), 2, 0.95)
+    return semdedup(_fi_emb(spark), 2, 0.95)
 
 
 def _fi_recall_gate(spark):
@@ -604,7 +604,7 @@ _FAILURE_STAGES = {
         _fi_recall_gate, (DD, "ngram_jaccard_pairs_collapsed"), "planted",
     ),
     "semdedup-lloyd": (
-        _fi_semdedup, ("cql_xmlpipe_spark.plans.extensions._lloyd_update",), "planted",
+        _fi_semdedup, ("cql_xmlpipe_spark.operators.kmeans.update",), "planted",
     ),
 }
 

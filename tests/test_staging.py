@@ -15,7 +15,9 @@ from cql_xmlpipe_spark.operators import dedup as DD
 
 PKG = Path(__file__).resolve().parents[1] / "cql_xmlpipe_spark"
 #: modules whose every ``.persist(`` must go through ``Staging.pin``
-PERSIST_GUARDED = {"operators/dedup.py", "plans/extensions.py", "dedup_cli.py"}
+PERSIST_GUARDED = {
+    "operators/dedup.py", "operators/kmeans.py", "plans/extensions.py", "dedup_cli.py",
+}
 
 
 def _scoped(tree: ast.AST):
