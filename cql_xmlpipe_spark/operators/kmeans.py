@@ -41,8 +41,9 @@ ROUNDS = 2
 
 
 def init_centroids(e: DataFrame, k: int) -> DataFrame:
-    """(cid, cemb): the K lowest-id vectors as the initial centroids."""
-    return e.filter(F.col("vec_id") < k).select(
+    """(cid, cemb): the K lowest-id vectors as the initial centroids,
+    whatever the ids start at."""
+    return e.orderBy("vec_id").limit(k).select(
         F.col("vec_id").alias("cid"),
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("cemb"),
     )

@@ -4339,7 +4339,7 @@ def _lloyd_oracle(src: str, rounds: int) -> str:
 
     ctes = [
         "c0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb"
-        f" FROM {src} WHERE vec_id < {_KMEANS_K})"
+        f" FROM {src} ORDER BY vec_id LIMIT {_KMEANS_K})"
     ]
     for it in range(rounds + 1):
         ctes.append(f"""s{it} AS (

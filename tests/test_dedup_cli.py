@@ -319,18 +319,21 @@ def test_cli_embedding_stream_rosters_contract(spark, tmp_path, capsys):
     assert got == {(0, (0, 100)), (1, (1, 101)), (2, (2, 102))}
 
 
-def test_cli_semdedup_contract(spark, tmp_path, capsys):
+@pytest.mark.parametrize("offset", [0, 1, 1000])
+def test_cli_semdedup_contract(spark, tmp_path, capsys, offset):
     """semdedup verdicts through the CLI: a planted duplicate vector in
     the corpus must be pruned by its lower-id twin; unique directions
-    survive; output parquet carries the audit schema."""
+    survive; output parquet carries the audit schema. The ids need not
+    start at 0: the init seeds the K lowest ids, so every vector lands
+    in one of exactly ``--n-clusters`` clusters, never the -1 sentinel."""
     import pandas as pd
 
     rng = __import__("random").Random(11)
     rows = []
     for i in range(40):
         v = [rng.gauss(0, 1) for _ in range(8)]
-        rows.append((i, [float(x) for x in v], i % 3))
-    rows.append((100, rows[0][1], 0))  # exact duplicate of vec 0
+        rows.append((offset + i, [float(x) for x in v], i % 3))
+    rows.append((offset + 100, rows[0][1], 0))  # exact duplicate of the first
     d = tmp_path / "corpus"
     d.mkdir()
     pd.DataFrame(rows, columns=["vec_id", "embedding", "label"]).to_parquet(
@@ -343,9 +346,11 @@ def test_cli_semdedup_contract(spark, tmp_path, capsys):
     ])
     assert rc == 0 and "wrote" in capsys.readouterr().out
     got = {r["vec_id"]: r for r in spark.read.parquet(out).collect()}
-    assert set(got) == {*range(40), 100}
-    assert got[100]["is_pruned"] and got[100]["kept_by"] == 0
-    assert not got[0]["is_pruned"]
+    assert set(got) == {offset + i for i in range(40)} | {offset + 100}
+    clusters = {r["cluster_id"] for r in got.values()}
+    assert len(clusters) == 4 and -1 not in clusters, clusters
+    assert got[offset + 100]["is_pruned"] and got[offset + 100]["kept_by"] == offset
+    assert not got[offset]["is_pruned"]
     assert sum(1 for r in got.values() if r["is_pruned"]) == 1
 
 
