@@ -1,7 +1,7 @@
 """BENCH harness: run the headline declared queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print a
+plain ``cpus=N`` line, then ONE JSON line: {"metric": ..., "value":
+total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}.
 
 The headline set covers every execution shape the engine claims: scan+agg
 (q1), multi-join (q3/q5), window (top3/running), set/distinct, the xmlpipe2
@@ -29,21 +29,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: name -> queries() key (headline subset; full surface runs in the
-#: driver's correctness gate, which is row-for-row, not timed)
-#:
-#: CURATION RULE (decided round 10, before the ceiling forces a cut):
-#: tests/test_plans.py::test_bench_line_fits_driver_tail_window pins the
-#: driver's 2000-char stdout tail as the hard width budget, which at
-#: current name lengths is ~70 queries. HARD CAP: 65 entries. When an
-#: addition would cross 65, drop queries in this order until it fits:
-#:   1. within the most-represented family (dedup_/text_/events_/
-#:      streaming_/xmlpipe_/q*), drop the CHEAPEST member by RECORDS —
-#:      every family always keeps its most expensive member;
-#:   2. never drop the TPC-H heavies (q1/q3/q5/q7/q8/q9/q17/q21/q2) —
-#:      they are the cross-round comparability anchor vs BASELINE.md;
-#:   3. dropped queries stay in the driver's correctness gate (which is
-#:      the full 150+ surface) — the bench cut loses a timing row only.
+#: The timed headline subset (the correctness gate runs every registered
+#: query): at most 65 names, the most the driver's 2,000-char stdout tail
+#: holds at 1 dp, so a new entry first drops the cheapest member of the
+#: most-represented family and never a TPC-H anchor (q1/q2/q3/q5/q7/q8/q9/
+#: q17/q21).
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -59,131 +49,59 @@ HEADLINE = [
     "doc_id_sdbm_customer",
     "xmlpipe_orders_export",
     "xmlpipe_lineitem_export",
-    # dedup_exact_hash_groups dropped in round 11 by the curation rule
-    # below: the round-11 additions crossed the 65 cap, dedup_ is the
-    # most-represented family, and exact_hash_groups is its cheapest
-    # member by RECORDS (0.212 s). It remains in the driver's full
-    # correctness gate.
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
     "dedup_cluster_assign",
     "similarity_cosine_topk",
     "text_quality_scores",
-    # text_langid_heuristic (0.454 s) dropped in round 12 (same rule,
-    # text_ family; still in the correctness gate).
     "text_tfidf_top_terms",
     "doc_pack_sequences",
-    # round-5 additions: A4 array export, B9 token kernel, and the
-    # Structured Streaming execution path (availableNow → memory sink)
     "xmlpipe_embeddings_export",
     "token_orders_murmur3",
     "streaming_tumbling_window",
     "text_repetition_scores",
     "text_crossdoc_ngram_dup",
-    # round-6 additions: stateful streaming (session windows), paragraph
-    # dedup, and the codec-true BMP decode path
     "streaming_session_window",
     "multimodal_image_features_codec",
-    # round-6 TPC-H completion (plans/tpch.py): the heavier join shapes —
-    # bilateral nation pairing, profit rollup, sole-late-supplier
-    # decorrelation, correlated-min bridge
     "q7_volume_shipping",
     "q9_product_profit",
     "q21_late_suppliers",
     "q2_min_cost_supplier",
     "text_decontaminate_eval_overlap",
-    # round-6 wave 2: sequence analytics + the streaming dedup state path
     "events_funnel_conversion",
     "events_cohort_retention",
     "streaming_watermark_dedup",
     "corpus_mix_resample",
     "events_peak_concurrency",
     "phrase_search_postings",
-    # round-6 wave 3: clustering, vocab audit, corpus overlap, prefix dedup
     "embedding_kmeans_step",
     "embedding_kmeans_iter3",
     "text_vocab_oov",
     "source_overlap_jaccard",
-    # dedup_prefix_hash_groups (0.347 s) and dedup_paragraphs (0.582 s)
-    # dropped in round 12 by the curation rule: the round-12 additions
-    # crossed the cap and dedup_ is the most-represented family; both
-    # remain in the driver's full correctness gate.
     "dedup_graph_degree",
     "events_user_ewma",
     "streaming_user_profile_state",
-    # round-6 wave 4: journey mining, association lift, dedup survivors
     "events_session_paths",
     "text_term_cooccurrence",
     "dedup_survivor_selection",
-    # round-6 wave 5: metadata audit, anomaly detection, sequence stats
     "text_lang_confusion",
     "events_value_outliers",
     "events_type_transitions",
     "events_interarrival_histogram",
-    # round-6 wave 6: variant extraction, incremental-ingest dedup
     "variant_extraction_events",
     "dedup_incremental_probe",
-    # round-8: the linear-output dedup contract (cluster rosters, not
-    # C(k,2) pairs) and the append-mode production session-window plan
     "dedup_minhash_groups",
     "streaming_session_window_append",
-    # round-10: the embedding roster contract, the sampled recall
-    # health check (the production-cost replacements for the pair
-    # contract and the exact recall gate), and the embedding
-    # incremental-ingest probe
     "dedup_embedding_groups",
     "dedup_minhash_recall_sampled",
-    # dedup_embedding_incremental dropped in round 13 by the curation
-    # rule: adding similarity_radius_banded_recall (the banded radius
-    # machinery's timing row — candidate join + identical-verify + live
-    # recall vs the exact path) crossed the 65 cap, dedup_ is the
-    # most-represented family, and embedding_incremental is its cheapest
-    # member by RECORDS (0.8 s). It remains in the correctness gate.
-    # round-12 session-2 additions: the PQ ANN variant (the heaviest
-    # similarity timing row — per-subspace KMeans + encode + ADC +
-    # re-rank), the self-trained bigram-LM quality scorer, and SemDeDup
-    # (kmeans + within-cluster cosine pruning on the planted corpus)
     "similarity_pq_topk",
-    # round-13 addition: the banded radius path (sign-key candidates +
-    # identical hoisted-norm verify) timed against its exact twin
     "similarity_radius_banded_recall",
     "text_bigram_lm_score",
     "semdedup_prune",
-    # round-11: the embedding-family sampled recall health check and the
-    # incremental ROSTER maintenance contract (per-ingest upsert path).
-    # Its embedding twin (dedup_embedding_incremental_rosters) is
-    # deliberately GATE-ONLY: the list sits at the 65 cap, the twin
-    # shares the text contract's quotient machinery timing-wise, and
-    # adding it would cost another dedup-family timing row by the
-    # curation rule above.
     "dedup_embedding_recall_sampled",
     "dedup_incremental_rosters",
-    # round-12 additions are GATE-ONLY by the curation rule: the list
-    # sits at the 65 cap and all ride already-timed machinery —
-    # dedup_incremental_rosters_delta is the emit="delta" projection of
-    # dedup_incremental_rosters (same probe+quotient-CC cost, smaller
-    # output), dedup_embedding_incremental_subset_planted the planted
-    # positive path of dedup_embedding_incremental's probe join,
-    # multimodal_audio_features[_codec] / multimodal_audio_resample_codec
-    # the audio siblings of the timed
-    # multimodal_image_features_codec mapInPandas shape, and
-    # text_compressibility one Arrow-batched scalar UDF projection over
-    # the documents scan (the shape text_quality_scores already times),
-    # and text_dup_spans the gram-hash machinery text_crossdoc_ngram_dup
-    # already times plus one partition-local window.
-    # round-14 additions are GATE-ONLY by the same rule: the list sits
-    # at the cap and both ride already-timed machinery —
-    # similarity_ivfpq_topk composes the per-subspace-KMeans + encode +
-    # numpy-ADC + re-rank shape similarity_pq_topk already times (plus
-    # one same-class coarse KMeans; its scale story is the STAGED
-    # measurement in SCALE.md, which the per-call gate shape would not
-    # show), and text_bm25_topk rides the tokenize → tf → term-window
-    # pipeline text_tfidf_top_terms already times plus one broadcast
-    # join. The staged gates (similarity_*_topk_staged) are gate-only
-    # for the same reason: they time the same query halves minus
-    # training.
 ]
-assert len(HEADLINE) <= 65, "HEADLINE over the curation cap — apply the rule above"
+assert len(HEADLINE) <= 65, "HEADLINE over the 65-name cap"
 
 # Optional subset for scale smokes: SPARK_GRAFT_ONLY="q1_pricing_summary,..."
 # restricts the headline list (e.g. to skip the deliberately super-linear
@@ -285,20 +203,27 @@ RECORDS = {
 }
 
 
+def _seconds(v: float, ndigits: int) -> float | int:
+    """``v`` at ``ndigits`` decimals; rung 0 keeps one decimal below 10 s
+    and rounds to whole seconds only at or above it."""
+    if ndigits == 0 and v >= 10:
+        return int(round(v))
+    return round(v, max(ndigits, 1))
+
+
 def format_bench_line(timings: dict[str, float], sf, cpus: int | None = None) -> str:
     """Render the result as ONE JSON line that fits the driver's tail
     window. The driver records only the last 2000 chars of stdout and
     parses the JSON line out of that tail — a longer line is
     unparseable by construction (BENCH_r06-r08 all hit this once the
     headline set passed ~55 queries). Emit compactly and degrade timing
-    precision (3dp → 2dp → 1dp) until the line fits; sub-0.1 s
-    precision is noise at these wall-clocks anyway.
+    precision (3dp → 2dp → 1dp → 1dp below 10 s and whole seconds
+    above) until the line fits; sub-0.1 s precision is noise at these
+    wall-clocks anyway, and a sub-second query never prints as 0.
 
-    ``cpus`` (r15, VERDICT r14 scaling item): the session's ACTUAL
-    ``sc.defaultParallelism``, echoed so the scaling harness can verify
-    $SPARK_GRAFT_CPUS was honored (it always was — bench builds its
-    session via get_spark, which reads the env var — but the line
-    carried no evidence). Additive field; format otherwise unchanged."""
+    ``cpus``, the session's actual ``sc.defaultParallelism`` (evidence
+    that $SPARK_GRAFT_CPUS was honored), goes on its own plain line
+    before the JSON line, so it costs the per-query map no width."""
     out = {
         "metric": "headline_query_wall_clock_total",
         "value": 0.0,
@@ -306,13 +231,8 @@ def format_bench_line(timings: dict[str, float], sf, cpus: int | None = None) ->
         "queries": {},
         "sf": sf,
     }
-    if cpus is not None:
-        out["cpus"] = cpus
     for ndigits in (3, 2, 1, 0):
-        out["queries"] = {
-            n: (round(v, ndigits) if ndigits else int(round(v)))
-            for n, v in timings.items()
-        }
+        out["queries"] = {n: _seconds(v, ndigits) for n, v in timings.items()}
         out["value"] = round(sum(out["queries"].values()), 3)
         line = json.dumps(out, separators=(",", ":"))
         if len(line) <= 1980:
@@ -323,7 +243,7 @@ def format_bench_line(timings: dict[str, float], sf, cpus: int | None = None) ->
         # and say so loudly instead of silently reintroducing the
         # BENCH_r06-r08 unparseable-line failure this function prevents
         print(
-            f"WARNING: bench line {len(line)} chars even at 0dp; "
+            f"WARNING: bench line {len(line)} chars even at whole seconds; "
             f"dropping per-query map ({len(timings)} queries) to fit "
             "the driver's 2000-char tail window",
             file=sys.stderr,
@@ -331,7 +251,7 @@ def format_bench_line(timings: dict[str, float], sf, cpus: int | None = None) ->
         out["queries"] = {}
         out["value"] = round(sum(timings.values()), 3)
         line = json.dumps(out, separators=(",", ":"))
-    return line
+    return line if cpus is None else f"cpus={cpus}\n{line}"
 
 
 def main() -> int:

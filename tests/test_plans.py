@@ -353,8 +353,9 @@ def test_bench_line_fits_driver_tail_window():
     """The driver records only the last 2000 chars of stdout; the result
     line must fit that window or the round's bench artifact is
     unparseable (BENCH_r06-r08 regression). Pin it for the CURRENT
-    headline set with worst-case (3-digit-second) timings, and pin the
-    degrade-precision fallback for a much larger hypothetical set."""
+    headline set with worst-case (3-digit-second) timings, pin the
+    degrade-precision fallback for a much larger hypothetical set, and
+    pin that every value keeps a decimal wherever one fits."""
     import json
 
     import bench
@@ -363,29 +364,43 @@ def test_bench_line_fits_driver_tail_window():
     # (the full-suite total is ~90 s; all-queries-at-100 s is already
     # a 6000 s phantom run)
     timings = {n: 99.999 for n in bench.HEADLINE}
-    line = bench.format_bench_line(timings, 0.1, cpus=32)
+    out = bench.format_bench_line(timings, 0.1, cpus=32)
+    # the effective parallelism is a plain line of its own before the
+    # JSON line, so it takes no width from the per-query map
+    head, line = out.split("\n")
+    assert head == "cpus=32"
     assert len(line) <= 1980, len(line)
     parsed = json.loads(line)
     assert set(parsed["queries"]) == set(bench.HEADLINE)
     assert parsed["unit"] == "sec" and parsed["sf"] == 0.1
-    # r15: the effective parallelism is echoed so the driver's scaling
-    # harness can verify $SPARK_GRAFT_CPUS was honored
-    assert parsed["cpus"] == 32
+    assert "cpus" not in parsed
 
     # headroom probe: the degrade ladder must keep the full per-query
     # map parseable all the way to the 65-query CURATION CAP (names
     # dominate width — ~33 chars/query — so the hard ceiling is ~70
     # queries; the cap keeps two queries of slack below it, and past
     # the cap the rule in bench.py curates the set, never precision)
-    # realistic values here (suite per-query range is 0.2-6 s; the
-    # 99.999 envelope above is the all-stall worst case for the
-    # CURRENT set, where the ladder already has to reach integers)
     extra = 65 - len(bench.HEADLINE)
-    big = {n: 12.345 for n in bench.HEADLINE}
-    big.update({f"extra_round_query_{i:02d}": 12.345 for i in range(extra)})
-    line2 = bench.format_bench_line(big, 0.1, cpus=32)
+    names = bench.HEADLINE + [f"extra_round_query_{i:02d}" for i in range(extra)]
+    big = {n: 12.345 for n in names}
+    line2 = bench.format_bench_line(big, 0.1, cpus=32).split("\n")[-1]
     assert len(line2) <= 1980, len(line2)
     assert len(json.loads(line2)["queries"]) == 65
+
+    # 65 names just under 10 s: every value keeps 1 dp
+    line3 = bench.format_bench_line({n: 9.94 for n in names}, 0.1)
+    assert len(line3) <= 1980, len(line3)
+    assert set(json.loads(line3)["queries"].values()) == {9.9}
+
+    # 45 sub-second queries and 20 near 20 s: 1 dp does not fit, and the
+    # whole-second rung still keeps 1 dp below 10 s — no value prints 0
+    mixed = {n: (0.44 if i < 45 else 19.9) for i, n in enumerate(names)}
+    line4 = bench.format_bench_line(mixed, 0.1)
+    assert len(line4) <= 1980, len(line4)
+    got = json.loads(line4)["queries"]
+    assert len(got) == 65 and 0 not in got.values()
+    assert all(got[n] == 0.4 for n, v in mixed.items() if v < 10)
+    assert all(got[n] == 20 for n, v in mixed.items() if v >= 10)
 
 
 def test_bench_line_drops_query_map_when_nothing_fits(capsys):
