@@ -1,7 +1,7 @@
 """BENCH harness: run the headline declared queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print a
-plain ``cpus=N`` line, then ONE JSON line: {"metric": ..., "value":
-total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
+JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "sf": ...}, after a plain ``cpus=N`` line.
 
 The headline set covers every execution shape the engine claims: scan+agg
 (q1), multi-join (q3/q5), window (top3/running), set/distinct, the xmlpipe2
@@ -30,8 +30,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: The timed headline subset (the correctness gate runs every registered
-#: query): at most 65 names, the most the driver's 2,000-char stdout tail
-#: holds at 1 dp, so a new entry first drops the cheapest member of the
+#: query): at most 65 names, the most a 2,000-char stdout tail holds at
+#: 1 dp, so a new entry first drops the cheapest member of the
 #: most-represented family and never a TPC-H anchor (q1/q2/q3/q5/q7/q8/q9/
 #: q17/q21).
 HEADLINE = [
