@@ -55,11 +55,15 @@ class Staging:
     :meth:`own` — all of them when an exception escapes, so no refusal
     or failure path leaks a pinned frame. Whoever consumes a returned
     result releases what it owns with :func:`unpersist_intermediates`.
+    Round loops truncate lineage with :meth:`checkpoint`, whose tables
+    are owned the same way.
     """
 
     def __init__(self) -> None:
-        self._frames: list[DataFrame] = []
+        # persisted frames and checkpoint RDDs: both release with unpersist
+        self._frames: list = []
         self._handed = 0
+        self._superseded: list = []
 
     def __enter__(self) -> Staging:
         return self
@@ -77,6 +81,24 @@ class Staging:
         self._frames.append(df)
         return df
 
+    def checkpoint(
+        self, df: DataFrame, supersedes: DataFrame | None = None
+    ) -> DataFrame:
+        """``df.localCheckpoint(eager=True)``, its table owned like a pin.
+        A round loop passes the previous round's table as ``supersedes``:
+        that one is released when the block exits, never handed on."""
+        table = df.localCheckpoint(eager=True)
+        # the blocks live in the LogicalRDD the checkpoint planned; the
+        # table is no cache entry, so DataFrame.unpersist would not reach it
+        rdd = table._jdf.queryExecution().analyzed().rdd()
+        table._xmlpipe_rdd = rdd  # type: ignore[attr-defined]
+        self._frames.append(rdd)
+        if supersedes is not None:
+            old = supersedes._xmlpipe_rdd  # type: ignore[attr-defined]
+            self._frames = [f for f in self._frames if f is not old]
+            self._superseded.append(old)
+        return table
+
     def adopt(self, result: DataFrame) -> DataFrame:
         """Take over the frames ``result`` owns; returns ``result``."""
         owned = getattr(result, "_xmlpipe_cached", [])
@@ -91,13 +113,14 @@ class Staging:
         return result
 
     def release(self, blocking: bool = False) -> None:
-        for df in self._frames:
+        for df in self._frames + self._superseded:
             try:
                 df.unpersist(blocking)
             except Exception:  # pragma: no cover - session already stopped
                 pass
         self._frames = []
         self._handed = 0
+        self._superseded = []
 
 
 def unpersist_intermediates(result: DataFrame, blocking: bool = False) -> None:
@@ -296,26 +319,25 @@ def _minhash_sigs(sets: DataFrame, id_col: str) -> DataFrame:
     slower measured at sf0.01); with plain mins it compiles to a
     whole-stage-codegen HashAggregate with map-side partials."""
     exploded = sets.select(F.col(id_col), F.explode("hs").alias("h"))
-    aggs = [
-        F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"mh_{i}")
-        for i in range(N_MINHASH)
-    ]
+    # SQL text: one py4j call per column instead of ~6 (col, lit, hash,
+    # min, alias); the analyzed plan is the same
+    aggs = [F.expr(f"min(xxhash64(h, {i})) AS mh_{i}") for i in range(N_MINHASH)]
     return exploded.groupBy(id_col).agg(*aggs)
 
 
 def _band_keys():
     """The banded bucket-key array over mh_* columns — the single
     definition of the N_BANDS × rows_per_band layout (pairs with
-    :func:`_minhash_sigs`; change banding math here and only here)."""
+    :func:`_minhash_sigs`; change banding math here and only here).
+    One SQL expression, so one py4j call builds all N_BANDS hashes."""
     rows_per_band = N_MINHASH // N_BANDS
-    return F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(N_BANDS)
-        ]
+    bands = (
+        "xxhash64("
+        + ", ".join(f"mh_{b * rows_per_band + r}" for r in range(rows_per_band))
+        + ")"
+        for b in range(N_BANDS)
     )
+    return F.expr(f"array({', '.join(bands)})")
 
 
 def _candidate_pairs(
@@ -716,9 +738,9 @@ def _labeled_collapsed(
     )
     # the rep set without a distinct pass: a representative is the member
     # whose id equals the group min (same device as _collapse_prelude)
-    cc = connected_components(
+    cc = st.adopt(connected_components(
         mem.filter(F.col(id_col) == F.col("rep")).select(F.col(id_col)), rep_pairs
-    )
+    ))
     return (
         mem.join(eligible, "rep")
         .join(cc.select(F.col(id_col).alias("rep"), "cluster_id"), "rep")
@@ -1157,7 +1179,9 @@ def connected_components(
     and the convergence test rides the same pass (an iterative algorithm
     needs a per-round action by construction; this is the documented
     exception to the lazy-plan rule). Edges are pinned once up front —
-    they feed every round — and released before return.
+    they feed every round — and released before return, as are the
+    superseded round tables; the result owns the final label table
+    (release it with :func:`unpersist_intermediates`).
 
     **Seed convergence check (r15):** quasi-clique components converge
     in the seed itself, yet the loop paid a full round — build successor
@@ -1169,19 +1193,18 @@ def connected_components(
     non-converged corpus pays one extra aggregation pass (the same
     join+agg a round runs) before the rounds proceed unchanged.
     """
-    with Staging() as st:
-        sym = st.pin(
+    with Staging() as st, Staging() as scratch:
+        sym = scratch.pin(
             pairs.select(F.col("id_a").alias("v"), F.col("id_b").alias("w"))
             .union(pairs.select(F.col("id_b").alias("v"), F.col("id_a").alias("w")))
         )
         # seed with the 1-hop minimum (same shuffle the vertex-distinct would
         # cost anyway) — cliques converge in the seed itself, so the loop only
         # pays rounds for diameter beyond 1
-        labels = (
+        table = labels = st.checkpoint(
             sym.groupBy("v")
             .agg(F.min("w").alias("mw"))
             .select(F.col("v"), F.least("v", "mw").alias("label"))
-            .localCheckpoint(eager=True)
         )
 
         def _nbr_min(lbl: DataFrame) -> DataFrame:
@@ -1238,28 +1261,28 @@ def connected_components(
                         F.col("label"), F.coalesce("_plabel", "label")
                     ).alias("label"),
                 )
-            proposed = proposed.localCheckpoint(eager=True)
-            changed = proposed.filter(F.col("label") != F.col("old_label")).count()
-            labels = proposed.select("v", "label")
+            table = st.checkpoint(proposed, supersedes=table)
+            changed = table.filter(F.col("label") != F.col("old_label")).count()
+            labels = table.select("v", "label")
             if changed == 0:
                 converged = True
                 break
         if not converged:  # pragma: no cover - 2^(max_iter - jump_after) exceeds any real diameter
             raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
-    w_cluster = W.partitionBy("label")
-    clustered = labels.select(
-        F.col("v").alias(id_col),
-        F.col("label").alias("cluster_id"),
-        F.count(F.lit(1)).over(w_cluster).alias("cluster_size"),
-    )
-    singletons = nodes.join(
-        labels.select(F.col("v").alias(id_col)), id_col, "left_anti"
-    ).select(
-        F.col(id_col),
-        F.col(id_col).alias("cluster_id"),
-        F.lit(1).cast("long").alias("cluster_size"),
-    )
-    return clustered.unionByName(singletons)
+        w_cluster = W.partitionBy("label")
+        clustered = labels.select(
+            F.col("v").alias(id_col),
+            F.col("label").alias("cluster_id"),
+            F.count(F.lit(1)).over(w_cluster).alias("cluster_size"),
+        )
+        singletons = nodes.join(
+            labels.select(F.col("v").alias(id_col)), id_col, "left_anti"
+        ).select(
+            F.col(id_col),
+            F.col(id_col).alias("cluster_id"),
+            F.lit(1).cast("long").alias("cluster_size"),
+        )
+        return st.own(clustered.unionByName(singletons))
 
 
 def _resolve_band_geometry(
@@ -1483,7 +1506,7 @@ def embedding_near_dup_groups(
         rep_pairs = st.adopt(embedding_near_dup_pairs(
             rep_vecs, id_col, emb_col, threshold, n_bands, band_bits, n_hint
         ))
-        cc = connected_components(rep_ids, rep_pairs, id_col=id_col)
+        cc = st.adopt(connected_components(rep_ids, rep_pairs, id_col=id_col))
         labeled = (
             mem.filter(F.col("_elig"))
             .join(cc.select(F.col(id_col).alias("rep"), "cluster_id"), "rep")
@@ -2183,7 +2206,7 @@ def _roster_update_assemble(
         .union(edges.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    cc = connected_components(nodes, edges, id_col=id_col)
+    cc = st.adopt(connected_components(nodes, edges, id_col=id_col))
     qlab = st.pin(cc.select(
         F.col(id_col).alias("_q"), F.col("cluster_id").alias("_new")
     ))

@@ -108,11 +108,16 @@ def to_centroids(upd: DataFrame) -> DataFrame:
 
 def lloyd(e: DataFrame, k: int) -> DataFrame:
     """(cid, cemb) after :data:`ROUNDS` rounds from the K-lowest-id init;
-    each round's centroid table is checkpointed (one eager job)."""
-    cent = init_centroids(e, k)
-    for _ in range(ROUNDS):
-        cent = to_centroids(update(e, cent)).localCheckpoint()
-    return cent
+    each round's centroid table is checkpointed (one eager job). The
+    result owns the last table; release it with
+    :func:`~cql_xmlpipe_spark.operators.dedup.unpersist_intermediates`."""
+    with Staging() as st:
+        cent = init_centroids(e, k)
+        for i in range(ROUNDS):
+            cent = st.checkpoint(
+                to_centroids(update(e, cent)), supersedes=cent if i else None
+            )
+        return st.own(cent)
 
 
 def semdedup(e: DataFrame, n_clusters: int, tau: float) -> DataFrame:
@@ -127,7 +132,7 @@ def semdedup(e: DataFrame, n_clusters: int, tau: float) -> DataFrame:
     # union, a filtered corpus) is computed once, not per scan
     with Staging() as st:
         e = st.pin(e)
-        asg = st.pin(assign(e, lloyd(e, n_clusters)))
+        asg = st.pin(assign(e, st.adopt(lloyd(e, n_clusters))))
         # per-vector norms are computed ONCE here, not per pair — and in
         # Spark (the left-to-right fold that bit-matches the oracle), so the
         # numpy stage below divides the exact same per-vector doubles

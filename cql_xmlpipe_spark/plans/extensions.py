@@ -4557,7 +4557,8 @@ def embedding_kmeans_iter3(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised, not decorative: ``KM.lloyd``'s two checkpointed rounds,
     then the third round's update."""
     e = load_table(spark, "embeddings", sf_dir)
-    return KM.update(e, KM.lloyd(e, _KMEANS_K))
+    with DD.Staging() as st:
+        return st.own(KM.update(e, st.adopt(KM.lloyd(e, _KMEANS_K))))
 
 
 @_q(
@@ -4751,43 +4752,44 @@ def embedding_prototypicality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cql_xmlpipe_spark.functions.vectors import norm
 
     e = load_table(spark, "embeddings", sf_dir)
-    cent = KM.lloyd(e, _KMEANS_K)
-    asg = KM.assign(e, cent)
-    # centroid norms once per CLUSTER (K rows), not per vector
-    cn = cent.select(
-        F.col("cid"), F.col("cemb"), norm(F.col("cemb")).alias("nrm_c")
-    ).filter(F.col("nrm_c") > 0)
-    pc = (
-        asg.withColumn("nrm_e", norm(F.col("embedding")))
-        .filter(F.col("nrm_e") > 0)
-        .join(F.broadcast(cn), F.col("cluster_id") == F.col("cid"))
-        .select(
+    with DD.Staging() as st:
+        cent = st.adopt(KM.lloyd(e, _KMEANS_K))
+        asg = KM.assign(e, cent)
+        # centroid norms once per CLUSTER (K rows), not per vector
+        cn = cent.select(
+            F.col("cid"), F.col("cemb"), norm(F.col("cemb")).alias("nrm_c")
+        ).filter(F.col("nrm_c") > 0)
+        pc = (
+            asg.withColumn("nrm_e", norm(F.col("embedding")))
+            .filter(F.col("nrm_e") > 0)
+            .join(F.broadcast(cn), F.col("cluster_id") == F.col("cid"))
+            .select(
+                "vec_id",
+                "cluster_id",
+                (
+                    vdot(F.col("embedding"), F.col("cemb"))
+                    / (F.col("nrm_e") * F.col("nrm_c"))
+                ).alias("proto_cos"),
+            )
+        )
+        w = Window.partitionBy("cluster_id").orderBy(
+            F.col("proto_cos").desc(), F.col("vec_id")
+        )
+        wsz = Window.partitionBy("cluster_id")
+        return st.own(pc.select(
             "vec_id",
             "cluster_id",
+            "proto_cos",
+            F.row_number().over(w).alias("proto_rank"),
+            F.count(F.lit(1)).over(wsz).alias("cluster_size"),
             (
-                vdot(F.col("embedding"), F.col("cemb"))
-                / (F.col("nrm_e") * F.col("nrm_c"))
-            ).alias("proto_cos"),
-        )
-    )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("proto_cos").desc(), F.col("vec_id")
-    )
-    wsz = Window.partitionBy("cluster_id")
-    return pc.select(
-        "vec_id",
-        "cluster_id",
-        "proto_cos",
-        F.row_number().over(w).alias("proto_rank"),
-        F.count(F.lit(1)).over(wsz).alias("cluster_size"),
-        (
-            F.row_number().over(w)
-            <= F.ceil(
-                F.lit(_PROTO_PRUNE_FRAC)
-                * F.count(F.lit(1)).over(wsz).cast("double")
-            ).cast("long")
-        ).alias("is_pruned"),
-    )
+                F.row_number().over(w)
+                <= F.ceil(
+                    F.lit(_PROTO_PRUNE_FRAC)
+                    * F.count(F.lit(1)).over(wsz).cast("double")
+                ).cast("long")
+            ).alias("is_pruned"),
+        ))
 
 
 _DEGREE_ORACLE = f"""
@@ -6140,26 +6142,29 @@ def embedding_top_pc_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-out/tiny-agg-back pattern as the kmeans step, linear in
     corpus size, state is O(D). The tiny z table is localCheckpointed
     per round to keep lineage flat."""
-    y, z_arr, _xc = _power_iterate(
-        load_table(spark, "embeddings", sf_dir)
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", "embedding")
-    )
-    zt = (
-        z_arr.select(F.posexplode("zl").alias("dim", "component"))
-        .withColumn("dim", F.col("dim").cast("int"))
-    )
-    return (
-        y.withColumn("dim", F.col("dim").cast("int"))
-        .join(zt, "dim")
-        .select("dim", "y", "component")
-    )
+    with DD.Staging() as st:
+        y, z_arr, _xc = _power_iterate(
+            st,
+            load_table(spark, "embeddings", sf_dir)
+            .filter(F.col("embedding").isNotNull())
+            .select("vec_id", "embedding"),
+        )
+        zt = (
+            z_arr.select(F.posexplode("zl").alias("dim", "component"))
+            .withColumn("dim", F.col("dim").cast("int"))
+        )
+        return st.own(
+            y.withColumn("dim", F.col("dim").cast("int"))
+            .join(zt, "dim")
+            .select("dim", "y", "component")
+        )
 
 
-def _power_iterate(e: DataFrame):
+def _power_iterate(st: DD.Staging, e: DataFrame):
     """3 centered power-iteration rounds over an (vec_id, embedding)
     frame: returns (y table, one-row z array frame, centered-row frame)
-    — shared by the top-PC gate and its all-but-the-top consumer."""
+    — shared by the top-PC gate and its all-but-the-top consumer. The
+    checkpointed one-row tables go into the caller's staging ``st``."""
     from cql_xmlpipe_spark.functions.vectors import dot as vdot
 
     comp = e.select(
@@ -6171,23 +6176,23 @@ def _power_iterate(e: DataFrame):
             / (F.count(F.lit(1)) * F.lit(1e6))
         ).alias("m")
     )
-    mu_arr = mu.agg(
+    mu_arr = st.checkpoint(mu.agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
         ).alias("ml"),
         F.count(F.lit(1)).alias("nd"),
-    ).localCheckpoint()
+    ))
     xc = e.crossJoin(F.broadcast(mu_arr.select("ml"))).select(
         "vec_id",
         F.zip_with(
             "embedding", "ml", lambda x, m: x.cast("double") - m
         ).alias("xl"),
     )
-    z_arr = mu_arr.select(
+    z_arr = st.checkpoint(mu_arr.select(
         F.transform(
             "ml", lambda _: F.lit(1.0) / F.sqrt(F.col("nd").cast("double"))
         ).alias("zl")
-    ).localCheckpoint()
+    ))
     y = None
     for _ in range(3):
         s = xc.crossJoin(F.broadcast(z_arr)).select(
@@ -6207,7 +6212,7 @@ def _power_iterate(e: DataFrame):
                 ).alias("y")
             )
         )
-        z_arr = (
+        z_arr = st.checkpoint(
             y.agg(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("dim", "y"))),
@@ -6227,7 +6232,6 @@ def _power_iterate(e: DataFrame):
                     ),
                 ).alias("zl")
             )
-            .localCheckpoint()
         )
     return y, z_arr, xc
 
@@ -6285,24 +6289,26 @@ def embedding_remove_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds nothing beyond the power iteration's own per-round scan."""
     from cql_xmlpipe_spark.functions.vectors import dot as vdot
 
-    _y, z_arr, xc = _power_iterate(
-        load_table(spark, "embeddings", sf_dir)
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", "embedding")
-    )
-    j = xc.crossJoin(F.broadcast(z_arr)).select(
-        "vec_id", "xl", "zl", vdot(F.col("xl"), F.col("zl")).alias("proj")
-    )
-    resid_sq = F.zip_with(
-        "xl", "zl", lambda x, z: (x - F.col("proj") * z) * (x - F.col("proj") * z)
-    )
-    return j.select(
-        "vec_id",
-        "proj",
-        F.sqrt(
-            F.aggregate(resid_sq, F.lit(0.0), lambda a, b: a + b)
-        ).alias("norm_after"),
-    )
+    with DD.Staging() as st:
+        _y, z_arr, xc = _power_iterate(
+            st,
+            load_table(spark, "embeddings", sf_dir)
+            .filter(F.col("embedding").isNotNull())
+            .select("vec_id", "embedding"),
+        )
+        j = xc.crossJoin(F.broadcast(z_arr)).select(
+            "vec_id", "xl", "zl", vdot(F.col("xl"), F.col("zl")).alias("proj")
+        )
+        resid_sq = F.zip_with(
+            "xl", "zl", lambda x, z: (x - F.col("proj") * z) * (x - F.col("proj") * z)
+        )
+        return st.own(j.select(
+            "vec_id",
+            "proj",
+            F.sqrt(
+                F.aggregate(resid_sq, F.lit(0.0), lambda a, b: a + b)
+            ).alias("norm_after"),
+        ))
 
 
 _HARD_NEG_ORACLE = """

@@ -4,6 +4,24 @@ Local test profile: ``local[$SPARK_GRAFT_CPUS]`` single-JVM. The configs
 below are chosen for cluster-scale behavior too: AQE (runtime re-plan,
 partition coalescing, skew-join splitting) and Arrow for every Python
 boundary. On a real cluster only ``master`` and the memory knobs change.
+
+Two engine constants stop repeated calls from re-paying fixed costs:
+
+* ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` = true.
+  By default Spark switches AQE's final-stage shuffle optimizations off
+  inside a cached plan, so every frame an operator pins keeps
+  ``spark.sql.shuffle.partitions`` partitions (32 here, 64 after a
+  union), however few rows it holds, and each tiny pin costs 33-65
+  tasks to build and to scan. With the conf, AQE coalesces a pinned
+  plan's final shuffle like any other plan's. Measured on perfbench
+  ``dedup_rosters`` (400 documents, ``--trace 1``, 4-core host): tasks
+  per pass 558 -> 60.
+* ``spark.sql.codegen.cache.maxEntries`` = :data:`CODEGEN_CACHE_ENTRIES`.
+  Spark caps its generated-class cache at 100 entries. One
+  ``dedup_rosters`` pass needs ~147 classes, so the cache evicted its
+  own working set and every warm ``dedup_minhash_groups`` call compiled
+  89 classes again (~0.5 s of Janino), every ``semdedup_prune`` call 47.
+  With the larger cache a warm call compiles none.
 """
 
 from __future__ import annotations
@@ -13,6 +31,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+#: Generated classes kept compiled (Spark's default: 100). One cold
+#: ``bench.py`` HEADLINE run compiles 1,547 distinct classes: 1,419 in
+#: its sf0.001 warm-up, 128 more in the first sf0.1 pass (a second pass
+#: compiled 40, classes whose source differs from call to call). Rounded
+#: up with a third of headroom.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def default_driver_memory() -> str:
@@ -48,6 +73,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(

@@ -5,7 +5,7 @@ Usage: python scripts/plan_fingerprint.py SF_DIR NAME [NAME ...] [--dump DIR]
 For each query NAME (a key of ``cql_xmlpipe_spark.plans.QUERIES``) it
 builds the query over SF_DIR, then prints one line:
 
-    NAME  <sha256 prefix of the plan rendering>  jobs=<build>/<total>
+    NAME  <sha256 prefix of the plan rendering>  jobs=<build>/<total>  compiles=<n>
 
 The rendering is the optimized logical tree, one ``simpleString`` per
 node, descending into each ``InMemoryRelation``'s cached input plan (the
@@ -20,6 +20,11 @@ left is stable, so equal hashes at two commits mean the same logical work.
 
 ``jobs`` counts the Spark jobs the call started: while the query is built
 (eager guards, collects, model fits) and in total after one ``collect()``.
+``compiles`` counts the classes whole-stage codegen compiled during a
+second, warm call of the same query (built and collected again): 0 when
+the session's codegen cache holds the query's working set. Run with
+``--no-warm`` to skip the second call. The first call's compile count of
+a cold process, summed over a query set, is that set's working set.
 ``--dump DIR`` also writes each rendering to ``DIR/NAME.txt`` for diffing.
 """
 
@@ -67,11 +72,20 @@ def _last_job(sc) -> int:
     return max(sc.statusTracker().getJobIdsForGroup(None) or [-1])
 
 
+def _compiles(sc) -> int:
+    """Classes whole-stage codegen has compiled in this JVM so far."""
+    metrics = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def main(argv: list[str]) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir")
     ap.add_argument("names", nargs="+")
     ap.add_argument("--dump", help="write each rendering to DIR/NAME.txt")
+    ap.add_argument(
+        "--no-warm", action="store_true", help="skip the warm call (no compiles=)"
+    )
     args = ap.parse_args(argv)
 
     from cql_xmlpipe_spark.operators.dedup import unpersist_intermediates
@@ -94,7 +108,15 @@ def main(argv: list[str]) -> int:
         total = _last_job(sc)
         unpersist_intermediates(df)
         digest = hashlib.sha256(text.encode()).hexdigest()[:16]
-        print(f"{name}  {digest}  jobs={built - start}/{total - start}", flush=True)
+        line = f"{name}  {digest}  jobs={built - start}/{total - start}"
+        if not args.no_warm:
+            spark.catalog.clearCache()
+            before = _compiles(sc)
+            df = QUERIES[name](spark, args.sf_dir)
+            df.collect()
+            unpersist_intermediates(df)
+            line += f"  compiles={_compiles(sc) - before}"
+        print(line, flush=True)
         if args.dump:
             (Path(args.dump) / f"{name}.txt").write_text(text + "\n")
     return 0

@@ -1,9 +1,10 @@
 """The one owner of persisted intermediates (operators/dedup.py::Staging).
 
-Pins live in a ``Staging`` block: a result takes them over with
-``own``, the block releases everything else on exit — and everything
-when an exception escapes it. The guard below keeps it the ONLY way the
-dedup-family modules persist a frame or touch the ownership attribute.
+Pins and checkpoint tables live in a ``Staging`` block: a result takes
+them over with ``own``, the block releases everything else on exit —
+and everything when an exception escapes it. The guard below keeps it
+the ONLY way the dedup-family modules persist or checkpoint a frame or
+touch the ownership attribute.
 """
 
 from __future__ import annotations
@@ -11,10 +12,13 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
+import pytest
+
 from cql_xmlpipe_spark.operators import dedup as DD
 
 PKG = Path(__file__).resolve().parents[1] / "cql_xmlpipe_spark"
-#: modules whose every ``.persist(`` must go through ``Staging.pin``
+#: modules whose every ``.persist(`` must go through ``Staging.pin`` and
+#: every ``.localCheckpoint(`` through ``Staging.checkpoint``
 PERSIST_GUARDED = {
     "operators/dedup.py", "operators/kmeans.py", "plans/extensions.py", "dedup_cli.py",
 }
@@ -37,7 +41,8 @@ def _scoped(tree: ast.AST):
 
 
 def test_pins_go_through_staging():
-    offenders, pin_persists = [], 0
+    offenders, sanctioned = [], {"pin": 0, "checkpoint": 0}
+    calls = {"persist": "pin", "localCheckpoint": "checkpoint"}
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
         for node, classes, funcs in _scoped(ast.parse(path.read_text())):
@@ -51,14 +56,16 @@ def test_pins_go_through_staging():
                 rel in PERSIST_GUARDED
                 and isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "persist"
+                and node.func.attr in calls
             ):
-                if in_staging and funcs[-1:] == ("pin",):
-                    pin_persists += 1
+                method = calls[node.func.attr]
+                if in_staging and funcs[-1:] == (method,):
+                    sanctioned[method] += 1
                 else:
-                    offenders.append(f"{rel}:{node.lineno}: .persist(")
+                    offenders.append(f"{rel}:{node.lineno}: .{node.func.attr}(")
     assert not offenders, offenders
-    assert pin_persists == 1  # the guard sees the one sanctioned call
+    # the guard sees the one sanctioned call of each
+    assert sanctioned == {"pin": 1, "checkpoint": 1}
 
 
 def test_staging_hands_pins_to_result(spark):
@@ -77,3 +84,35 @@ def test_staging_hands_pins_to_result(spark):
     assert kept.is_cached  # adopt moved the pin; nothing released
     DD.unpersist_intermediates(out)
     assert not kept.is_cached and cache.isEmpty()
+
+
+def test_checkpoint_tables_follow_ownership(spark):
+    """A checkpoint table is owned like a pin: the one a round loop
+    supersedes is released when the block exits, the last one rides
+    the result until it is released."""
+    sc = spark.sparkContext
+    base = sc._jsc.getPersistentRDDs().size()
+    with DD.Staging() as st:
+        first = st.checkpoint(spark.range(4))
+        last = st.checkpoint(first.select((first.id + 1).alias("id")), supersedes=first)
+        out = st.own(last.select("id"))
+    assert sc._jsc.getPersistentRDDs().size() == base + 1  # ``first`` is gone
+    assert sorted(r.id for r in out.collect()) == [1, 2, 3, 4]
+    DD.unpersist_intermediates(out, blocking=True)
+    assert sc._jsc.getPersistentRDDs().size() == base
+
+
+@pytest.mark.parametrize("name", ["dedup_minhash_groups", "semdedup_prune"])
+def test_release_leaves_no_persisted_rdd(spark, sf_dir, name):
+    """After ``unpersist_intermediates`` a query holds no storage: the
+    connected-components and Lloyd round tables are checkpoints, not
+    cache entries, and were left behind before ``Staging`` owned them."""
+    from cql_xmlpipe_spark.plans import QUERIES
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    base = sc._jsc.getPersistentRDDs().size()
+    out = QUERIES[name](spark, sf_dir)
+    assert out.count() > 0
+    DD.unpersist_intermediates(out, blocking=True)
+    assert sc._jsc.getPersistentRDDs().size() == base
