@@ -15,13 +15,15 @@ Two engine constants stop repeated calls from re-paying fixed costs:
   tasks to build and to scan. With the conf, AQE coalesces a pinned
   plan's final shuffle like any other plan's. Measured on perfbench
   ``dedup_rosters`` (400 documents, ``--trace 1``, 4-core host): tasks
-  per pass 558 -> 60.
+  per pass 558 -> 60, task time 3.0 -> 1.1 s.
 * ``spark.sql.codegen.cache.maxEntries`` = :data:`CODEGEN_CACHE_ENTRIES`.
-  Spark caps its generated-class cache at 100 entries. One
-  ``dedup_rosters`` pass needs ~147 classes, so the cache evicted its
-  own working set and every warm ``dedup_minhash_groups`` call compiled
-  89 classes again (~0.5 s of Janino), every ``semdedup_prune`` call 47.
-  With the larger cache a warm call compiles none.
+  Spark caps its generated-class cache at 100 entries, fewer than one
+  dedup call needs, so the cache evicted a call's own classes before
+  the next call could reuse them. A warm second call compiled again
+  (``scripts/plan_fingerprint.py`` ``compiles=`` at sf0.01):
+  ``dedup_minhash_groups`` 42 classes, ``dedup_incremental_rosters``
+  195, ``similarity_ivfpq_topk`` 108. With the larger cache those
+  three compile none.
 """
 
 from __future__ import annotations
@@ -36,7 +38,8 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 #: ``bench.py`` HEADLINE run compiles 1,547 distinct classes: 1,419 in
 #: its sf0.001 warm-up, 128 more in the first sf0.1 pass (a second pass
 #: compiled 40, classes whose source differs from call to call). Rounded
-#: up with a third of headroom.
+#: up with a third of headroom. ``scripts/plan_fingerprint.py`` prints
+#: the count per query.
 CODEGEN_CACHE_ENTRIES = 2048
 
 

@@ -5,7 +5,7 @@ Usage: python scripts/plan_fingerprint.py SF_DIR NAME [NAME ...] [--dump DIR]
 For each query NAME (a key of ``cql_xmlpipe_spark.plans.QUERIES``) it
 builds the query over SF_DIR, then prints one line:
 
-    NAME  <sha256 prefix of the plan rendering>  jobs=<build>/<total>  compiles=<n>
+    NAME  <sha256 prefix of the plan rendering>  jobs=<build>/<total>  compiles=<first>/<warm>
 
 The rendering is the optimized logical tree, one ``simpleString`` per
 node, descending into each ``InMemoryRelation``'s cached input plan (the
@@ -20,11 +20,12 @@ left is stable, so equal hashes at two commits mean the same logical work.
 
 ``jobs`` counts the Spark jobs the call started: while the query is built
 (eager guards, collects, model fits) and in total after one ``collect()``.
-``compiles`` counts the classes whole-stage codegen compiled during a
-second, warm call of the same query (built and collected again): 0 when
-the session's codegen cache holds the query's working set. Run with
-``--no-warm`` to skip the second call. The first call's compile count of
-a cold process, summed over a query set, is that set's working set.
+``compiles`` counts the classes Spark's code generator compiled during
+that call and during a second, warm call of the same query (built and
+collected again). The warm count is 0 when the session's codegen cache
+holds the query's working set. Summed over the names of one run, the
+first counts give the distinct classes that query set needs, the figure
+the codegen cache size in ``session.py`` is chosen from.
 ``--dump DIR`` also writes each rendering to ``DIR/NAME.txt`` for diffing.
 """
 
@@ -73,7 +74,7 @@ def _last_job(sc) -> int:
 
 
 def _compiles(sc) -> int:
-    """Classes whole-stage codegen has compiled in this JVM so far."""
+    """Classes Spark's code generator has compiled in this JVM so far."""
     metrics = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
@@ -83,9 +84,6 @@ def main(argv: list[str]) -> int:
     ap.add_argument("sf_dir")
     ap.add_argument("names", nargs="+")
     ap.add_argument("--dump", help="write each rendering to DIR/NAME.txt")
-    ap.add_argument(
-        "--no-warm", action="store_true", help="skip the warm call (no compiles=)"
-    )
     args = ap.parse_args(argv)
 
     from cql_xmlpipe_spark.operators.dedup import unpersist_intermediates
@@ -98,7 +96,7 @@ def main(argv: list[str]) -> int:
         Path(args.dump).mkdir(parents=True, exist_ok=True)
     for name in args.names:
         spark.catalog.clearCache()
-        start = _last_job(sc)
+        start, cold = _last_job(sc), _compiles(sc)
         df = QUERIES[name](spark, args.sf_dir)
         built = _last_job(sc)
         text = normalize(
@@ -108,15 +106,16 @@ def main(argv: list[str]) -> int:
         total = _last_job(sc)
         unpersist_intermediates(df)
         digest = hashlib.sha256(text.encode()).hexdigest()[:16]
-        line = f"{name}  {digest}  jobs={built - start}/{total - start}"
-        if not args.no_warm:
-            spark.catalog.clearCache()
-            before = _compiles(sc)
-            df = QUERIES[name](spark, args.sf_dir)
-            df.collect()
-            unpersist_intermediates(df)
-            line += f"  compiles={_compiles(sc) - before}"
-        print(line, flush=True)
+        spark.catalog.clearCache()
+        warm = _compiles(sc)
+        df = QUERIES[name](spark, args.sf_dir)
+        df.collect()
+        unpersist_intermediates(df)
+        print(
+            f"{name}  {digest}  jobs={built - start}/{total - start}"
+            f"  compiles={warm - cold}/{_compiles(sc) - warm}",
+            flush=True,
+        )
         if args.dump:
             (Path(args.dump) / f"{name}.txt").write_text(text + "\n")
     return 0
