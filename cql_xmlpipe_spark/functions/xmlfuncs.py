@@ -1,4 +1,8 @@
-"""XML escaping + the embedded-JSON ``<mem>`` transform, as Column exprs.
+"""XML escaping + the embedded-JSON ``<mem>`` transform, as SQL text.
+
+Each kernel takes the SQL of a string value and returns SQL; callers parse
+the result with ``F.expr``/``selectExpr`` (one parse, one py4j round trip,
+instead of one per ``F.replace``/``F.lit``/lambda — see ``render.py``).
 
 Escaping reproduces JDK StAX rules (SURVEY §4.3, empirically verified):
 text nodes escape ``&ampersand, <, >`` (NOT quotes); attribute values
@@ -16,54 +20,33 @@ emit the empty string.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 MEM_SCHEMA = "array<array<int>>"
 
 
-def xml_escape_text(col: Column) -> Column:
+def xml_escape_text(expr: str) -> str:
     """Escape a text node the way JDK StAX writeCharacters does."""
-    out = F.replace(col, F.lit("&"), F.lit("&amp;"))
-    out = F.replace(out, F.lit("<"), F.lit("&lt;"))
-    out = F.replace(out, F.lit(">"), F.lit("&gt;"))
-    return out
+    return f"replace(replace(replace({expr}, '&', '&amp;'), '<', '&lt;'), '>', '&gt;')"
 
 
-def xml_escape_attr(col: Column) -> Column:
+def xml_escape_attr(expr: str) -> str:
     """Escape an attribute value (text rules + double-quote)."""
-    return F.replace(xml_escape_text(col), F.lit('"'), F.lit("&quot;"))
+    return f"replace({xml_escape_text(expr)}, '\"', '&quot;')"
 
 
-def mem_transform(col: Column) -> Column:
+def mem_transform(expr: str) -> str:
     """parseString: JSON-shaped text -> CDATA '<mem>..</mem>' stream, else
     escaped raw text. Returns a ready-to-embed XML fragment (never null)."""
-    s = F.coalesce(col, F.lit(""))
-    parsed = F.from_json(s, MEM_SCHEMA)
+    s = f"coalesce({expr}, '')"
+    parsed = f"from_json({s}, '{MEM_SCHEMA}')"
     # Jackson's List<Integer[]> parse succeeds only when every element is an
     # int array; from_json nulls out mismatched nodes, so reject any null.
+    # Parenthesized left-deep: the parser balances a bare AND chain.
     well_formed = (
-        s.startswith("[")
-        & s.endswith("]")
-        & parsed.isNotNull()
-        & F.forall(
-            parsed,
-            lambda a: a.isNotNull() & F.forall(a, lambda e: e.isNotNull()),
-        )
+        f"(((startswith({s}, '[') AND endswith({s}, ']')) AND {parsed} IS NOT NULL)"
+        f" AND forall({parsed}, x_1 -> x_1 IS NOT NULL AND forall(x_1, x_2 -> x_2 IS NOT NULL)))"
     )
-    mem = F.concat(
-        F.lit("<![CDATA["),
-        F.array_join(
-            F.transform(
-                parsed,
-                lambda a: F.concat(
-                    F.lit("<mem>"),
-                    F.array_join(a.cast("array<string>"), " "),
-                    F.lit("</mem>"),
-                ),
-            ),
-            "",
-        ),
-        F.lit("]]>"),
+    mem = (
+        f"concat('<![CDATA[', array_join(transform({parsed}, x_1 -> concat('<mem>',"
+        f" array_join(CAST(x_1 AS ARRAY<STRING>), ' '), '</mem>')), ''), ']]>')"
     )
-    return F.when(well_formed, mem).otherwise(xml_escape_text(s))
+    return f"CASE WHEN {well_formed} THEN {mem} ELSE {xml_escape_text(s)} END"

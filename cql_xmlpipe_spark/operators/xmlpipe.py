@@ -17,7 +17,11 @@ Reference behavior being reproduced (SURVEY §1.4, §3.3, §4.3):
   xmlns declaration, one ``\\n`` before each document and before
   ``</sphinx:docset>``.
 
-Everything except the hash UDF is pure Column expressions (codegen'd).
+Everything except the hash UDF is SQL text, one parse per plan step: the
+render, ``<mem>`` and escaping kernels return SQL, ``with_doc_id`` parses
+the hashBase and key string with ``F.expr`` and ``xml_documents`` the
+document with one ``selectExpr``. Each Column-API call is a py4j round
+trip; lineitem's document plan took 1,777 of them, SQL text takes 23.
 """
 
 from __future__ import annotations
@@ -25,7 +29,7 @@ from __future__ import annotations
 import sys
 from typing import IO, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,6 +46,17 @@ _INTEGRAL = (T.IntegerType, T.LongType, T.ShortType, T.ByteType)
 
 def _is_integral(dtype: T.DataType) -> bool:
     return isinstance(dtype, _INTEGRAL)
+
+
+def _ident(name: str) -> str:
+    """A column name as a backquoted SQL identifier (dots, quotes and
+    backslashes are literal inside backquotes)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lit(text: str) -> str:
+    """A SQL string literal (the parser un-escapes backslashes)."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'").replace("\n", "\\n") + "'"
 
 
 def with_doc_id(
@@ -74,53 +89,53 @@ def with_doc_id(
     if len(key_cols) == 1 and _is_integral(schema[key_cols[0]]):
         # reference renders Integer.toString(value); bigint would throw in
         # the 2.1 driver (defect) — we emit the long value (divergence).
-        return df.withColumn(id_col, F.coalesce(F.col(key_cols[0]).cast("long"), F.lit(0)))
+        return df.withColumn(id_col, F.expr(f"coalesce(CAST({_ident(key_cols[0])} AS BIGINT), 0)"))
 
     integral_keys = [k for k in key_cols if _is_integral(schema[k])]
 
-    def _base_known_zero(upto: int) -> Column:
+    def _base_known_zero(upto: int) -> str:
         """True iff every integral key before position `upto` is 0/null —
         i.e. the running hashBase is still 0 when we reach this column."""
-        cond = F.lit(True)
+        cond = "true"
         for k in integral_keys[:upto]:
-            cond = cond & (F.coalesce(F.col(k), F.lit(0)) == 0)
+            cond = f"({cond} AND (coalesce({_ident(k)}, 0) = 0))"
         return cond
 
     # hashBase = first non-zero integral key value (nulls read as 0, the
     # driver's typed-getter behavior), else 0.
-    base: Column = F.lit(0).cast("long")
+    base = "CAST(0 AS BIGINT)"
     for i, k in enumerate(integral_keys):
-        v = F.coalesce(F.col(k).cast("long"), F.lit(0))
-        base = F.when(_base_known_zero(i) & (v != 0), v).otherwise(base)
+        v = f"coalesce(CAST({_ident(k)} AS BIGINT), 0)"
+        base = f"CASE WHEN ({_base_known_zero(i)} AND ({v} != 0)) THEN {v} ELSE {base} END"
 
     # Concatenated key string: non-integral keys always; an integral key
     # only when some earlier integral key already set hashBase.
-    parts: list[Column] = []
+    parts = []
     int_pos = 0
     for k in key_cols:
-        rendered = render_value(F.col(k), schema[k], mode)
+        rendered = render_value(_ident(k), schema[k], mode)
         if _is_integral(schema[k]):
-            parts.append(F.when(_base_known_zero(int_pos), F.lit(None)).otherwise(rendered))
+            parts.append(f"CASE WHEN {_base_known_zero(int_pos)} THEN NULL ELSE {rendered} END")
             int_pos += 1
         else:
             parts.append(rendered)
-    key_str = F.concat_ws(" ", *parts) if parts else F.lit("")
+    key_str = f"concat_ws(' ', {', '.join(parts)})"
 
-    return df.withColumn(id_col, sdbm_key_udf(base, key_str))
+    return df.withColumn(id_col, sdbm_key_udf(F.expr(base), F.expr(key_str)))
 
 
-def _field_fragment(name: str, dtype: T.DataType, mode: str) -> Column:
+def _field_fragment(name: str, dtype: T.DataType, mode: str) -> str:
     """``<name>rendered</name>`` for one column (writeValue dispatch,
     Query.java:221-229): text -> mem transform; blob -> CDATA; else
     escaped render-kernel output. Elements are never self-closed."""
-    col = F.col(name)
+    col = _ident(name)
     if isinstance(dtype, T.StringType):
         body = mem_transform(col)
     elif isinstance(dtype, T.BinaryType):
-        body = F.concat(F.lit("<![CDATA["), render_value(col, dtype, mode), F.lit("]]>"))
+        body = f"concat('<![CDATA[', {render_value(col, dtype, mode)}, ']]>')"
     else:
         body = xml_escape_text(render_value(col, dtype, mode))
-    return F.concat(F.lit(f"<{name}>"), body, F.lit(f"</{name}>"))
+    return f"concat({_lit(f'<{name}>')}, {body}, {_lit(f'</{name}>')})"
 
 
 def xml_documents(
@@ -147,15 +162,14 @@ def xml_documents(
     with_id = with_doc_id(df, key_cols, id_col=internal, mode=mode)
     schema = {f.name: f.dataType for f in df.schema.fields}
     fields = list(field_cols) if field_cols is not None else [f.name for f in df.schema.fields]
-    frags = [_field_fragment(name, schema[name], mode) for name in fields]
-    xml = F.concat(
-        F.lit('\n<sphinx:document id="'),
-        F.col(internal).cast("string"),
-        F.lit('">'),
-        *frags,
-        F.lit("</sphinx:document>"),
-    )
-    return with_id.select(F.col(internal).alias(id_col), xml.alias("xml"))
+    xml = ", ".join([
+        "'\\n<sphinx:document id=\"'",
+        f"CAST({_ident(internal)} AS STRING)",
+        "'\">'",
+        *(_field_fragment(name, schema[name], mode) for name in fields),
+        "'</sphinx:document>'",
+    ])
+    return with_id.selectExpr(f"{_ident(internal)} AS {_ident(id_col)}", f"concat({xml}) AS xml")
 
 
 def write_docset_stream(docs: DataFrame, out: IO[str] | None = None) -> int:

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cql_xmlpipe_spark.functions.dockey import sdbm_key_udf
-from cql_xmlpipe_spark.functions.xmlfuncs import mem_transform, xml_escape_text
+from cql_xmlpipe_spark.functions.xmlfuncs import mem_transform
 from cql_xmlpipe_spark.operators.xmlpipe import xml_documents
 from cql_xmlpipe_spark.plans.queries import _q
 from cql_xmlpipe_spark.sources.registry import load_table
@@ -132,18 +132,12 @@ def mem_transform_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     valid list-of-int-arrays, invalid-bracketed, object-shaped, plain."""
     d = load_table(spark, "documents", sf_dir)
     txt = (
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(F.lit("[["), F.col("doc_id").cast("string"), F.lit(",2],[3]]")),
-        )
-        .when(F.col("doc_id") % 4 == 1, F.lit("[not json]"))
-        .when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(F.lit('{"k": '), F.col("doc_id").cast("string"), F.lit("}")),
-        )
-        .otherwise(F.substring("text", 1, 50))
+        "CASE WHEN ((doc_id % 4) = 0) THEN concat('[[', CAST(doc_id AS STRING), ',2],[3]]')"
+        " WHEN ((doc_id % 4) = 1) THEN '[not json]'"
+        " WHEN ((doc_id % 4) = 2) THEN concat('{\"k\": ', CAST(doc_id AS STRING), '}')"
+        " ELSE substring(text, 1, 50) END"
     )
-    return d.select("doc_id", mem_transform(txt).alias("fragment"))
+    return d.selectExpr("doc_id", f"{mem_transform(txt)} AS fragment")
 
 
 def _xml_lineitem_oracle() -> str:

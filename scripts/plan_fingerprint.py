@@ -5,7 +5,7 @@ Usage: python scripts/plan_fingerprint.py SF_DIR NAME [NAME ...] [--dump DIR]
 For each query NAME (a key of ``cql_xmlpipe_spark.plans.QUERIES``) it
 builds the query over SF_DIR, then prints one line:
 
-    NAME  <sha256 prefix of the plan rendering>  jobs=<build>/<total>  compiles=<first>/<warm>
+    NAME  <sha256 prefix>  jobs=<build>/<total>  py4j=<n>  compiles=<first>/<warm>
 
 The rendering is the optimized logical tree, one ``simpleString`` per
 node, descending into each ``InMemoryRelation``'s cached input plan (the
@@ -20,6 +20,9 @@ left is stable, so equal hashes at two commits mean the same logical work.
 
 ``jobs`` counts the Spark jobs the call started: while the query is built
 (eager guards, collects, model fits) and in total after one ``collect()``.
+``py4j`` counts the commands the Python driver sent to the JVM while the
+query was built: each Column-API call is one or more round trips, so this
+is the plan-build cost that the timings of a small query mostly show.
 ``compiles`` counts the classes Spark's code generator compiled during
 that call and during a second, warm call of the same query (built and
 collected again). The warm count is 0 when the session's codegen cache
@@ -32,9 +35,12 @@ the codegen cache size in ``session.py`` is chosen from.
 from __future__ import annotations
 
 import argparse
+import gc
 import hashlib
 import re
 import sys
+import threading
+from contextlib import contextmanager
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -79,6 +85,26 @@ def _compiles(sc) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+@contextmanager
+def py4j_commands(sc):
+    """Count the py4j commands this thread sends while the block runs
+    (other threads, e.g. a streaming query's callbacks, share the client);
+    yields a one-item list holding the running count."""
+    client = sc._gateway._gateway_client
+    send, sent, me = client.send_command, [0], threading.get_ident()
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == me:
+            sent[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        client.send_command = send
+
+
 def main(argv: list[str]) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir")
@@ -97,7 +123,9 @@ def main(argv: list[str]) -> int:
     for name in args.names:
         spark.catalog.clearCache()
         start, cold = _last_job(sc), _compiles(sc)
-        df = QUERIES[name](spark, args.sf_dir)
+        gc.collect()  # a freed JVM reference is a command too; free the last query's first
+        with py4j_commands(sc) as sent:
+            df = QUERIES[name](spark, args.sf_dir)
         built = _last_job(sc)
         text = normalize(
             "\n".join(render(df._jdf.queryExecution().optimizedPlan()))
@@ -112,7 +140,7 @@ def main(argv: list[str]) -> int:
         df.collect()
         unpersist_intermediates(df)
         print(
-            f"{name}  {digest}  jobs={built - start}/{total - start}"
+            f"{name}  {digest}  jobs={built - start}/{total - start}  py4j={sent[0]}"
             f"  compiles={warm - cold}/{_compiles(sc) - warm}",
             flush=True,
         )

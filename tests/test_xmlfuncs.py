@@ -8,12 +8,13 @@ import io
 from datetime import datetime
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 
 def _one(spark, col_expr, value, ddl):
     df = spark.createDataFrame([(value,)], ddl)
-    return df.select(col_expr(F.col(df.columns[0])).alias("out")).collect()[0]["out"]
+    return df.select(F.expr(col_expr(df.columns[0])).alias("out")).collect()[0]["out"]
 
 
 def test_escape_text(spark):
@@ -46,7 +47,7 @@ def test_mem_transform_matrix(spark):
     df = spark.createDataFrame([(k,) for k in cases], "txt string")
     got = {
         r["txt"]: r["out"]
-        for r in df.select("txt", mem_transform(F.col("txt")).alias("out")).collect()
+        for r in df.select("txt", F.expr(mem_transform("txt")).alias("out")).collect()
     }
     for k, expected in cases.items():
         assert got[k] == expected, k
@@ -58,7 +59,7 @@ def test_render_kernel_branches(spark):
     def render(value, ddl):
         df = spark.createDataFrame([(value,)], ddl)
         dtype = df.schema.fields[0].dataType
-        return df.select(render_value(F.col(df.columns[0]), dtype).alias("o")).collect()[0]["o"]
+        return df.select(F.expr(render_value(df.columns[0], dtype)).alias("o")).collect()[0]["o"]
 
     assert render(42, "c int") == "42"
     assert render(2**40, "c long") == str(2**40)
@@ -69,6 +70,14 @@ def test_render_kernel_branches(spark):
     assert render(["a", "b"], "c array<string>") == "a b"
     assert render([1, 2, 3], "c array<int>") == "1 2 3"
     assert render([], "c array<int>") == ""
+    # nested arrays flatten depth by depth, each level its own lambda
+    assert render([[1, 2], [3]], "c array<array<int>>") == "1 2 3"
+    assert render([[1, None], None, []], "c array<array<int>>") == "1   "
+    assert render([[[1], [2, 3]], [[4]]], "c array<array<array<int>>>") == "1 2 3 4"
+    stamps = [datetime(2006, 1, 2, 15, 4, 5), None, datetime(2010, 12, 31, 23, 59, 59)]
+    assert render(stamps, "c array<timestamp>") == (
+        "Mon Jan 02 15:04:05 UTC 2006  Fri Dec 31 23:59:59 UTC 2010"
+    )
     assert render({"k": 1}, "c map<string,int>") == ""  # parity: Query.java:265
     assert render(bytearray(b"\x01\xff"), "c binary") == "01FF"
     assert render(None, "c string") == ""
@@ -115,7 +124,7 @@ def test_render_sane_mode(spark):
         df = spark.createDataFrame([(value,)], ddl)
         dtype = df.schema.fields[0].dataType
         return df.select(
-            render_value(F.col(df.columns[0]), dtype, mode).alias("o")
+            F.expr(render_value(df.columns[0], dtype, mode)).alias("o")
         ).collect()[0]["o"]
 
     assert render({"k": 1}, "c map<string,int>", "sane") == '{"k":1}'
@@ -124,3 +133,51 @@ def test_render_sane_mode(spark):
         "2006-01-02 15:04:05"
     )
     assert render(None, "c map<string,int>", "sane") == ""
+    nested = [[datetime(2006, 1, 2, 15, 4, 5)], [datetime(2010, 12, 31, 23, 59, 59)]]
+    assert render(nested, "c array<array<timestamp>>", "sane") == (
+        "2006-01-02 15:04:05 2010-12-31 23:59:59"
+    )
+    assert render([{"k": 1}, None], "c array<map<string,int>>", "sane") == '{"k":1} '
+    assert render([{"k": 1}, None], "c array<map<string,int>>", "parity") == " "
+
+
+@pytest.mark.parametrize("position", ["field", "key"])
+@pytest.mark.parametrize("name", ["a.b", "it's", "x`y", "back\\slash"])
+def test_awkward_column_names(spark, name, position):
+    """Column names are SQL identifiers and element tags are SQL literals:
+    a dot is not struct access, and quotes, backquotes and backslashes
+    reach the tag verbatim."""
+    from cql_xmlpipe_spark.operators.xmlpipe import xml_documents
+
+    quoted = "`" + name.replace("`", "``") + "`"
+    df = spark.sql(f"SELECT 1 AS k, 'v' AS {quoted}")
+    keys = ["k"] if position == "field" else ["k", name]
+    doc_id = 1 if position == "field" else 65717  # sdbm(base 1, "v")
+    assert xml_documents(df, keys).collect()[0]["xml"] == (
+        f'\n<sphinx:document id="{doc_id}"><k>1</k><{name}>v</{name}></sphinx:document>'
+    )
+
+
+def test_document_plan_build_is_a_few_py4j_commands(spark):
+    """The document plan is built from SQL text: a handful of round trips
+    to the JVM, not one per literal, function and lambda of every field
+    (the Column-built plan of this frame took about 3,000)."""
+    import gc
+
+    from cql_xmlpipe_spark.operators.xmlpipe import xml_documents
+    from scripts.plan_fingerprint import py4j_commands
+
+    ddl = (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int,"
+        " l_quantity double, l_extendedprice double, l_discount double, l_tax double,"
+        " l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz,"
+        " l_commitdate date, l_receiptdate date, l_shipinstruct string,"
+        " l_shipmode string, l_comment string"
+    )
+    keys = ["l_orderkey", "l_linenumber"]
+    xml_documents(spark.createDataFrame([], ddl), keys)  # the hash UDF's one-time JVM setup
+    df = spark.createDataFrame([], ddl)
+    gc.collect()
+    with py4j_commands(spark.sparkContext) as sent:
+        xml_documents(df, keys)
+    assert sent[0] <= 50, sent[0]
