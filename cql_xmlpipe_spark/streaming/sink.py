@@ -3,9 +3,10 @@
 SURVEY §1.2 decision note: the render/assembly kernel is pure Spark SQL
 expressions (built from SQL text), so the exact same ``xml_documents``
 plan serves batch export and streaming export — ``foreachBatch`` hands
-each micro-batch to the batch writer. Output is one directory of XML fragment files per batch
-(scale-mode layout); the docset envelope is written once by the consumer
-(`_PROLOG` / `_CLOSE` parts, see operators/xmlpipe.py).
+each micro-batch to the batch writer. Output is one directory of XML
+fragment files per batch (scale-mode layout); the docset envelope is
+written once by the consumer (`_PROLOG` / `_CLOSE` parts, see
+operators/xmlpipe.py).
 """
 
 from __future__ import annotations
