@@ -163,11 +163,11 @@ def xml_documents(
     schema = {f.name: f.dataType for f in df.schema.fields}
     fields = list(field_cols) if field_cols is not None else [f.name for f in df.schema.fields]
     xml = ", ".join([
-        "'\\n<sphinx:document id=\"'",
+        _lit('\n<sphinx:document id="'),
         f"CAST({_ident(internal)} AS STRING)",
-        "'\">'",
+        _lit('">'),
         *(_field_fragment(name, schema[name], mode) for name in fields),
-        "'</sphinx:document>'",
+        _lit("</sphinx:document>"),
     ])
     return with_id.selectExpr(f"{_ident(internal)} AS {_ident(id_col)}", f"concat({xml}) AS xml")
 
